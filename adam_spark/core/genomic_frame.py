@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from adam_spark.core.metadata import GenomicMetadata, ProcessingStep
@@ -28,30 +28,6 @@ LOCATABLE_KINDS = {
     "variant_context",
     "slice",
 }
-
-
-def overlap_condition(
-    l_ref: Column,
-    l_start: Column,
-    l_end: Column,
-    r_ref: Column,
-    r_start: Column,
-    r_end: Column,
-    flank: int = 0,
-) -> Column:
-    """Strand-blind interval-overlap predicate on half-open regions.
-
-    Matches the reference's ``ReferenceRegion.overlaps`` semantics
-    (models/ReferenceRegion.scala:671-681): same contig and
-    ``l.start < r.end && r.start < l.end``, with optional ``flank``
-    padding of the left region (GenomicDataset.scala:1821-1850).
-    """
-    return (
-        l_ref.eqNullSafe(r_ref)
-        & l_ref.isNotNull()
-        & ((l_start - F.lit(flank)) < r_end)
-        & (r_start < (l_end + F.lit(flank)))
-    )
 
 
 class GenomicFrame:

@@ -53,14 +53,6 @@ def gc_content(col: Column) -> Column:
     ) / F.length(col).cast("double")
 
 
-def overlaps_expr() -> str:
-    """SQL boolean expression template for region overlap (half-open)."""
-    return (
-        "{l}.referenceName = {r}.referenceName AND "
-        "{l}.start < {r}.end AND {r}.start < {l}.end"
-    )
-
-
 def register_functions(spark: SparkSession) -> None:
     """Register genomics helpers as SQL scalar functions (Spark SQL UDFs
     with SQL bodies — they inline into Catalyst, no Python round-trip)."""

@@ -20,91 +20,18 @@ The flag is opt-in (``bounded_cache=False`` everywhere by default)
 because eager materialization trades composability for the bound: a
 caller who immediately filters the result would lose the chance for
 Catalyst to prune the checkpointed plan.
+
+Without the flag, internal intermediates are plain ``persist()`` calls
+and the CacheManager's plan matching does the rest: repeating a call
+on the same corpus reuses the one cached entry (no new entry, no
+recompute), while each new corpus adds its own entry. Long-lived
+multi-corpus sessions bound the cache with ``bounded_cache=True`` or
+an explicit ``spark.catalog.clearCache()`` between corpora.
 """
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
-
-
-#: last internally-persisted intermediate per (session, operator tag) —
-#: bounds a long-lived session's cache accumulation at ONE live entry
-#: per operator even when callers never opt into ``bounded_cache``.
-#: Keyed by session so two concurrent SparkSessions never rotate each
-#: other's entries, and guarded by a lock so two threads running the
-#: same operator concurrently cannot unpersist each other's
-#: still-in-use intermediate (results would stay correct — unpersist
-#: never affects correctness — but the warm-cache guarantee the
-#: self-join double-scan call sites rely on would silently vanish).
-_LAST_PERSISTED: dict[tuple[int, str], DataFrame] = {}
-_LOCK = threading.Lock()
-
-
-def rotate_persist(tag: str, df: DataFrame, level) -> DataFrame:
-    """Persist ``df`` and release the intermediate the SAME operator
-    persisted on its previous call (if any).
-
-    The default (``bounded_cache=False``) contract keeps the current
-    call's intermediate cached so the lazily-returned result reuses it;
-    without rotation, N calls in one session leave N dead cache entries
-    behind. Rotation caps that at one per operator.
-
-    Same-plan reuse: when the new intermediate is plan-identical to the
-    still-cached previous one (the repeated-call pattern — a bench
-    best-of-N, a retried job), the previous DataFrame is returned
-    as-is, preserving the warm-cache hit Spark's CacheManager would
-    have given via plan matching (unpersist-then-repersist would force
-    a full recompute every call). Trade-off: if a caller interleaves
-    two DIFFERENT corpora (build result A, build result B, THEN execute
-    A), A's intermediate recomputes once — correctness is unaffected
-    (unpersist never is), only the cache reuse.
-
-    The ``sameResult`` probe goes through private py4j internals
-    (``_jdf.queryExecution().analyzed().sameResult``) — there is no
-    public plan-equality API; it is wrapped best-effort so an internals
-    change degrades to repersist, never to an error.
-    """
-    key = (id(df.sparkSession), tag)
-    with _LOCK:
-        prev = _LAST_PERSISTED.get(key)
-        if prev is not None:
-            try:
-                if prev.is_cached and prev._jdf.queryExecution().analyzed().sameResult(
-                    df._jdf.queryExecution().analyzed()
-                ):
-                    return prev
-            except Exception:
-                pass  # plan comparison is best-effort only
-            _LAST_PERSISTED.pop(key, None)
-            try:
-                prev.unpersist(False)
-            except Exception:
-                pass  # previous session may be stopped
-        df = df.persist(level)
-        _LAST_PERSISTED[key] = df
-        return df
-
-
-def clear_rotation(spark=None) -> None:
-    """Release every rotation-held intermediate (optionally only the
-    given session's). Measurement harnesses call this BETWEEN repeated
-    passes so a best-of-N measures cold-per-pass compute: without it,
-    pass 2+ of an identical query silently reuses pass 1's persisted
-    intermediates via :func:`rotate_persist`'s same-plan match, and the
-    best-of partially measures a warm cache instead of the optimization
-    under test (r13 verdict, What's-wrong #3). Correctness is never
-    affected — unpersist only forces recompute."""
-    with _LOCK:
-        for key in list(_LAST_PERSISTED):
-            if spark is not None and key[0] != id(spark):
-                continue
-            df = _LAST_PERSISTED.pop(key)
-            try:
-                df.unpersist(False)
-            except Exception:
-                pass  # session may be stopped
 
 
 def eager_release(result: DataFrame, *intermediates: DataFrame) -> DataFrame:

@@ -8,9 +8,8 @@ or audited before training. Expressed Spark-first:
 
 - both sides tokenize and shingle with built-in Catalyst expressions
   (:func:`adam_spark.llm.dedup.word_ngrams` — no Python UDFs);
-- the benchmark's distinct n-gram set broadcasts (eval sets are small
-  by construction — thousands of documents, not billions; set
-  ``broadcast_bench=False`` to shuffle-join a pathological one);
+- the benchmark's distinct n-gram set always broadcasts (eval sets
+  are small by construction — thousands of documents, not billions);
 - the corpus side is a narrow explode → broadcast-hash semi-join →
   one groupBy on the document id. At 100 TB the only shuffle is that
   final slim (id, count) aggregate, partial-aggregated map-side.
@@ -35,7 +34,6 @@ def ngram_contamination(
     bench_text_col: str | None = None,
     n: int = 8,
     min_hits: int = 1,
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Per corpus document: distinct benchmark n-grams it contains.
 
@@ -46,12 +44,10 @@ def ngram_contamination(
     inside one document counts once).
     """
     bench_text = bench_text_col or text_col
-    bench_grams = (
+    bench_grams = F.broadcast(
         benchmark.select(F.explode(word_ngrams(F.col(bench_text), n)).alias("gram"))
         .distinct()
     )
-    if broadcast_bench:
-        bench_grams = F.broadcast(bench_grams)
     corpus_grams = corpus.select(
         F.col(id_col).alias("id"), F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
     )

@@ -29,8 +29,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from adam_spark.llm.cache import rotate_persist
-
 
 def tokens(text: Column) -> Column:
     """Whitespace tokens, empties dropped (portable to DuckDB)."""
@@ -121,10 +119,8 @@ def exact_duplicates(
     # Spark does NOT reuse the scan across the two differently-shaped
     # subtrees of the self-join — unpersisted, the md5 scan runs twice
     # (measured 4.4× at sf0.1).
-    keyed = rotate_persist(
-        "dedup.exact.keyed",
-        df.select(F.col(id_col).alias("id"), fp.alias("fingerprint")),
-        StorageLevel.MEMORY_AND_DISK,
+    keyed = df.select(F.col(id_col).alias("id"), fp.alias("fingerprint")).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     # materialize EAGERLY: the join's two subtrees are scheduled
     # concurrently, and a lazily-populated cache lets both sides miss it
@@ -236,12 +232,20 @@ def minhash_signatures(
     the between-variant pre-partition the raw frame so their broadcast
     attach stages share the parallel tokenize) — a second exchange here
     would ship the token arrays for nothing. ``prefiltered=True``
-    declares that ``df`` carries no empty-shingle rows, skipping the
-    ``size(shingles) > 0`` guard: left in place, predicate pushdown
-    moves that guard BELOW the exchange where it re-evaluates the whole
-    shingle expression on the pre-exchange (possibly single-task)
-    layout — callers substitute a cheap text-level equivalent
-    (``token_count(text) >= n``) instead.
+    declares that ``df`` carries no empty-shingle rows and skips the
+    array-level ``size(shingles) > 0`` guard.
+
+    Default-path hazard (``repartition=True, prefiltered=False``): the
+    array-level guard sits above the shingle projection while the id
+    exchange sits below it, so predicate pushdown can clone the whole
+    shingle expression beneath the exchange and tokenize every row a
+    second time on the source's pre-exchange layout (ONE task for a
+    single-row-group file). Rows are unchanged; only time is lost.
+    Callers that care filter the raw frame with the text-level guard
+    themselves and declare it — ``df.where(has_min_tokens(text, n))``
+    with ``n`` the shingle order (1 for distinct tokens), then
+    ``prefiltered=True`` — exactly what :func:`minhash_lsh_pairs`
+    does internally.
     """
     src = df
     if repartition:
@@ -334,15 +338,6 @@ def _jaccard_length_ok(n_a: Column, n_b: Column, threshold: float) -> Column:
 VERIFY_BROADCAST_CAP_BYTES = 256 * 1024 * 1024
 
 
-def _estimate_shingle_bytes(base: DataFrame) -> int:
-    """Cheap size estimate of the (id, shingles) verify table: one
-    aggregate scan, ~16 bytes per token + per-row overhead."""
-    stats = base.select(
-        F.count(F.lit(1)).alias("docs"), F.sum(F.size("sh")).alias("toks")
-    ).first()
-    return int(stats["toks"] or 0) * 16 + int(stats["docs"] or 0) * 48
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -351,7 +346,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 128,
     bands: int = 64,
     threshold: float = 0.8,
-    broadcast_verify: bool | None = None,
     bounded_cache: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH, verified with exact Jaccard.
@@ -409,10 +403,8 @@ def minhash_lsh_pairs(
             )
         ),
     )
-    banded = rotate_persist(
-        "dedup.minhash.banded",
-        sigs.select("id", "n", bh_arr.alias("bh")),
-        StorageLevel.MEMORY_AND_DISK,
+    banded = sigs.select("id", "n", bh_arr.alias("bh")).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     # one aggregate doubles as the eager materializer (both self-join
     # sides would race a lazy cache) AND the broadcast-size probe —
@@ -430,20 +422,15 @@ def minhash_lsh_pairs(
     )
     # verification: |A∩B| once, |A∪B| by arithmetic (no union allocation).
     # The shingle side is one row per document; broadcasting it pins a
-    # broadcast join so the big candidate stream never shuffles. The default
-    # (None) decides from a measured size estimate rather than a flag the
-    # caller must know to flip: small corpora broadcast, anything past
-    # VERIFY_BROADCAST_CAP_BYTES shuffles — a default that still works at
-    # the 100 TB design point.
-    if broadcast_verify is None:
-        # sized from the persisted banded stats rather than re-tokenizing
-        # the corpus (_estimate_shingle_bytes was a full extra pass per
-        # call). Sole difference: empty-shingle docs (absent from
-        # banded) no longer add their 48-byte row overhead — a strategy
-        # heuristic only, both strategies are exact.
-        est = int(_bst["toks"] or 0) * 16 + int(_bst["docs"] or 0) * 48
-        broadcast_verify = est <= VERIFY_BROADCAST_CAP_BYTES
-    if broadcast_verify:
+    # broadcast join so the big candidate stream never shuffles. The
+    # strategy comes from a measured size estimate: small corpora
+    # broadcast, anything past VERIFY_BROADCAST_CAP_BYTES shuffles — a
+    # rule that still works at the 100 TB design point. The estimate
+    # reads the persisted banded stats rather than re-tokenizing the
+    # corpus; empty-shingle docs (absent from banded) add no row
+    # overhead — a strategy heuristic only, both strategies are exact.
+    est = int(_bst["toks"] or 0) * 16 + int(_bst["docs"] or 0) * 48
+    if est <= VERIFY_BROADCAST_CAP_BYTES:
         # verify is a pure map (both shingle sides broadcast). A pair
         # that matched in k bands would be verified k times and need a
         # final dedup shuffle — instead each side's broadcast also
@@ -635,11 +622,7 @@ def simhash_duplicates(
     # groupBy + AQE-split join instead of a hot-key window. Persisting the
     # slim (id, simhash) table stops the 16-wide Catalyst fold from running
     # once per self-join side (measured 6.2× at sf0.1 unpersisted).
-    fps = rotate_persist(
-        "dedup.simhash.fps",
-        simhash(df, id_col, text_col, bits),
-        StorageLevel.MEMORY_AND_DISK,
-    )
+    fps = simhash(df, id_col, text_col, bits).persist(StorageLevel.MEMORY_AND_DISK)
     fps.count()  # eager: both self-join sides would race a lazy cache
     canon = fps.groupBy("simhash").agg(F.min("id").alias("canonical_id"))
     out = (
@@ -757,7 +740,6 @@ def remove_repeated_spans(
     delimiter: str = "\n",
     min_docs: int | None = None,
     min_frac: float | None = None,
-    broadcast_hot: bool | None = None,
     bounded_cache: bool = False,
 ) -> DataFrame:
     """C4-style cross-corpus boilerplate removal.
@@ -805,21 +787,20 @@ def remove_repeated_spans(
     ).withColumn("lkey", F.md5(F.trim("span")))
     # two-stage distinct-doc count: (lkey, id) dedupe partially combines
     # map-side, then the per-key count is a plain partial-aggregated sum
-    hot = rotate_persist(
-        "dedup.spans.hot",
+    hot = (
         spans.where(F.trim("span") != "")
         .select("lkey", "id")
         .distinct()
         .groupBy("lkey")
         .agg(F.count(F.lit(1)).alias("nd"))
         .where(F.col("nd") >= F.lit(int(min_docs)))
-        .select("lkey"),
-        StorageLevel.MEMORY_AND_DISK,
+        .select("lkey")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_hot = hot.count()  # eager persist + size for the broadcast decision
-    if broadcast_hot is None:
-        broadcast_hot = n_hot * 64 <= HOT_SPAN_BROADCAST_CAP_BYTES
-    maybe_bc = F.broadcast if broadcast_hot else (lambda x: x)
+    maybe_bc = (
+        F.broadcast if n_hot * 64 <= HOT_SPAN_BROADCAST_CAP_BYTES else (lambda x: x)
+    )
     flagged = spans.join(
         maybe_bc(hot.withColumn("__hot", F.lit(True))), "lkey", "left"
     )
@@ -862,7 +843,6 @@ def minhash_lsh_pairs_between(
     num_hashes: int = 128,
     bands: int = 64,
     threshold: float = 0.8,
-    broadcast_candidates: bool | None = None,
     bounded_cache: bool = False,
 ) -> DataFrame:
     """Cross-corpus near-dup pairs: an incoming batch vs a reference
@@ -885,8 +865,8 @@ def minhash_lsh_pairs_between(
     the candidate list is deduped, persisted, counted, and — when slim
     enough — broadcast against the STREAMED reference token table, so
     the corpus-sized side is never shuffled or broadcast (the expected
-    asymmetry: new batch ≪ reference corpus); past both caps
-    (``broadcast_candidates=False``) the verify joins shuffle.
+    asymmetry: new batch ≪ reference corpus); past both caps the
+    verify joins shuffle.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -913,8 +893,7 @@ def minhash_lsh_pairs_between(
     # Both strategies start from the slim per-side banded tables
     # (id, n, band-hash array — one row per doc, built by one signature
     # pass each, persisted): the broadcast-cap estimates read them
-    # (replacing what used to be two extra full tokenize passes via
-    # _estimate_shingle_bytes), the band equi-join explodes them, and
+    # (no extra tokenize pass), the band equi-join explodes them, and
     # the broadcast-verify filters join them back.
     rpb = num_hashes // bands
     bh_arr = F.transform(
@@ -930,19 +909,13 @@ def minhash_lsh_pairs_between(
         ),
     )
 
-    def _banded(base, tag):
-        b = rotate_persist(
-            tag,
-            minhash_signatures(
-                base, "id", F.col("sh"), num_hashes,
-                with_size=True, repartition=False, prefiltered=True,
-            ).select("id", "n", bh_arr.alias("bh")),
-            StorageLevel.MEMORY_AND_DISK,
-        )
+    def _banded(base):
         # the _est aggregate below doubles as the eager materializer
-        # (broadcast-branch consumers would race a lazy cache); the
-        # shuffle branch consumes each side once, so lazy is safe there
-        return b
+        # (broadcast-branch consumers would race a lazy cache)
+        return minhash_signatures(
+            base, "id", F.col("sh"), num_hashes,
+            with_size=True, repartition=False, prefiltered=True,
+        ).select("id", "n", bh_arr.alias("bh")).persist(StorageLevel.MEMORY_AND_DISK)
 
     def _est(banded) -> int:
         st = banded.select(
@@ -950,12 +923,10 @@ def minhash_lsh_pairs_between(
         ).first()
         return int(st["toks"] or 0) * 16 + int(st["docs"] or 0) * 48
 
-    banded_n = _banded(base_n, "dedup.incremental.banded_new")
-    banded_r = _banded(base_r, "dedup.incremental.banded_ref")
-    est_n = _est(banded_n) if broadcast_candidates is None else None
-    if broadcast_candidates is None and (
-        est_n + _est(banded_r) <= VERIFY_BROADCAST_CAP_BYTES
-    ):
+    banded_n = _banded(base_n)
+    banded_r = _banded(base_r)
+    est_n = _est(banded_n)
+    if est_n + _est(banded_r) <= VERIFY_BROADCAST_CAP_BYTES:
         # both token tables broadcast: verify is a pure map over the raw
         # candidate stream, a pair kept only at its FIRST shared band —
         # one exact-Jaccard per pair, no dedup exchange (same trick as
@@ -1006,20 +977,15 @@ def minhash_lsh_pairs_between(
         )
         .select("id_new", "id_ref")
     )
-    cand = rotate_persist(
-        "dedup.incremental.cand",
-        raw.dropDuplicates(["id_new", "id_ref"]),
-        StorageLevel.MEMORY_AND_DISK,
+    cand = raw.dropDuplicates(["id_new", "id_ref"]).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     n_cand = cand.count()
-    if broadcast_candidates is None:
-        broadcast_candidates = n_cand * 32 <= VERIFY_BROADCAST_CAP_BYTES
-    maybe_bc = F.broadcast if broadcast_candidates else (lambda x: x)
+    bc_cand = n_cand * 32 <= VERIFY_BROADCAST_CAP_BYTES
+    maybe_bc = F.broadcast if bc_cand else (lambda x: x)
     # the new-side token table gets its own measured size decision —
     # an incremental batch is usually tiny, but nothing forces it to be
-    if est_n is None:
-        est_n = _est(banded_n)
-    bc_new = broadcast_candidates and est_n <= VERIFY_BROADCAST_CAP_BYTES
+    bc_new = bc_cand and est_n <= VERIFY_BROADCAST_CAP_BYTES
     maybe_bc_new = F.broadcast if bc_new else (lambda x: x)
     out = (
         sh_r.join(maybe_bc(cand), "id_ref")
@@ -1043,7 +1009,6 @@ def remove_duplicate_substrings(
     k: int = 30,
     stride: int = 1,
     min_docs: int = 2,
-    broadcast_hot: bool | None = None,
     bounded_cache: bool = False,
 ) -> DataFrame:
     """Exact duplicate-substring removal (the character-level
@@ -1080,26 +1045,24 @@ def remove_duplicate_substrings(
         ).alias("p"),
     ).select("id", "p", F.xxhash64(F.col("text").substr(F.col("p"), F.lit(k))).alias("h"))
 
-    per_doc = anchors.select("h", "id").distinct()
+    from pyspark.storagelevel import StorageLevel
+
+    # persisted before the sizing count: the anchors→distinct→groupBy
+    # pipeline (two full shuffles) otherwise runs twice — once for
+    # count() and again in the join (the remove_repeated_spans treatment)
     hot = (
-        per_doc.groupBy("h")
+        anchors.select("h", "id")
+        .distinct()
+        .groupBy("h")
         .agg(F.count(F.lit(1)).alias("nd"))
         .where(F.col("nd") >= min_docs)
         .select("h")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if broadcast_hot is None:
-        # persist before the sizing count: the anchors→distinct→groupBy
-        # pipeline (two full shuffles) otherwise runs twice — once for
-        # count() and again in the join (the remove_repeated_spans
-        # treatment, dedup.py:648)
-        from pyspark.storagelevel import StorageLevel
-
-        hot = rotate_persist(
-            "dedup.substrings.hot", hot, StorageLevel.MEMORY_AND_DISK
-        )
-        n_hot = hot.count()
-        broadcast_hot = n_hot * 16 <= HOT_SPAN_BROADCAST_CAP_BYTES
-    maybe_bc = F.broadcast if broadcast_hot else (lambda x: x)
+    n_hot = hot.count()
+    maybe_bc = (
+        F.broadcast if n_hot * 16 <= HOT_SPAN_BROADCAST_CAP_BYTES else (lambda x: x)
+    )
     marks = anchors.join(maybe_bc(hot), "h").select("id", "p")
 
     w = Window.partitionBy("id").orderBy("p")

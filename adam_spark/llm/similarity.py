@@ -829,27 +829,27 @@ def _verify_pairs_gemm(
     threshold: float,
     id_col: str,
     vec_col: str,
-    band_hashes: DataFrame | None = None,
+    band_hashes: DataFrame,
 ) -> DataFrame:
-    """Score (id_a, id_b) candidate pairs against a broadcast corpus matrix.
+    """Score (id_a, id_b, band) candidate pairs against a broadcast corpus
+    matrix.
 
     One driver collect builds the dense float64 matrix + id→row index;
     executors score each Arrow batch with a vectorized gather and a
     row-wise dot (numerically the same dot/(‖a‖·‖b‖) as the join-based
     fold, modulo summation order — sim is rounded to 6 dp either way).
 
-    With ``band_hashes`` (an (id, __bhs array<long>) frame holding the
+    ``band_hashes`` (an (id, __bhs array<long>) frame) holds the
     EXECUTOR-computed SRP band-hash arrays that generated the
-    candidates) the pairs frame must carry a ``band`` column and the
-    UDF keeps each pair only at its FIRST shared band, so a pair
-    matching in k bands is scored once and the post-threshold
-    dropDuplicates disappears. The hashes are carried through rather
-    than recomputed from the collected matrix: BLAS summation order can
-    differ between the driver's full-matrix matmul and the executors'
-    batch matmuls, and a sign flip on a near-zero projection would make
-    the pair's own band unequal — silently dropping a true candidate
-    (the MinHash first-shared-band verify uses the same
-    carry-the-arrays treatment, dedup.py).
+    candidates; the UDF keeps each pair only at its FIRST shared band,
+    so a pair matching in k bands is scored once and no dedup runs.
+    The hashes are carried through rather than recomputed from the
+    collected matrix: BLAS summation order can differ between the
+    driver's full-matrix matmul and the executors' batch matmuls, and a
+    sign flip on a near-zero projection would make the pair's own band
+    unequal — silently dropping a true candidate (the MinHash
+    first-shared-band verify uses the same carry-the-arrays treatment,
+    dedup.py).
 
     Lifecycle: the broadcast matrix lives until the session's context GC
     drops it (the returned DataFrame's closure holds it; Spark cannot
@@ -858,39 +858,20 @@ def _verify_pairs_gemm(
     go out of scope rather than accumulating returned DataFrames.
     """
     pdf = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toPandas()
-    mat = (
-        np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-        if len(pdf)
-        else np.zeros((0, 0), dtype=np.float64)  # keep 2-D: norm(axis=1) on 1-D raises
-    )
+    if not len(pdf):  # empty corpus: no candidates to score
+        return pairs.select(
+            "id_a", "id_b", F.lit(None).cast("double").alias("sim")
+        ).where(F.lit(False))
+    mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
     norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-300)
     id2ix = {i: ix for ix, i in enumerate(pdf["id"])}
-    bh_mat = None
-    if band_hashes is not None and len(mat):
-        # slim collect: N×bands longs, tiny next to the matrix itself
-        bpdf = band_hashes.select("id", "__bhs").toPandas()
-        bh_map = dict(zip(bpdf["id"], bpdf["__bhs"]))
-        bh_mat = np.asarray(
-            [np.asarray(bh_map[i], dtype=np.int64) for i in pdf["id"]]
-        )  # N×bands
+    # slim collect: N×bands longs, tiny next to the matrix itself
+    bpdf = band_hashes.select("id", "__bhs").toPandas()
+    bh_map = dict(zip(bpdf["id"], bpdf["__bhs"]))
+    bh_mat = np.asarray(
+        [np.asarray(bh_map[i], dtype=np.int64) for i in pdf["id"]]
+    )  # N×bands
     bc = corpus.sparkSession.sparkContext.broadcast((id2ix, mat, norms, bh_mat))
-
-    if bh_mat is None:
-
-        @F.pandas_udf("double")
-        def pair_cos(ia: pd.Series, ib: pd.Series) -> pd.Series:
-            idx, m, nrm, _ = bc.value
-            ka = ia.map(idx).to_numpy(dtype=np.int64)
-            kb = ib.map(idx).to_numpy(dtype=np.int64)
-            num = np.einsum("ij,ij->i", m[ka], m[kb])
-            return pd.Series(num / (nrm[ka] * nrm[kb]))
-
-        return (
-            pairs.withColumn("sim", pair_cos("id_a", "id_b"))
-            .where(F.col("sim") >= F.lit(threshold))
-            .dropDuplicates(["id_a", "id_b"])
-            .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
-        )
 
     @F.pandas_udf("double")
     def pair_cos_first(ia: pd.Series, ib: pd.Series, band: pd.Series) -> pd.Series:
@@ -1010,8 +991,6 @@ def embedding_near_duplicates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    rows_per_band: int | None = None,
-    bands: int | None = None,
     bounded_cache: bool = False,
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold via sign-bit LSH + exact verify.
@@ -1023,9 +1002,9 @@ def embedding_near_duplicates(
     candidates come from an equi-join on (band, band_hash) — a shuffle
     hash join, never a cross join — and are verified with the exact
     cosine before emission. Recall loss from banding is the only
-    approximation (P(miss) ≤ 1% at the tuned defaults; the DuckDB
-    oracle replicates the identical banding, so recall behavior is part
-    of the spec).
+    approximation (P(miss) ≤ 1% with the banding :func:`srp_params`
+    tunes from the threshold; the DuckDB oracle replicates the
+    identical banding, so recall behavior is part of the spec).
 
     Three strategies, auto-selected on banding density and corpus size:
 
@@ -1053,10 +1032,7 @@ def embedding_near_duplicates(
     The brute-force path remains as
     :func:`embedding_near_duplicates_bruteforce` for small-N validation.
     """
-    if rows_per_band is None or bands is None:
-        r_def, b_def = srp_params(threshold)
-        rows_per_band = rows_per_band or r_def
-        bands = bands or b_def
+    rows_per_band, bands = srp_params(threshold)
     from pyspark.storagelevel import StorageLevel
 
     # ONE probe job serves every strategy decision below: corpus row

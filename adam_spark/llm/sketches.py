@@ -111,7 +111,6 @@ def cms_candidates(
     df: DataFrame,
     col: str,
     min_count: int,
-    partitions_hint: int | None = None,
 ) -> DataFrame:
     """Narrow per-partition candidate generation for heavy-hitter
     queries — the scale-path replacement for ``df.distinct()``.
@@ -126,9 +125,8 @@ def cms_candidates(
     corpus-sized exchange the old ``distinct()`` candidate source paid
     is gone.
 
-    ``partitions_hint`` defaults to the session's
-    ``defaultParallelism`` (a conf read — no plan→RDD conversion just
-    to count partitions): the threshold is
+    P is the session's ``defaultParallelism`` (a conf read — no
+    plan→RDD conversion just to count partitions): the threshold is
     ``max(1, min_count // (4·P))``, and overestimating P only LOWERS
     the threshold (more candidates, never a lost one), so runtime
     repartitioning — AQE skew splits included — stays safe within the
@@ -136,17 +134,12 @@ def cms_candidates(
     at very large P (≥ min_count/4) the pigeonhole threshold bottoms
     out at 1 and the candidate set approaches the union of
     per-partition distincts — still zero corpus shuffle, but the
-    closing ``distinct()`` over candidates grows; callers running
-    thousands of partitions against a small ``min_count`` should pass
-    an explicit hint sized to the REAL partition count.
+    closing ``distinct()`` over candidates grows.
     """
     from pyspark.sql import types as T
 
-    if partitions_hint is None:
-        partitions_hint = max(
-            1, df.sparkSession.sparkContext.defaultParallelism
-        )
-    threshold = max(1, int(min_count) // (4 * int(partitions_hint)))
+    parts = max(1, df.sparkSession.sparkContext.defaultParallelism)
+    threshold = max(1, int(min_count) // (4 * parts))
     out_schema = T.StructType([T.StructField(col, df.schema[col].dataType, True)])
 
     def local_heavy(batches):
@@ -168,7 +161,6 @@ def cms_heavy_hitters(
     width: int = 1024,
     depth: int = 4,
     seed: str = "cms",
-    partitions_hint: int | None = None,
     bounded_cache: bool = False,
 ) -> DataFrame:
     """Items whose TRUE frequency is ≥ ``min_count``, with their
@@ -197,7 +189,7 @@ def cms_heavy_hitters(
     """
     base = df.select(F.col(col).alias(col)).where(F.col(col).isNotNull())
     sk = count_min_sketch(df, col, width, depth, seed)
-    cand = cms_candidates(base, col, min_count, partitions_hint)
+    cand = cms_candidates(base, col, min_count)
     short = (
         cms_estimate(sk, cand, col, width, depth, seed)
         .where(F.col("est") >= F.lit(int(min_count)))

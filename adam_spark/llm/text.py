@@ -472,7 +472,6 @@ def unigram_lm_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 0.5,
-    broadcast_vocab: bool | None = None,
     bounded_cache: bool = False,
 ) -> DataFrame:
     """CCNet-style language-model quality score per document.
@@ -528,9 +527,11 @@ def unigram_lm_scores(
         F.sum("c").alias("n"),
     ).first()
     v = int(_st["v"] or 0)
-    if broadcast_vocab is None:
-        broadcast_vocab = int(_st["b"] or 0) <= VOCAB_BROADCAST_CAP_BYTES
-    maybe_bc = F.broadcast if broadcast_vocab else (lambda x: x)
+    maybe_bc = (
+        F.broadcast
+        if int(_st["b"] or 0) <= VOCAB_BROADCAST_CAP_BYTES
+        else (lambda x: x)
+    )
     n_total, v_size = F.lit(float(_st["n"] or 0)), F.lit(float(v))
     scored = (
         toks.join(maybe_bc(vocab), "tok")
@@ -616,7 +617,6 @@ def bigram_lm_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 0.5,
-    broadcast_vocab: bool | None = None,
     bounded_cache: bool = False,
 ) -> DataFrame:
     """Bigram language-model quality score with unigram backoff.
@@ -662,9 +662,11 @@ def bigram_lm_scores(
         F.sum("c").alias("n"),
     ).first()
     v = int(_st["v"] or 0)
-    if broadcast_vocab is None:
-        broadcast_vocab = int(_st["b"] or 0) <= VOCAB_BROADCAST_CAP_BYTES
-    maybe_bc = F.broadcast if broadcast_vocab else (lambda x: x)
+    maybe_bc = (
+        F.broadcast
+        if int(_st["b"] or 0) <= VOCAB_BROADCAST_CAP_BYTES
+        else (lambda x: x)
+    )
     n_total, v_size = F.lit(float(_st["n"] or 0)), F.lit(float(v))
     p_uni = lambda c: (c + F.lit(a)) / (n_total + F.lit(a) * v_size)
     first = (
@@ -881,7 +883,6 @@ def hashed_classifier_score(
     text_col: str = "text",
     hash_prefix_len: int = 3,
     word_ngrams: int = 1,
-    broadcast_weights: bool | None = None,
     feats_df: DataFrame | None = None,
 ) -> DataFrame:
     """fastText-style hashed LINEAR classifier score per document — the
@@ -921,10 +922,15 @@ def hashed_classifier_score(
     so a caller can parallelize the expensive branch without taxing the
     pruned path with the spread exchange (the bloom probe-branch spread
     idiom). Results are identical by construction — the branches agree
-    row-for-row whenever feats_df reads the same table.
+    row-for-row whenever feats_df reads the same table. A ``feats_df``
+    missing ``id_col`` or ``text_col`` raises ``ValueError``.
     """
     if feats_df is None:
         feats_df = df
+    have = {c.lower() for c in feats_df.columns}
+    for c in (id_col, text_col):
+        if c.lower() not in have:
+            raise ValueError(f"feats_df has no column {c!r}")
     words = F.filter(
         F.split(F.lower(F.col(text_col)), " "), lambda t: t != F.lit("")
     )
@@ -969,9 +975,11 @@ def hashed_classifier_score(
         .groupBy("bucket")
         .agg(F.sum("weight").cast("long").alias("weight"))
     )
-    if broadcast_weights is None:
-        broadcast_weights = 16 ** hash_prefix_len * 64 <= VOCAB_BROADCAST_CAP_BYTES
-    maybe_bc = F.broadcast if broadcast_weights else (lambda x: x)
+    maybe_bc = (
+        F.broadcast
+        if 16 ** hash_prefix_len * 64 <= VOCAB_BROADCAST_CAP_BYTES
+        else (lambda x: x)
+    )
     scored = (
         toks.join(maybe_bc(w), "bucket", "left")
         .groupBy("id")

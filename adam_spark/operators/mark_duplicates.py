@@ -39,41 +39,61 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _clip_len(cigar: Column, pat: str) -> Column:
+    """Length captured by ``pat`` in the CIGAR string, 0 on no match.
+
+    regexp_extract yields '' on no-match and a plain cast('' as long)
+    THROWS under ANSI mode (Spark 4 default — the driver harness runs
+    ANSI-on). nullif BEFORE the try_cast matters: try_cast('') still
+    throws-and-catches a cast exception internally per row, which
+    measured 15µs/row — 4.4 s vs 0.56 s over 150k unclipped cigars at
+    sf0.1 (most reads match no clip pattern, so the exception path ran
+    ~2×/row). try_cast stays for the (theoretical) >19-digit clip
+    length, which maps to 0 exactly as before.
+    """
+    return F.coalesce(
+        F.nullif(F.regexp_extract(cigar, pat, 1), F.lit("")).try_cast("long"),
+        F.lit(0),
+    )
+
+
+def unclipped_start(start: Column, cigar: Column) -> Column:
+    """RichAlignment.unclippedStart: alignment start minus ALL leading
+    soft+hard clipped bases ('3H2S5M' unclips by 5).
+
+    BOTH clip elements on an edge count (SAM order puts H outside S) —
+    a single-element regex would place a hard+soft-clipped read and its
+    soft-only duplicate in different position groups."""
+    return (
+        start
+        - _clip_len(cigar, r"^(\d+)H")
+        - _clip_len(cigar, r"^(?:\d+H)?(\d+)S")
+    )
+
+
+def unclipped_end(end: Column, cigar: Column) -> Column:
+    """RichAlignment.unclippedEnd: alignment end plus ALL trailing
+    soft+hard clipped bases."""
+    return (
+        end
+        + _clip_len(cigar, r"(\d+)S(?:\d+H)?$")
+        + _clip_len(cigar, r"(\d+)H$")
+    )
+
+
 def five_prime_position(
     start: Column, end: Column, cigar: Column, negative: Column
 ) -> Column:
     """Unclipped 5' position of an aligned read.
 
-    Forward strand: start − leading soft/hard clips.
-    Reverse strand: end + trailing soft/hard clips.
+    Forward strand: :func:`unclipped_start`.
+    Reverse strand: :func:`unclipped_end`.
     (reference: ReferencePositionPair.scala:32-114 via
     RichAlignment.fivePrimePosition)
-
-    BOTH clip elements on an edge count (SAM order puts H outside S, so
-    '5H10S20M' unclips by 15) — a single-element regex would place a
-    hard+soft-clipped read and its soft-only duplicate in different
-    position groups. regexp_extract yields '' on no-match, which
-    try_casts to null and coalesces to 0 (ANSI-safe).
     """
-
-    def _n(c: Column, pat: str) -> Column:
-        # regexp_extract yields '' on no-match and a plain cast('' as
-        # long) THROWS under ANSI mode (Spark 4 default — the driver
-        # harness runs ANSI-on). nullif BEFORE the try_cast matters:
-        # try_cast('') still throws-and-catches a cast exception
-        # internally per row, which measured 15µs/row — 4.4 s vs
-        # 0.56 s over 150k unclipped cigars at sf0.1 (most reads match
-        # no clip pattern, so the exception path ran ~2×/row). try_cast
-        # stays for the (theoretical) >19-digit clip length, which maps
-        # to 0 exactly as before.
-        return F.coalesce(
-            F.nullif(F.regexp_extract(c, pat, 1), F.lit("")).try_cast("long"),
-            F.lit(0),
-        )
-
-    lead = _n(cigar, r"^(\d+)H") + _n(cigar, r"^(?:\d+H)?(\d+)S")
-    trail = _n(cigar, r"(\d+)S(?:\d+H)?$") + _n(cigar, r"(\d+)H$")
-    return F.when(negative.eqNullSafe(F.lit(True)), end + trail).otherwise(start - lead)
+    return F.when(
+        negative.eqNullSafe(F.lit(True)), unclipped_end(end, cigar)
+    ).otherwise(unclipped_start(start, cigar))
 
 
 def _phred_score(quals: Column, min_q: int = 15) -> Column:
@@ -249,31 +269,3 @@ def mark_duplicate_fragments(
     aln = fragments_to_alignments(fragments)
     marked = mark_duplicates(aln, library_by_rg)
     return alignments_to_fragments(marked.select(*aln.columns))
-
-
-def unclipped_start(start: Column, cigar: Column) -> Column:
-    """RichAlignment.unclippedStart: alignment start minus ALL leading
-    soft+hard clipped bases ('3H2S5M' unclips by 5)."""
-
-    def _n(pat: str) -> Column:
-        # nullif before try_cast: see five_prime_position._n
-        return F.coalesce(
-            F.nullif(F.regexp_extract(cigar, pat, 1), F.lit("")).try_cast("long"),
-            F.lit(0),
-        )
-
-    return start - _n(r"^(\d+)H") - _n(r"^(?:\d+H)?(\d+)S")
-
-
-def unclipped_end(end: Column, cigar: Column) -> Column:
-    """RichAlignment.unclippedEnd: alignment end plus ALL trailing
-    soft+hard clipped bases."""
-
-    def _n(pat: str) -> Column:
-        # nullif before try_cast: see five_prime_position._n
-        return F.coalesce(
-            F.nullif(F.regexp_extract(cigar, pat, 1), F.lit("")).try_cast("long"),
-            F.lit(0),
-        )
-
-    return end + _n(r"(\d+)S(?:\d+H)?$") + _n(r"(\d+)H$")

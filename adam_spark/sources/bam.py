@@ -329,30 +329,6 @@ def _read_block_fully(f, off: int) -> tuple[int, bytes]:
     return total, zlib.decompress(rest[:-8], -15)
 
 
-def _read_bam_header(path: str, blocks: list[tuple[int, int]]):
-    """Decode just enough leading blocks to parse the header.
-
-    Returns (header_lines, ref_names, block_idx, intra_offset): records
-    begin ``intra_offset`` bytes into decoded block ``block_idx``.
-    """
-    data = b""
-    ulens: list[int] = []
-    with open(path, "rb") as f:
-        for off, total in blocks:
-            chunk = _inflate_block(f, off, total)
-            data += chunk
-            ulens.append(len(chunk))
-            parsed = _parse_bam_header(data)
-            if parsed is not None:
-                header_lines, ref_names, rec_off = parsed
-                idx = 0
-                while idx < len(ulens) and rec_off >= ulens[idx]:
-                    rec_off -= ulens[idx]
-                    idx += 1
-                return header_lines, ref_names, idx, rec_off
-    raise ValueError("truncated BAM: header never completed")
-
-
 def _read_bam_header_lazy(path: str, fs=None):
     """Driver-side header decode with O(header-blocks) I/O.
 

@@ -60,8 +60,6 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 #: scan→filter→aggregate pipelines the single-threaded decode is
 #: cheaper than shuffling the table (q1 0.43→0.64, top_parts
 #: 0.51→1.43 measured) — those call sites keep the default.
-#: ``ADAM_SPARK_SPLIT_SINGLE_ROWGROUP=0`` force-disables everywhere.
-_SPLIT_ENV = "ADAM_SPARK_SPLIT_SINGLE_ROWGROUP"
 _SPLIT_MIN_ROWS = 50_000
 #: footer metadata memo (path → (row_groups, rows)); file metadata, not
 #: query results — re-probing the same immutable footer every call
@@ -138,7 +136,7 @@ def load_table(
     # multiplies the per-row cost by Q, so far smaller tables still
     # starve on a single row group. Still footer-gated — split-rich
     # cluster inputs are never repartitioned.
-    if spread and os.environ.get(_SPLIT_ENV, "1") != "0":
+    if spread:
         path = os.path.join(sf_dir, f"{name}.parquet")
         par = spark.sparkContext.defaultParallelism
         if _single_rowgroup_starved(path, par, spread_min_rows):

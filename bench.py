@@ -12,19 +12,13 @@ would see, not the noise floor of whatever else the box was doing.
 Per-pass totals and the 1-minute load average are emitted alongside so
 a real regression can't hide inside (or be invented by) the noise band.
 
-Cold-per-pass (r14, r13 verdict What's-wrong #3): operators that
-persist a slim internal intermediate (minhash banded tables, exact/
-simhash fingerprints, hot-span sets) rotate it via
-adam_spark.llm.cache.rotate_persist, whose same-plan reuse let pass
-2+ of an identical query silently hit pass 1's warm cache — so the
-best-of partially measured cache reuse, not the operator. The rotation
-is now CLEARED between passes (clear_rotation below), making every
-pass recompute from the parquet inputs; best-of-N is a min over
-equally-cold passes. This raises the affected queries' reported
-numbers versus r13-and-earlier artifacts (which quoted the warm
-best-of) — an intentional measurement fix, not a regression; set
-BENCH_KEEP_ROTATION=1 to reproduce the old warm-best-of methodology
-for cross-checking.
+Cold-per-pass: operators that persist a slim internal intermediate
+(minhash banded tables, exact/simhash fingerprints, hot-span sets,
+LM vocabularies) leave it in the session's CacheManager, whose
+same-plan matching would let pass 2+ of an identical query hit pass
+1's warm cache. The cache is cleared between passes
+(``spark.catalog.clearCache()``), so every pass recomputes from the
+parquet inputs and best-of-N is a min over equally-cold passes.
 """
 
 from __future__ import annotations
@@ -124,10 +118,6 @@ def main() -> None:
     warm.join(F.broadcast(small), warm["id"] == small["k"]).count()
     qs = entrymod.queries()
 
-    from adam_spark.llm.cache import clear_rotation
-
-    keep_rotation = os.environ.get("BENCH_KEEP_ROTATION", "") == "1"
-
     def run_group(group: list[str]) -> tuple[dict[str, float], list[float], list[float]]:
         best: dict[str, float] = {}
         totals: list[float] = []
@@ -144,10 +134,9 @@ def main() -> None:
                 if name not in best or dt < best[name]:
                     best[name] = dt
             totals.append(round(pass_total, 3))
-            if not keep_rotation:
-                # cold-per-pass: drop rotation-persisted intermediates so
-                # the next pass recomputes them (see module docstring)
-                clear_rotation(spark)
+            # cold-per-pass: drop persisted intermediates so the next
+            # pass recomputes them (see module docstring)
+            spark.catalog.clearCache()
         return {n: round(t, 3) for n, t in best.items()}, totals, loads
 
     timings, pass_totals, load_avg = run_group(HEADLINE)

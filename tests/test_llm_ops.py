@@ -274,13 +274,16 @@ def test_kmeans_ivf_improves_recall(embs):
 
 
 def test_verify_broadcast_auto_plan_shapes(docs, monkeypatch):
-    """broadcast_verify=None picks broadcast vs shuffle from the measured
-    shingle-table size estimate — both plan shapes pinned here."""
+    """The verify join picks broadcast vs shuffle from the measured
+    shingle-table size estimate — both plan shapes pinned here, and
+    both strategies emit the same rows."""
     import adam_spark.llm.dedup as dd
 
     # small corpus: estimate is far under the cap -> broadcast pinned
-    plan_small = minhash_lsh_pairs(docs, "doc_id")._jdf.queryExecution().executedPlan().toString()
+    small = minhash_lsh_pairs(docs, "doc_id")
+    plan_small = small._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_small or "BroadcastExchange" in plan_small
+    ref = small.collect()
 
     # force the cap below any real estimate -> verify join must shuffle
     monkeypatch.setattr(dd, "VERIFY_BROADCAST_CAP_BYTES", 0)
@@ -289,9 +292,23 @@ def test_verify_broadcast_auto_plan_shapes(docs, monkeypatch):
     # the band self-join never was. AQE may still broadcast tiny runtime
     # sides, so assert on the *initial* (pre-AQE) physical plan string.
     assert plan_big != plan_small
-    res = dd.minhash_lsh_pairs(docs, "doc_id", broadcast_verify=False).collect()
-    ref = dd.minhash_lsh_pairs(docs, "doc_id", broadcast_verify=True).collect()
+    res = dd.minhash_lsh_pairs(docs, "doc_id").collect()
     assert sorted(map(tuple, res)) == sorted(map(tuple, ref))
+
+
+def test_repeated_minhash_calls_share_one_cache_entry(spark, docs):
+    """The banded-table persist is plain ``persist()``: repeating a call
+    on the same corpus reuses the CacheManager's one entry instead of
+    adding a new one per call."""
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    rows = [
+        sorted(map(tuple, minhash_lsh_pairs(docs, "doc_id").collect()))
+        for _ in range(3)
+    ]
+    assert cm.numCachedEntries() == 1
+    assert rows[0] == rows[1] == rows[2]
+    spark.catalog.clearCache()
 
 
 def test_duplicate_clusters(docs, spark):
@@ -556,7 +573,11 @@ def test_embedding_near_dup_empty_corpus(spark):
     from adam_spark.llm.similarity import embedding_near_duplicates
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert embedding_near_duplicates(empty, threshold=0.4, dim=64).count() == 0
+    # 0.4: dense banding (fused kernel); 0.95: band join + GEMM verify
+    for t in (0.4, 0.95):
+        out = embedding_near_duplicates(empty, threshold=t, dim=64)
+        assert out.columns == ["id_a", "id_b", "sim"]
+        assert out.count() == 0
 
 
 def test_scrub_pii_consumes_plus_prefix(spark):
@@ -607,17 +628,17 @@ def test_remove_repeated_spans_lines(spark):
     assert len(out) == 6
 
 
-def test_remove_repeated_spans_min_frac_and_shuffle_path(spark):
+def test_remove_repeated_spans_min_frac_and_shuffle_path(spark, monkeypatch):
     """min_frac thresholding equals the explicit min_docs equivalent,
-    and the shuffle-join fallback (broadcast_hot=False) is identical."""
+    and the shuffle-join fallback (hot set over its cap) is identical."""
+    import adam_spark.llm.dedup as dd
     from adam_spark.llm.dedup import remove_repeated_spans
 
     docs = load_table(spark, SF, "documents")
     a = remove_repeated_spans(docs, delimiter=" ", min_frac=0.5)
     n = docs.where(F.col("text").isNotNull()).count()
-    b = remove_repeated_spans(
-        docs, delimiter=" ", min_docs=math.ceil(0.5 * n), broadcast_hot=False
-    )
+    monkeypatch.setattr(dd, "HOT_SPAN_BROADCAST_CAP_BYTES", 0)
+    b = remove_repeated_spans(docs, delimiter=" ", min_docs=math.ceil(0.5 * n))
     ra = sorted(tuple(r) for r in a.collect())
     rb = sorted(tuple(r) for r in b.collect())
     assert ra == rb
@@ -668,7 +689,7 @@ def test_cosine_topk_quantized_matches_exact(embs):
     assert quant == exact
 
 
-def test_unigram_lm_scores(spark, docs):
+def test_unigram_lm_scores(spark, docs, monkeypatch):
     """Smoothed-NLL scoring: hand-check on a tiny corpus, row
     preservation for empty docs, shuffle-vocab path identical."""
     from adam_spark.llm.text import unigram_lm_scores
@@ -689,13 +710,14 @@ def test_unigram_lm_scores(spark, docs):
     # rarer-token doc scores higher nll
     assert out[2]["nll"] > out[1]["nll"]
     a = sorted(tuple(r) for r in unigram_lm_scores(docs).collect())
-    b = sorted(
-        tuple(r) for r in unigram_lm_scores(docs, broadcast_vocab=False).collect()
-    )
+    import adam_spark.llm.text as T
+
+    monkeypatch.setattr(T, "VOCAB_BROADCAST_CAP_BYTES", 0)  # shuffle-join vocab
+    b = sorted(tuple(r) for r in unigram_lm_scores(docs).collect())
     assert a == b and len(a) == docs.count()
 
 
-def test_minhash_between_equals_bruteforce_cross_pairs(docs):
+def test_minhash_between_equals_bruteforce_cross_pairs(docs, monkeypatch):
     """Cross-corpus LSH pairs == the opposite-parity subset of the
     brute-force all-pairs set, and the shuffle verify path matches."""
     from adam_spark.llm.dedup import minhash_lsh_pairs_between
@@ -716,27 +738,21 @@ def test_minhash_between_equals_bruteforce_cross_pairs(docs):
     )
     assert len(want) > 0, "fixture should contain opposite-parity near-dups"
     assert got == want
-    shuffled = sorted(
-        (r["id_new"], r["id_ref"], r["jaccard"])
-        for r in minhash_lsh_pairs_between(
-            new, ref, threshold=0.8, broadcast_candidates=False
-        ).collect()
-    )
-    assert shuffled == got
-    # middle path: token tables exceed the cap but the candidate list
-    # fits -> candidate-broadcast against the streamed reference
     import adam_spark.llm.dedup as D
 
-    orig = D.VERIFY_BROADCAST_CAP_BYTES
-    try:
-        D.VERIFY_BROADCAST_CAP_BYTES = 100_000
-        mid = sorted(
-            (r["id_new"], r["id_ref"], r["jaccard"])
-            for r in minhash_lsh_pairs_between(new, ref, threshold=0.8).collect()
-        )
-    finally:
-        D.VERIFY_BROADCAST_CAP_BYTES = orig
-    assert mid == got
+    def between_under_cap(cap):
+        with monkeypatch.context() as m:
+            m.setattr(D, "VERIFY_BROADCAST_CAP_BYTES", cap)
+            return sorted(
+                (r["id_new"], r["id_ref"], r["jaccard"])
+                for r in minhash_lsh_pairs_between(new, ref, threshold=0.8).collect()
+            )
+
+    # every table over the cap -> both verify joins shuffle
+    assert between_under_cap(0) == got
+    # middle path: token tables exceed the cap but the candidate list
+    # fits -> candidate-broadcast against the streamed reference
+    assert between_under_cap(100_000) == got
 
 
 def test_chunk_documents(spark, docs):
@@ -1052,7 +1068,7 @@ def test_bloom_contains_single_broadcast_no_joins(spark):
     assert got[None] is False
 
 
-def test_bigram_lm_scores(spark, docs):
+def test_bigram_lm_scores(spark, docs, monkeypatch):
     """Hand-checked bigram backoff math on a tiny corpus; repetitive
     documents score lower nll than shuffled ones (the property the
     unigram model cannot express); broadcast==shuffle paths agree."""
@@ -1076,7 +1092,10 @@ def test_bigram_lm_scores(spark, docs):
     sc = {r["id"]: r["nll"] for r in bigram_lm_scores(df2).collect()}
     assert sc[0] < sc[99]
     a = sorted(tuple(r) for r in bigram_lm_scores(docs).collect())
-    b = sorted(tuple(r) for r in bigram_lm_scores(docs, broadcast_vocab=False).collect())
+    import adam_spark.llm.text as T
+
+    monkeypatch.setattr(T, "VOCAB_BROADCAST_CAP_BYTES", 0)  # shuffle-join vocab
+    b = sorted(tuple(r) for r in bigram_lm_scores(docs).collect())
     assert a == b and len(a) == docs.count()
 
 
@@ -1459,7 +1478,7 @@ def test_ivf_quantized_matches_float_ivf(embs):
         assert a == b
 
 
-def test_bounded_cache_releases_persists(spark, docs, embs):
+def test_bounded_cache_releases_persists(spark, docs, embs, monkeypatch):
     """bounded_cache=True must leave NO CacheManager entries behind
     (only lineage-free checkpoint blocks, which the ContextCleaner
     reclaims on GC) and must not change results — across every
@@ -1485,6 +1504,19 @@ def test_bounded_cache_releases_persists(spark, docs, embs):
     toks = docs.select(
         F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("token")
     )
+
+    def between_shuffled(b):
+        # strategies are chosen at build time, so the lowered cap only
+        # needs to hold while the frame is built
+        import adam_spark.llm.dedup as dd
+
+        with monkeypatch.context() as m:
+            m.setattr(dd, "VERIFY_BROADCAST_CAP_BYTES", 0)
+            return minhash_lsh_pairs_between(
+                docs.where(F.col("doc_id") % 2 == 1),
+                docs.where(F.col("doc_id") % 2 == 0),
+                bands=8, threshold=0.9, bounded_cache=b)
+
     cases = [
         (lambda b: exact_duplicates(docs, "doc_id", bounded_cache=b)),
         (lambda b: simhash_duplicates(docs, "doc_id", bounded_cache=b)),
@@ -1493,10 +1525,7 @@ def test_bounded_cache_releases_persists(spark, docs, embs):
             docs.where(F.col("doc_id") % 2 == 1),
             docs.where(F.col("doc_id") % 2 == 0),
             bands=8, threshold=0.9, bounded_cache=b)),
-        (lambda b: minhash_lsh_pairs_between(
-            docs.where(F.col("doc_id") % 2 == 1),
-            docs.where(F.col("doc_id") % 2 == 0),
-            bands=8, threshold=0.9, broadcast_candidates=False, bounded_cache=b)),
+        between_shuffled,
         (lambda b: remove_repeated_spans(docs, min_docs=3, delimiter=" ", bounded_cache=b)),
         (lambda b: embedding_near_duplicates(embs, threshold=0.4, bounded_cache=b)),
         (lambda b: unigram_lm_scores(docs, bounded_cache=b)),
@@ -1877,10 +1906,11 @@ def test_remove_duplicate_substrings_planted(spark):
     assert out[4][1] == 0 and out[4][0] == rows[3][1]
 
 
-def test_remove_duplicate_substrings_stride_and_merge(spark):
+def test_remove_duplicate_substrings_stride_and_merge(spark, monkeypatch):
     """Stride-aligned anchors still merge adjacent islands: two hot
     regions separated by a unique gap produce two spans, and the
-    shuffle-join fallback (broadcast_hot=False) is bit-identical."""
+    shuffle-join fallback (hot set over its cap) is bit-identical."""
+    import adam_spark.llm.dedup as dd
     from adam_spark.llm.dedup import remove_duplicate_substrings
 
     rep1 = "X" * 25
@@ -1891,11 +1921,8 @@ def test_remove_duplicate_substrings_stride_and_merge(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     a = remove_duplicate_substrings(df, k=10, stride=3).orderBy("doc_id").collect()
-    b = (
-        remove_duplicate_substrings(df, k=10, stride=3, broadcast_hot=False)
-        .orderBy("doc_id")
-        .collect()
-    )
+    monkeypatch.setattr(dd, "HOT_SPAN_BROADCAST_CAP_BYTES", 0)
+    b = remove_duplicate_substrings(df, k=10, stride=3).orderBy("doc_id").collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
     for r, (_, text) in zip(a, rows):
         # both runs removed modulo stride-alignment slack at the run

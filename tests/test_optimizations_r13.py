@@ -43,13 +43,6 @@ class TestLoadTableSpread:
         df = load_table(spark, SF001, "supplier", spread=True)
         assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
 
-    def test_spread_env_kill_switch(self, spark, monkeypatch):
-        from adam_spark.sources.tables import load_table
-
-        monkeypatch.setenv("ADAM_SPARK_SPLIT_SINGLE_ROWGROUP", "0")
-        df = load_table(spark, SF01, "lineitem", spread=True)
-        assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
-
     def test_near_dup_fused_path_has_no_join(self, spark):
         """At dense banding (threshold 0.4 → 30 bands × 4 bits) the
         fused kernel must plan as a single mapInPandas over a range —

@@ -300,58 +300,3 @@ class TestQuantizeMaxabsHoist:
         assert rows[1]["scale"] == 2.0 / 127.0
         assert rows[2]["qvec"] == [0, 0] and rows[2]["scale"] == 0.0
         assert rows[3]["qvec"] is None and rows[3]["scale"] is None
-
-
-class TestBenchRotationClearing:
-    """r14: bench passes clear rotate_persist's same-plan reuse so
-    best-of-N measures cold-per-pass compute (r13 verdict
-    What's-wrong #3)."""
-
-    def test_clear_rotation_releases_and_forgets(self, spark):
-        from pyspark.storagelevel import StorageLevel
-
-        from adam_spark.llm.cache import (
-            _LAST_PERSISTED,
-            clear_rotation,
-            rotate_persist,
-        )
-
-        df = rotate_persist(
-            "r14.test.clear", spark.range(10), StorageLevel.MEMORY_AND_DISK
-        )
-        df.count()
-        key = (id(spark), "r14.test.clear")
-        assert key in _LAST_PERSISTED and df.is_cached
-        clear_rotation(spark)
-        assert key not in _LAST_PERSISTED
-        assert not df.is_cached
-        # rotation works again afterwards (fresh persist, not an error)
-        df2 = rotate_persist(
-            "r14.test.clear", spark.range(10), StorageLevel.MEMORY_AND_DISK
-        )
-        assert df2.is_cached
-        clear_rotation(spark)
-
-    def test_clear_rotation_scopes_by_session(self, spark):
-        """A session filter must leave other sessions' entries alone."""
-        from pyspark.storagelevel import StorageLevel
-
-        from adam_spark.llm.cache import (
-            _LAST_PERSISTED,
-            clear_rotation,
-            rotate_persist,
-        )
-
-        df = rotate_persist(
-            "r14.test.scope", spark.range(5), StorageLevel.MEMORY_AND_DISK
-        )
-        key = (id(spark), "r14.test.scope")
-        assert key in _LAST_PERSISTED
-
-        class _NotSpark:  # any other identity
-            pass
-
-        clear_rotation(_NotSpark())
-        assert key in _LAST_PERSISTED and df.is_cached
-        clear_rotation(spark)
-        assert key not in _LAST_PERSISTED

@@ -575,24 +575,13 @@ def _bam_stdin_bytes(
     """SAM text (header + records) → one complete BAM byte stream
     (BGZF-compressed, EOF-terminated) for a subprocess stdin. Reuses the
     save_bam record encoder so piped bytes and written files agree."""
-    import struct
+    from adam_spark.sources import bgzf
+    from adam_spark.sources.bam import bam_header_bytes, sam_line_to_bam_record
 
-    from adam_spark.sources.bam import (
-        _BGZF_EOF,
-        bgzf_blocks_bytes,
-        sam_line_to_bam_record,
-    )
-
-    text = "\n".join(header_lines) + "\n"
-    raw = bytearray(b"BAM\x01" + struct.pack("<i", len(text)) + text.encode())
-    raw += struct.pack("<i", len(bam_refs))
-    for name, length in bam_refs:
-        nb = name.encode() + b"\x00"
-        raw += struct.pack("<i", len(nb)) + nb + struct.pack("<i", length)
+    raw = bytearray(bam_header_bytes(header_lines, bam_refs))
     for line in body_lines:
         raw += sam_line_to_bam_record(line, ref_index)
-    blob, _ = bgzf_blocks_bytes(bytes(raw))
-    return blob + _BGZF_EOF
+    return bgzf.compress_blocks(bytes(raw))[0] + bgzf.EOF
 
 
 def _run_subprocess_raw(

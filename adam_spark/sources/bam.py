@@ -1,127 +1,37 @@
-"""BAM binary format: pure-Python BGZF + record codec.
+"""BAM binary format: pure-Python record codec over the shared BGZF layer.
 
 The reference reads BAM via hadoop-bam/htsjdk (ADAMContext.loadBam
 :2041-2111) and writes via AlignmentDataset.saveAsSam(:810-997,
 asSingleFile BAM path). No native codecs exist in this environment, so
-this module implements the format directly:
+this module implements the format directly. Records (SAM spec §4.2)
+decode to SAM text lines and feed the existing
+`sam_lines_to_alignments` parser, so BAM and SAM share one column
+mapping; the encoder walks the same path in reverse.
 
-- **BGZF** is a series of gzip members (RFC1952) each carrying a
-  ``BC`` extra subfield with the compressed block size; Python's
-  ``gzip`` reads concatenated members natively, and the writer emits
-  ≤64 KiB blocks plus the fixed 28-byte EOF sentinel.
-- **Records** (SAM spec §4.2) decode to SAM text lines and feed the
-  existing `sam_lines_to_alignments` parser, so BAM and SAM share one
-  column mapping; the encoder walks the same path in reverse.
-
-Scale posture: the scan is DISTRIBUTED. The driver does only O(blocks)
-work — a BSIZE seek-walk over the 18-byte block headers (no payload
-decompression) plus decoding the header blocks — then executors
-decompress contiguous block ranges in parallel. Records span block
-boundaries, so each non-first range resyncs to the first record
-boundary with an htsjdk/hadoop-bam-style plausibility guesser
-(`BAMSplitGuesser` semantics: chain-check refID/pos bounds, name
-NUL-terminator, section lengths) and every range reads forward past
-its end to finish its last spanning record — the same split contract
-as Hadoop text splits. Driver memory is O(block index), not O(file).
+The container — block I/O, the split scan, indexed chunk loads and the
+sharded single-file writer — is :mod:`adam_spark.sources.bgzf`. This
+module supplies the BAM framing: the ``<i`` block_size record prefix,
+the header parse that locates the first record, and the record-boundary
+check for split resync (:func:`_plausible_record`, htsjdk
+BAMSplitGuesser semantics).
 """
 
 from __future__ import annotations
 
-import gzip
 import os
 import re
 import struct
-import zlib
+from functools import partial
 
 from pyspark.sql import SparkSession
 
 from adam_spark.core.genomic_frame import GenomicFrame
+from adam_spark.sources import bgzf
 
 _SEQ_ALPHABET = "=ACMGRSVTWYHKDBN"
 _SEQ_CODE = {c: i for i, c in enumerate(_SEQ_ALPHABET)}
 _CIGAR_OPS = "MIDNSHP=X"
 _CIGAR_CODE = {c: i for i, c in enumerate(_CIGAR_OPS)}
-
-_BGZF_EOF = bytes.fromhex(
-    "1f8b08040000000000ff0600424302001b0003000000000000000000"
-)
-
-
-# --- BGZF ------------------------------------------------------------------
-def bgzf_decompress(path: str, fs=None) -> bytes:
-    """Whole-file decompression (gzip handles concatenated members;
-    GzipFile streams them LINEARLY — never gzip.decompress, which is
-    quadratic in member count)."""
-    if fs is None:
-        with gzip.open(path, "rb") as f:
-            return f.read()
-    raw = fs.open_read(path)
-    try:
-        with gzip.GzipFile(fileobj=raw) as f:
-            return f.read()
-    finally:
-        raw.close()
-
-
-#: uncompressed bytes per BGZF block. Must stay < 2^16 so intra-block
-#: (uoffset) virtual-offset components fit 16 bits; the .bai writer's
-#: voffset math assumes exactly this value — change it HERE only.
-BGZF_BLOCK_SIZE = 60_000
-
-
-def bgzf_blocks_bytes(data: bytes, block_size: int = BGZF_BLOCK_SIZE) -> tuple[bytes, list[int]]:
-    """BGZF-compress ``data`` (NO EOF sentinel) → (bytes, block offsets
-    within the returned stream, plus the end offset). BGZF members
-    concatenate, so independently compressed shards join into one valid
-    file — the property the parallel writer exploits."""
-    out = bytearray()
-    offsets: list[int] = []
-    for off in range(0, len(data), block_size):
-        offsets.append(len(out))
-        chunk = data[off : off + block_size]
-        comp = zlib.compressobj(6, zlib.DEFLATED, -15)
-        payload = comp.compress(chunk) + comp.flush()
-        # BSIZE = total block length − 1 (SAM spec §4.1):
-        # header(12) + extra(6) + payload + crc(4) + isize(4) − 1
-        bsize = len(payload) + 25
-        out += (
-            b"\x1f\x8b\x08\x04"  # magic, deflate, FEXTRA
-            + b"\x00\x00\x00\x00"  # mtime
-            + b"\x00\xff"  # XFL, OS
-            + struct.pack("<H", 6)  # XLEN
-            + b"BC"
-            + struct.pack("<H", 2)
-            + struct.pack("<H", bsize)
-            + payload
-            + struct.pack("<I", zlib.crc32(chunk) & 0xFFFFFFFF)
-            + struct.pack("<I", len(chunk))
-        )
-    offsets.append(len(out))
-    return bytes(out), offsets
-
-
-def bgzf_compress_to(
-    path: str, data: bytes, block_size: int = BGZF_BLOCK_SIZE, fs=None
-) -> list[int]:
-    """Write ``data`` as BGZF blocks + EOF sentinel.
-
-    Returns the compressed file offset of each block PLUS the sentinel
-    offset, so callers can map an uncompressed offset ``u`` to a BGZF
-    virtual offset: block ``u // block_size`` at intra-offset
-    ``u % block_size`` (a ``u`` exactly at the data end maps into the
-    empty sentinel block — still a valid virtual offset).
-    """
-    from adam_spark.sources.filesystem import get_fs
-
-    fs, path = get_fs(path, fs)
-    blob, offsets = bgzf_blocks_bytes(data, block_size)
-    out = fs.open_write(path)
-    try:
-        out.write(blob)
-        out.write(_BGZF_EOF)
-    finally:
-        out.close()
-    return offsets
 
 
 # --- decode ----------------------------------------------------------------
@@ -256,151 +166,24 @@ def bam_bytes_to_sam(data: bytes):
 
 
 # --- distributed scan ------------------------------------------------------
-def _block_at(f, off: int) -> tuple[int, int]:
-    """Read one BGZF block header at ``off`` → (total_size, xlen)."""
-    f.seek(off)
-    h = f.read(12)
-    if len(h) < 12 or h[:4] != b"\x1f\x8b\x08\x04":
-        raise ValueError(f"bad BGZF block magic at offset {off}")
-    xlen = struct.unpack_from("<H", h, 10)[0]
-    extra = f.read(xlen)
-    e, bsize = 0, None
-    while e + 4 <= len(extra):
-        slen = struct.unpack_from("<H", extra, e + 2)[0]
-        if extra[e : e + 2] == b"BC":
-            bsize = struct.unpack_from("<H", extra, e + 4)[0]
-        e += 4 + slen
-    if bsize is None:
-        raise ValueError(f"BGZF block at {off} has no BC subfield")
-    return bsize + 1, xlen
-
-
-def bgzf_block_offsets(path: str) -> list[tuple[int, int]]:
-    """BSIZE seek-walk → [(compressed_offset, total_size)]. O(blocks)
-    driver work, 18-byte header reads only — no payload decompression.
-
-    NOT on the load path: ``load_bam`` generates byte-range splits
-    arithmetically and executors resync to block boundaries themselves
-    (a full walk would be ~5M serial driver seeks on a 300 GB BAM).
-    Kept for tests and small-file tooling."""
-    out = []
-    size = os.path.getsize(path)
-    with open(path, "rb") as f:
-        pos = 0
-        while pos < size:
-            total, _ = _block_at(f, pos)
-            out.append((pos, total))
-            pos += total
-        if pos != size:
-            raise ValueError("BGZF walk overran EOF (corrupt BSIZE chain)")
-    return out
-
-
-def _inflate_block(f, off: int, total: int) -> bytes:
-    f.seek(off)
-    raw = f.read(total)
-    xlen = struct.unpack_from("<H", raw, 10)[0]
-    return zlib.decompress(raw[12 + xlen : -8], -15)
-
-
-def _read_block_fully(f, off: int) -> tuple[int, bytes]:
-    """One sequential pass per block: (total_size, inflated bytes).
-
-    ``_block_at`` + ``_inflate_block`` costs two seeks and re-reads the
-    header; chunk readers iterating many consecutive blocks (indexed
-    access hot path) use this instead — consecutive calls turn the seek
-    into a no-op and each byte is read once."""
-    f.seek(off)
-    h = f.read(12)
-    if len(h) < 12 or h[:4] != b"\x1f\x8b\x08\x04":
-        raise ValueError(f"bad BGZF block magic at offset {off}")
-    xlen = struct.unpack_from("<H", h, 10)[0]
-    extra = f.read(xlen)
-    e, bsize = 0, None
-    while e + 4 <= len(extra):
-        slen = struct.unpack_from("<H", extra, e + 2)[0]
-        if extra[e : e + 2] == b"BC":
-            bsize = struct.unpack_from("<H", extra, e + 4)[0]
-        e += 4 + slen
-    if bsize is None:
-        raise ValueError(f"BGZF block at {off} has no BC subfield")
-    total = bsize + 1
-    rest = f.read(total - 12 - xlen)
-    return total, zlib.decompress(rest[:-8], -15)
-
-
 def _read_bam_header_lazy(path: str, fs=None):
     """Driver-side header decode with O(header-blocks) I/O.
 
-    Walks the BSIZE chain only until the header parses — never the whole
+    Inflates blocks only until the header parses — never the whole
     file. Returns (header_lines, ref_names, records_off, records_intra):
     records begin ``records_intra`` bytes into the decoded text of the
     block at compressed offset ``records_off``.
     """
-    if fs is None:
-        from adam_spark.sources.filesystem import LocalFileSystem
 
-        fs = LocalFileSystem()
-    data = b""
-    walked: list[tuple[int, int]] = []  # (compressed_off, decoded_len)
-    size = fs.size(path)
-    with fs.open_read(path) as f:
-        pos = 0
-        while pos < size:
-            total, _ = _block_at(f, pos)
-            chunk = _inflate_block(f, pos, total)
-            data += chunk
-            walked.append((pos, len(chunk)))
-            pos += total
-            parsed = _parse_bam_header(data)
-            if parsed is not None:
-                header_lines, ref_names, rec_off = parsed
-                for off, ulen in walked:
-                    if rec_off < ulen:
-                        return header_lines, ref_names, off, rec_off
-                    rec_off -= ulen
-                # records begin exactly at the next block boundary
-                return header_lines, ref_names, pos, 0
-    raise ValueError("truncated BAM: header never completed")
+    def header_end(data):
+        parsed = _parse_bam_header(data)
+        return None if parsed is None else (parsed[:2], parsed[2])
 
-
-def _verify_block_chain(f, off: int, fsize: int, chain: int = 3) -> bool:
-    """True when ``off`` starts a run of ``chain`` well-formed BGZF blocks
-    whose BSIZE chain lands on EOF or further valid magics."""
-    try:
-        for _ in range(chain):
-            if off == fsize:
-                return True
-            total, _ = _block_at(f, off)
-            off += total
-            if off > fsize:
-                return False
-        return True
-    except (ValueError, struct.error):
-        return False
-
-
-_BGZF_MAGIC = b"\x1f\x8b\x08\x04"
-
-
-def _next_block_offset(f, start: int, fsize: int) -> int | None:
-    """First verified BGZF block boundary at or after ``start``.
-
-    Executor-side resync (the hadoop-bam guesser shape): a BGZF block is
-    at most 64 KiB, so a boundary must occur within 64 KiB of any
-    in-body offset; scan a 128 KiB window for the 4-byte magic and
-    verify each candidate by walking the BSIZE chain.
-    """
-    f.seek(start)
-    buf = f.read(1 << 17)
-    i = 0
-    while True:
-        j = buf.find(_BGZF_MAGIC, i)
-        if j == -1:
-            return None
-        if _verify_block_chain(f, start + j, fsize):
-            return start + j
-        i = j + 1
+    found = bgzf.body_start(path, header_end, fs)
+    if found is None:
+        raise ValueError("truncated BAM: header never completed")
+    (header_lines, ref_names), records_off, records_intra = found
+    return header_lines, ref_names, records_off, records_intra
 
 
 def _plausible_record(buf, off: int, n_ref: int, chain: int = 3, extend=None) -> bool:
@@ -449,94 +232,6 @@ def _plausible_record(buf, off: int, n_ref: int, chain: int = 3, extend=None) ->
     return True
 
 
-def _decode_byte_range(
-    path: str,
-    start: int,
-    end: int,
-    first_intra: int,
-    resync: bool,
-    n_ref: int,
-    ref_names: list[str],
-    fs=None,
-):
-    """Executor task: decode records STARTING inside byte range [start, end).
-
-    The split is arithmetic — no driver-side block index. With
-    ``resync`` the task first finds the block boundary at or after
-    ``start`` (:func:`_next_block_offset`), then the first plausible
-    record boundary inside it; a block belongs to the task whose range
-    contains its starting compressed offset, so ranges that tile the
-    file partition both blocks and records exactly. Reads forward past
-    the range end (walking the BSIZE chain directly) to finish a
-    trailing record that spans into the next range — the Hadoop split
-    contract.
-    """
-    if fs is None:
-        from adam_spark.sources.filesystem import LocalFileSystem
-
-        fs = LocalFileSystem()
-    fsize = fs.size(path)
-    with fs.open_read(path) as f:
-        if resync:
-            first = _next_block_offset(f, start, fsize)
-            if first is None or first >= end:
-                return
-        else:
-            first = start
-        data = bytearray()
-        next_off = first
-        while next_off < end and next_off < fsize:
-            total, _ = _block_at(f, next_off)
-            data += _inflate_block(f, next_off, total)
-            next_off += total
-        owned = len(data)
-        if owned == 0:
-            return
-
-        def extend() -> bool:
-            nonlocal next_off
-            if next_off >= fsize:
-                return False
-            total, _ = _block_at(f, next_off)
-            data.extend(_inflate_block(f, next_off, total))
-            next_off += total
-            return True
-
-        pos = first_intra
-        if resync:
-            # the guesser EXTENDS past the range tail when a candidate
-            # chain outruns the buffer — never a blind accept (a record
-            # spanning the whole range would otherwise "match" garbage)
-            pos = next(
-                (o for o in range(owned) if _plausible_record(data, o, n_ref, extend=extend)),
-                None,
-            )
-            if pos is None:
-                return
-        # working set = the range's decompressed bytes (scan and
-        # ownership both need them); the consumed prefix is trimmed so a
-        # tail record extending into following blocks doesn't stack the
-        # next range's bytes on top of the whole buffer
-        trimmed = 0
-        while pos < owned:
-            if pos - trimmed > (8 << 20):
-                cut = pos - trimmed
-                del data[: cut]
-                trimmed = pos
-            while pos - trimmed + 4 > len(data):
-                if not extend():
-                    if pos - trimmed == len(data):
-                        return  # clean EOF
-                    raise ValueError("truncated BAM record length")
-            bs = struct.unpack_from("<i", data, pos - trimmed)[0]
-            while pos - trimmed + 4 + bs > len(data):
-                if not extend():
-                    raise ValueError("truncated BAM record body")
-            p = pos - trimmed
-            yield _record_to_sam_line(bytes(data[p + 4 : p + 4 + bs]), ref_names)
-            pos += 4 + bs
-
-
 def _expand_bam_paths(path: str, fs=None) -> list[str] | None:
     """Directory or glob → sorted .bam file list; None for a plain
     single-file path (the common case takes the direct branch)."""
@@ -555,10 +250,9 @@ def load_bam(
     spark: SparkSession, path: str, target_split_bytes: int = 16 << 20,
     stringency: str = "SILENT", fs=None,
 ) -> GenomicFrame:
-    """BAM → alignments via a distributed BGZF block-range scan.
-
-    Reference: ADAMContext.loadBam:2041-2111 (hadoop-bam splittable
-    scan). Driver: block-offset walk + header decode only; executors
+    """BAM → alignments via the distributed BGZF split scan
+    (:func:`bgzf.scan`; reference: ADAMContext.loadBam:2041-2111,
+    hadoop-bam). The driver decodes only the header blocks; executors
     decode record ranges in parallel and feed the shared SAM line
     parser, so BAM and SAM share one column mapping.
     """
@@ -589,64 +283,33 @@ def load_bam(
 
     if isinstance(fs, LocalFileSystem):
         path = os.path.abspath(path)
-    # driver I/O is O(header blocks) + O(splits): header decode walks the
-    # BSIZE chain only until the header parses, and the split boundaries
-    # are pure arithmetic over the file size — executors resync to block
-    # and record boundaries themselves (the earlier full BSIZE walk was
-    # ~5M serial driver seeks on a 300 GB BAM before any task launched)
     header_lines, ref_names, records_off, records_intra = _read_bam_header_lazy(
         path, fs
     )
-    fsize = fs.size(path)
-    tasks = []
-    body_bytes = fsize - records_off
-    if body_bytes > 0:
-        par = spark.sparkContext.defaultParallelism
-        n_ranges = max(1, par * 2, body_bytes // target_split_bytes)
-        # never more ranges than ~64 KiB each — a range smaller than one
-        # BGZF block would mostly resync to nothing
-        n_ranges = int(min(n_ranges, max(1, body_bytes // (64 << 10))))
-        bounds = [records_off + (body_bytes * i) // n_ranges for i in range(n_ranges + 1)]
-        bounds[-1] = fsize
-        for i in range(n_ranges):
-            if bounds[i] >= bounds[i + 1]:
-                continue
-            tasks.append(
-                dict(
-                    path=path,
-                    start=bounds[i],
-                    end=bounds[i + 1],
-                    first_intra=records_intra if i == 0 else 0,
-                    resync=i > 0,
-                    n_ref=len(ref_names),
-                    ref_names=ref_names,
-                    fs=fs,
-                )
-            )
-    sc = spark.sparkContext
-    rdd = sc.parallelize(tasks, max(1, len(tasks))).flatMap(
-        lambda t: _decode_byte_range(**t)
+    raw = bgzf.scan(
+        spark, path, (records_off, records_intra), "<i",
+        partial(_plausible_record, n_ref=len(ref_names)),
+        partial(_sam_line, ref_names=ref_names), target_split_bytes, fs,
     )
-    raw = spark.createDataFrame(rdd.map(lambda ln: (ln,)), "value string")
     return GenomicFrame(
         *_aligned_with_meta(raw, header_lines, stringency)
     )
 
 
-def _decode_chunk_range(path: str, chunks: list[tuple[int, int]],
-                        ref_names: list[str], fs=None):
-    """Executor task: decode records from .bai-addressed chunks only."""
-    from adam_spark.sources.binned_index import read_chunk_bytes
+def _sam_line(rec: bytes, ref_names: list[str]) -> str:
+    """One length-prefixed BAM record → SAM line."""
+    return _record_to_sam_line(rec[4:], ref_names)
 
-    for vb, ve in chunks:
-        data = read_chunk_bytes(path, vb, ve, fs)
-        pos = 0
-        while pos + 4 <= len(data):
-            bs = struct.unpack_from("<i", data, pos)[0]
-            if pos + 4 + bs > len(data):
-                break  # chunk ends mid-record only if index is foreign
-            yield _record_to_sam_line(data[pos + 4 : pos + 4 + bs], ref_names)
-            pos += 4 + bs
+
+def _chunk_sam_lines(data: bytes, ref_names: list[str]):
+    """SAM lines of the records in one index-addressed chunk."""
+    pos = 0
+    while pos + 4 <= len(data):
+        bs = struct.unpack_from("<i", data, pos)[0]
+        if pos + 4 + bs > len(data):
+            break  # chunk ends mid-record only if index is foreign
+        yield _record_to_sam_line(data[pos + 4 : pos + 4 + bs], ref_names)
+        pos += 4 + bs
 
 
 def load_indexed_bam(
@@ -659,7 +322,6 @@ def load_indexed_bam(
     regions are read and decoded — I/O and decode cost scale with the
     overlap fraction, not the file. Without an index it falls back to
     the distributed full scan plus the overlap predicate."""
-    from adam_spark.core.genomic_frame import GenomicFrame as GF
     from adam_spark.sources.filesystem import LocalFileSystem, get_fs
     from adam_spark.sources.sam import _aligned_with_meta
 
@@ -673,32 +335,16 @@ def load_indexed_bam(
             spark, path, stringency=stringency, fs=fs
         ).filter_by_overlapping_regions(regions)
 
-    from adam_spark.sources.binned_index import merge_chunks, read_bai, read_csi
+    from adam_spark.sources.binned_index import read_bai, read_csi
 
     # .csi is the long-contig fallback save_bam writes past 2^29
     idx = read_bai(bai, fs) if fs.exists(bai) else read_csi(csi, fs)
     header_lines, ref_names, _, _ = _read_bam_header_lazy(path, fs)
-    rid = {n: i for i, n in enumerate(ref_names)}
-    chunks = merge_chunks(
-        [
-            c
-            for (rname, beg, end) in regions
-            if rname in rid
-            for c in idx.chunks_for(rid[rname], beg, end)
-        ]
+    raw = bgzf.indexed_lines(
+        spark, path, idx, {n: i for i, n in enumerate(ref_names)}, regions,
+        partial(_chunk_sam_lines, ref_names=ref_names), fs,
     )
-    par = spark.sparkContext.defaultParallelism
-    # contiguous byte-balanced slices (not strides): partition-index
-    # order reproduces file order, so order-sensitive downstream
-    # single-file saves keep the record order of the source file
-    from adam_spark.sources.binned_index import split_chunks_contiguous
-
-    task_chunks = split_chunks_contiguous(chunks, max(1, min(len(chunks), par * 2)))
-    rdd = spark.sparkContext.parallelize(task_chunks, max(1, len(task_chunks))).flatMap(
-        lambda t: _decode_chunk_range(path, t, ref_names, fs)
-    )
-    raw = spark.createDataFrame(rdd.map(lambda ln: (ln,)), "value string")
-    gf = GF(*_aligned_with_meta(raw, header_lines, stringency))
+    gf = GenomicFrame(*_aligned_with_meta(raw, header_lines, stringency))
     return gf.filter_by_overlapping_regions(regions)
 
 
@@ -786,171 +432,54 @@ def _cigar_ref_len(cigar: str) -> int:
     return sum(int(n) for n, op in _CIGAR_RE.findall(cigar) if op in _CIG_REF_OPS)
 
 
-def _encode_shard(lines, shard_path: str, ref_index: dict[str, int],
-                  collect_spans: bool, fs=None):
-    """Executor task: SAM lines → one BGZF shard file (no EOF member).
+def bam_header_bytes(header_lines: list[str], refs: list[tuple[str, int]]) -> bytes:
+    """Uncompressed BAM header: magic, SAM header text, reference list."""
+    text = "\n".join(header_lines) + "\n"
+    out = b"BAM\x01" + struct.pack("<i", len(text)) + text.encode()
+    out += struct.pack("<i", len(refs))
+    for name, length in refs:
+        nb = name.encode() + b"\x00"
+        out += struct.pack("<i", len(nb)) + nb + struct.pack("<i", length)
+    return out
 
-    Returns one tuple: (shard_path, compressed_len, index manifest)
-    where the manifest is a :class:`ShardIndexAgg` payload — per-(rid,
-    bin) chunk extents + per-16kb-window minima over shard-LOCAL
-    virtual offsets, O(bins-touched) not O(records) — which the driver
-    prefix-shifts by the shard's global base when it builds the
-    .bai/.csi."""
-    from adam_spark.sources.binned_index import ShardIndexAgg, voffset
 
-    body = bytearray()
-    spans: list[tuple[int, int, int, int, int]] = []
-    counts: dict[int, list[int]] = {}  # rid -> [n_mapped, n_unmapped]
-    no_coor = 0
-    for line in lines:
-        u0 = len(body)
-        body += sam_line_to_bam_record(line, ref_index)
-        if collect_spans:
-            f = line.split("\t", 6)
-            rid_ = ref_index.get(f[2], -1)
-            if rid_ < 0:
-                no_coor += 1  # unplaced: the .bai n_no_coor trailer
-            else:
-                c = counts.setdefault(rid_, [0, 0])
-                if int(f[1]) & 0x4:
-                    c[1] += 1  # placed-unmapped: counted, not binned
-                else:
-                    c[0] += 1
-                    beg = int(f[3]) - 1
-                    end = beg + max(
-                        1, _cigar_ref_len(f[5]) if f[5] != "*" else 1
-                    )
-                    spans.append((rid_, beg, end, u0, len(body)))
-    blob, offsets = bgzf_blocks_bytes(bytes(body))
-    bs = BGZF_BLOCK_SIZE
-    agg = ShardIndexAgg()
-    for rid_, beg, end, u0, u1 in spans:
-        agg.add(
-            rid_, beg, end,
-            voffset(offsets[u0 // bs], u0 % bs),
-            voffset(offsets[u1 // bs], u1 % bs),
-        )
-    if fs is None:
-        from adam_spark.sources.filesystem import LocalFileSystem
-
-        fs = LocalFileSystem()
-    f = fs.open_write(shard_path)
-    try:
-        f.write(blob)
-    finally:
-        f.close()
-    return (shard_path, len(blob), agg.manifest(), counts, no_coor)
+def _encode_line(line: str, ref_index: dict[str, int], collect_spans: bool):
+    """SAM line → (BAM record, index span) for :func:`bgzf.save_sharded`:
+    placed-unmapped reads are counted, not binned; unplaced ones feed
+    the index's n_no_coor trailer."""
+    rec = sam_line_to_bam_record(line, ref_index)
+    if not collect_spans:
+        return rec, None
+    f = line.split("\t", 6)
+    rid = ref_index.get(f[2], -1)
+    if rid < 0:
+        return rec, (None, None, None)
+    if int(f[1]) & 0x4:
+        return rec, (rid, None, None)
+    beg = int(f[3]) - 1
+    return rec, (rid, beg, beg + max(1, _cigar_ref_len(f[5]) if f[5] != "*" else 1))
 
 
 def save_bam(
     gf: GenomicFrame, path: str, write_index: bool = True,
     pg_line: str | None = None, fs=None,
 ) -> None:
-    """Alignments → single-file BAM via PARALLEL shard compression.
-
-    Executors encode and BGZF-compress their partitions into shard
-    files (record encoding + deflate is the dominant cost and runs
-    fully distributed — BGZF members concatenate, so shards join
-    byte-for-byte); the driver writes the header member, appends the
-    shards in partition order, and closes with the EOF sentinel — the
-    same merge boundary as the reference's FileMerger concat
-    (util/FileMerger.scala:35, ParallelFileMerger.scala:34).
-    ``write_index`` also emits ``path + ".bai"`` (per-record span
-    metadata returns to the driver shifted by each shard's base; skip
-    the index for pure-throughput exports)."""
-    from adam_spark.sources.filesystem import get_fs
+    """Alignments → single-file BAM via parallel shard compression
+    (:func:`bgzf.save_sharded`, the reference's FileMerger shape,
+    util/FileMerger.scala:35). ``write_index`` also emits
+    ``path + ".bai"`` (``.csi`` for contigs past 2^29); skip it for
+    pure-throughput exports."""
     from adam_spark.sources.sam import sam_body_lines, sam_header_lines
 
-    # resolved ONCE here; the handle rides the task closures so shard
-    # bytes stream executor->store directly (HDFS/S3 via pyarrow.fs)
-    fs, path = get_fs(path, fs)
-
-    header = sam_header_lines(gf.meta, pg_line=pg_line)
-    refs = [r for r in gf.meta.references.references]
+    refs = gf.meta.references.references
     ref_index = {r.name: i for i, r in enumerate(refs)}
-    text = "\n".join(header) + "\n"
-    out = b"BAM\x01" + struct.pack("<i", len(text)) + text.encode()
-    out += struct.pack("<i", len(refs))
-    for r in refs:
-        nb = r.name.encode() + b"\x00"
-        out += struct.pack("<i", len(nb)) + nb + struct.pack("<i", r.length or 0)
-
-    shard_dir = path + ".__shards"
-    fs.rmtree(shard_dir)
-    fs.makedirs(shard_dir)
-    try:
-        shards = (
-            sam_body_lines(gf.df)
-            .rdd.map(lambda r: r["value"])
-            .mapPartitionsWithIndex(
-                lambda i, it: [
-                    _encode_shard(
-                        it, fs.join(shard_dir, f"part-{i:05d}"), ref_index,
-                        write_index, fs,
-                    )
-                ]
-            )
-            .collect()
-        )
-        header_blob, _ = bgzf_blocks_bytes(out)
-        from adam_spark.sources.merge import concat_files_parallel
-
-        live = [(sp, m, c, nc) for sp, clen, m, c, nc in shards if clen]
-        # shard sizes are known, so output offsets are a prefix sum and
-        # the copies run as parallel positioned writes (the reference's
-        # ParallelFileMerger, util/ParallelFileMerger.scala:34)
-        offsets = concat_files_parallel(
-            path, [sp for sp, *_ in live], header_blob, _BGZF_EOF, fs=fs
-        )
-        bases = list(zip(offsets, (m for _, m, _, _ in live)))
-        ref_counts: dict[int, list[int]] = {}
-        n_no_coor = 0
-        for _, _, c, nc in live:
-            n_no_coor += nc
-            for r_id, (n_map, n_unmap) in c.items():
-                t = ref_counts.setdefault(r_id, [0, 0])
-                t[0] += n_map
-                t[1] += n_unmap
-    finally:
-        fs.rmtree(shard_dir)
-
-    if write_index:
-        from adam_spark.sources.binned_index import (
-            max_bin_coord,
-            new_index,
-            write_bai,
-            write_csi,
-        )
-
-        # .bai caps at 2^29; longer contigs (plant genomes) get a
-        # depth-scaled .csi instead — htslib's `samtools index -c`
-        max_end = max((m[2] for _, m in bases), default=0)
-        depth = 5
-        while max_bin_coord(14, depth) < max_end and depth < 10:
-            depth += 1
-        idx = new_index([r.name for r in refs], depth=depth)
-        idx.names = []  # .bai/.csi carry no names; contig order = BAM header
-        for base, (bins, linear, _, _, _) in bases:
-            idx.add_shard(bins, linear, base)
-        # htslib metadata pseudo-bins + unplaced trailer: the payload
-        # `samtools idxstats` reads without touching the BAM
-        for r_id, (n_map, n_unmap) in ref_counts.items():
-            idx.set_ref_stats(r_id, n_map, n_unmap)
-        idx.n_no_coor = n_no_coor
-        # a re-save can flip the index format (short vs long contigs);
-        # the reader PREFERS .bai, so a stale sibling from a previous
-        # save would silently serve region queries for old data
-        if depth == 5:
-            if fs.exists(path + ".csi"):
-                fs.remove(path + ".csi")
-            write_bai(idx, path + ".bai", fs=fs)
-        else:
-            if fs.exists(path + ".bai"):
-                fs.remove(path + ".bai")
-            write_csi(idx, path + ".csi", fs=fs)
-    else:
-        # the data changed; any index from a previous indexed save at
-        # this path no longer addresses it
-        for stale in (path + ".bai", path + ".csi"):
-            if fs.exists(stale):
-                fs.remove(stale)
+    header = bam_header_bytes(
+        sam_header_lines(gf.meta, pg_line=pg_line),
+        [(r.name, r.length or 0) for r in refs],
+    )
+    bgzf.save_sharded(
+        sam_body_lines(gf.df), path,
+        partial(_encode_line, ref_index=ref_index, collect_spans=write_index),
+        header=header, index="bai", write_index=write_index,
+        ref_names=[r.name for r in refs], fs=fs,
+    )

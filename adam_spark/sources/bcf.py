@@ -17,24 +17,28 @@ descriptor byte (low nibble = type, high nibble = count, 15 = count in
 a following typed int). GT cells are ints encoding
 ``(allele + 1) << 1 | phased``.
 
-Scale shape: the scan is SPLITTABLE in every BGZF case — arithmetic
-ranges over the compressed bytes; tasks resync to a BGZF block
-boundary and then to a record boundary with a BAMSplitGuesser-style
-chain check (:func:`_plausible_bcf_record`). A ``.csi`` sidecar
-(written by :func:`save_bcf`) serves :func:`load_indexed_bcf`'s
-region queries only — full scans measured FASTER on the arithmetic
-split than on the index's chunk cover (MEASURED.md r13). Only a RAW
-(uncompressed) BCF decodes in one task. The header reads
-driver-side, O(header bytes).
+Scale shape: split scans, indexed chunk loads and the sharded writer
+are the shared BGZF layer (:mod:`adam_spark.sources.bgzf`); this
+module supplies the BCF framing — the ``<II`` (l_shared, l_indiv)
+record prefix and the record-boundary check for split resync
+(:func:`_plausible_bcf_record`). A ``.csi`` sidecar (written by
+:func:`save_bcf`) serves :func:`load_indexed_bcf`'s region queries
+only — full scans measured FASTER on the arithmetic split than on the
+index's chunk cover (MEASURED.md r13). Only a raw (uncompressed or
+plain-gzip) BCF decodes in one task. The header reads driver-side,
+O(header bytes).
 """
 
 from __future__ import annotations
 
+import io
 import struct
+from functools import partial
 
 from pyspark.sql import SparkSession
 
 from adam_spark.core.genomic_frame import GenomicFrame
+from adam_spark.sources import bgzf
 
 #: missing / end-of-vector sentinels per integer width; floats use the
 #: SIGNALING-NaN payloads 0x7F800001 / 0x7F800002, which are handled
@@ -83,21 +87,13 @@ def _bcf_payload(raw: bytes) -> bytes:
     """Raw file bytes → uncompressed BCF stream (BGZF is multi-member
     gzip; an uncompressed .bcf starts with the magic directly)."""
     if raw[:2] == b"\x1f\x8b":
-        import gzip
-
-        raw = gzip.decompress(raw)
+        raw = bgzf.inflate(io.BytesIO(raw))
     if raw[:5] != b"BCF\x02\x02":
         raise ValueError(
             f"not a BCFv2.2 stream (magic {raw[:5]!r}); BCFv2.1 and"
             " plain VCF are handled by load_vcf"
         )
     return raw
-
-
-def bcf_header_text(raw: bytes) -> str:
-    data = _bcf_payload(raw)
-    l_text = struct.unpack_from("<I", data, 5)[0]
-    return data[9 : 9 + l_text].rstrip(b"\x00").decode()
 
 
 def _dictionaries(header_text: str):
@@ -349,14 +345,14 @@ def _plausible_bcf_record(
     buf, off: int, n_contigs: int, n_samples: int, chain: int = 3,
     extend=None, str_dict=None,
 ) -> bool:
-    """BCF record-boundary check, the BAMSplitGuesser shape
-    (bam._plausible_record): a chain of ``chain`` records must carry
-    sane section lengths, an in-bounds contig id/position, ≥1 allele,
-    and — the strongest discriminator — a sample count EQUAL to the
-    header's (htslib requires every record to carry it). ``extend``
-    grows ``buf`` with the next block when the chain outruns it; a
-    clean stop exactly at EOF is a real boundary, anything else
-    unverifiable is rejected (never a blind accept).
+    """BCF record-boundary check for :func:`bgzf.scan_range`, the
+    BAMSplitGuesser shape (bam._plausible_record): a chain of
+    ``chain`` records must carry sane section lengths, an in-bounds
+    contig id/position, ≥1 allele, and — the strongest discriminator —
+    a sample count EQUAL to the header's (htslib requires every record
+    to carry it). ``extend`` grows ``buf`` with the next block when the
+    chain outruns it; a clean stop exactly at EOF is a real boundary,
+    anything else unverifiable is rejected (never a blind accept).
 
     Worst-case resync cost per task (r12 verdict item 7): the caller
     probes offsets 0..owned-1; each probe is O(chain)=3 fixed-size
@@ -409,130 +405,31 @@ def _plausible_bcf_record(
     return True
 
 
-def _bcf_body_start(path: str, fs=None) -> tuple[int, int] | None:
+def _bcf_body_start(path: str, fs) -> tuple[int, int] | None:
     """Driver-side, O(header blocks): (compressed block offset,
-    intra-block offset) where the record stream begins in a
-    BGZF-framed BCF — the split arithmetic's origin. ``None`` when the
-    file is not BGZF (raw BCF stays a single decode task)."""
-    from adam_spark.sources.bam import _read_block_fully
+    in-block offset) where the record stream begins in a BGZF-framed
+    BCF — the split arithmetic's origin. ``None`` when the file is not
+    BGZF (raw or plain-gzip BCF stays a single decode task)."""
+    if not bgzf.is_bgzf(path, fs):
+        return None
 
-    if fs is None:
-        from adam_spark.sources.filesystem import LocalFileSystem
-
-        fs = LocalFileSystem()
-    with fs.open_read(path) as f:
-        if f.read(2) != b"\x1f\x8b":
+    def header_end(data):
+        if len(data) < 9:
             return None
-        fsize = fs.size(path)
-        buf = bytearray()
-        off = cum = 0
-        l_text = None
-        while off < fsize:
-            total, data = _read_block_fully(f, off)
-            if l_text is None:
-                buf += data
-                if len(buf) >= 9:
-                    if buf[:5] != b"BCF\x02\x02":
-                        raise ValueError(f"{path} is not a BCFv2.2 stream")
-                    l_text = struct.unpack_from("<I", buf, 5)[0]
-            if l_text is not None:
-                target = 9 + l_text
-                if cum + len(data) > target:
-                    return (off, target - cum)
-                if cum + len(data) == target:
-                    return (off + total, 0)  # body starts at next block
-            cum += len(data)
-            off += total
-    return (off, 0)  # header-only file: empty body at EOF
+        if data[:5] != b"BCF\x02\x02":
+            raise ValueError(f"{path} is not a BCFv2.2 stream")
+        end = 9 + struct.unpack_from("<I", data, 5)[0]
+        return (None, end) if len(data) >= end else None
+
+    found = bgzf.body_start(path, header_end, fs)
+    if found is None:
+        return (fs.size(path), 0)  # truncated header: empty body
+    return found[1:]
 
 
-def _decode_bcf_byte_range(
-    path: str,
-    start: int,
-    end: int,
-    first_intra: int,
-    resync: bool,
-    n_contigs: int,
-    n_samples: int,
-    str_dict: dict[int, str],
-    contig_dict: dict[int, str],
-    flags: set[str],
-    fs=None,
-):
-    """Executor task: decode BCF records STARTING inside compressed
-    byte range [start, end) — the bam._decode_byte_range contract:
-    resync to the first BGZF block at/after ``start``, then to the
-    first plausible record boundary; read forward past the range end to
-    finish a trailing record that spans into the next range."""
-    from adam_spark.sources.bam import _block_at, _inflate_block, _next_block_offset
-
-    if fs is None:
-        from adam_spark.sources.filesystem import LocalFileSystem
-
-        fs = LocalFileSystem()
-    fsize = fs.size(path)
-    with fs.open_read(path) as f:
-        if resync:
-            first = _next_block_offset(f, start, fsize)
-            if first is None or first >= end:
-                return
-        else:
-            first = start
-        data = bytearray()
-        next_off = first
-        while next_off < end and next_off < fsize:
-            total, _ = _block_at(f, next_off)
-            data += _inflate_block(f, next_off, total)
-            next_off += total
-        owned = len(data)
-        if owned == 0:
-            return
-
-        def extend() -> bool:
-            nonlocal next_off
-            if next_off >= fsize:
-                return False
-            total, _ = _block_at(f, next_off)
-            data.extend(_inflate_block(f, next_off, total))
-            next_off += total
-            return True
-
-        pos = first_intra
-        if resync:
-            pos = next(
-                (
-                    o
-                    for o in range(owned)
-                    if _plausible_bcf_record(
-                        data, o, n_contigs, n_samples, extend=extend,
-                        str_dict=str_dict,
-                    )
-                ),
-                None,
-            )
-            if pos is None:
-                return
-        trimmed = 0
-        while pos < owned:
-            if pos - trimmed > (8 << 20):
-                del data[: pos - trimmed]
-                trimmed = pos
-            while pos - trimmed + 8 > len(data):
-                if not extend():
-                    if pos - trimmed == len(data):
-                        return  # clean EOF
-                    raise ValueError("truncated BCF record header")
-            l_shared, l_indiv = struct.unpack_from("<II", data, pos - trimmed)
-            rec_len = 8 + l_shared + l_indiv
-            while pos - trimmed + rec_len > len(data):
-                if not extend():
-                    raise ValueError("truncated BCF record body")
-            p = pos - trimmed
-            yield from _records_from_buffer(
-                bytes(data[p : p + rec_len]), 0, rec_len,
-                str_dict, contig_dict, flags,
-            )
-            pos += rec_len
+def _vcf_line(rec: bytes, str_dict, contig_dict, flags) -> str:
+    """One length-prefixed BCF record → VCF body line."""
+    return _records_from_buffer(rec, 0, len(rec), str_dict, contig_dict, flags)[0]
 
 
 def _bcf_header_driver_side(path: str, fs=None):
@@ -581,23 +478,19 @@ def load_bcf(
 ) -> GenomicFrame:
     """BCFv2.2 → variant contexts, through the shared text parser.
 
-    The scan is SPLITTABLE in every BGZF case, indexed or not: the
-    split is ARITHMETIC over the compressed bytes (the load_bam
-    shape) — tasks resync to a BGZF block boundary, then to the first
-    plausible record boundary (:func:`_plausible_bcf_record` — the
-    BAMSplitGuesser chain check over l_shared/l_indiv/rid/pos/
-    n_sample plus a typed walk of the shared section) and decode
-    records starting inside their range, reading past the range end
-    for a trailing spanning record. A ``.csi`` sidecar is NOT
-    consulted for full scans (it serves :func:`load_indexed_bcf`'s
-    region queries): a position-sorted save's merged chunk cover is
-    ~one chunk per shard, capping an indexed full scan at shard-count
-    tasks, and the r13 interleaved A/B on a 105 MB / 10M-record file
-    measured the index-cover path 2.3-6× SLOWER than the arithmetic
-    split at equal task counts (full-chunk buffering vs streaming
-    block decode; MEASURED.md) — the same reason load_bam never
-    consults the .bai for full scans. Only a RAW (uncompressed) BCF
-    falls back to one decode task."""
+    The scan is SPLITTABLE in every BGZF case, indexed or not: it is
+    :func:`bgzf.scan`, resyncing with :func:`_plausible_bcf_record`
+    (the BAMSplitGuesser chain check over l_shared/l_indiv/rid/pos/
+    n_sample plus a typed walk of the shared section). A ``.csi``
+    sidecar is NOT consulted for full scans (it serves
+    :func:`load_indexed_bcf`'s region queries): a position-sorted
+    save's merged chunk cover is ~one chunk per shard, capping an
+    indexed full scan at shard-count tasks, and the r13 interleaved A/B
+    on a 105 MB / 10M-record file measured the index-cover path 2.3-6×
+    SLOWER than the arithmetic split at equal task counts (full-chunk
+    buffering vs streaming block decode; MEASURED.md) — the same reason
+    load_bam never consults the .bai for full scans. Only a raw (uncompressed or
+    plain-gzip) BCF falls back to one decode task."""
     import os
 
     from adam_spark.sources.filesystem import LocalFileSystem, get_fs
@@ -621,47 +514,20 @@ def load_bcf(
                 return bcf_records_to_vcf_lines(rf.read())
 
         rdd = sc.parallelize([apath], 1).flatMap(_raw_lines)
+        body = spark.createDataFrame(rdd.map(lambda ln: (ln,)), "value string")
     else:
-        flags = _flag_keys(header_text)
-        n_contigs = max(contig_dict) + 1
-        n_samples = len(sample_names)
-        records_off, records_intra = body_start
-        fsize = fs.size(apath)
-        body_bytes = fsize - records_off
-        tasks = []
-        if body_bytes > 0:
-            par = sc.defaultParallelism
-            n_ranges = max(1, par * 2, body_bytes // target_split_bytes)
-            # never more ranges than ~64 KiB each — a range smaller
-            # than one BGZF block would mostly resync to nothing
-            n_ranges = int(min(n_ranges, max(1, body_bytes // (64 << 10))))
-            bounds = [
-                records_off + (body_bytes * i) // n_ranges
-                for i in range(n_ranges + 1)
-            ]
-            bounds[-1] = fsize
-            for i in range(n_ranges):
-                if bounds[i] >= bounds[i + 1]:
-                    continue
-                tasks.append(
-                    dict(
-                        path=apath,
-                        start=bounds[i],
-                        end=bounds[i + 1],
-                        first_intra=records_intra if i == 0 else 0,
-                        resync=i > 0,
-                        n_contigs=n_contigs,
-                        n_samples=n_samples,
-                        str_dict=str_dict,
-                        contig_dict=contig_dict,
-                        flags=flags,
-                        fs=fs,
-                    )
-                )
-        rdd = sc.parallelize(tasks, max(1, len(tasks))).flatMap(
-            lambda t: _decode_bcf_byte_range(**t)
+        body = bgzf.scan(
+            spark, apath, body_start, "<II",
+            partial(
+                _plausible_bcf_record, n_contigs=max(contig_dict) + 1,
+                n_samples=len(sample_names), str_dict=str_dict,
+            ),
+            partial(
+                _vcf_line, str_dict=str_dict, contig_dict=contig_dict,
+                flags=_flag_keys(header_text),
+            ),
+            target_split_bytes, fs,
         )
-    body = spark.createDataFrame(rdd.map(lambda ln: (ln,)), "value string")
     return vcf_lines_to_contexts(body, header_lines, refs, sample_names)
 
 
@@ -677,11 +543,9 @@ def load_indexed_bcf(
     predicate on (CHROM, POS-1, POS-1+len(REF))."""
     import os
 
-    from pyspark.sql import functions as F  # noqa: N812
-
-    from adam_spark.sources.binned_index import merge_chunks, read_csi
+    from adam_spark.sources.binned_index import read_csi
     from adam_spark.sources.filesystem import LocalFileSystem, get_fs
-    from adam_spark.sources.vcf import vcf_lines_to_contexts
+    from adam_spark.sources.vcf import _region_overlap, vcf_lines_to_contexts
 
     fs, path = get_fs(path, fs)
     apath = os.path.abspath(path) if isinstance(fs, LocalFileSystem) else path
@@ -690,48 +554,17 @@ def load_indexed_bcf(
     )
     str_dict, contig_dict = _dictionaries(header_text)
     flags = _flag_keys(header_text)
-    rid = {name: i for i, name in contig_dict.items()}
-
-    idx = read_csi(apath + ".csi", fs)
-    chunks = merge_chunks(
-        [
-            c
-            for (rname, beg, end) in regions
-            if rname in rid
-            for c in idx.chunks_for(rid[rname], beg, end)
-        ]
+    body = bgzf.indexed_lines(
+        spark, apath, read_csi(apath + ".csi", fs),
+        {name: i for i, name in contig_dict.items()}, regions,
+        lambda buf: _records_from_buffer(
+            buf, 0, len(buf), str_dict, contig_dict, flags
+        ),
+        fs,
     )
-
-    def _lines(task_chunks):
-        from adam_spark.sources.binned_index import read_chunk_bytes
-
-        for vb, ve in task_chunks:
-            buf = read_chunk_bytes(apath, vb, ve, fs)
-            yield from _records_from_buffer(
-                buf, 0, len(buf), str_dict, contig_dict, flags
-            )
-
-    sc = spark.sparkContext
-    par = sc.defaultParallelism
-    # contiguous byte-balanced slices (not strides): partition-index
-    # order reproduces file order, so order-sensitive downstream
-    # single-file saves keep the record order of the source file
-    from adam_spark.sources.binned_index import split_chunks_contiguous
-
-    task_chunks = split_chunks_contiguous(chunks, max(1, min(len(chunks), par * 2)))
-    rdd = sc.parallelize(task_chunks, max(1, len(task_chunks))).flatMap(_lines)
-    body = spark.createDataFrame(rdd.map(lambda ln: (ln,)), "value string")
-
-    t = F.split(F.col("value"), "\t")
-    ref_c = F.try_element_at(t, F.lit(1))
-    beg_c = F.try_element_at(t, F.lit(2)).try_cast("long") - 1
-    end_c = beg_c + F.length(F.try_element_at(t, F.lit(4)))
-    pred = F.lit(False)
-    for rname, beg, end in regions:
-        pred = pred | (
-            (ref_c == F.lit(rname)) & (beg_c < F.lit(end)) & (end_c > F.lit(beg))
-        )
-    return vcf_lines_to_contexts(body.where(pred), header_lines, refs, sample_names)
+    return vcf_lines_to_contexts(
+        body.where(_region_overlap(regions)), header_lines, refs, sample_names
+    )
 
 
 # --- writer ----------------------------------------------------------------
@@ -989,19 +822,24 @@ def _bcf_header_blob(header_lines: list[str], refs) -> tuple[bytes, dict, dict, 
     return blob, str_ix, contig_ix, info_types, fmt_types, flag_keys
 
 
-def save_bcf(gf: GenomicFrame, path: str, fs=None) -> dict:
-    """Variant contexts → single-file BCFv2.2 (BGZF-framed).
+def _encode_line(line: str, str_ix, contig_ix, info_types, fmt_types, flag_keys):
+    """VCF body line → (BCF record, index span) for
+    :func:`bgzf.save_sharded`."""
+    chrom, pos1, _, ref = line.split("\t", 4)[:4]
+    beg = int(pos1) - 1
+    rec = _encode_record(line, str_ix, contig_ix, info_types, fmt_types, flag_keys)
+    return rec, (contig_ix[chrom], beg, beg + max(len(ref), 1))
 
-    Shards encode + compress fully distributed (BGZF members
-    concatenate, the save_bam merge shape) with ZERO shuffles: the
+
+def save_bcf(gf: GenomicFrame, path: str, fs=None) -> dict:
+    """Variant contexts → single-file BCFv2.2 (BGZF-framed) + ``.csi``.
+
+    Written through :func:`bgzf.save_sharded` with ZERO shuffles: the
     rendered body's partition order already IS the frame order (the
-    render is a narrow projection), so each task record-encodes +
-    BGZF-compresses its own partition's shard file and the driver
-    appends shards in partition-index order — reproducing the global
-    frame order without a sort exchange. The rendered lines persist
-    once, shared by the dictionary key scans and the encode pass. The
-    driver writes the dictionary-annotated header member first and
-    closes with the BGZF EOF sentinel.
+    render is a narrow projection), so each task record-encodes its own
+    partition's shard. The rendered lines persist once, shared by the
+    dictionary key scans and the encode pass; the dictionary-annotated
+    header goes ahead of the shards.
     Undeclared attribute keys found in the rendered lines get Number=.
     Type=String declarations appended, and contig names absent from the
     sequence dictionary get synthesized ##contig lines, so the BCF
@@ -1010,7 +848,6 @@ def save_bcf(gf: GenomicFrame, path: str, fs=None) -> dict:
     pinned by load_bcf equality tests + the converter fuzzer corpus."""
     from pyspark.sql import functions as F  # noqa: N812
 
-    from adam_spark.sources.bam import _BGZF_EOF, bgzf_blocks_bytes
     from adam_spark.sources.filesystem import get_fs
     from adam_spark.sources.vcf import _render_vcf
 
@@ -1106,94 +943,13 @@ def save_bcf(gf: GenomicFrame, path: str, fs=None) -> dict:
             hdr, gf.meta.references
         )
 
-        shard_dir = path + ".__shards"
-        fs.rmtree(shard_dir)
-        fs.makedirs(shard_dir)
-
-        bs = 60_000
-
-        def _encode_shard(i, it):
-            from adam_spark.sources.binned_index import ShardIndexAgg, voffset
-
-            buf = bytearray()
-            recs: list[tuple[int, int, int, int, int]] = []
-            for row in it:
-                line = row["value"]
-                u0 = len(buf)
-                buf += _encode_record(
-                    line, str_ix, contig_ix, info_types, fmt_types, flag_keys
-                )
-                chrom, pos1, _, ref = line.split("\t", 4)[:4]
-                beg = int(pos1) - 1
-                recs.append(
-                    (contig_ix[chrom], beg, beg + max(len(ref), 1), u0, len(buf))
-                )
-            sblob, offsets = bgzf_blocks_bytes(bytes(buf), block_size=bs)
-            # index metadata aggregates to per-(ref, bin) chunk extents
-            # HERE, on the executor — the driver receives O(bins) per
-            # shard, never O(records) (the 100 TB constraint)
-            agg = ShardIndexAgg()
-            for rid, beg, rend, u0, u1 in recs:
-                agg.add(
-                    rid, beg, rend,
-                    voffset(offsets[u0 // bs], u0 % bs),
-                    voffset(offsets[u1 // bs], u1 % bs),
-                )
-            sp = fs.join(shard_dir, f"part-{i:05d}")
-            f = fs.open_write(sp)
-            try:
-                f.write(sblob)
-            finally:
-                f.close()
-            return [(i, sp, len(sblob), agg.manifest())]
-
-        manifests = (
-            ordered.select("value")
-            .rdd.mapPartitionsWithIndex(_encode_shard)
-            .collect()
+        return bgzf.save_sharded(
+            ordered, path,
+            partial(
+                _encode_line, str_ix=str_ix, contig_ix=contig_ix,
+                info_types=info_types, fmt_types=fmt_types, flag_keys=flag_keys,
+            ),
+            header=blob, index="csi", ref_names=list(contig_ix), fs=fs,
         )
-        manifests.sort(key=lambda m: m[0])
-        hblob, _ = bgzf_blocks_bytes(blob)
-        # .csi sidecar: shard-local virtual offsets shift to global ones
-        # via the prefix-summed shard compressed offsets (each shard's
-        # blocks restart at local uncompressed offset 0); depth scales
-        # to the longest coordinate (the reason CSI exists: contigs
-        # past the 2^29 tabix/BAI limit)
-        from adam_spark.sources.binned_index import (
-            max_bin_coord,
-            new_index,
-            write_csi,
-        )
-
-        max_end = max((m[3][2] for m in manifests), default=0)
-        depth = 5
-        while max_bin_coord(14, depth) < max_end and depth < 10:
-            depth += 1
-        idx = new_index(list(contig_ix), depth=depth)
-        index_chunks = 0
-        # parallel positioned-write concat (ParallelFileMerger shape);
-        # the returned prefix offsets are exactly the manifest shifts
-        from adam_spark.sources.merge import concat_files_parallel
-
-        offs = concat_files_parallel(
-            path, [m[1] for m in manifests], hblob, _BGZF_EOF, fs=fs
-        )
-        totals: dict[int, int] = {}
-        for (_, sp, _, (bins, linear, _, _, counts)), base in zip(manifests, offs):
-            # the linear fold feeds the CSI per-bin loffsets (htslib
-            # update_loff semantics) — without it write_csi would have
-            # no safe pruning floor and disable start-offset pruning
-            idx.add_shard(bins, linear, base)
-            index_chunks += sum(len(c) for c in bins.values())
-            for r_id, c in counts.items():
-                totals[r_id] = totals.get(r_id, 0) + c
-            fs.remove(sp)
-        fs.rmdir(shard_dir)
-        # htslib metadata pseudo-bins (`bcftools index -s` payload)
-        for r_id, total in totals.items():
-            idx.set_ref_stats(r_id, total)
-        idx.n_no_coor = 0
-        write_csi(idx, path + ".csi", fs=fs)
-        return {"shards": len(manifests), "index_manifest_chunks": index_chunks}
     finally:
         ordered.unpersist()

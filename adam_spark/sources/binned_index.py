@@ -414,7 +414,7 @@ def write_tbi(idx: BinnedIndex, path: str, fs=None) -> None:
     must go through :func:`write_csi`."""
     if (idx.min_shift, idx.depth) != (14, 5):
         raise ValueError(".tbi cannot express a non-(14,5) binning; use write_csi")
-    from adam_spark.sources.bam import bgzf_compress_to
+    from adam_spark.sources import bgzf
 
     names_blob = b"".join(n.encode() + b"\x00" for n in idx.names)
     out = bytearray()
@@ -428,13 +428,13 @@ def write_tbi(idx: BinnedIndex, path: str, fs=None) -> None:
     out += _encode_refs(idx)
     if idx.n_no_coor is not None:
         out += struct.pack("<Q", idx.n_no_coor)
-    bgzf_compress_to(path, bytes(out), fs=fs)
+    bgzf.compress_to(path, bytes(out), fs=fs)
 
 
 def read_tbi(path: str, fs=None) -> BinnedIndex:
-    from adam_spark.sources.bam import bgzf_decompress
+    from adam_spark.sources import bgzf
 
-    data = bgzf_decompress(path, fs)
+    data = bgzf.decompress(path, fs)
     if data[:4] != b"TBI\x01":
         raise ValueError(f"{path} is not a tabix index")
     n_ref, fmt, col_seq, col_beg, col_end, meta_char, skip, l_nm = struct.unpack_from(
@@ -507,7 +507,7 @@ def write_csi(idx: BinnedIndex, path: str, tabix_aux: bool = False, fs=None) -> 
     column config + contig names (htslib's tbx layout — what ``tabix
     -C`` writes for text formats); plain BCF indexes leave aux empty
     (BCF carries contig names in its own header dictionary)."""
-    from adam_spark.sources.bam import bgzf_compress_to
+    from adam_spark.sources import bgzf
 
     if idx.min_shift != _LINEAR_SHIFT and any(r.linear for r in idx.refs):
         # the in-memory linear index is built at 16 kb windows; a
@@ -546,7 +546,7 @@ def write_csi(idx: BinnedIndex, path: str, tabix_aux: bool = False, fs=None) -> 
                                n_mapped, n_unmapped)
     if idx.n_no_coor is not None:
         out += struct.pack("<Q", idx.n_no_coor)
-    bgzf_compress_to(path, bytes(out), fs=fs)
+    bgzf.compress_to(path, bytes(out), fs=fs)
 
 
 def read_csi(path: str, fs=None) -> BinnedIndex:
@@ -555,9 +555,9 @@ def read_csi(path: str, fs=None) -> BinnedIndex:
     column config + contig names. The linear index stays empty (CSI's
     per-bin ``loffset`` replaces it); ``chunks_for`` prunes chunk
     starts with the htslib loffset walk instead."""
-    from adam_spark.sources.bam import bgzf_decompress
+    from adam_spark.sources import bgzf
 
-    data = bgzf_decompress(path, fs)
+    data = bgzf.decompress(path, fs)
     if data[:4] != b"CSI\x01":
         raise ValueError(f"{path} is not a CSI index")
     min_shift, depth, l_aux = struct.unpack_from("<3i", data, 4)
@@ -671,33 +671,3 @@ def split_chunks_contiguous(
         out[-1].append((vb, ve))
         acc += size
     return out
-
-
-# --- chunk decode (shared by indexed BAM/VCF readers) ----------------------
-def read_chunk_bytes(path: str, vbeg: int, vend: int, fs=None) -> bytes:
-    """Decompressed bytes of one virtual-offset chunk [vbeg, vend)."""
-    from adam_spark.sources.bam import _read_block_fully
-
-    if fs is None:
-        from adam_spark.sources.filesystem import LocalFileSystem
-
-        fs = LocalFileSystem()
-    cbeg, ubeg = vsplit(vbeg)
-    cend, uend = vsplit(vend)
-    out = bytearray()
-    with fs.open_read(path) as f:
-        pos = cbeg
-        while pos <= cend:
-            if pos == cend and uend == 0:
-                # htsjdk writes chunk ends as (next block)<<16 — for the
-                # last chunk that is (file length)<<16, one past the EOF
-                # block; nothing of the end block is needed when the
-                # in-block offset is 0 (pinned on the reference's real
-                # indexed_bams/sorted.bam.bai)
-                break
-            total, data = _read_block_fully(f, pos)
-            lo = ubeg if pos == cbeg else 0
-            hi = uend if pos == cend else len(data)
-            out += data[lo:hi]
-            pos += total
-    return bytes(out)

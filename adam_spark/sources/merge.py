@@ -257,9 +257,9 @@ def merge_shards(
                 hf.close()
     eof_blob = b""
     if write_empty_gzip_at_eof:
-        from adam_spark.sources.bam import _BGZF_EOF
+        from adam_spark.sources import bgzf
 
-        eof_blob = _BGZF_EOF
+        eof_blob = bgzf.EOF
     if write_cram_eof:
         from adam_spark.sources.cram import cram_eof_bytes
 

@@ -40,6 +40,7 @@ from adam_spark.core.metadata import (
     Sample,
     SequenceDictionary,
 )
+from adam_spark.sources import bgzf
 
 # INFO keys with Number=A (one value per alt allele) in the VCF 4.3 spec
 # reserved set — indexed by alt index on multiallelic split.
@@ -566,7 +567,7 @@ def _bgz_text_range(path: str, start: int, end: int, first: bool):
     semantics lifted to block-compressed text:
 
     - a block belongs to the one range containing its START offset
-      (``_next_block_offset`` resyncs mid-block range starts);
+      (:func:`bgzf.next_block_offset` resyncs mid-block range starts);
     - with L = this range's uncompressed length, the task emits every
       line whose local start s satisfies s <= L — INCLUSIVE, matching
       LineRecordReader's ``pos <= end`` — decompressing FORWARD blocks
@@ -575,16 +576,12 @@ def _bgz_text_range(path: str, start: int, end: int, first: bool):
       line was the previous range's final emit). A range whose data has
       no newline at all sits inside one giant line and owns nothing.
     """
-    import os as _os
-
-    from adam_spark.sources.bam import _next_block_offset, _read_block_fully
-
-    fsize = _os.path.getsize(path)
+    fsize = os.path.getsize(path)
     with open(path, "rb") as f:
-        off = start if first else _next_block_offset(f, start, fsize)
+        off = start if first else bgzf.next_block_offset(f, start, fsize)
         own = bytearray()
         while off is not None and off < min(end, fsize):
-            total, data = _read_block_fully(f, off)
+            total, data = bgzf.read_block(f, off)
             own += data
             off += total
         if not first and own.find(b"\n") < 0:
@@ -597,7 +594,7 @@ def _bgz_text_range(path: str, start: int, end: int, first: bool):
         # index >= L (the first task with no blocks before `end` never
         # loops — off already sits at its first forward block)
         while buf.find(b"\n", L) < 0 and off is not None and off < fsize:
-            total, data = _read_block_fully(f, off)
+            total, data = bgzf.read_block(f, off)
             buf += data
             off += total
     data = bytes(buf)
@@ -622,42 +619,25 @@ def _bgz_text(
     spark: SparkSession, files: list[str], target_split_bytes: int = 16 << 20
 ) -> DataFrame:
     """Distributed text scan over BGZF files (htslib ``.bgz``): the
-    driver does O(1) work per file (size + first-block probe), byte
-    ranges are pure arithmetic, and executors resync to block
-    boundaries themselves — the same split machinery as load_bam
-    (sources/bam.py), so a 100 GB .bgz VCF scans as parallel ranges
-    instead of one whole-file-in-memory task. A ``.bgz``-named file
-    that is NOT BGZF (plain gzip, detected by probing the first block
-    header for the BC subfield) falls back to one whole-file gunzip
-    task, Spark's own unsplittable-gzip parallelism class."""
-    import struct as _struct
-
-    from adam_spark.sources.bam import _block_at
-
+    driver does O(1) work per file (size + first-block probe) and the
+    byte ranges are :func:`bgzf.plan_ranges`, so a 100 GB .bgz VCF
+    scans as parallel ranges instead of one whole-file-in-memory task.
+    A ``.bgz``-named file that is NOT BGZF (plain gzip: no BC
+    subfield) falls back to one whole-file gunzip task, Spark's own
+    unsplittable-gzip parallelism class."""
     par = spark.sparkContext.defaultParallelism
     tasks: list[dict] = []
     whole: list[str] = []
     for path in files:
         path = os.path.abspath(path)
-        fsize = os.path.getsize(path)
-        try:
-            with open(path, "rb") as f:
-                _block_at(f, 0)
-        except (ValueError, _struct.error):
+        if not bgzf.is_bgzf(path):
             whole.append(path)
             continue
-        n_ranges = max(1, par * 2, fsize // target_split_bytes)
-        # never more ranges than ~64 KiB each — a range smaller than
-        # one BGZF block would mostly resync to nothing
-        n_ranges = int(min(n_ranges, max(1, fsize // (64 << 10))))
-        bounds = [(fsize * i) // n_ranges for i in range(n_ranges + 1)]
-        bounds[-1] = fsize
-        for i in range(n_ranges):
-            if bounds[i] >= bounds[i + 1]:
-                continue
-            tasks.append(
-                dict(path=path, start=bounds[i], end=bounds[i + 1], first=i == 0)
-            )
+        ranges = bgzf.plan_ranges(os.path.getsize(path), 0, target_split_bytes, par)
+        tasks += [
+            dict(path=path, start=s, end=e, first=i == 0)
+            for i, (s, e) in enumerate(ranges)
+        ]
     sc = spark.sparkContext
     out = None
     if tasks:
@@ -666,11 +646,9 @@ def _bgz_text(
         )
         out = spark.createDataFrame(rdd.map(lambda ln: (ln,)), "value string")
     if whole:
-        import gzip as _gzip
-
         def _gunzip(paths):
             for p in paths:
-                text = _gzip.decompress(open(p, "rb").read()).decode()
+                text = bgzf.decompress(p).decode()
                 for ln in text.rstrip("\n").split("\n"):
                     yield (ln,)
 
@@ -1644,139 +1622,54 @@ def save_vcf(
 
 
 # --- tabix-indexed path ----------------------------------------------------
+def _text_line(line: str):
+    """VCF text line → (bytes, tabix span keyed by contig name) for
+    :func:`bgzf.save_sharded`; header lines carry no span."""
+    rec = line.encode() + b"\n"
+    if not line or line.startswith("#"):
+        return rec, None
+    f = line.split("\t", 5)
+    beg = int(f[1]) - 1
+    return rec, (f[0], beg, beg + len(f[3]))
+
+
 def save_vcf_bgzf(gf: GenomicFrame, path: str, fs=None) -> dict:
-    """Variant contexts → bgzipped VCF + tabix index (``path.tbi``).
-
-    Fully distributed with ZERO shuffles (the ParallelFileMerger
-    shape, util/ParallelFileMerger.scala:34): the one-partition header
-    DataFrame unions AHEAD of the body, so the union's partition list
-    is [header, body partitions...] in frame order — each task
-    BGZF-compresses its own partition's shard file in a single pass
-    (no sort exchange, no sampling double-render, no persist) while
-    recording a per-shard manifest of (uncompressed length, block
-    compressed-offsets, record line-spans). The driver never
-    materializes row data: it concatenates shards in partition-index
-    order, prefix-sums the shard compressed offsets, and maps each
-    record's shard-local uncompressed span to global BGZF virtual
-    offsets for the .tbi (each shard's blocks restart at local
-    uncompressed offset 0, so ``u % block_size`` stays exact per
-    shard). The index pair is order-independent (chunks are per-bin
-    virtual-offset ranges), matching the frame-order file the multi
-    writer has always produced. Reference consumer:
+    """Variant contexts → bgzipped VCF + tabix index (``path.tbi``;
+    tabix-over-CSI ``path.csi`` past 2^29), via
+    :func:`bgzf.save_sharded` with ZERO shuffles: the one-partition
+    header DataFrame unions AHEAD of the body, so the union's partition
+    list is [header, body partitions...] in frame order and each task
+    compresses its own partition in a single pass (no sort exchange, no
+    sampling double-render, no persist). Contigs are numbered in order
+    of first appearance. Reference consumer:
     ADAMContext.loadIndexedVcf:2760-2776."""
-    from adam_spark.sources.bam import _BGZF_EOF, bgzf_blocks_bytes
-    from adam_spark.sources.binned_index import new_index, voffset, write_tbi
-    from adam_spark.sources.filesystem import get_fs
-
-    # resolved ONCE here; the handle rides the task closures so shard
-    # bytes stream executor->store directly (HDFS/S3 via pyarrow.fs)
-    fs, path = get_fs(path, fs)
-    bs = 60_000
-    header, body = _render_vcf(gf)
     from adam_spark.sources.merge import local_lines_df
 
+    header, body = _render_vcf(gf)
     hdr_df = local_lines_df(
         body.sparkSession,
         [(0, i, h) for i, h in enumerate(header)],
         "__o int, __k2 long, value string",
     )
-    shard_dir = path + ".__shards"
-    fs.rmtree(shard_dir)
-    fs.makedirs(shard_dir)
-
-    def _compress_shard(i, it):
-        from adam_spark.sources.binned_index import ShardIndexAgg
-
-        buf = bytearray()
-        recs: list[tuple[str, int, int, int, int]] = []
-        for row in it:
-            line = row["value"]
-            u0 = len(buf)
-            buf += line.encode() + b"\n"
-            if line and not line.startswith("#"):
-                f = line.split("\t", 5)
-                beg = int(f[1]) - 1
-                recs.append((f[0], beg, beg + len(f[3]), u0, len(buf)))
-        blob, offsets = bgzf_blocks_bytes(bytes(buf), block_size=bs)
-        # index metadata aggregates on the EXECUTOR to per-(contig,
-        # bin) chunk extents + per-16kb-window minima, keyed by contig
-        # NAME (the tasks don't know the global rid assignment) — the
-        # driver receives O(bins + windows) per shard, never O(records)
-        agg = ShardIndexAgg()
-        for ref, beg, end, u0, u1 in recs:
-            agg.add(
-                ref, beg, end,
-                voffset(offsets[u0 // bs], u0 % bs),
-                voffset(offsets[u1 // bs], u1 % bs),
-            )
-        sp = fs.join(shard_dir, f"part-{i:05d}")
-        out = fs.open_write(sp)
-        try:
-            out.write(blob)
-        finally:
-            out.close()
-        return [(i, sp, len(blob), agg.manifest())]
-
-    manifests = (
-        hdr_df.unionByName(body)
-        .select("value")
-        .rdd.mapPartitionsWithIndex(_compress_shard)
-        .collect()
+    return bgzf.save_sharded(
+        hdr_df.unionByName(body), path, _text_line, index="tbi", fs=fs
     )
-    manifests.sort(key=lambda m: m[0])
 
-    # contig-discovery order = shard order × per-shard first appearance,
-    # identical to the former per-record driver scan
-    names: list[str] = []
-    rid: dict[str, int] = {}
-    for _, _, _, (_, _, _, ref_order, _) in manifests:
-        for ref in ref_order:
-            if ref not in rid:
-                rid[ref] = len(names)
-                names.append(ref)
-    # coordinates within tabix's 2^29 limit → classic .tbi; beyond it
-    # (wheat-scale contigs) → tabix-over-CSI with a deeper binning,
-    # exactly htslib's `tabix -C` behavior
-    from adam_spark.sources.binned_index import max_bin_coord, write_csi
 
-    max_end = max((m[3][2] for m in manifests), default=0)
-    depth = 5
-    while max_bin_coord(14, depth) < max_end and depth < 10:
-        depth += 1
-    idx = new_index(names, depth=depth)
-    index_chunks = 0
-    # parallel positioned-write concat (ParallelFileMerger shape); the
-    # returned prefix offsets are exactly the manifest shifts
-    from adam_spark.sources.merge import concat_files_parallel
-
-    offs = concat_files_parallel(
-        path, [m[1] for m in manifests], b"", _BGZF_EOF, fs=fs
-    )
-    totals: dict[str, int] = {}
-    for (_, sp, _, (bins, linear, _, _, counts)), base in zip(manifests, offs):
-        idx.add_shard(bins, linear, base, ref_ids=rid)
-        index_chunks += sum(len(c) for c in bins.values())
-        for ref, c in counts.items():
-            totals[ref] = totals.get(ref, 0) + c
-        fs.remove(sp)
-    fs.rmdir(shard_dir)
-    # htslib metadata pseudo-bins: per-contig record counts + byte span
-    # (`tabix`/`bcftools index -s` read these without touching the data)
-    for ref, total in totals.items():
-        idx.set_ref_stats(rid[ref], total)
-    idx.n_no_coor = 0
-    # a re-save at the same path can flip the index format (short vs
-    # long contigs); the readers PREFER .tbi, so a stale sibling from a
-    # previous save would silently serve region queries for old data
-    if depth == 5:
-        if fs.exists(path + ".csi"):
-            fs.remove(path + ".csi")
-        write_tbi(idx, path + ".tbi", fs=fs)
-    else:
-        if fs.exists(path + ".tbi"):
-            fs.remove(path + ".tbi")
-        write_csi(idx, path + ".csi", tabix_aux=True, fs=fs)
-    return {"shards": len(manifests), "index_manifest_chunks": index_chunks}
+def _region_overlap(regions: list[tuple[str, int, int]]) -> Column:
+    """Exact overlap of VCF body lines with ``regions`` on (CHROM,
+    POS-1, POS-1+len(REF)) — the per-record filter after an index's
+    coarse bin prefilter."""
+    t = F.split(F.col("value"), "\t")
+    ref_c = F.try_element_at(t, F.lit(1))
+    beg_c = F.try_element_at(t, F.lit(2)).try_cast("long") - 1
+    end_c = beg_c + F.length(F.try_element_at(t, F.lit(4)))
+    pred = F.lit(False)
+    for rname, beg, end in regions:
+        pred = pred | (
+            (ref_c == F.lit(rname)) & (beg_c < F.lit(end)) & (end_c > F.lit(beg))
+        )
+    return pred
 
 
 def load_indexed_vcf(
@@ -1788,15 +1681,9 @@ def load_indexed_vcf(
     I/O scales with the overlap fraction, not the file. Records are
     exact: the coarse bin prefilter is followed by a per-record overlap
     predicate."""
-    import gzip as _gzip
-    import os
+    import gzip
 
-    from adam_spark.sources.binned_index import (
-        merge_chunks,
-        read_chunk_bytes,
-        read_csi,
-        read_tbi,
-    )
+    from adam_spark.sources.binned_index import read_csi, read_tbi
 
     path = os.path.abspath(path)
     if os.path.exists(path + ".tbi"):
@@ -1806,50 +1693,22 @@ def load_indexed_vcf(
         # the aux block)
         idx = read_csi(path + ".csi")
     header: list[str] = []
-    with _gzip.open(path, "rt") as f:  # streams only the header blocks
+    with gzip.open(path, "rt") as f:  # streams only the header blocks
         for line in f:
             if not line.startswith("#"):
                 break
             header.append(line.rstrip("\n"))
     header_lines, refs, sample_names = _header_from_lines(header)
-    header_lines = mix_header_lines(header_lines)
 
-    rid = {n: i for i, n in enumerate(idx.names)}
-    chunks = merge_chunks(
-        [
-            c
-            for (rname, beg, end) in regions
-            if rname in rid
-            for c in idx.chunks_for(rid[rname], beg, end)
-        ]
+    def _lines(chunk):
+        for ln in chunk.split(b"\n"):
+            if ln and not ln.startswith(b"#"):
+                yield ln.decode()
+
+    body = bgzf.indexed_lines(
+        spark, path, idx, {n: i for i, n in enumerate(idx.names)}, regions, _lines
     )
-
-    def _lines(task_chunks):
-        for vb, ve in task_chunks:
-            text = read_chunk_bytes(path, vb, ve)
-            for ln in text.split(b"\n"):
-                if ln and not ln.startswith(b"#"):
-                    yield ln.decode()
-
-    par = spark.sparkContext.defaultParallelism
-    # contiguous byte-balanced slices (not strides): partition-index
-    # order reproduces file order, so order-sensitive downstream
-    # single-file saves keep the record order of the source file
-    from adam_spark.sources.binned_index import split_chunks_contiguous
-
-    task_chunks = split_chunks_contiguous(chunks, max(1, min(len(chunks), par * 2)))
-    rdd = spark.sparkContext.parallelize(task_chunks, max(1, len(task_chunks))).flatMap(
-        _lines
+    return vcf_lines_to_contexts(
+        body.where(_region_overlap(regions)),
+        mix_header_lines(header_lines), refs, sample_names,
     )
-    body = spark.createDataFrame(rdd.map(lambda ln: (ln,)), "value string")
-    # exact overlap predicate on (CHROM, POS-1, POS-1+len(REF))
-    t = F.split(F.col("value"), "\t")
-    ref_c = F.try_element_at(t, F.lit(1))
-    beg_c = F.try_element_at(t, F.lit(2)).try_cast("long") - 1
-    end_c = beg_c + F.length(F.try_element_at(t, F.lit(4)))
-    pred = F.lit(False)
-    for rname, beg, end in regions:
-        pred = pred | (
-            (ref_c == F.lit(rname)) & (beg_c < F.lit(end)) & (end_c > F.lit(beg))
-        )
-    return vcf_lines_to_contexts(body.where(pred), header_lines, refs, sample_names)

@@ -514,8 +514,6 @@ def streaming_embedding_candidates(
     time_col: str = "ts",
     dim: int = 64,
     threshold: float = 0.8,
-    rows_per_band: int | None = None,
-    bands: int | None = None,
     watermark_delay: str = "10 minutes",
     state_ttl_seconds: int = 3600,
 ) -> DataFrame:
@@ -528,13 +526,11 @@ def streaming_embedding_candidates(
     ``embedding_near_duplicates`` over the landed corpus is the exact
     backstop). Emitted candidates are UNVERIFIED (LSH precision);
     exact-cosine verification composes in ``foreachBatch`` against the
-    landed vectors."""
+    landed vectors. Banding is ``srp_params(threshold)``, as in the
+    batch operator."""
     from adam_spark.llm.similarity import srp_band_hashes, srp_params
 
-    if rows_per_band is None or bands is None:
-        r_def, b_def = srp_params(threshold)
-        rows_per_band = rows_per_band or r_def
-        bands = bands or b_def
+    rows_per_band, bands = srp_params(threshold)
     id_type = vecs.schema[id_col].dataType
     base = vecs.select(
         F.col(id_col).alias("__vid"),

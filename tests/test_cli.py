@@ -765,9 +765,9 @@ def test_merge_shards_eof_flags(spark, tmp_path):
     rc = main(["merge_shards", str(d), out, "-write_empty_GZIP_at_eof",
                "-buffer_size", "1024"])
     assert rc == 0
-    from adam_spark.sources.bam import _BGZF_EOF
+    from adam_spark.sources import bgzf
 
-    assert open(out, "rb").read() == b"x" + _BGZF_EOF
+    assert open(out, "rb").read() == b"x" + bgzf.EOF
     out2 = str(tmp_path / "merged.cram")
     rc = main(["merge_shards", str(d), out2, "-write_cram_eof"])
     assert rc == 0

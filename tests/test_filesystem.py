@@ -309,3 +309,39 @@ def test_load_bcf_remote_backend(spark, remote, tmp_path):
         for r in gf.filter_by_overlapping_regions(regions).df.collect()
     )
     assert got_r == want_r and len(got_r) > 0
+
+
+def test_failed_save_removes_shard_staging_dir(spark, tmp_path):
+    """Every BGZF single-file writer stages shards in
+    ``<path>.__shards``; a save that fails after staging (here: the
+    target is an existing non-empty directory) must raise and leave no
+    staging directory behind."""
+    from adam_spark.core.genomic_frame import GenomicFrame
+    from adam_spark.sources.bam import save_bam
+    from adam_spark.sources.bcf import save_bcf
+    from adam_spark.sources.sam import load_sam
+    from adam_spark.sources.vcf import save_vcf_bgzf
+
+    variants = _toy_variants(spark, tmp_path, n=50)
+    src = tmp_path / "a.sam"
+    src.write_text(
+        "@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:100000\n"
+        + "".join(
+            f"r{i}\t0\tchr1\t{1 + i * 31}\t60\t10M\t*\t0\t0\t{'A'*10}\t{'I'*10}\n"
+            for i in range(50)
+        )
+    )
+    reads = load_sam(spark, str(src))
+    reads = GenomicFrame(reads.df.repartition(2), reads.meta)
+    for name, save, gf in [
+        ("bam", save_bam, reads),
+        ("bcf", save_bcf, variants),
+        ("vcf_bgzf", save_vcf_bgzf, variants),
+    ]:
+        target = tmp_path / f"taken_{name}"
+        target.mkdir()
+        (target / "keep").write_text("x")
+        with pytest.raises(IsADirectoryError):
+            save(gf, str(target))
+        assert not os.path.exists(str(target) + ".__shards"), name
+        assert (target / "keep").read_text() == "x"

@@ -8,10 +8,9 @@ import struct
 
 import pytest
 
+from adam_spark.sources import bgzf
 from adam_spark.sources.bam import (
     bam_bytes_to_sam,
-    bgzf_compress_to,
-    bgzf_decompress,
     load_bam,
     sam_line_to_bam_record,
     save_bam,
@@ -39,8 +38,8 @@ def sam_path(tmp_path):
 def test_bgzf_roundtrip(tmp_path):
     data = b"hello bgzf " * 20_000  # > one 60 KB block
     p = str(tmp_path / "x.bgzf")
-    bgzf_compress_to(p, data)
-    assert bgzf_decompress(p) == data
+    bgzf.compress_to(p, data)
+    assert bgzf.decompress(p) == data
     # readable by plain gzip too (BGZF is valid multi-member gzip)
     with gzip.open(p, "rb") as f:
         assert f.read() == data
@@ -50,11 +49,9 @@ def test_bgzf_bsize_block_walk(tmp_path):
     """Walk blocks the way htsjdk/samtools do — seek by BSIZE+1 — and
     land exactly on the EOF sentinel. Catches BSIZE off-by-one that
     gzip-stream decompression (which ignores BSIZE) cannot see."""
-    from adam_spark.sources.bam import _BGZF_EOF
-
     data = b"bsize walk " * 30_000  # several 60 KB blocks
     p = str(tmp_path / "x.bgzf")
-    bgzf_compress_to(p, data)
+    bgzf.compress_to(p, data)
     raw = open(p, "rb").read()
     pos = 0
     blocks = 0
@@ -83,7 +80,7 @@ def test_bgzf_bsize_block_walk(tmp_path):
         blocks += 1
     assert pos == len(raw)  # BSIZE walk consumed the file exactly
     assert out == data
-    assert raw[-28:] == _BGZF_EOF
+    assert raw[-28:] == bgzf.EOF
     assert blocks >= 6  # data blocks + sentinel
 
 
@@ -147,10 +144,9 @@ def test_bam_cli_end_to_end(spark, sam_path, tmp_path):
 
 
 def _many_read_bam(tmp_path, spark, n=800, block_size=512):
-    """A BAM re-blocked into tiny BGZF blocks so records span blocks."""
+    """A BAM re-blocked into tiny BGZF blocks so records span blocks →
+    (SAM path, BAM path, number of blocks including the EOF block)."""
     import random
-
-    from adam_spark.sources.bam import bgzf_decompress
 
     rng = random.Random(11)
     sam = tmp_path / "many.sam"
@@ -165,18 +161,15 @@ def _many_read_bam(tmp_path, spark, n=800, block_size=512):
     bam = str(tmp_path / "many.bam")
     save_bam(load_sam(spark, str(sam)), bam)
     small = str(tmp_path / "small_blocks.bam")
-    bgzf_compress_to(small, bgzf_decompress(bam), block_size=block_size)
-    return str(sam), small
+    offsets = bgzf.compress_to(small, bgzf.decompress(bam), block_size=block_size)
+    return str(sam), small, len(offsets)
 
 
 def test_distributed_bam_scan(spark, tmp_path):
     """Records spanning tiny BGZF blocks, decoded across many executor
     ranges (resync path), must round-trip exactly."""
-    from adam_spark.sources.bam import bgzf_block_offsets, load_bam
-
-    sam, small = _many_read_bam(tmp_path, spark, n=800)
-    blocks = bgzf_block_offsets(small)
-    assert len(blocks) > 30, "fixture must span many blocks"
+    sam, small, n_blocks = _many_read_bam(tmp_path, spark, n=800)
+    assert n_blocks > 30, "fixture must span many blocks"
     gf = load_bam(spark, small)
     a = {r["readName"]: r for r in load_sam(spark, sam).df.collect()}
     b = {r["readName"]: r for r in gf.df.collect()}
@@ -191,10 +184,11 @@ def test_byte_range_resync_no_dup_no_loss(spark, tmp_path):
     per-range decode with executor-side block+record resync must
     partition the records exactly (no dup, no loss)."""
     import os
+    from functools import partial
 
-    from adam_spark.sources.bam import _decode_byte_range, _read_bam_header_lazy
+    from adam_spark.sources.bam import _plausible_record, _read_bam_header_lazy, _sam_line
 
-    sam, small = _many_read_bam(tmp_path, spark, n=300)
+    sam, small, _ = _many_read_bam(tmp_path, spark, n=300)
     header_lines, ref_names, records_off, intra = _read_bam_header_lazy(small)
     fsize = os.path.getsize(small)
     # deliberately unaligned split width (prime) so range starts land
@@ -204,14 +198,15 @@ def test_byte_range_resync_no_dup_no_loss(spark, tmp_path):
     got = []
     for i in range(len(bounds) - 1):
         got.extend(
-            _decode_byte_range(
+            _sam_line(rec, ref_names)
+            for rec in bgzf.scan_range(
                 small,
                 start=bounds[i],
                 end=bounds[i + 1],
                 first_intra=intra if i == 0 else 0,
                 resync=i > 0,
-                n_ref=len(ref_names),
-                ref_names=ref_names,
+                head="<i",
+                plausible=partial(_plausible_record, n_ref=len(ref_names)),
             )
         )
     names = [ln.split("\t")[0] for ln in got]
@@ -223,17 +218,17 @@ def test_load_bam_driver_io_is_o_splits(spark, tmp_path, monkeypatch):
     stops after the header blocks, and splits are arithmetic."""
     import adam_spark.sources.bam as bammod
 
-    sam, small = _many_read_bam(tmp_path, spark, n=800)
-    assert len(bammod.bgzf_block_offsets(small)) > 30
+    sam, small, n_blocks = _many_read_bam(tmp_path, spark, n=800)
+    assert n_blocks > 30
 
     calls = {"n": 0}
-    orig = bammod._block_at
+    orig = bgzf._block_header
 
-    def counting_block_at(f, off):
+    def counting_block_header(f, off):
         calls["n"] += 1
         return orig(f, off)
 
-    monkeypatch.setattr(bammod, "_block_at", counting_block_at)
+    monkeypatch.setattr(bgzf, "_block_header", counting_block_header)
     # driver-side planning only — building the tasks, not running them
     gf = bammod.load_bam(spark, small)
     driver_calls = calls["n"]

@@ -166,3 +166,41 @@ def test_fasta_comments_gaps_stops(spark, tmp_path):
     # tests/test_reference_goldens.py)
     assert rows["prot1"] == "MKV-LL"
     assert rows["prot2"] == "ACGT"
+
+
+def test_interleaved_resync_quality_line_matching_pair_regex(spark, tmp_path):
+    """Adversarial resync boundary: a shard begins at a QUALITY line
+    that itself matches the first-of-pair regex ('@...1' — '@', '/' and
+    digits are all valid Phred+33 chars), immediately followed by the
+    orphaned '@name/2' line. The boundary must NOT land on the /2 read
+    (the look-ahead's next-line branch requires the next line to
+    satisfy the first-of-pair predicate itself, FastqRecordReader's
+    advance-to-next-CANDIDATE loop); the whole partial pair drops and
+    reading starts at the next true /1 line."""
+    from adam_spark.sources.fastq import load_interleaved_fastq
+
+    shard = "\n".join(
+        [
+            "@IIIIII/1",  # quality line of a truncated r1/1 record
+            "@prev/2",    # orphaned second-of-pair name line
+            "CCCCCCCC",
+            "+",
+            "IIIIIIII",
+            "@r2/1",
+            "AAAAAAAA",
+            "+",
+            "IIIIIIII",
+            "@r2/2",
+            "TTTTTTTT",
+            "+",
+            "IIIIIIII",
+        ]
+    ) + "\n"
+    p = tmp_path / "trunc.ifq"
+    p.write_text(shard)
+    df = load_interleaved_fastq(spark, str(p)).df
+    got = sorted(
+        (r["name"], r["readInFragment"], r["sequence"])
+        for r in df.select("name", "readInFragment", "sequence").collect()
+    )
+    assert got == [("r2", 0, "AAAAAAAA"), ("r2", 1, "TTTTTTTT")]

@@ -402,10 +402,10 @@ def test_default_header_lines_on_headerless_save(spark, tmp_path, vcf_path):
 
 def test_bgz_splittable_text_scan(spark, tmp_path):
     """A multi-block .bgz VCF scans as parallel byte ranges (the
-    load_bam block-range machinery) and the split path reproduces the
+    shared BGZF split planner) and the split path reproduces the
     whole-file decode exactly — every line once, none lost at range
     boundaries, regardless of where ranges cut blocks."""
-    from adam_spark.sources.bam import bgzf_compress_to
+    from adam_spark.sources import bgzf
     from adam_spark.sources.vcf import _bgz_text, _vcf_text
 
     header = "##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
@@ -416,7 +416,7 @@ def test_bgz_splittable_text_scan(spark, tmp_path):
     p = tmp_path / "big.vcf.bgz"
     # tiny blocks -> hundreds of blocks -> many ranges even at a small
     # target_split_bytes
-    offsets = bgzf_compress_to(str(p), text.encode(), block_size=4096)
+    offsets = bgzf.compress_to(str(p), text.encode(), block_size=4096)
     assert len(offsets) > 100
 
     want = text.rstrip("\n").split("\n")
@@ -440,13 +440,13 @@ def test_bgz_mixed_directory_and_plain_gzip_fallback(spark, tmp_path):
     gunzip task instead of failing the BGZF block walk."""
     import gzip
 
-    from adam_spark.sources.bam import bgzf_compress_to
+    from adam_spark.sources import bgzf
     from adam_spark.sources.vcf import _vcf_text
 
     header = "##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
     d = tmp_path / "mixed"
     d.mkdir()
-    bgzf_compress_to(
+    bgzf.compress_to(
         str(d / "a.vcf.bgz"),
         (header + "chr1\t100\t.\tA\tG\t50\tPASS\tDP=1\n").encode(),
     )
@@ -474,12 +474,12 @@ def test_bgz_splittable_adversarial_boundaries(spark, tmp_path):
     blocks (interior ranges defer to the owner's forward read), and a
     file with no trailing newline (last line still owned exactly
     once)."""
-    from adam_spark.sources.bam import bgzf_compress_to
+    from adam_spark.sources import bgzf
     from adam_spark.sources.vcf import _bgz_text
 
     text = "".join(f"line{i}\n" for i in range(5000))
     p1 = tmp_path / "tiny.bgz"
-    bgzf_compress_to(str(p1), text.encode(), block_size=512)
+    bgzf.compress_to(str(p1), text.encode(), block_size=512)
     got = sorted(
         r["value"] for r in _bgz_text(spark, [str(p1)], target_split_bytes=300).collect()
     )
@@ -487,14 +487,14 @@ def test_bgz_splittable_adversarial_boundaries(spark, tmp_path):
 
     text2 = "start\n" + ("X" * 500_000) + "\nend\n"
     p2 = tmp_path / "giant.bgz"
-    bgzf_compress_to(str(p2), text2.encode(), block_size=1024)
+    bgzf.compress_to(str(p2), text2.encode(), block_size=1024)
     got2 = sorted(
         r["value"] for r in _bgz_text(spark, [str(p2)], target_split_bytes=2048).collect()
     )
     assert got2 == sorted(text2.rstrip("\n").split("\n"))
 
     p3 = tmp_path / "nonl.bgz"
-    bgzf_compress_to(str(p3), b"a\nb\nc", block_size=2)
+    bgzf.compress_to(str(p3), b"a\nb\nc", block_size=2)
     got3 = sorted(
         r["value"] for r in _bgz_text(spark, [str(p3)], target_split_bytes=1).collect()
     )
@@ -525,6 +525,7 @@ def _strip_split_flag(df):
     return out
 
 
+@pytest.mark.needs_reference
 @pytest.mark.parametrize("name", ["test.vcf", "random.vcf", "small.vcf"])
 def test_bcf_save_load_round_trip(spark, tmp_path, name):
     """save_bcf → load_bcf is the identity on variant contexts (modulo
@@ -734,7 +735,8 @@ def test_bcf_csi_narrows_the_scan(tmp_path, spark):
         save_bcf,
     )
     from adam_spark.sources.bcf import _records_from_buffer
-    from adam_spark.sources.binned_index import read_chunk_bytes, read_csi
+    from adam_spark.sources.bgzf import read_chunk
+    from adam_spark.sources.binned_index import read_csi
 
     p = tmp_path / "big.vcf"
     p.write_text(_synth_vcf_text(3000))
@@ -749,8 +751,8 @@ def test_bcf_csi_narrows_the_scan(tmp_path, spark):
         ln
         for vb, ve in small
         for ln in _records_from_buffer(
-            read_chunk_bytes(out, vb, ve), 0,
-            len(read_chunk_bytes(out, vb, ve)),
+            read_chunk(out, vb, ve), 0,
+            len(read_chunk(out, vb, ve)),
             str_dict, contig_dict, _flag_keys(header_text),
         )
     ]

@@ -630,7 +630,7 @@ def test_streaming_embedding_candidates_stateful(spark, tmp_path):
         .json(str(indir))
     )
     cands = st.streaming_embedding_candidates(
-        stream, dim=16, rows_per_band=4, bands=8,
+        stream, dim=16, threshold=0.9,
         watermark_delay="1 hour", state_ttl_seconds=86400,
     )
     q = (
@@ -650,11 +650,11 @@ def test_streaming_embedding_candidates_stateful(spark, tmp_path):
     assert got[3]["n_band_hits"] >= 4  # near-identical vector: most bands
 
     # bucket parity with the batch operator's banding
-    from adam_spark.llm.similarity import srp_band_hashes
+    from adam_spark.llm.similarity import srp_band_hashes, srp_params
 
     batch = srp_band_hashes(
         spark.createDataFrame([(1, base_vec)], "vec_id long, embedding array<double>"),
-        "vec_id", "embedding", 16, 4, 8,
+        "vec_id", "embedding", 16, *srp_params(0.9),
     )
     batch_set = {(r["band"], str(r["band_hash"])) for r in batch.collect()}
     stream_set = {
@@ -681,9 +681,7 @@ def test_streaming_embedding_dedup_lands_verdicts(spark, tmp_path):
         "vec_id LONG, embedding ARRAY<DOUBLE>, ts TIMESTAMP"
     ).json(str(indir))
     vp, cp = str(tmp_path / "verdicts"), str(tmp_path / "ckpt")
-    q = st.streaming_embedding_dedup(
-        stream, vp, cp, dim=16, rows_per_band=4, bands=8
-    )
+    q = st.streaming_embedding_dedup(stream, vp, cp, dim=16, threshold=0.9)
     try:
         q.processAllAvailable()
     finally:

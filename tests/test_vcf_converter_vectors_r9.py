@@ -50,6 +50,7 @@ def _fmt_cell(text, pos):
 # (toFloat, VariantContextConverter.scala:1332-1345).
 
 
+@pytest.mark.needs_reference
 def test_inf_float_fixture_vectors(spark):
     v = vcf_io.load_vcf_variants(spark, f"{R}/inf_float_values.vcf").df
     row = v.where(F.col("start") == 14396).first()
@@ -62,6 +63,7 @@ def test_inf_float_fixture_vectors(spark):
     assert grow["variantCallingAnnotations"]["attributes"]["float"] == "Infinity"
 
 
+@pytest.mark.needs_reference
 def test_nan_float_fixture_vectors(spark):
     v = vcf_io.load_vcf_variants(spark, f"{R}/nan_float_values.vcf").df
     row = v.where(F.col("start") == 14396).first()
@@ -75,6 +77,7 @@ def test_nan_float_fixture_vectors(spark):
     assert grow["variantCallingAnnotations"]["attributes"]["float"] == "NaN"
 
 
+@pytest.mark.needs_reference
 def test_bad_header_fixture_loads_leniently(spark):
     """VariantContextDatasetSuite 'transform a vcf file with bad
     header' (:162-173): 7 rows survive, no phase sets."""

@@ -23,11 +23,16 @@ scales LINEARLY by design —
   inflate the JOIN OUTPUT ~100× — a workload artifact, not an engine
   cost.
 
-Both scales are materialized to repo-local parquet (s1 = copy 0 only,
-s10 = all copies) so each timed run pays the same scan shape. Per-op:
-best of RUNS wall-clocks of a full ``.count()``, cache cleared between
-runs. Emits JSON to .scaledata/scale_results.json; MEASURED.md
-summarizes the slopes.
+Each input is materialized to repo-local parquet on first use (s1 =
+copy 0 only, s10 = all copies) so each timed run pays the same scan
+shape; the file-format ops generate their own inputs (a .bgz VCF, a
+SAM and its BAM, replicated variant contexts). Per-op: best of RUNS
+wall-clocks of a full ``.count()``, cache cleared between runs. Emits
+JSON to .scaledata/scale_results.json; MEASURED.md summarizes the
+slopes. Arguments name a subset of ops, e.g. the BGZF family:
+
+    python tools/scale_bench.py bgz_vcf_scan bam_scan save_bam_single \
+        save_bcf_single save_vcf_bgzf
 """
 
 from __future__ import annotations
@@ -275,7 +280,7 @@ def _bgz_file(scale: str) -> str:
     decompress + line-split per range."""
     path = os.path.join(OUT, scale, "scan.vcf.bgz")
     if not os.path.exists(path):
-        from adam_spark.sources.bam import bgzf_compress_to
+        from adam_spark.sources.bgzf import compress_to
 
         os.makedirs(os.path.dirname(path), exist_ok=True)
         n = 400_000 if scale == "s1" else 4_000_000
@@ -286,24 +291,76 @@ def _bgz_file(scale: str) -> str:
         body = "".join(
             f"chr1\t{i + 1}\t.\tA\tG\t50\tPASS\tDP={i % 97}\n" for i in range(n)
         )
-        bgzf_compress_to(path, (header + body).encode())
+        compress_to(path, (header + body).encode())
     return path
 
 
+def _sam_file(scale: str) -> str:
+    """A generated single-end SAM: 50k reads at s1, 500k at s10, one
+    contig, 100 bp reads with two typed tags — plain row growth."""
+    path = os.path.join(OUT, scale, "reads.sam")
+    if not os.path.exists(path):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        n = 50_000 if scale == "s1" else 500_000
+        rng = random.Random(11)
+        with open(path, "w") as f:
+            f.write("@HD\tVN:1.6\tSO:coordinate\n@SQ\tSN:chr1\tLN:100000000\n")
+            for i in range(n):
+                seq = "".join(rng.choice("ACGT") for _ in range(100))
+                f.write(
+                    f"r{i:07d}\t{16 if i % 3 else 0}\tchr1\t{1 + i * 50}\t60\t100M"
+                    f"\t*\t0\t0\t{seq}\t{'I' * 100}\tNM:i:{i % 4}\tRG:Z:rg1\n"
+                )
+    return path
+
+
+def _bam_file(spark: SparkSession, scale: str) -> str:
+    """The generated SAM saved once as an indexed BAM (the bam_scan
+    input)."""
+    path = os.path.join(OUT, scale, "scan.bam")
+    if not os.path.exists(path):
+        from adam_spark.sources.bam import save_bam
+        from adam_spark.sources.sam import load_sam
+
+        save_bam(load_sam(spark, _sam_file(scale)), path)
+    return path
+
+
+#: a 6-site, 3-sample VCF (GT/GQ/DP cells, Integer and Float INFO,
+#: one multiallelic site): the seed the VCF writer ops replicate
+_BASE_VCF = """##fileformat=VCFv4.2
+##contig=<ID=1,length=249250621>
+##INFO=<ID=DP,Number=1,Type=Integer,Description="Total depth">
+##INFO=<ID=AF,Number=A,Type=Float,Description="Allele frequency">
+##FORMAT=<ID=GT,Number=1,Type=String,Description="Genotype">
+##FORMAT=<ID=GQ,Number=1,Type=Integer,Description="Genotype quality">
+##FORMAT=<ID=DP,Number=1,Type=Integer,Description="Read depth">
+#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2\tS3
+1\t101\trs1\tA\tG\t50\tPASS\tDP=30;AF=0.5\tGT:GQ:DP\t0/1:40:10\t1/1:35:9\t0/0:50:11
+1\t202\t.\tCT\tC\t38.5\tPASS\tDP=25;AF=0.25\tGT:GQ:DP\t0/0:45:8\t0/1:30:9\t0/0:48:8
+1\t303\trs3\tG\tA,T\t60\tPASS\tDP=40;AF=0.3,0.1\tGT:GQ:DP\t1/2:20:14\t0/1:33:13\t0/0:51:13
+1\t404\t.\tT\tTA\t12\tq10\tDP=18;AF=0.17\tGT:GQ:DP\t0/1:12:6\t./.:.:.\t0/0:40:6
+1\t505\trs5\tC\tG\t99\tPASS\tDP=33;AF=1\tGT:GQ:DP\t1/1:60:11\t1/1:58:11\t1/1:61:11
+1\t606\t.\tA\tC\t45\tPASS\tDP=21;AF=0.5\tGT:GQ:DP\t0|1:41:7\t1|0:39:7\t0/1:37:7
+"""
+
+
 def _vcf_contexts(spark: SparkSession, scale: str):
-    """Variant contexts for the save_vcf slope: random.vcf (6 sites ×
-    3 samples, the r9 writer A/B's input) replicated with shifted
-    starts — 20.4k rows at s1, 204k at s10. The writer has no joins;
-    plain row growth is linear by design."""
+    """Variant contexts for the VCF/BCF writer slopes: ``_BASE_VCF``
+    (6 sites × 3 samples) replicated with shifted starts — 20.4k rows
+    at s1, 204k at s10. The writers have no joins; plain row growth is
+    linear by design."""
     from adam_spark.core.genomic_frame import GenomicFrame
     from adam_spark.sources.parquet import load_parquet, save_parquet
     from adam_spark.sources.vcf import load_vcf
 
     path = os.path.join(OUT, scale, "vcontexts")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        gf = load_vcf(
-            spark, "/root/reference/adam-core/src/test/resources/random.vcf"
-        )
+        base = os.path.join(OUT, "base.vcf")
+        os.makedirs(OUT, exist_ok=True)
+        with open(base, "w") as f:
+            f.write(_BASE_VCF)
+        gf = load_vcf(spark, base)
         reps = 3400 if scale == "s1" else 34000
         big = (
             gf.df.crossJoin(
@@ -322,17 +379,18 @@ def _vcf_contexts(spark: SparkSession, scale: str):
     return load_parquet(spark, path)
 
 
-def materialize(spark: SparkSession) -> None:
-    for scale, ncopies in (("s1", 1), ("s10", COPIES)):
-        for name, build in BUILDERS.items():
-            path = os.path.join(OUT, scale, name)
-            if os.path.exists(os.path.join(path, "_SUCCESS")):
-                continue
-            df = build(spark, 0)
-            for c in range(1, ncopies):
-                df = df.unionByName(build(spark, c))
-            df.write.mode("overwrite").parquet(path)
-            print(f"materialized {scale}/{name}", flush=True)
+def materialize(spark: SparkSession, scale: str, name: str) -> str:
+    """One input table at one scale, built on first use → its path.
+    The first timed run of an op may pay for it; best-of-RUNS keeps it
+    out of the recorded time, as for the generated file inputs."""
+    path = os.path.join(OUT, scale, name)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        df = BUILDERS[name](spark, 0)
+        for c in range(1, COPIES if scale == "s10" else 1):
+            df = df.unionByName(BUILDERS[name](spark, c))
+        df.write.mode("overwrite").parquet(path)
+        print(f"materialized {scale}/{name}", flush=True)
+    return path
 
 
 def _ops(spark: SparkSession, scale: str):
@@ -348,8 +406,12 @@ def _ops(spark: SparkSession, scale: str):
     from adam_spark.operators.mark_duplicates import mark_duplicates
     from adam_spark.operators.region_join import region_join
 
+    from adam_spark.sources.bam import load_bam
+    from adam_spark.sources.sam import load_sam
+    from adam_spark.sources.vcf import _bgz_text
+
     def rd(name):
-        return spark.read.parquet(os.path.join(OUT, scale, name))
+        return spark.read.parquet(materialize(spark, scale, name))
 
     def _bloom_probe(docs):
         from adam_spark.llm.dedup import word_ngrams
@@ -453,6 +515,13 @@ def _ops(spark: SparkSession, scale: str):
         print(f"  save_bcf shards={stats['shards']}", flush=True)
         return n
 
+    def _save_bam(gf):
+        from adam_spark.sources.bam import save_bam
+
+        n = gf.df.count()
+        save_bam(gf, os.path.join(OUT, "tmp_bam_out.bam"))
+        return n
+
     def _save_vcf_bgzf(gf):
         from adam_spark.sources.vcf import save_vcf_bgzf
 
@@ -468,14 +537,15 @@ def _ops(spark: SparkSession, scale: str):
         "save_vcf_single": lambda: _save_vcf_single(_vcf_contexts(spark, scale)),
         "save_bcf_single": lambda: _save_bcf(_vcf_contexts(spark, scale)),
         "save_vcf_bgzf": lambda: _save_vcf_bgzf(_vcf_contexts(spark, scale)),
+        # the BAM members of the BGZF family: split scan and sharded save
+        "bam_scan": lambda: load_bam(spark, _bam_file(spark, scale)).df.count(),
+        "save_bam_single": lambda: _save_bam(load_sam(spark, _sam_file(scale))),
         # r10 additions (r9 verdict item 4): measured slopes for the two
         # r9 rewrites — the reference-semantics realignment target
         # finder and the htsjdk-parity VCF writer
         "realign_indels": lambda: _realign(rd("realign_reads")),
         "save_vcf_multi": lambda: _save_vcf(_vcf_contexts(spark, scale)),
-        "bgz_vcf_scan": lambda: __import__(
-            "adam_spark.sources.vcf", fromlist=["_bgz_text"]
-        )._bgz_text(spark, [_bgz_file(scale)]).count(),
+        "bgz_vcf_scan": lambda: _bgz_text(spark, [_bgz_file(scale)]).count(),
         "interval_join_inner": lambda: region_join(
             rd("intervals_l"), rd("intervals_r"), how="inner", bin_size=64
         ).count(),
@@ -567,7 +637,6 @@ def main() -> None:
 
     spark = get_spark("scale-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    materialize(spark)
 
     only = set(sys.argv[1:])  # optional: run a named subset
     for scale in ("s1", "s10"):

@@ -56,45 +56,37 @@ def filter_to_reference_name(df: DataFrame, reference_name: str) -> DataFrame:
 
 
 # --- samtools-style flag-bit view filters (adam-cli/View.scala:31-148) ----
-#: SAM flag bit → alignment boolean column (bit 0x1 .. 0x800)
-_FLAG_COLS = [
-    ("readPaired", 0x1),
-    ("properPair", 0x2),
-    ("readMapped", 0x4, True),  # inverted: flag bit means UNmapped
-    ("mateMapped", 0x8, True),
-    ("readNegativeStrand", 0x10),
-    ("mateNegativeStrand", 0x20),
-    ("firstInFragment", 0x40),
-    ("secondInFragment", 0x80),
-    ("secondaryAlignment", 0x100),
-    ("failedVendorQualityChecks", 0x200),
-    ("duplicateRead", 0x400),
-    ("supplementaryAlignment", 0x800),
+_PAIRED = "readPaired <=> true"
+
+#: SAM flag bit → the alignment columns that set it (bit 0x1 .. 0x800).
+#: Pair-context bits are only defined when 0x1 is set — the reference
+#: only sets them inside `if (readPaired)` (AlignmentConverter.scala:
+#: 476-492); without the gate an unpaired read's null mateMapped would
+#: raise 0x8.
+_FLAG_BITS = [
+    (0x1, _PAIRED),
+    (0x2, f"properPair <=> true AND {_PAIRED}"),
+    (0x4, "NOT (readMapped <=> true)"),  # the bit means UNmapped
+    (0x8, f"NOT (mateMapped <=> true) AND {_PAIRED}"),
+    (0x10, "readNegativeStrand <=> true"),
+    (0x20, f"mateNegativeStrand <=> true AND {_PAIRED}"),
+    (0x40, f"readInFragment <=> 0 AND {_PAIRED}"),
+    (0x80, f"readInFragment <=> 1 AND {_PAIRED}"),
+    (0x100, "secondaryAlignment <=> true"),
+    (0x200, "failedVendorQualityChecks <=> true"),
+    (0x400, "duplicateRead <=> true"),
+    (0x800, "supplementaryAlignment <=> true"),
 ]
+
+#: the 12-bit SAM flag word as one SQL expression
+_SAM_FLAGS_SQL = " + ".join(
+    ["0"] + [f"CASE WHEN {cond} THEN {bit} ELSE 0 END" for bit, cond in _FLAG_BITS]
+)
 
 
 def sam_flags(df: DataFrame) -> Column:
     """Reconstruct the 12-bit SAM flag word from the boolean columns."""
-    total = F.lit(0)
-    for spec in _FLAG_COLS:
-        name, bit = spec[0], spec[1]
-        inverted = len(spec) > 2 and spec[2]
-        if name == "firstInFragment":
-            c = F.col("readInFragment").eqNullSafe(F.lit(0)) & _true(F.col("readPaired"))
-        elif name == "secondInFragment":
-            c = F.col("readInFragment").eqNullSafe(F.lit(1)) & _true(F.col("readPaired"))
-        else:
-            c = _true(F.col(name))
-            if inverted:
-                c = ~c
-            # pair-context bits are only defined when 0x1 is set — the
-            # reference only sets them inside `if (readPaired)`
-            # (AlignmentConverter.scala:476-492); without the gate an
-            # unpaired read's null mateMapped would raise 0x8
-            if name in ("properPair", "mateMapped", "mateNegativeStrand"):
-                c = c & _true(F.col("readPaired"))
-        total = total + F.when(c, F.lit(bit)).otherwise(F.lit(0))
-    return total
+    return F.expr(_SAM_FLAGS_SQL)
 
 
 def view_filter(

@@ -35,11 +35,13 @@ readName (merged BAMs with colliding names across read groups).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adam_spark.schemas import sql_ident, sql_literal
 
-def _clip_len(cigar: Column, pat: str) -> Column:
+
+def _clip_len_sql(cigar: str, pat: str) -> str:
     """Length captured by ``pat`` in the CIGAR string, 0 on no match.
 
     regexp_extract yields '' on no-match and a plain cast('' as long)
@@ -51,59 +53,104 @@ def _clip_len(cigar: Column, pat: str) -> Column:
     ~2×/row). try_cast stays for the (theoretical) >19-digit clip
     length, which maps to 0 exactly as before.
     """
-    return F.coalesce(
-        F.nullif(F.regexp_extract(cigar, pat, 1), F.lit("")).try_cast("long"),
-        F.lit(0),
+    return (
+        f"coalesce(try_cast(nullif(regexp_extract({cigar}, {sql_literal(pat)}, 1), '')"
+        " AS BIGINT), 0)"
     )
 
 
-def unclipped_start(start: Column, cigar: Column) -> Column:
+#: leading/trailing clip elements; BOTH elements on an edge count (SAM
+#: order puts H outside S)
+_LEAD_H, _LEAD_S = r"^(\d+)H", r"^(?:\d+H)?(\d+)S"
+_TRAIL_S, _TRAIL_H = r"(\d+)S(?:\d+H)?$", r"(\d+)H$"
+
+
+def _unclipped_start_sql(start: str, cigar: str) -> str:
+    return (
+        f"{start} - {_clip_len_sql(cigar, _LEAD_H)}"
+        f" - {_clip_len_sql(cigar, _LEAD_S)}"
+    )
+
+
+def _unclipped_end_sql(end: str, cigar: str) -> str:
+    return (
+        f"{end} + {_clip_len_sql(cigar, _TRAIL_S)}"
+        f" + {_clip_len_sql(cigar, _TRAIL_H)}"
+    )
+
+
+def _five_prime_sql(start: str, end: str, cigar: str, negative: str) -> str:
+    return (
+        f"CASE WHEN {negative} <=> true THEN {_unclipped_end_sql(end, cigar)}"
+        f" ELSE {_unclipped_start_sql(start, cigar)} END"
+    )
+
+
+def _phred_score_sql(quals: str, min_q: int = 15) -> str:
+    return (
+        f"aggregate(transform(split({quals}, ''), ch -> ascii(ch) - 33), 0,"
+        f" (acc, q) -> acc + CASE WHEN q >= {int(min_q)} THEN q ELSE 0 END)"
+    )
+
+
+def unclipped_start(start: str, cigar: str) -> Column:
     """RichAlignment.unclippedStart: alignment start minus ALL leading
-    soft+hard clipped bases ('3H2S5M' unclips by 5).
+    soft+hard clipped bases ('3H2S5M' unclips by 5). Takes column names.
 
     BOTH clip elements on an edge count (SAM order puts H outside S) —
     a single-element regex would place a hard+soft-clipped read and its
     soft-only duplicate in different position groups."""
-    return (
-        start
-        - _clip_len(cigar, r"^(\d+)H")
-        - _clip_len(cigar, r"^(?:\d+H)?(\d+)S")
-    )
+    return F.expr(_unclipped_start_sql(sql_ident(start), sql_ident(cigar)))
 
 
-def unclipped_end(end: Column, cigar: Column) -> Column:
+def unclipped_end(end: str, cigar: str) -> Column:
     """RichAlignment.unclippedEnd: alignment end plus ALL trailing
-    soft+hard clipped bases."""
-    return (
-        end
-        + _clip_len(cigar, r"(\d+)S(?:\d+H)?$")
-        + _clip_len(cigar, r"(\d+)H$")
-    )
+    soft+hard clipped bases. Takes column names."""
+    return F.expr(_unclipped_end_sql(sql_ident(end), sql_ident(cigar)))
 
 
-def five_prime_position(
-    start: Column, end: Column, cigar: Column, negative: Column
-) -> Column:
-    """Unclipped 5' position of an aligned read.
+def five_prime_position(start: str, end: str, cigar: str, negative: str) -> Column:
+    """Unclipped 5' position of an aligned read. Takes column names.
 
     Forward strand: :func:`unclipped_start`.
     Reverse strand: :func:`unclipped_end`.
     (reference: ReferencePositionPair.scala:32-114 via
     RichAlignment.fivePrimePosition)
     """
-    return F.when(
-        negative.eqNullSafe(F.lit(True)), unclipped_end(end, cigar)
-    ).otherwise(unclipped_start(start, cigar))
-
-
-def _phred_score(quals: Column, min_q: int = 15) -> Column:
-    """Sum of phred qualities ≥ 15 (Picard duplicate score;
-    reference: MarkDuplicates score via SingleReadBucket)."""
-    return F.aggregate(
-        F.transform(F.split(quals, ""), lambda ch: F.ascii(ch) - 33),
-        F.lit(0),
-        lambda acc, q: acc + F.when(q >= min_q, q).otherwise(0),
+    return F.expr(
+        _five_prime_sql(*(sql_ident(c) for c in (start, end, cigar, negative)))
     )
+
+
+def _phred_score(quals: str, min_q: int = 15) -> Column:
+    """Sum of phred qualities ≥ 15 of the named column (Picard duplicate
+    score; reference: MarkDuplicates score via SingleReadBucket)."""
+    return F.expr(_phred_score_sql(sql_ident(quals), min_q))
+
+
+#: read-class predicates (null-safe: every flag column is nullable)
+_PRIMARY = (
+    "(primaryAlignment <=> true OR (NOT (secondaryAlignment <=> true)"
+    " AND NOT (supplementaryAlignment <=> true)))"
+)
+_MAPPED = "(readMapped <=> true)"
+_PRIMARY_MAPPED = f"({_PRIMARY} AND {_MAPPED})"
+
+
+def _slot_sql(rif: int) -> str:
+    # mapped-primary position wins the slot over the unmapped
+    # pseudo-position (primaryMapped ++ unmapped head order)
+    return (
+        f"coalesce(max(CASE WHEN __rif = {rif} AND {_PRIMARY_MAPPED} THEN __pos END),"
+        f" max(CASE WHEN __rif = {rif} AND NOT {_MAPPED} THEN __pos END))"
+    )
+
+
+_LEFT_KEY = "__lib, posL.ref, posL.pos, posL.strand"
+_SUB_WINDOW = (
+    f"(PARTITION BY {_LEFT_KEY}, posR.ref, posR.pos, posR.strand"
+    " ORDER BY fragScore DESC, readName)"
+)
 
 
 def mark_duplicates(alignments: DataFrame, library_by_rg: dict[str, str] | None = None) -> DataFrame:
@@ -128,128 +175,86 @@ def mark_duplicates(alignments: DataFrame, library_by_rg: dict[str, str] | None 
     - in scored subgroups the best Picard score survives (ties broken
       by readName for determinism), secondary/supplementary alignments
       are always flagged in marked groups, unmapped reads never are.
-    """
-    lib = F.lit(None).cast("string")
-    if library_by_rg:
-        for rg, lb in library_by_rg.items():
-            lib = F.when(F.col("readGroupId") == F.lit(rg), F.lit(lb)).otherwise(lib)
-    df = alignments.withColumn("__lib", lib)
 
-    primary = F.col("primaryAlignment").eqNullSafe(F.lit(True)) | (
-        ~F.col("secondaryAlignment").eqNullSafe(F.lit(True))
-        & ~F.col("supplementaryAlignment").eqNullSafe(F.lit(True))
-    )
-    mapped = F.col("readMapped").eqNullSafe(F.lit(True))
-    primary_mapped = primary & mapped
-    fp = five_prime_position(
-        F.col("start"), F.col("end"), F.col("cigar"), F.col("readNegativeStrand")
+    Every expression is SQL text, so the plan builds in a few dozen
+    gateway calls.
+    """
+    lib = "CAST(NULL AS STRING)"
+    if library_by_rg:
+        whens = " ".join(
+            f"WHEN {sql_literal(rg)} THEN {sql_literal(lb)}"
+            for rg, lb in library_by_rg.items()
+        )
+        lib = f"CASE readGroupId {whens} ELSE {lib} END"
+    columns = alignments.columns
+    # join key null-proofed: readGroupId may be null, and null keys
+    # don't match in an equi-join
+    df = alignments.selectExpr(
+        "*", f"{lib} AS __lib", "coalesce(readGroupId, '') AS __rg"
     )
 
     # a read's contribution to its fragment's position pair: mapped
     # primary → oriented 5' position; unmapped → (sequence, 0) pseudo-
     # position with INDEPENDENT strand (ReferencePositionPair.scala:48-55)
-    seq = (
-        F.col("sequence")
-        if "sequence" in alignments.columns
-        else F.lit(None).cast("string")
+    seq = "sequence" if "sequence" in columns else "CAST(NULL AS STRING)"
+    fp = _five_prime_sql("`start`", "`end`", "cigar", "readNegativeStrand")
+    pos = (
+        f"CASE WHEN {_PRIMARY_MAPPED} THEN struct(referenceName AS ref,"
+        f" {fp} AS pos,"
+        " CASE WHEN readNegativeStrand <=> true THEN 'R' ELSE 'F' END AS strand)"
+        f" WHEN NOT {_MAPPED} THEN struct({seq} AS ref,"
+        " CAST(0 AS BIGINT) AS pos, 'I' AS strand) END"
     )
-    pos = F.when(
-        primary_mapped,
-        F.struct(
-            F.col("referenceName").alias("ref"),
-            fp.alias("pos"),
-            F.when(
-                F.col("readNegativeStrand").eqNullSafe(F.lit(True)), F.lit("R")
-            ).otherwise(F.lit("F")).alias("strand"),
-        ),
-    ).when(
-        ~mapped,
-        F.struct(
-            seq.alias("ref"),
-            F.lit(0).cast("long").alias("pos"),
-            F.lit("I").alias("strand"),
-        ),
+    score = (
+        f"CASE WHEN {_PRIMARY_MAPPED} AND NOT (supplementaryAlignment <=> true)"
+        f" THEN {_phred_score_sql('qualityScores')} ELSE 0 END"
     )
-    score = F.when(
-        primary_mapped & ~F.col("supplementaryAlignment").eqNullSafe(F.lit(True)),
-        _phred_score(F.col("qualityScores")),
-    ).otherwise(F.lit(0))
-    rif = F.coalesce(F.col("readInFragment"), F.lit(0))
-
-    # join key null-proofed: readGroupId may be null, and null keys
-    # don't match in an equi-join
-    reads = (
-        df.withColumn("__rg", F.coalesce(F.col("readGroupId"), F.lit("")))
-        .withColumn("__pos", pos)
-        .withColumn("__score", score)
-        .withColumn("__rif", rif)
+    reads = df.selectExpr(
+        "*", f"{pos} AS __pos", f"{score} AS __score",
+        "coalesce(readInFragment, 0) AS __rif",
     )
     frag = (
-        reads.where(primary_mapped | ~mapped)
+        reads.where(f"{_PRIMARY_MAPPED} OR NOT {_MAPPED}")
         .groupBy("readName", "__rg", "__lib")
         .agg(
-            F.sum("__score").alias("fragScore"),
-            # mapped-primary position wins the slot over the unmapped
-            # pseudo-position (primaryMapped ++ unmapped head order)
-            F.coalesce(
-                F.max(F.when((F.col("__rif") == 0) & primary_mapped, F.col("__pos"))),
-                F.max(F.when((F.col("__rif") == 0) & ~mapped, F.col("__pos"))),
-            ).alias("r1"),
-            F.coalesce(
-                F.max(F.when((F.col("__rif") == 1) & primary_mapped, F.col("__pos"))),
-                F.max(F.when((F.col("__rif") == 1) & ~mapped, F.col("__pos"))),
-            ).alias("r2"),
+            F.expr("sum(__score) AS fragScore"),
+            F.expr(f"{_slot_sql(0)} AS r1"),
+            F.expr(f"{_slot_sql(1)} AS r2"),
         )
         # positionForStrand: leftPos prefers FORWARD, rightPos REVERSE
-        .withColumn(
-            "posL",
-            F.when(F.col("r1.strand") == "F", F.col("r1"))
-            .when(F.col("r2.strand") == "F", F.col("r2"))
-            .otherwise(F.col("r1")),
-        )
-        .withColumn(
-            "posR",
-            F.when(F.col("r2.strand") == "R", F.col("r2"))
-            .when(F.col("r1.strand") == "R", F.col("r1"))
-            .otherwise(F.col("r2")),
+        .selectExpr(
+            "*",
+            "CASE WHEN r1.strand = 'F' THEN r1 WHEN r2.strand = 'F' THEN r2"
+            " ELSE r1 END AS posL",
+            "CASE WHEN r2.strand = 'R' THEN r2 WHEN r1.strand = 'R' THEN r1"
+            " ELSE r2 END AS posR",
         )
     )
-
-    w_left = Window.partitionBy(
-        "__lib", F.col("posL.ref"), F.col("posL.pos"), F.col("posL.strand")
-    )
-    w_sub = Window.partitionBy(
-        "__lib",
-        F.col("posL.ref"),
-        F.col("posL.pos"),
-        F.col("posL.strand"),
-        F.col("posR.ref"),
-        F.col("posR.pos"),
-        F.col("posR.strand"),
-    ).orderBy(F.col("fragScore").desc(), F.col("readName"))
     # does any subgroup with a non-null rightPos share this leftPos?
-    has_pairs = F.max(F.when(F.col("posR").isNotNull(), 1).otherwise(0)).over(w_left)
-    rank = F.row_number().over(w_sub)
-    marked_frags = frag.withColumn(
-        "__isDup",
-        F.when(F.col("posL").isNull(), F.lit(False))
-        .when(F.col("posR").isNull(), (has_pairs == 1) | (rank > 1))
-        .otherwise(rank > 1),
-    ).select(
-        "readName", "__rg", "__isDup", F.col("posL").isNotNull().alias("__graded")
+    has_pairs = (
+        "max(CASE WHEN posR IS NOT NULL THEN 1 ELSE 0 END)"
+        f" OVER (PARTITION BY {_LEFT_KEY})"
     )
+    rank = f"row_number() OVER {_SUB_WINDOW}"
+    marked_frags = frag.selectExpr(
+        "*",
+        f"CASE WHEN posL IS NULL THEN false WHEN posR IS NULL"
+        f" THEN ({has_pairs} = 1) OR ({rank} > 1) ELSE {rank} > 1 END AS __isDup",
+    ).selectExpr("readName", "__rg", "__isDup", "posL IS NOT NULL AS __graded")
 
-    df = df.withColumn("__rg", F.coalesce(F.col("readGroupId"), F.lit("")))
-    out = df.join(marked_frags, ["readName", "__rg"], "left").withColumn(
-        "duplicateRead",
-        F.when(~mapped, F.lit(False))
-        .when(primary, F.coalesce("__isDup", F.lit(False)))
+    duplicate = (
+        f"CASE WHEN NOT {_MAPPED} THEN false"
+        f" WHEN {_PRIMARY} THEN coalesce(__isDup, false)"
         # secondary/supplementary: flagged whenever their fragment was in
         # a marked (graded) left group (markReadsInBucket secondaryAreDups)
-        .otherwise(F.coalesce("__graded", F.lit(False))),
+        " ELSE coalesce(__graded, false) END AS duplicateRead"
     )
-    return out.drop(
-        "__isDup", "__graded", "__lib", "__rg", "__pos", "__score", "__rif"
+    # the join puts readName first; duplicateRead keeps its place
+    out_cols = ["readName"] + [c for c in columns if c != "readName"]
+    if "duplicateRead" not in out_cols:
+        out_cols.append("duplicateRead")
+    return df.join(marked_frags, ["readName", "__rg"], "left").selectExpr(
+        *(duplicate if c == "duplicateRead" else sql_ident(c) for c in out_cols)
     )
 
 

@@ -32,20 +32,53 @@ def _f(name: str, dtype, nullable: bool = True) -> StructField:
     return StructField(name, dtype, nullable)
 
 
+def sql_literal(value: str | None) -> str:
+    """``value`` as a Spark SQL string literal (None → NULL). Backslash
+    and single quote are escaped, so header-derived text (read-group
+    IDs, samples, libraries, contig names) can be placed into SQL
+    expressions."""
+    if value is None:
+        return "NULL"
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a back-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_type(dtype) -> str:
+    """``dtype`` as SQL type text. Type text cannot mark a nested
+    element, value or field non-null; every schema here is nullable
+    throughout (the model's rule, above), so it states them exactly."""
+    if isinstance(dtype, ArrayType):
+        return f"array<{sql_type(dtype.elementType)}>"
+    if isinstance(dtype, MapType):
+        return f"map<{sql_type(dtype.keyType)},{sql_type(dtype.valueType)}>"
+    if isinstance(dtype, StructType):
+        fields = ",".join(f"{sql_ident(f.name)}:{sql_type(f.dataType)}" for f in dtype.fields)
+        return f"struct<{fields}>"
+    return dtype.simpleString()
+
+
+def project(df, schema: StructType, exprs: dict[str, str]):
+    """Select ``schema``'s fields from ``df``: each field is its SQL
+    text in ``exprs`` (a typed null when absent) cast to the field's
+    type. One SQL projection: one gateway call for the whole list."""
+    return df.selectExpr(
+        *(
+            f"CAST({exprs.get(f.name, 'NULL')} AS {sql_type(f.dataType)})"
+            f" AS {sql_ident(f.name)}"
+            for f in schema.fields
+        )
+    )
+
+
 def conform(df, schema: StructType):
     """Project ``df`` onto ``schema``: present columns are cast, missing
     columns become typed nulls. The nullable-everything model (SURVEY §1.2)
     makes this safe for every record type."""
-    from pyspark.sql import functions as F
-
-    return df.select(
-        [
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-    )
+    return project(df, schema, {c: sql_ident(c) for c in df.columns})
 
 
 _ATTRS = MapType(StringType(), StringType(), True)

@@ -28,33 +28,117 @@ from adam_spark.core.metadata import (
 from adam_spark.operators.filters import sam_flags
 
 
-def _ref_len(col_name: str):
-    """Reference-consumed length of a CIGAR column (M/D/N/=/X ops)."""
-    return F.aggregate(
-        F.expr(
-            f"transform(regexp_extract_all({col_name}, '(\\\\d+)[MDN=X]', 1), x -> cast(x as long))"
-        ),
-        F.lit(0).try_cast("long"),
-        lambda a, v: a + v,
-    )
+#: SAM body line → its tab-separated fields (``value`` is the line)
+_FIELDS = "split(value, '\\t')"
 
 
-def fill_read_group_sample_id(df: DataFrame, meta) -> DataFrame:
-    """Resolve ``readGroupSampleId`` from the header's read-group
-    dictionary (@RG SM), matching AlignmentConverter.scala:221
+def _field(i: int) -> str:
+    return f"try_element_at({_FIELDS}, {i})"
+
+
+def _star_null(i: int) -> str:
+    # '*' is SAM's "no value"
+    return f"CASE WHEN {_field(i)} = '*' THEN NULL ELSE {_field(i)} END"
+
+
+#: stage 1 of the parse: the eleven mandatory fields plus the optional
+#: tags as a map (TAG:TYPE:VALUE → key=TAG, value="TYPE:VALUE")
+_SPLIT_SQL = [
+    f"{_field(1)} AS readName",
+    f"try_cast({_field(2)} AS INT) AS flag",
+    f"{_star_null(3)} AS rname",
+    f"try_cast({_field(4)} AS BIGINT) AS pos1",
+    f"try_cast({_field(5)} AS INT) AS mapq",
+    f"{_star_null(6)} AS cigar",
+    f"{_field(7)} AS rnext",
+    f"try_cast({_field(8)} AS BIGINT) AS pnext1",
+    f"try_cast({_field(9)} AS BIGINT) AS tlen",
+    f"{_star_null(10)} AS sequence",
+    f"{_star_null(11)} AS qualityScores",
+    f"CASE WHEN size({_FIELDS}) > 11 THEN map_from_entries(transform("
+    f"slice({_FIELDS}, 12, 10000), x -> struct("
+    "substring_index(x, ':', 1) AS k, substring(x, 4, 1000000) AS v))) END"
+    " AS attributes",
+]
+
+
+def _bit(bit: int) -> str:
+    return f"((flag & {bit}) != 0)"
+
+
+def _tag(tag: str) -> str:
+    # attribute values carry their "TYPE:" prefix; the typed columns
+    # hold the bare value
+    return f"substring(attributes['{tag}'], 3, 1000000)"
+
+
+#: reference-consumed length of the CIGAR (M/D/N/=/X ops)
+_REF_LEN = (
+    "aggregate(transform(regexp_extract_all(cigar, '(\\\\d+)[MDN=X]', 1),"
+    " x -> cast(x as long)), try_cast(0 AS BIGINT), (a, v) -> a + v)"
+)
+
+#: stage 2 of the parse: ALIGNMENT fields from the split fields (fields
+#: not listed are null), cast to their types by ``schemas.project``
+_ALIGNMENT_SQL = {
+    "referenceName": f"CASE WHEN {_bit(0x4)} THEN NULL ELSE rname END",
+    "start": f"CASE WHEN {_bit(0x4)} OR pos1 = 0 THEN NULL ELSE pos1 - 1 END",
+    "end": f"CASE WHEN {_bit(0x4)} OR pos1 = 0 THEN NULL"
+    f" ELSE pos1 - 1 + {_REF_LEN} END",
+    "mappingQuality": f"CASE WHEN {_bit(0x4)} THEN NULL ELSE mapq END",
+    "readName": "readName",
+    "sequence": "sequence",
+    "qualityScores": "qualityScores",
+    "cigar": "cigar",
+    "readPaired": _bit(0x1),
+    "properPair": _bit(0x2),
+    "readMapped": f"NOT {_bit(0x4)}",
+    "mateMapped": f"CASE WHEN {_bit(0x1)} THEN NOT {_bit(0x8)}"
+    " ELSE CAST(NULL AS BOOLEAN) END",
+    "failedVendorQualityChecks": _bit(0x200),
+    "duplicateRead": _bit(0x400),
+    "readNegativeStrand": _bit(0x10),
+    "mateNegativeStrand": f"CASE WHEN {_bit(0x1)} THEN {_bit(0x20)}"
+    " ELSE CAST(NULL AS BOOLEAN) END",
+    "primaryAlignment": f"NOT {_bit(0x100)} AND NOT {_bit(0x800)}",
+    "secondaryAlignment": _bit(0x100),
+    "supplementaryAlignment": _bit(0x800),
+    "mismatchingPositions": _tag("MD"),
+    "readGroupId": _tag("RG"),
+    # realignment provenance tags (AlignmentConverter.scala: OP is
+    # 1-based on disk, OC/OQ verbatim)
+    "originalStart": f"try_cast({_tag('OP')} AS BIGINT) - 1",
+    "originalCigar": _tag("OC"),
+    "originalQualityScores": _tag("OQ"),
+    # htsjdk semantics (AlignmentConverter.scala:159-168): mate
+    # fields are set whenever RNEXT resolves to a real reference —
+    # INDEPENDENT of the mate-unmapped flag, so a placed unmapped
+    # mate keeps its mate reference/position (samtools-flagstat's
+    # crossChromosome counters depend on this; pinned against
+    # NA12878.sam in tests/test_reference_goldens.py)
+    "mateAlignmentStart": "CASE WHEN rnext != '*' AND pnext1 > 0 THEN pnext1 - 1 END",
+    "mateReferenceName": "CASE WHEN rnext = '=' THEN CASE WHEN rname != '*'"
+    " THEN rname END WHEN rnext != '*' THEN rnext END",
+    "insertSize": "CASE WHEN tlen != 0 THEN tlen END",
+    "readInFragment": f"CASE WHEN {_bit(0x40)} THEN 0 WHEN {_bit(0x80)} THEN 1 ELSE 0 END",
+    "attributes": "attributes",
+}
+
+
+def _sample_id_sql(read_groups) -> str:
+    """``readGroupSampleId`` from the header's read-group dictionary
+    (@RG SM), matching AlignmentConverter.scala:221
     setReadGroupSampleId(recordGroup.getSample). The dictionary is
     driver-sized, so the lookup is a literal CASE — no join. Reads
     with no RG (or an RG without SM) stay null."""
-    pairs = [(g.id, g.sampleId) for g in meta.read_groups if g.sampleId is not None]
-    if not pairs or "readGroupId" not in df.columns:
-        return df
-    expr = None
-    for rg_id, sample in pairs:
-        cond = F.col("readGroupId") == F.lit(rg_id)
-        expr = F.when(cond, F.lit(sample)) if expr is None else expr.when(cond, F.lit(sample))
-    return df.withColumn(
-        "readGroupSampleId", F.coalesce(F.col("readGroupSampleId"), expr)
+    pairs = [(g.id, g.sampleId) for g in read_groups if g.sampleId is not None]
+    if not pairs:
+        return "NULL"
+    whens = " ".join(
+        f"WHEN {schemas.sql_literal(rg)} THEN {schemas.sql_literal(sm)}"
+        for rg, sm in pairs
     )
+    return f"CASE {_ALIGNMENT_SQL['readGroupId']} {whens} END"
 
 
 def _aligned_with_meta(
@@ -67,7 +151,7 @@ def _aligned_with_meta(
     ``load_sam`` (htsjdk applies ValidationStringency to BAM headers
     too)."""
     meta = header_metadata_from_lines(header_lines, stringency)
-    return fill_read_group_sample_id(sam_lines_to_alignments(raw), meta), meta
+    return sam_lines_to_alignments(raw, meta), meta
 
 
 def _header_lines_driver(path: str) -> list[str] | None:
@@ -111,111 +195,22 @@ def load_sam(
         if hdr is not None
         else _header_metadata(raw, stringency)
     )
-    df = fill_read_group_sample_id(sam_lines_to_alignments(raw), meta)
-    return GenomicFrame(df, meta)
+    return GenomicFrame(sam_lines_to_alignments(raw, meta), meta)
 
 
-def sam_lines_to_alignments(raw: DataFrame) -> DataFrame:
+def sam_lines_to_alignments(raw: DataFrame, meta=None) -> DataFrame:
     """Parse a DataFrame of raw SAM text lines (column ``value``) into
-    ALIGNMENT rows. Works on batch AND streaming DataFrames — the
-    parse is stateless per line."""
-    body = raw.where(~F.col("value").startswith("@") & (F.length(F.trim("value")) > 0))
-    t = F.split(F.col("value"), "\t")
+    ALIGNMENT rows; ``meta`` (the header's metadata) resolves
+    ``readGroupSampleId``. Works on batch AND streaming DataFrames —
+    the parse is stateless per line.
 
-    mapped = F.col("flag").bitwiseAND(F.lit(0x4)) == 0
-    parsed = body.select(
-        F.try_element_at(t, F.lit(1)).alias("readName"),
-        F.try_element_at(t, F.lit(2)).try_cast("int").alias("flag"),
-        F.when(F.try_element_at(t, F.lit(3)) == "*", None).otherwise(F.try_element_at(t, F.lit(3))).alias("rname"),
-        F.try_element_at(t, F.lit(4)).try_cast("long").alias("pos1"),
-        F.try_element_at(t, F.lit(5)).try_cast("int").alias("mapq"),
-        F.when(F.try_element_at(t, F.lit(6)) == "*", None).otherwise(F.try_element_at(t, F.lit(6))).alias("cigar"),
-        F.try_element_at(t, F.lit(7)).alias("rnext"),
-        F.try_element_at(t, F.lit(8)).try_cast("long").alias("pnext1"),
-        F.try_element_at(t, F.lit(9)).try_cast("long").alias("tlen"),
-        F.when(F.try_element_at(t, F.lit(10)) == "*", None).otherwise(F.try_element_at(t, F.lit(10))).alias("sequence"),
-        F.when(F.try_element_at(t, F.lit(11)) == "*", None).otherwise(F.try_element_at(t, F.lit(11))).alias(
-            "qualityScores"
-        ),
-        F.when(
-            F.size(t) > 11,
-            F.map_from_entries(
-                F.transform(
-                    F.slice(t, 12, 10_000),
-                    # TAG:TYPE:VALUE → key=TAG, value="TYPE:VALUE"
-                    lambda x: F.struct(
-                        F.substring_index(x, ":", 1).alias("k"),
-                        F.substring(x, 4, 1_000_000).alias("v"),
-                    ),
-                )
-            ),
-        ).alias("attributes"),
-    )
-    b = lambda bit: F.col("flag").bitwiseAND(F.lit(bit)) != 0  # noqa: E731
-    df = parsed.select(
-        F.when(b(0x4), None).otherwise(F.col("rname")).alias("referenceName"),
-        F.when(b(0x4) | (F.col("pos1") == 0), None)
-        .otherwise(F.col("pos1") - 1)
-        .alias("start"),
-        F.when(b(0x4) | (F.col("pos1") == 0), None)
-        .otherwise(F.col("pos1") - 1 + _ref_len("cigar"))
-        .alias("end"),
-        F.when(b(0x4), None).otherwise(F.col("mapq")).alias("mappingQuality"),
-        "readName",
-        "sequence",
-        "qualityScores",
-        "cigar",
-        b(0x1).alias("readPaired"),
-        b(0x2).alias("properPair"),
-        (~b(0x4)).alias("readMapped"),
-        F.when(b(0x1), ~b(0x8)).otherwise(F.lit(None).cast("boolean")).alias("mateMapped"),
-        b(0x200).alias("failedVendorQualityChecks"),
-        b(0x400).alias("duplicateRead"),
-        b(0x10).alias("readNegativeStrand"),
-        F.when(b(0x1), b(0x20)).otherwise(F.lit(None).cast("boolean")).alias(
-            "mateNegativeStrand"
-        ),
-        (~b(0x100) & ~b(0x800)).alias("primaryAlignment"),
-        b(0x100).alias("secondaryAlignment"),
-        b(0x800).alias("supplementaryAlignment"),
-        # attribute values carry their "TYPE:" prefix; the typed columns
-        # hold the bare value
-        F.substring(F.col("attributes").getItem("MD"), 3, 1_000_000).alias(
-            "mismatchingPositions"
-        ),
-        F.substring(F.col("attributes").getItem("RG"), 3, 1_000_000).alias("readGroupId"),
-        # realignment provenance tags (AlignmentConverter.scala: OP is
-        # 1-based on disk, OC/OQ verbatim)
-        (
-            F.substring(F.col("attributes").getItem("OP"), 3, 1_000_000).try_cast("long")
-            - 1
-        ).alias("originalStart"),
-        F.substring(F.col("attributes").getItem("OC"), 3, 1_000_000).alias(
-            "originalCigar"
-        ),
-        F.substring(F.col("attributes").getItem("OQ"), 3, 1_000_000).alias(
-            "originalQualityScores"
-        ),
-        # htsjdk semantics (AlignmentConverter.scala:159-168): mate
-        # fields are set whenever RNEXT resolves to a real reference —
-        # INDEPENDENT of the mate-unmapped flag, so a placed unmapped
-        # mate keeps its mate reference/position (samtools-flagstat's
-        # crossChromosome counters depend on this; pinned against
-        # NA12878.sam in tests/test_reference_goldens.py)
-        F.when(
-            (F.col("rnext") != "*") & (F.col("pnext1") > 0), F.col("pnext1") - 1
-        ).alias("mateAlignmentStart"),
-        F.when(
-            F.col("rnext") == "=",
-            F.when(F.col("rname") != "*", F.col("rname")),
-        )
-        .when(F.col("rnext") != "*", F.col("rnext"))
-        .alias("mateReferenceName"),
-        F.when(F.col("tlen") != 0, F.col("tlen")).alias("insertSize"),
-        F.when(b(0x40), 0).when(b(0x80), 1).otherwise(0).alias("readInFragment"),
-        "attributes",
-    )
-    return schemas.conform(df, schemas.ALIGNMENT)
+    Both stages are SQL text, so the whole parse costs a few gateway
+    calls however many expressions it holds."""
+    body = raw.where("NOT startswith(value, '@') AND length(trim(value)) > 0")
+    exprs = dict(_ALIGNMENT_SQL)
+    if meta is not None:
+        exprs["readGroupSampleId"] = _sample_id_sql(meta.read_groups)
+    return schemas.project(body.selectExpr(*_SPLIT_SQL), schemas.ALIGNMENT, exprs)
 
 
 def _header_metadata(raw: DataFrame, stringency: str = "SILENT") -> GenomicMetadata:

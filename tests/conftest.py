@@ -1,4 +1,5 @@
 import os
+import types
 
 import pytest
 
@@ -39,3 +40,20 @@ def fixtures(spark):
     from tests.genomic_fixtures import GenomicFixtures
 
     return GenomicFixtures(spark)
+
+
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """Counts Python→JVM gateway commands: ``.n`` grows by one for every
+    command any gateway connection sends while the test runs."""
+    from py4j.clientserver import ClientServerConnection
+
+    counter = types.SimpleNamespace(n=0)
+    send = ClientServerConnection.send_command
+
+    def counting_send(self, *args, **kwargs):
+        counter.n += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting_send)
+    return counter

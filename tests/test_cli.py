@@ -975,3 +975,34 @@ def test_idxstats_vcf_and_bcf(spark, tmp_path, capsys, monkeypatch):
     assert capsys.readouterr().out.strip() == want
     assert main(["idxstats", bcf]) == 0
     assert capsys.readouterr().out.strip() == want
+
+
+def test_transform_alignments_parquet_schema_and_duplicates(spark, tmp_path):
+    """-mark_duplicate_reads -sort_by_reference_position to Parquet:
+    readName first, then the rest of ALIGNMENT in order and type, and
+    exactly the planted duplicate pairs flagged."""
+    from adam_spark import schemas
+
+    pairs, planted = 40, 6
+    lines = ["@SQ\tSN:chr1\tLN:100000", "@RG\tID:rg1\tSM:s1\tLB:lib1"]
+    rec = "{}\t{}\tchr1\t{}\t60\t10M\t=\t{}\t{}\tACGTACGTAC\t{}\tRG:Z:rg1"
+    for k in range(pairs + planted):
+        # planted copies reuse a pair's positions with lower qualities
+        i, qual = (k, "I" * 10) if k < pairs else (k - pairs, "5" * 10)
+        p1, p2 = 1000 + 500 * i, 1200 + 500 * i
+        lines.append(rec.format(f"q{k}", 99, p1, p2, 210, qual))
+        lines.append(rec.format(f"q{k}", 147, p2, p1, -210, qual))
+    sam = tmp_path / "in.sam"
+    sam.write_text("\n".join(lines) + "\n")
+    out = str(tmp_path / "out.adam")
+    argv = ["transform_alignments", str(sam), out,
+            "-mark_duplicate_reads", "-sort_by_reference_position"]
+    assert main(argv) == 0
+
+    df = spark.read.parquet(out)
+    fields = {f.name: f.dataType for f in schemas.ALIGNMENT.fields}
+    want = ["readName"] + [n for n in fields if n != "readName"]
+    assert df.columns == want
+    assert [f.dataType for f in df.schema.fields] == [fields[n] for n in want]
+    assert df.count() == 2 * (pairs + planted)
+    assert df.where("duplicateRead").count() == 2 * planted

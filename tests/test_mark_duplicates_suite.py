@@ -178,14 +178,12 @@ def test_read_pairs_beat_fragments(spark, fragments):
 
 def test_quality_scores():
     """'quality scores' (:190): MarkDuplicates.score of 100 chars at
-    ascii 53 (phred 20) is 2000 — pinned on the Column implementation."""
+    ascii 53 (phred 20) is 2000 — pinned on the SQL implementation."""
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
     df = spark.createDataFrame([(chr(53) * 100,)], "q string")
-    from pyspark.sql import functions as F
-
-    assert df.select(_phred_score(F.col("q")).alias("s")).first()["s"] == 2000
+    assert df.select(_phred_score("q").alias("s")).first()["s"] == 2000
 
 
 @pytest.mark.parametrize("fragments", [False, True])

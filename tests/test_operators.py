@@ -353,3 +353,63 @@ def test_sort_features_strand_enum_order(spark):
         ("1", 10, None),
         ("2", 1, None),
     ]
+
+
+def test_sort_against_grch38_sized_dictionary(spark):
+    """3,366 contigs (GRCh38 with alts): the contig-index CASE is one
+    flat expression, so the sorts neither overflow the JVM stack nor
+    lose dictionary order."""
+    import random
+
+    from adam_spark import Reference, SequenceDictionary
+    from adam_spark.operators.sorts import sort_by_reference_position_and_index
+
+    names = [f"chrUn_{k:04d}" for k in range(3366)]
+    random.Random(7).shuffle(names)  # dictionary order ≠ name order
+    refs = SequenceDictionary([Reference(name=n, length=10_000) for n in names])
+    rows = [(n, 100 + k % 3, True) for k, n in enumerate(reversed(names))]
+    df = spark.createDataFrame(
+        rows, "referenceName string, start long, readMapped boolean"
+    ).withColumn("readName", F.col("referenceName"))
+    for out in (sort(df, refs), sort_by_reference_position_and_index(df, refs)):
+        assert [r["referenceName"] for r in out.collect()] == names
+
+
+def test_header_values_with_quote_and_backslash(spark, tmp_path):
+    """Read-group IDs, samples, libraries and contig names reach SQL
+    text as quoted literals: a ' or \\ in them changes nothing."""
+    from adam_spark.sources.sam import load_sam
+
+    rg, sm, lb, ctg = "r'g\\1", "s'm\\1", "l'b\\1", "ch'r\\1"
+    line = "{}\t{}\t{}\t{}\t60\t10M\t=\t{}\t{}\tACGTACGTAC\t{}\tRG:Z:{}"
+    sam = tmp_path / "quoted.sam"
+    sam.write_text("\n".join([
+        "@SQ\tSN:chrZ\tLN:1000",
+        f"@SQ\tSN:{ctg}\tLN:1000",
+        f"@RG\tID:{rg}\tSM:{sm}\tLB:{lb}",
+        f"@RG\tID:rg2\tSM:s2\tLB:{lb}",
+        "@RG\tID:rg3\tSM:s3\tLB:other",
+        # a, b and c share their 5' positions; a and b share a library
+        # through different read groups, c is alone in its library
+        line.format("a", 99, ctg, 100, 200, 110, "I" * 10, rg),
+        line.format("a", 147, ctg, 200, 100, -110, "I" * 10, rg),
+        line.format("b", 99, ctg, 100, 200, 110, "5" * 10, "rg2"),
+        line.format("b", 147, ctg, 200, 100, -110, "5" * 10, "rg2"),
+        line.format("c", 99, ctg, 100, 200, 110, "5" * 10, "rg3"),
+        line.format("c", 147, ctg, 200, 100, -110, "5" * 10, "rg3"),
+        line.format("z", 99, "chrZ", 500, 600, 110, "I" * 10, rg),
+        line.format("z", 147, "chrZ", 600, 500, -110, "I" * 10, rg),
+    ]) + "\n")
+    gf = load_sam(spark, str(sam))
+    samples = {r["readName"]: r["readGroupSampleId"] for r in gf.df.collect()}
+    assert samples == {"a": sm, "b": "s2", "c": "s3", "z": sm}
+
+    libs = {g.id: g.library for g in gf.meta.read_groups}
+    dups = {
+        (r["readName"], r["readInFragment"]): r["duplicateRead"]
+        for r in mark_duplicates(gf.df, libs).collect()
+    }
+    assert {n for (n, _), d in dups.items() if d} == {"b"}
+
+    out = sort(gf.df, gf.meta.references).collect()
+    assert [r["referenceName"] for r in out] == ["chrZ"] * 2 + [ctg] * 6

@@ -512,14 +512,10 @@ class TestClipParseNullifForm:
             [(c, s, e, n) for c, s, e, n, *_ in rows],
             "cigar string, start long, end long, neg boolean",
         )
-        from pyspark.sql import functions as F
-
         got = df.select(
-            five_prime_position(
-                F.col("start"), F.col("end"), F.col("cigar"), F.col("neg")
-            ).alias("fp"),
-            unclipped_start(F.col("start"), F.col("cigar")).alias("us"),
-            unclipped_end(F.col("end"), F.col("cigar")).alias("ue"),
+            five_prime_position("start", "end", "cigar", "neg").alias("fp"),
+            unclipped_start("start", "cigar").alias("us"),
+            unclipped_end("end", "cigar").alias("ue"),
         ).collect()
         for r, (c, s, e, n, fp, us, ue) in zip(got, rows):
             assert (r["fp"], r["us"], r["ue"]) == (fp, us, ue), (c, n, r)

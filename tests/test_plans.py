@@ -11,7 +11,9 @@ would survive 100 TB — these assertions do. Rules:
   O(queries), not O(corpus));
 - parquet scans of the big fact tables carry pushed filters or a
   pruned column list (never SELECT * of lineitem into a filter that
-  should have reached the scan).
+  should have reached the scan);
+- building the SAM decode → duplicate marking → coordinate sort plan
+  stays within a gateway-call budget (its expressions are SQL text).
 """
 
 from __future__ import annotations
@@ -113,3 +115,29 @@ def test_ivf_assignment_has_no_corpus_window(plans):
     n_windows = len(re.findall(r"\bWindow \[", p))
     assert n_windows <= 2, f"IVF plan grew a corpus-wide window:\n{p}"
     assert "ArrowEvalPython" in p or "BatchEvalPython" in p, "argmax UDF missing"
+
+
+#: gateway commands allowed for building load_sam + mark_duplicates +
+#: sort_by_reference_position; the build measured a median of about 320
+#: on PySpark 4.1 (about 7,400 when every expression was a Column
+#: operator), and Python GC detaching JVM objects adds a few hundred
+TRANSFORM_BUILD_BUDGET = 1000
+
+
+def test_transform_build_gateway_budget(spark, py4j_calls, tmp_path):
+    from adam_spark.operators.mark_duplicates import mark_duplicates
+    from adam_spark.operators.sorts import sort_by_reference_position
+    from adam_spark.sources.sam import load_sam
+
+    sam = tmp_path / "in.sam"
+    sam.write_text(
+        "@SQ\tSN:chr1\tLN:1000\n@RG\tID:rg1\tSM:s1\tLB:lib1\n"
+        "r1\t99\tchr1\t100\t60\t10M\t=\t200\t110\tACGTACGTAC\tIIIIIIIIII\tRG:Z:rg1\n"
+        "r1\t147\tchr1\t200\t60\t10M\t=\t100\t-110\tACGTACGTAC\tIIIIIIIIII\tRG:Z:rg1\n"
+    )
+    before = py4j_calls.n
+    gf = load_sam(spark, str(sam))
+    libs = {g.id: g.library or g.id for g in gf.meta.read_groups}
+    sort_by_reference_position(mark_duplicates(gf.df, libs))
+    used = py4j_calls.n - before
+    assert used < TRANSFORM_BUILD_BUDGET, used

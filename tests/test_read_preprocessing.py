@@ -237,8 +237,6 @@ def test_five_prime_position_sums_both_clips(spark):
     """'5H10S20M' unclips by 15 on the forward strand (H outside S per
     SAM order); a single-element regex would give 5 and split a
     hard+soft-clipped read from its soft-only duplicate."""
-    import pyspark.sql.functions as F
-
     from adam_spark.operators.mark_duplicates import five_prime_position
 
     df = spark.createDataFrame(
@@ -252,9 +250,7 @@ def test_five_prime_position_sums_both_clips(spark):
         "cigar string, start long, end long, neg boolean, want long",
     )
     got = df.select(
-        five_prime_position(
-            F.col("start"), F.col("end"), F.col("cigar"), F.col("neg")
-        ).alias("fp"),
+        five_prime_position("start", "end", "cigar", "neg").alias("fp"),
         "want",
     ).collect()
     for r in got:

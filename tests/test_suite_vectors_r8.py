@@ -334,8 +334,8 @@ def test_unclipped_start_end_vectors(spark):
     ]
     df = spark.createDataFrame(rows, "cigar string, start long, end long").select(
         "cigar",
-        unclipped_start(F.col("start"), F.col("cigar")).alias("us"),
-        unclipped_end(F.col("end"), F.col("cigar")).alias("ue"),
+        unclipped_start("start", "cigar").alias("us"),
+        unclipped_end("end", "cigar").alias("ue"),
     )
     got = {r["cigar"]: (r["us"], r["ue"]) for r in df.collect()}
     assert got["10M"][0] == 42

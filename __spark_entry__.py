@@ -47,12 +47,12 @@ def _intervals_l(spark: SparkSession, sf: str) -> DataFrame:
     # (sources/tables.py note; measured 4.15→1.34 s on the flank join)
     return (
         load_table(spark, sf, "orders", spread=True)
-        .where(F.expr("o_orderkey % 5 = 0"))
-        .select(
-            F.expr("'c' || cast(o_orderkey % 8 as string)").alias("referenceName"),
-            F.expr("(o_orderkey * 7) % 10000").alias("start"),
-            F.expr("(o_orderkey * 7) % 10000 + 10 + (o_orderkey % 30)").alias("end"),
-            F.col("o_orderkey").alias("id"),
+        .where("o_orderkey % 5 = 0")
+        .selectExpr(
+            "'c' || cast(o_orderkey % 8 as string) AS referenceName",
+            "(o_orderkey * 7) % 10000 AS start",
+            "(o_orderkey * 7) % 10000 + 10 + (o_orderkey % 30) AS `end`",
+            "o_orderkey AS id",
         )
     )
 
@@ -68,13 +68,11 @@ _L_SQL = """
 
 def _intervals_r(spark: SparkSession, sf: str) -> DataFrame:
     # spread=True: see _intervals_l
-    return load_table(spark, sf, "lineitem", spread=True).select(
-        F.expr("'c' || cast(l_orderkey % 8 as string)").alias("referenceName"),
-        F.expr("(l_orderkey * 7 + l_linenumber * 13) % 10000").alias("start"),
-        F.expr(
-            "(l_orderkey * 7 + l_linenumber * 13) % 10000 + 8 + (l_partkey % 25)"
-        ).alias("end"),
-        F.expr("l_orderkey * 10 + l_linenumber").alias("id"),
+    return load_table(spark, sf, "lineitem", spread=True).selectExpr(
+        "'c' || cast(l_orderkey % 8 as string) AS referenceName",
+        "(l_orderkey * 7 + l_linenumber * 13) % 10000 AS start",
+        "(l_orderkey * 7 + l_linenumber * 13) % 10000 + 8 + (l_partkey % 25) AS `end`",
+        "l_orderkey * 10 + l_linenumber AS id",
     )
 
 
@@ -123,25 +121,21 @@ _COV_SQL = """
 def _events_alignments(spark: SparkSession, sf: str) -> DataFrame:
     """Alignment-shaped frame derived from events (flagstat demo)."""
     ev = load_table(spark, sf, "events")
-    return ev.select(
-        F.expr("value > 2.0").alias("readMapped"),
-        F.expr("user_id % 2 = 0").alias("readPaired"),
-        F.expr("cast(event_id % 2 as int)").alias("readInFragment"),
-        F.expr("user_id % 2 = 0 AND value > 5").alias("properPair"),
-        F.expr("user_id % 2 = 0 AND event_type != 'error'").alias("mateMapped"),
-        F.expr("event_type = 'error'").alias("failedVendorQualityChecks"),
-        F.expr("event_id % 10 = 0").alias("duplicateRead"),
-        F.expr("value > 2.0").alias("primaryAlignment"),
-        F.expr("event_id % 17 = 0").alias("secondaryAlignment"),
-        F.lit(False).alias("supplementaryAlignment"),
-        F.expr("cast(event_id % 60 as int)").alias("mappingQuality"),
-        F.expr("CASE WHEN value > 2.0 THEN 'c' || cast(user_id % 4 as string) END").alias(
-            "referenceName"
-        ),
-        F.expr(
-            "CASE WHEN user_id % 2 = 0 AND event_type != 'error' "
-            "THEN 'c' || cast((user_id + event_id % 3) % 4 as string) END"
-        ).alias("mateReferenceName"),
+    return ev.selectExpr(
+        "value > 2.0 AS readMapped",
+        "user_id % 2 = 0 AS readPaired",
+        "cast(event_id % 2 as int) AS readInFragment",
+        "user_id % 2 = 0 AND value > 5 AS properPair",
+        "user_id % 2 = 0 AND event_type != 'error' AS mateMapped",
+        "event_type = 'error' AS failedVendorQualityChecks",
+        "event_id % 10 = 0 AS duplicateRead",
+        "value > 2.0 AS primaryAlignment",
+        "event_id % 17 = 0 AS secondaryAlignment",
+        "FALSE AS supplementaryAlignment",
+        "cast(event_id % 60 as int) AS mappingQuality",
+        "CASE WHEN value > 2.0 THEN 'c' || cast(user_id % 4 as string) END AS referenceName",
+        "CASE WHEN user_id % 2 = 0 AND event_type != 'error' "
+        "THEN 'c' || cast((user_id + event_id % 3) % 4 as string) END AS mateReferenceName",
     )
 
 
@@ -1507,7 +1501,7 @@ def bloom_decontaminate_docs(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
     bench = (
         docs.where(F.col("doc_id") % 50 == 0)
-        .select(F.explode(word_ngrams(F.col("text"), 4)).alias("gram"))
+        .select(F.explode(word_ngrams("text", 4)).alias("gram"))
         .distinct()
     )
     # spread the PROBE branch only: the Arrow worker does ~380 grams ×

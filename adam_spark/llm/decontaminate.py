@@ -45,11 +45,11 @@ def ngram_contamination(
     """
     bench_text = bench_text_col or text_col
     bench_grams = F.broadcast(
-        benchmark.select(F.explode(word_ngrams(F.col(bench_text), n)).alias("gram"))
+        benchmark.select(F.explode(word_ngrams(bench_text, n)).alias("gram"))
         .distinct()
     )
     corpus_grams = corpus.select(
-        F.col(id_col).alias("id"), F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
+        F.col(id_col).alias("id"), F.explode(word_ngrams(text_col, n)).alias("gram")
     )
     hits = (
         corpus_grams.join(bench_grams, "gram", "left_semi")

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from adam_spark.schemas import sql_double, sql_ident
+
 
 def tokens(text: Column) -> Column:
     """Whitespace tokens, empties dropped (portable to DuckDB)."""
@@ -60,32 +62,54 @@ def distinct_tokens(text: Column) -> Column:
     return F.array_distinct(tokens(text))
 
 
-def has_min_tokens(text: Column, n: int) -> Column:
-    """Cheap text-level ``size(tokens(text)) >= n``: NULL text fails
-    (rlike/regexp propagate NULL, falsy in a filter), and a token is
-    exactly a maximal run of non-space characters. n == 1 uses an
-    early-exit ``rlike`` (stops at the first non-space char — O(1) for
-    ordinary text, where ``regexp_count`` would scan the whole string
-    counting every token); n > 1 needs the count. Used as the
-    emptiness guard below the dedup exchanges, where an array-level
-    ``size(shingles) > 0`` would re-tokenize on the pre-exchange
-    layout (pushed-down predicate)."""
+def has_min_tokens(text_col: str, n: int) -> Column:
+    """Cheap text-level ``size(tokens(text)) >= n`` over the column
+    ``text_col``, for a filter: a token is exactly a maximal run of
+    non-space characters, and NULL text gives NULL (falsy in a filter).
+    n == 1 uses an early-exit ``rlike`` (stops at the first non-space
+    char — O(1) for ordinary text, where ``regexp_count`` would scan
+    the whole string counting every token); n > 1 needs the count.
+    Used as the emptiness guard below the dedup exchanges, where an
+    array-level ``size(shingles) > 0`` would re-tokenize on the
+    pre-exchange layout (pushed-down predicate). SQL text: one gateway
+    call, where the Column form costs one per operator."""
+    t = sql_ident(text_col)
     if n <= 1:
-        return text.rlike("[^ ]")
-    return token_count(text) >= F.lit(n)
+        return F.expr(f"{t} RLIKE '[^ ]'")
+    return F.expr(f"regexp_count({t}, '[^ ]+') >= {int(n)}")
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """Distinct word n-gram shingles, space-joined. Documents with
-    fewer than ``n`` tokens yield an empty array (guard needed because
-    ``sequence(1, 0)`` would count DOWN, not produce empty)."""
-    toks = tokens(text)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + F.lit(j)) for j in range(n)]),
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
+def word_ngrams(text_col: str, n: int) -> Column:
+    """Distinct word n-gram shingles of the column ``text_col``,
+    space-joined; n <= 1 gives the distinct tokens. NULL text and
+    documents with fewer than ``n`` tokens yield an empty array.
+
+    The grams are built by n - 1 ``zip_with`` steps, each joining the
+    grams so far with the token array shifted one more place (past the
+    end the shifted side is NULL, which ``concat_ws`` skips, so the
+    trailing short grams are sliced off). The tokenizer runs n times
+    per document, linear in its length; inside a per-position lambda
+    it would run n times per position, quadratic. Binding the token
+    array once as an outer lambda variable instead
+    (``element_at(transform(array(toks), ts -> ...), 1)``) fails at run
+    time under the signature pandas UDF of :func:`minhash_signatures`'
+    default path (INTERNAL_ERROR "Cannot evaluate expression": the UDF
+    is left unextracted). SQL text: one gateway call, where the Column
+    form costs one per operator."""
+    t = sql_ident(text_col)
+    toks = f"filter(split({t}, ' '), __w -> __w != '')"
+    empty = "CAST(array() AS ARRAY<STRING>)"
+    if n <= 1:
+        return F.expr(f"CASE WHEN {t} IS NULL THEN {empty} ELSE array_distinct({toks}) END")
+    grams = toks
+    for j in range(1, n):
+        grams = (
+            f"zip_with({grams}, slice({toks}, {j + 1}, size({toks})),"
+            f" (__a, __b) -> concat_ws(' ', __a, __b))"
+        )
+    return F.expr(
+        f"CASE WHEN size({toks}) >= {n}"
+        f" THEN array_distinct(slice({grams}, 1, size({toks}) - {n - 1})) ELSE {empty} END"
     )
 
 
@@ -252,17 +276,15 @@ def minhash_signatures(
         src = df.repartition(
             df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
         )
-    keyed = src.select(F.col(id_col).alias("id"), shingles.alias("__sh"))
-    h0s = F.transform(
-        F.col("__sh"), lambda t: F.conv(F.substring(F.md5(t), 1, 7), 16, 10).cast("long")
+    keyed = src.select(F.expr(f"{sql_ident(id_col)} AS id"), shingles.alias("__sh"))
+    h0s = F.expr(
+        "transform(__sh, __t -> CAST(conv(substring(md5(__t), 1, 7), 16, 10) AS BIGINT))"
     )
-    sig = _sig_udf(num_hashes)(h0s)
-    out = keyed if prefiltered else keyed.where(F.size("__sh") > 0)
+    sig = _sig_udf(num_hashes)(h0s).alias("signature")
+    out = keyed if prefiltered else keyed.where("size(__sh) > 0")
     if with_size:
-        return out.select(
-            "id", F.size("__sh").alias("n"), sig.alias("signature")
-        )
-    return out.select("id", sig.alias("signature"))
+        return out.select("id", F.expr("size(__sh) AS n"), sig)
+    return out.select("id", sig)
 
 
 def lsh_bands(signatures: DataFrame, bands: int) -> DataFrame:
@@ -297,10 +319,21 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
 
 
-def _first_shared_band(bh_a: Column, bh_b: Column, bands: int) -> Column:
-    """0-based index of the first band where the two hash arrays agree
-    (-1 when none — callers only evaluate it on band-join candidates,
-    which share at least one band).
+def _band_hashes_sql(num_hashes: int, bands: int) -> str:
+    """SQL: the per-doc array of ``bands`` band hashes of ``signature``
+    (md5 of each band's comma-joined values, the :func:`lsh_bands`
+    construction)."""
+    rpb = num_hashes // bands
+    return (
+        f"transform(sequence(0, {bands - 1}), __j -> md5(concat_ws(',', transform("
+        f"slice(signature, __j * {rpb} + 1, {rpb}), __v -> CAST(__v AS STRING)))))"
+    )
+
+
+def _first_shared_band(bh_a: str, bh_b: str, bands: int) -> str:
+    """SQL: 0-based index of the first band where the two hash arrays
+    agree (-1 when none — callers only evaluate it on band-join
+    candidates, which share at least one band).
 
     Unrolled as a ``bands``-arm CASE over element_at comparisons rather
     than ``filter(sequence(...), lambda ...)``: higher-order array
@@ -308,15 +341,14 @@ def _first_shared_band(bh_a: Column, bh_b: Column, bands: int) -> Column:
     evaluation, measured ~0.4 s over the 3.35M-row sf0.1 candidate
     stream; the CASE chain codegens.
     """
-    fs: Column = F.lit(-1)
-    for j in range(bands, 0, -1):
-        fs = F.when(
-            F.element_at(bh_a, j) == F.element_at(bh_b, j), F.lit(j - 1)
-        ).otherwise(fs)
-    return fs
+    arms = " ".join(
+        f"WHEN element_at({bh_a}, {j}) = element_at({bh_b}, {j}) THEN {j - 1}"
+        for j in range(1, bands + 1)
+    )
+    return f"CASE {arms} ELSE -1 END"
 
 
-def _jaccard_length_ok(n_a: Column, n_b: Column, threshold: float) -> Column:
+def _jaccard_length_ok(n_a: str, n_b: str, threshold: float) -> str:
     """Exact PPJoin-style length prefilter: J(A,B) ≥ t needs
     |A∩B| ≥ t·(|A|+|B|)/(1+t) and |A∩B| ≤ min(|A|,|B|), so
     min·(1+t) ≥ t·(|A|+|B|) is NECESSARY for any qualifying pair —
@@ -325,10 +357,29 @@ def _jaccard_length_ok(n_a: Column, n_b: Column, threshold: float) -> Column:
     most of the 1.67M sf0.1 intersect evaluations in the self-join
     verify). +0.5 slack keeps boundary pairs (e.g. min=9, total=19,
     t=0.9 → 17.1 vs 17.1) that double rounding could otherwise drop;
-    the final exact-Jaccard filter still decides them."""
-    return F.least(n_a, n_b) * F.lit(1.0 + threshold) + F.lit(0.5) >= F.lit(
-        threshold
-    ) * (n_a + n_b)
+    the final exact-Jaccard filter still decides them. SQL text, over
+    the two size columns."""
+    return (
+        f"least({n_a}, {n_b}) * {sql_double(1.0 + threshold)} + 0.5D"
+        f" >= {sql_double(threshold)} * ({n_a} + {n_b})"
+    )
+
+
+def _jaccard_sql(sh_a: str, sh_b: str, n_a: str, n_b: str) -> str:
+    """SQL: exact Jaccard of two distinct-shingle arrays of sizes
+    ``n_a``/``n_b``: |A∩B| once, |A∪B| by arithmetic (no union
+    allocation)."""
+    inter = f"size(array_intersect({sh_a}, {sh_b}))"
+    return f"{inter} / ({n_a} + {n_b} - {inter})"
+
+
+def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, sh): the distinct word-``n``-gram shingles of each document
+    with at least one, id-partitioned below the shingle projection
+    (see :func:`minhash_lsh_pairs`)."""
+    return df.where(has_min_tokens(text_col, max(1, n))).repartition(
+        df.sparkSession.sparkContext.defaultParallelism, F.expr(sql_ident(id_col))
+    ).select(F.expr(f"{sql_ident(id_col)} AS id"), word_ngrams(text_col, n).alias("sh"))
 
 
 #: max estimated shingle-table bytes we will pin as a broadcast for the
@@ -357,11 +408,11 @@ def minhash_lsh_pairs(
     releases the internal band-table persist
     (:func:`adam_spark.llm.cache.eager_release`).
     """
-    sh = word_ngrams(F.col(text_col), shingle_ngram) if shingle_ngram > 1 else distinct_tokens(
-        F.col(text_col)
-    )
     from pyspark.storagelevel import StorageLevel
 
+    # Every expression below is SQL text: one gateway call per step,
+    # where a Column tree costs one or more round trips per operator
+    # (this build: about 2,000 calls as Columns, about 370 as SQL text).
     # base (full token arrays) intentionally NOT persisted: it feeds the
     # signature pipeline and the two verify broadcasts, but re-running a
     # narrow tokenize scan is cheaper at corpus scale than materializing
@@ -376,12 +427,9 @@ def minhash_lsh_pairs(
     # the distinct shingle array is non-empty, incl. NULL text): the
     # array-level `size(sh) > 0` pushes below the exchange and
     # re-tokenizes every row on the pre-exchange layout.
-    nonempty = has_min_tokens(F.col(text_col), max(1, shingle_ngram))
-    base = df.where(nonempty).repartition(
-        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    ).select(F.col(id_col).alias("id"), sh.alias("sh"))
+    base = _shingled(df, id_col, text_col, shingle_ngram)
     sigs = minhash_signatures(
-        base, "id", F.col("sh"), num_hashes,
+        base, "id", F.expr("sh"), num_hashes,
         with_size=True, repartition=False, prefiltered=True,
     )
     # per-doc band-hash ARRAY first (identical hash construction to
@@ -390,35 +438,20 @@ def minhash_lsh_pairs(
     # exchange across the differently-aliased sides (the signature UDF
     # would run twice) — persist the slim (id, bh) table: one row per
     # doc, bands hashes each
-    rpb = num_hashes // bands
-    bh_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda j: F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.slice(F.col("signature"), j * F.lit(rpb) + 1, F.lit(rpb)),
-                    lambda v: v.cast("string"),
-                ),
-            )
-        ),
-    )
-    banded = sigs.select("id", "n", bh_arr.alias("bh")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    banded = sigs.selectExpr(
+        "id", "n", f"{_band_hashes_sql(num_hashes, bands)} AS bh"
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     # one aggregate doubles as the eager materializer (both self-join
     # sides would race a lazy cache) AND the broadcast-size probe —
     # previously a count() job plus a separate stats job
-    _bst = banded.select(
-        F.count(F.lit(1)).alias("docs"), F.sum("n").alias("toks")
-    ).first()
-    bandsdf = banded.select("id", F.posexplode("bh").alias("band", "band_hash"))
-    a = bandsdf.select(F.col("id").alias("id_a"), "band", "band_hash")
-    b = bandsdf.select(F.col("id").alias("id_b"), "band", "band_hash")
+    _bst = banded.selectExpr("count(1) AS docs", "sum(n) AS toks").first()
+    bandsdf = banded.selectExpr("id", "posexplode(bh) AS (band, band_hash)")
+    a = bandsdf.selectExpr("id AS id_a", "band", "band_hash")
+    b = bandsdf.selectExpr("id AS id_b", "band", "band_hash")
     raw = (
         a.join(b, ["band", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "band")
+        .where("id_a < id_b")
+        .selectExpr("id_a", "id_b", "band")
     )
     # verification: |A∩B| once, |A∪B| by arithmetic (no union allocation).
     # The shingle side is one row per document; broadcasting it pins a
@@ -454,33 +487,27 @@ def minhash_lsh_pairs(
         # to the surviving unique pairs only, then runs the exact
         # intersect.
         slim = banded  # id, n, bh — already persisted and eager
-        slim_a = slim.select(
-            F.col("id").alias("id_a"), F.col("n").alias("n_a"), F.col("bh").alias("bh_a")
-        )
-        slim_b = slim.select(
-            F.col("id").alias("id_b"), F.col("n").alias("n_b"), F.col("bh").alias("bh_b")
-        )
-        first_shared = _first_shared_band(F.col("bh_a"), F.col("bh_b"), bands)
+        slim_a = slim.selectExpr("id AS id_a", "n AS n_a", "bh AS bh_a")
+        slim_b = slim.selectExpr("id AS id_b", "n AS n_b", "bh AS bh_b")
         filtered = (
             raw.join(F.broadcast(slim_a), "id_a")
             .join(F.broadcast(slim_b), "id_b")
-            .where(_jaccard_length_ok(F.col("n_a"), F.col("n_b"), threshold)
-                   & (F.col("band") == first_shared))
-            .select("id_a", "id_b", "n_a", "n_b")
+            .where(f"({_jaccard_length_ok('n_a', 'n_b', threshold)})"
+                   f" AND (band = ({_first_shared_band('bh_a', 'bh_b', bands)}))")
+            .selectExpr("id_a", "id_b", "n_a", "n_b")
         )
         # (an Arrow UDF doing Python-set intersection against a
         # broadcast {id: frozenset} dict was measured here and REVERTED:
         # the per-call driver collect + dict pickle/broadcast cost more
         # than the executor-side win — 3.75 s vs 2.53 s at sf0.1)
-        sh_a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-        sh_b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+        sh_a = base.selectExpr("id AS id_a", "sh AS sh_a")
+        sh_b = base.selectExpr("id AS id_b", "sh AS sh_b")
         out = (
             filtered.join(F.broadcast(sh_a), "id_a")
             .join(F.broadcast(sh_b), "id_b")
-            .withColumn("jaccard", inter / (F.col("n_a") + F.col("n_b") - inter))
-            .where(F.col("jaccard") >= F.lit(threshold))
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+            .withColumn("jaccard", F.expr(_jaccard_sql("sh_a", "sh_b", "n_a", "n_b")))
+            .where(f"jaccard >= {sql_double(threshold)}")
+            .selectExpr("id_a", "id_b", "round(jaccard, 6) AS jaccard")
         )
     else:
         # shuffle verify: every candidate row costs a join shuffle, so
@@ -491,19 +518,18 @@ def minhash_lsh_pairs(
         # inflate the shuffled verify rows, and the dedup exchange
         # already collapses multiplicity.
         cand = raw.repartition(
-            df.sparkSession.sparkContext.defaultParallelism, "id_a"
+            df.sparkSession.sparkContext.defaultParallelism, F.expr("id_a")
         ).dropDuplicates(["id_a", "id_b"])
-        sized = base.withColumn("n", F.size("sh"))
-        sh_a = sized.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("n").alias("n_a"))
-        sh_b = sized.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("n").alias("n_b"))
-        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+        sized = base.withColumn("n", F.expr("size(sh)"))
+        sh_a = sized.selectExpr("id AS id_a", "sh AS sh_a", "n AS n_a")
+        sh_b = sized.selectExpr("id AS id_b", "sh AS sh_b", "n AS n_b")
         out = (
             cand.join(sh_a, "id_a")
             .join(sh_b, "id_b")
-            .where(_jaccard_length_ok(F.col("n_a"), F.col("n_b"), threshold))
-            .withColumn("jaccard", inter / (F.col("n_a") + F.col("n_b") - inter))
-            .where(F.col("jaccard") >= F.lit(threshold))
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+            .where(_jaccard_length_ok("n_a", "n_b", threshold))
+            .withColumn("jaccard", F.expr(_jaccard_sql("sh_a", "sh_b", "n_a", "n_b")))
+            .where(f"jaccard >= {sql_double(threshold)}")
+            .selectExpr("id_a", "id_b", "round(jaccard, 6) AS jaccard")
         )
     if bounded_cache:
         from adam_spark.llm.cache import eager_release
@@ -527,7 +553,7 @@ def ngram_jaccard_pairs(
     shared shingles (not a cartesian product), so cost is bounded by
     co-occurrence, mirroring a posting-list self-join.
     """
-    sh = word_ngrams(F.col(text_col), ngram) if ngram > 1 else distinct_tokens(F.col(text_col))
+    sh = word_ngrams(text_col, ngram)
     base = df.select(F.col(id_col).alias("id"), sh.alias("sh"))
     posts = base.select("id", F.explode("sh").alias("tok"), F.size("sh").alias("n"))
     pa = posts.select(F.col("id").alias("id_a"), "tok", F.col("n").alias("n_a"))
@@ -572,7 +598,7 @@ def simhash(
     # size(distinct_tokens) > 0, incl. NULL text): an array-level
     # filter pushes below the exchange and re-tokenizes every row on
     # the pre-exchange layout.
-    keyed = df.where(has_min_tokens(F.col(text_col), 1)).repartition(
+    keyed = df.where(has_min_tokens(text_col, 1)).repartition(
         df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
     ).select(F.col(id_col).alias("id"), distinct_tokens(F.col(text_col)).alias("__t"))
 
@@ -870,97 +896,62 @@ def minhash_lsh_pairs_between(
     """
     from pyspark.storagelevel import StorageLevel
 
-    mk = word_ngrams(F.col(text_col), shingle_ngram) if shingle_ngram > 1 else (
-        distinct_tokens(F.col(text_col))
-    )
     # id-partition below the shingle projection + text-level emptiness
-    # guard: see minhash_lsh_pairs
-    _p = df_new.sparkSession.sparkContext.defaultParallelism
-    _nonempty = has_min_tokens(F.col(text_col), max(1, shingle_ngram))
-    base_n = df_new.where(_nonempty).repartition(_p, F.col(id_col)).select(
-        F.col(id_col).alias("id"), mk.alias("sh")
-    )
-    base_r = df_ref.where(_nonempty).repartition(_p, F.col(id_col)).select(
-        F.col(id_col).alias("id"), mk.alias("sh")
-    )
-    sh_n = base_n.select(
-        F.col("id").alias("id_new"), F.col("sh").alias("sh_n"), F.size("sh").alias("n_n")
-    )
-    sh_r = base_r.select(
-        F.col("id").alias("id_ref"), F.col("sh").alias("sh_r"), F.size("sh").alias("n_r")
-    )
-    inter = F.size(F.array_intersect(F.col("sh_n"), F.col("sh_r")))
+    # guard, and SQL-text expressions throughout: see minhash_lsh_pairs
+    base_n = _shingled(df_new, id_col, text_col, shingle_ngram)
+    base_r = _shingled(df_ref, id_col, text_col, shingle_ngram)
+    sh_n = base_n.selectExpr("id AS id_new", "sh AS sh_n", "size(sh) AS n_n")
+    sh_r = base_r.selectExpr("id AS id_ref", "sh AS sh_r", "size(sh) AS n_r")
+    jac = F.expr(_jaccard_sql("sh_n", "sh_r", "n_n", "n_r"))
     # Both strategies start from the slim per-side banded tables
     # (id, n, band-hash array — one row per doc, built by one signature
     # pass each, persisted): the broadcast-cap estimates read them
     # (no extra tokenize pass), the band equi-join explodes them, and
     # the broadcast-verify filters join them back.
-    rpb = num_hashes // bands
-    bh_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda j: F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.slice(F.col("signature"), j * F.lit(rpb) + 1, F.lit(rpb)),
-                    lambda v: v.cast("string"),
-                ),
-            )
-        ),
-    )
+    bh_arr = _band_hashes_sql(num_hashes, bands)
 
     def _banded(base):
         # the _est aggregate below doubles as the eager materializer
         # (broadcast-branch consumers would race a lazy cache)
         return minhash_signatures(
-            base, "id", F.col("sh"), num_hashes,
+            base, "id", F.expr("sh"), num_hashes,
             with_size=True, repartition=False, prefiltered=True,
-        ).select("id", "n", bh_arr.alias("bh")).persist(StorageLevel.MEMORY_AND_DISK)
+        ).selectExpr("id", "n", f"{bh_arr} AS bh").persist(StorageLevel.MEMORY_AND_DISK)
 
     def _est(banded) -> int:
-        st = banded.select(
-            F.count(F.lit(1)).alias("docs"), F.sum("n").alias("toks")
-        ).first()
+        st = banded.selectExpr("count(1) AS docs", "sum(n) AS toks").first()
         return int(st["toks"] or 0) * 16 + int(st["docs"] or 0) * 48
+
+    def _bands(banded, id_as):
+        return banded.selectExpr(f"id AS {id_as}", "posexplode(bh) AS (band, band_hash)")
 
     banded_n = _banded(base_n)
     banded_r = _banded(base_r)
     est_n = _est(banded_n)
+    raw = _bands(banded_n, "id_new").join(_bands(banded_r, "id_ref"), ["band", "band_hash"])
     if est_n + _est(banded_r) <= VERIFY_BROADCAST_CAP_BYTES:
         # both token tables broadcast: verify is a pure map over the raw
         # candidate stream, a pair kept only at its FIRST shared band —
         # one exact-Jaccard per pair, no dedup exchange (same trick as
         # the self-join variant).
-        raw = (
-            banded_n.select(F.col("id").alias("id_new"), F.posexplode("bh").alias("band", "band_hash"))
-            .join(
-                banded_r.select(F.col("id").alias("id_ref"), F.posexplode("bh").alias("band", "band_hash")),
-                ["band", "band_hash"],
-            )
-            .select("id_new", "id_ref", "band")
-        )
         # two-phase attach (see minhash_lsh_pairs: filter on slim
         # (n, bh) metadata first; token arrays attach to survivors only)
-        slim_n = banded_n.select(
-            F.col("id").alias("id_new"), F.col("n").alias("n_n"), F.col("bh").alias("bh_n")
-        )
-        slim_r = banded_r.select(
-            F.col("id").alias("id_ref"), F.col("n").alias("n_r"), F.col("bh").alias("bh_r")
-        )
-        first_shared = _first_shared_band(F.col("bh_n"), F.col("bh_r"), bands)
+        slim_n = banded_n.selectExpr("id AS id_new", "n AS n_n", "bh AS bh_n")
+        slim_r = banded_r.selectExpr("id AS id_ref", "n AS n_r", "bh AS bh_r")
         filtered = (
-            raw.join(F.broadcast(slim_n), "id_new")
+            raw.selectExpr("id_new", "id_ref", "band")
+            .join(F.broadcast(slim_n), "id_new")
             .join(F.broadcast(slim_r), "id_ref")
-            .where(_jaccard_length_ok(F.col("n_n"), F.col("n_r"), threshold)
-                   & (F.col("band") == first_shared))
-            .select("id_new", "id_ref", "n_n", "n_r")
+            .where(f"({_jaccard_length_ok('n_n', 'n_r', threshold)})"
+                   f" AND (band = ({_first_shared_band('bh_n', 'bh_r', bands)}))")
+            .selectExpr("id_new", "id_ref", "n_n", "n_r")
         )
         out = (
             filtered.join(F.broadcast(sh_n.drop("n_n")), "id_new")
             .join(F.broadcast(sh_r.drop("n_r")), "id_ref")
-            .withColumn("jaccard", inter / (F.col("n_n") + F.col("n_r") - inter))
-            .where(F.col("jaccard") >= F.lit(threshold))
-            .select("id_new", "id_ref", F.round("jaccard", 6).alias("jaccard"))
+            .withColumn("jaccard", jac)
+            .where(f"jaccard >= {sql_double(threshold)}")
+            .selectExpr("id_new", "id_ref", "round(jaccard, 6) AS jaccard")
         )
         if bounded_cache:
             from adam_spark.llm.cache import eager_release
@@ -969,15 +960,7 @@ def minhash_lsh_pairs_between(
         return out
     # shuffle/fallback path: the band join reads the SAME persisted
     # banded tables (the signature UDF never runs twice per side)
-    raw = (
-        banded_n.select(F.col("id").alias("id_new"), F.posexplode("bh").alias("band", "band_hash"))
-        .join(
-            banded_r.select(F.col("id").alias("id_ref"), F.posexplode("bh").alias("band", "band_hash")),
-            ["band", "band_hash"],
-        )
-        .select("id_new", "id_ref")
-    )
-    cand = raw.dropDuplicates(["id_new", "id_ref"]).persist(
+    cand = raw.selectExpr("id_new", "id_ref").dropDuplicates(["id_new", "id_ref"]).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     n_cand = cand.count()
@@ -990,10 +973,10 @@ def minhash_lsh_pairs_between(
     out = (
         sh_r.join(maybe_bc(cand), "id_ref")
         .join(maybe_bc_new(sh_n), "id_new")
-        .where(_jaccard_length_ok(F.col("n_n"), F.col("n_r"), threshold))
-        .withColumn("jaccard", inter / (F.col("n_n") + F.col("n_r") - inter))
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("id_new", "id_ref", F.round("jaccard", 6).alias("jaccard"))
+        .where(_jaccard_length_ok("n_n", "n_r", threshold))
+        .withColumn("jaccard", jac)
+        .where(f"jaccard >= {sql_double(threshold)}")
+        .selectExpr("id_new", "id_ref", "round(jaccard, 6) AS jaccard")
     )
     if bounded_cache:
         from adam_spark.llm.cache import eager_release

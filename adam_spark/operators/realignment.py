@@ -736,10 +736,10 @@ def realign_indels(
 
     bin_size = max(max_target_size, 1)
     reads_keyed = eligible.withColumn(
-        "__bin", F.explode(_bins(F.col("start"), F.col("end"), bin_size))
+        "__bin", F.expr(f"explode({_bins('`start`', '`end`', bin_size)})")
     )
     t_binned = t.withColumn(
-        "__bin", F.explode(_bins(F.col("__t_start"), F.col("__t_end"), bin_size))
+        "__bin", F.expr(f"explode({_bins('__t_start', '__t_end', bin_size)})")
     )
     # INNER join: the no-target majority never enters the join output,
     # so the leftmost-target window below exchanges only reads that

@@ -35,6 +35,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adam_spark.schemas import sql_double, sql_ident, sql_literal
+
 #: default bin width in base pairs; ~1 Mbp mirrors the reference's
 #: partitioned-Parquet bin convention (GenomicDataset.scala:380-394)
 DEFAULT_BIN_SIZE = 1_000_000
@@ -43,12 +45,11 @@ _HOW = {"inner", "left_outer", "right_outer", "full_outer"}
 _GROUP = {None, "left", "right"}
 
 
-def _bins(start: Column, end: Column, bin_size: int) -> Column:
-    """All bin ids covered by the half-open interval [start, end)."""
-    first = F.floor(start / F.lit(float(bin_size)))
+def _bins(start: str, end: str, bin_size: int) -> str:
+    """SQL: all bin ids covered by the half-open interval [start, end)."""
+    first = f"floor({start} / {sql_double(bin_size)})"
     # greatest() guards degenerate (empty) intervals from descending sequences
-    last = F.greatest(first, F.floor((end - 1) / F.lit(float(bin_size))))
-    return F.sequence(first, last)
+    return f"sequence({first}, greatest({first}, floor(({end} - 1) / {sql_double(bin_size)})))"
 
 
 def _orderable(dtype) -> bool:
@@ -95,12 +96,18 @@ def _pin_row_order(df: DataFrame) -> DataFrame:
     return df
 
 
-def _collect_hits(hit: Column, schema, cols: list[str]) -> Column:
-    """collect_list(struct), sorted for determinism when orderable."""
-    agg = F.collect_list(hit)
+def _collect_hits(hit: str, schema, cols: list[str]) -> str:
+    """SQL: collect_list(struct), sorted for determinism when orderable."""
+    agg = f"collect_list({hit})"
     if all(_orderable(schema[c].dataType) for c in cols):
-        agg = F.sort_array(agg)
+        agg = f"sort_array({agg})"
     return agg
+
+
+def _struct(cols: list[str], names: dict[str, str]) -> str:
+    """SQL: ``struct<cols>`` built from the renamed columns ``names[c]``."""
+    fields = ", ".join(f"{sql_literal(c)}, {sql_ident(names[c])}" for c in cols)
+    return f"named_struct({fields})"
 
 
 def region_join(
@@ -203,13 +210,17 @@ def region_join(
     l_ref, l_start, l_end = left_region
     r_ref, r_start, r_end = right_region
 
+    # Every expression below is SQL text: one gateway call per DataFrame
+    # step, where a Column operator tree costs one or more round trips
+    # per node (the inner join's build: about 960 calls as Columns,
+    # about 80 as SQL text).
     # Disambiguate every column up front; restore names at the end.
     lcols = left.columns
     rcols = right.columns
     lmap = {c: f"__l_{c}" for c in lcols}
     rmap = {c: f"__r_{c}" for c in rcols}
-    ldf = left.select([F.col(c).alias(lmap[c]) for c in lcols])
-    rdf = right.select([F.col(c).alias(rmap[c]) for c in rcols])
+    ldf = left.selectExpr(*[f"{sql_ident(c)} AS {sql_ident(lmap[c])}" for c in lcols])
+    rdf = right.selectExpr(*[f"{sql_ident(c)} AS {sql_ident(rmap[c])}" for c in rcols])
     # Row ids serve two purposes: (1) group variants aggregate per input
     # RECORD, not per distinct tuple — the reference probes once per row
     # (TreeRegionJoin.scala:46-66), so two identical records each yield
@@ -236,27 +247,24 @@ def region_join(
     need_rrid = group == "right" or how in {"right_outer", "full_outer"}
     if need_lrid:
         if left_key is not None:
-            ldf = ldf.withColumn("__lrid", F.col(lmap[left_key]))
+            ldf = ldf.withColumn("__lrid", F.expr(sql_ident(lmap[left_key])))
         else:
             ldf = _pin_row_order(ldf).withColumn(
-                "__lrid", F.monotonically_increasing_id()
+                "__lrid", F.expr("monotonically_increasing_id()")
             )
     if need_rrid:
         if right_key is not None:
-            rdf = rdf.withColumn("__rrid", F.col(rmap[right_key]))
+            rdf = rdf.withColumn("__rrid", F.expr(sql_ident(rmap[right_key])))
         else:
             rdf = _pin_row_order(rdf).withColumn(
-                "__rrid", F.monotonically_increasing_id()
+                "__rrid", F.expr("monotonically_increasing_id()")
             )
 
-    ls, le = F.col(lmap[l_start]) - F.lit(flank), F.col(lmap[l_end]) + F.lit(flank)
-    rs, re_ = F.col(rmap[r_start]), F.col(rmap[r_end])
-
-    overlap = (
-        (F.col(lmap[l_ref]) == F.col(rmap[r_ref]))
-        & (ls < re_)
-        & (rs < le)
-    )
+    ls = f"({sql_ident(lmap[l_start])} - {int(flank)})"
+    le = f"({sql_ident(lmap[l_end])} + {int(flank)})"
+    rs, re_ = sql_ident(rmap[r_start]), sql_ident(rmap[r_end])
+    same_ref = f"{sql_ident(lmap[l_ref])} = {sql_ident(rmap[r_ref])}"
+    overlap = f"{same_ref} AND {ls} < {re_} AND {rs} < {le}"
 
     # WIDE-INTERVAL side channel: an interval spanning w bins explodes
     # into w rows, so a chromosome-scale annotation (250 Mbp at 64 bp
@@ -266,44 +274,41 @@ def region_join(
     # on the exact overlap predicate. The three branches partition the
     # pair space — (wide-left × any-right), (narrow-left × wide-right),
     # (narrow × narrow via bins) — so no pair is seen twice.
-    # product computed in Python: a Column int×int product would wrap at
+    # product computed in Python: an int×int SQL product would wrap at
     # 2^31 and silently route every interval through the wide branch
-    wide = F.lit(int(large_span_bins) * int(bin_size)).cast("long")
-    l_is_wide = (le - ls) > wide
-    r_is_wide = (re_ - rs) > wide
-    l_narrow, l_wide = ldf.where(~l_is_wide), ldf.where(l_is_wide)
-    r_narrow, r_wide = rdf.where(~r_is_wide), rdf.where(r_is_wide)
+    wide = f"CAST({int(large_span_bins) * int(bin_size)} AS BIGINT)"
+    l_is_wide = f"({le} - {ls}) > {wide}"
+    r_is_wide = f"({re_} - {rs}) > {wide}"
+    l_narrow, l_wide = ldf.where(f"NOT ({l_is_wide})"), ldf.where(l_is_wide)
+    r_narrow, r_wide = rdf.where(f"NOT ({r_is_wide})"), rdf.where(r_is_wide)
 
-    lb = l_narrow.withColumn("__bin", F.explode(_bins(ls, le, bin_size)))
-    rb = r_narrow.withColumn("__bin", F.explode(_bins(rs, re_, bin_size)))
+    lb = l_narrow.selectExpr("*", f"explode({_bins(ls, le, bin_size)}) AS __lbin")
+    rb = r_narrow.selectExpr("*", f"explode({_bins(rs, re_, bin_size)}) AS __rbin")
     if broadcast == "left":
         lb = F.broadcast(lb)
     elif broadcast == "right":
         rb = F.broadcast(rb)
 
-    pair_first_bin = F.floor(F.greatest(ls, rs) / F.lit(float(bin_size)))
+    pair_first_bin = f"floor(greatest({ls}, {rs}) / {sql_double(bin_size)})"
     cond = (
-        (F.col(lmap[l_ref]) == F.col(rmap[r_ref]))
-        & (lb["__bin"] == rb["__bin"])
-        & (ls < re_)
-        & (rs < le)
-        & (lb["__bin"] == pair_first_bin)
+        f"{same_ref} AND __lbin = __rbin AND {ls} < {re_} AND {rs} < {le}"
+        f" AND __lbin = {pair_first_bin}"
     )
-    matched = lb.join(rb, cond, "inner").drop("__bin")
-    matched = matched.unionByName(F.broadcast(l_wide).join(rdf, overlap, "inner"))
-    matched = matched.unionByName(l_narrow.join(F.broadcast(r_wide), overlap, "inner"))
+    matched = lb.join(rb, F.expr(cond), "inner").drop("__lbin", "__rbin")
+    matched = matched.unionByName(F.broadcast(l_wide).join(rdf, F.expr(overlap), "inner"))
+    matched = matched.unionByName(l_narrow.join(F.broadcast(r_wide), F.expr(overlap), "inner"))
 
     def restore(df: DataFrame, with_right: bool = True, with_left: bool = True) -> DataFrame:
         out = []
         if with_left:
             for c in lcols:
                 name = c + suffixes[0] if (c in rcols and with_right and suffixes[0]) else c
-                out.append(F.col(lmap[c]).alias(name))
+                out.append(f"{sql_ident(lmap[c])} AS {sql_ident(name)}")
         if with_right:
             for c in rcols:
                 name = c + suffixes[1] if (c in lcols and with_left) else c
-                out.append(F.col(rmap[c]).alias(name))
-        return df.select(out)
+                out.append(f"{sql_ident(rmap[c])} AS {sql_ident(name)}")
+        return df.selectExpr(*out)
 
     if group is None:
         if how == "inner":
@@ -323,14 +328,16 @@ def region_join(
             return restore(rdf.join(hits_l, "__rrid", "left"))
         # full outer: the left half reuses the single-pass shape; only
         # the unmatched-rights channel needs a second (column-pruned)
-        # pass over the matched ids
+        # pass over the matched ids; its missing left columns union in
+        # as typed NULLs
         hits_r = matched.select("__lrid", "__rrid", *[rmap[c] for c in rcols])
         out_l = ldf.join(hits_r, "__lrid", "left")
         anti_r = rdf.join(matched.select("__rrid").distinct(), "__rrid", "left_anti")
-        for c in lcols:
-            anti_r = anti_r.withColumn(lmap[c], F.lit(None).cast(left.schema[c].dataType))
-        allcols = [*lmap.values(), *rmap.values()]
-        return restore(out_l.select(allcols).unionByName(anti_r.select(allcols)))
+        return restore(
+            out_l.select(*lmap.values(), *rmap.values()).unionByName(
+                anti_r.select(*rmap.values()), allowMissingColumns=True
+            )
+        )
 
     # Group variants: aggregate ONLY (row id, hit struct) — the slimmest
     # possible groupBy shuffle — then equi-join the hit lists back to
@@ -347,20 +354,20 @@ def region_join(
             # caller's aggregate expressions bind, aggregate per left
             # row id (map-side partials collapse the matched stream
             # BEFORE the exchange), then attach the left columns by id
-            hits_restored = matched.select(
-                "__lrid", *[F.col(rmap[c]).alias(c) for c in rcols]
+            hits_restored = matched.selectExpr(
+                "__lrid", *[f"{sql_ident(rmap[c])} AS {sql_ident(c)}" for c in rcols]
             )
             agg = hits_restored.groupBy("__lrid").agg(
                 *[col.alias(name) for name, col in group_aggs.items()]
             )
             out = ldf.join(agg, "__lrid", "inner")
-            return out.select(
-                *[F.col(lmap[c]).alias(c) for c in lcols],
-                *[F.col(name) for name in group_aggs],
+            return out.selectExpr(
+                *[f"{sql_ident(lmap[c])} AS {sql_ident(c)}" for c in lcols],
+                *[sql_ident(name) for name in group_aggs],
             )
-        hit = F.struct(*[F.col(rmap[c]).alias(c) for c in rcols])
+        hit = _struct(rcols, rmap)
         agg = matched.groupBy("__lrid").agg(
-            _collect_hits(hit, right.schema, rcols).alias(group_col)
+            F.expr(f"{_collect_hits(hit, right.schema, rcols)} AS {sql_ident(group_col)}")
         )
         if how in {"left_outer", "full_outer"}:
             # all lefts, empty hit list when unmatched
@@ -378,20 +385,18 @@ def region_join(
             # ShuffleRegionJoin.scala:297-335)
             anti_r = rdf.join(
                 matched.select("__rrid").distinct(), "__rrid", "left_anti"
-            ).drop("__rrid")
-            anti_r = anti_r.withColumn(group_col, F.array(hit))
-            for c in lcols:
-                anti_r = anti_r.withColumn(lmap[c], F.lit(None).cast(left.schema[c].dataType))
-            cols_out = [*[lmap[c] for c in lcols], group_col]
-            out = out.select(cols_out).unionByName(anti_r.select(cols_out))
-        return out.select(
-            *[F.col(lmap[c]).alias(c) for c in lcols], F.col(group_col)
+            ).selectExpr(f"array({hit}) AS {sql_ident(group_col)}")
+            out = out.select(*lmap.values(), group_col).unionByName(
+                anti_r, allowMissingColumns=True
+            )
+        return out.selectExpr(
+            *[f"{sql_ident(lmap[c])} AS {sql_ident(c)}" for c in lcols], sql_ident(group_col)
         )
 
     # group == "right": (Iterable[T], U) keyed by right rows
-    hit = F.struct(*[F.col(lmap[c]).alias(c) for c in lcols])
+    hit = _struct(lcols, lmap)
     agg = matched.groupBy("__rrid").agg(
-        _collect_hits(hit, left.schema, lcols).alias(group_col)
+        F.expr(f"{_collect_hits(hit, left.schema, lcols)} AS {sql_ident(group_col)}")
     )
     if how in {"right_outer", "full_outer"}:
         # all rights, empty iterable when unmatched
@@ -402,7 +407,9 @@ def region_join(
         )
     else:
         out = rdf.join(agg, "__rrid", "inner")
-    return out.select(F.col(group_col), *[F.col(rmap[c]).alias(c) for c in rcols])
+    return out.selectExpr(
+        sql_ident(group_col), *[f"{sql_ident(rmap[c])} AS {sql_ident(c)}" for c in rcols]
+    )
 
 
 def naive_region_join(

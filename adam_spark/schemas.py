@@ -42,6 +42,12 @@ def sql_literal(value: str | None) -> str:
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def sql_double(value: float) -> str:
+    """``value`` as a Spark SQL DOUBLE literal (a bare ``0.9`` parses as
+    DECIMAL, which changes the type of the expression around it)."""
+    return f"{float(value)!r}D"
+
+
 def sql_ident(name: str) -> str:
     """``name`` as a back-quoted Spark SQL identifier."""
     return "`" + name.replace("`", "``") + "`"

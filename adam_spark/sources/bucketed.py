@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from adam_spark.operators.region_join import _bins
+from adam_spark.schemas import sql_ident
 
 SIDECAR = "_binned_bucketed.json"
 
@@ -73,7 +74,7 @@ def save_binned_bucketed(
     narrow = df.where(~is_wide)
     wide = df.where(is_wide)
     binned = narrow.withColumn(
-        "__bin", F.explode(_bins(F.col(start), F.col(end), bin_size))
+        "__bin", F.expr(f"explode({_bins(sql_ident(start), sql_ident(end), bin_size)})")
     )
     (
         binned.repartition(buckets, F.col(ref), F.col("__bin"))

@@ -397,7 +397,7 @@ def streaming_minhash_candidates(
     id_ddl = id_type.simpleString()
     ttl = int(state_ttl_seconds)
 
-    shingles = word_ngrams(F.col(text_col), shingle_n)
+    shingles = word_ngrams(text_col, shingle_n)
     h0s = F.transform(
         shingles, lambda t: F.conv(F.substring(F.md5(t), 1, 7), 16, 10).cast("long")
     )
@@ -619,7 +619,7 @@ def verified_near_dup_decisions(
     )
     sh = corpus.select(
         F.col(id_col).alias("__vid"),
-        F.array_distinct(word_ngrams(F.col(text_col), shingle_n)).alias("__sh"),
+        F.array_distinct(word_ngrams(text_col, shingle_n)).alias("__sh"),
     )
     verified = (
         F.broadcast(pairs)

@@ -57,3 +57,32 @@ def py4j_calls(monkeypatch):
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting_send)
     return counter
+
+
+class _JobCounter:
+    """``.n`` is the number of Spark jobs launched from the test's thread
+    since the fixture started: the jobs of a job group of its own, read
+    from the status store after the listener bus has drained."""
+
+    def __init__(self, spark, group: str):
+        self._sc = spark.sparkContext
+        self._group = group
+
+    @property
+    def n(self) -> int:
+        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(self._sc.statusTracker().getJobIdsForGroup(self._group))
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """Counts Spark jobs: ``.n`` grows by one for every job the test
+    launches (eager probes and schema inference included)."""
+    import uuid
+
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.jobGroup.id")
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    yield _JobCounter(spark, group)
+    sc.setLocalProperty("spark.jobGroup.id", prior)

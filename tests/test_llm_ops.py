@@ -30,6 +30,33 @@ def embs(spark):
     return load_table(spark, SF, "embeddings").cache()
 
 
+def test_word_ngrams_and_has_min_tokens_match_python(spark, docs):
+    """The shingles and emptiness guard minhash builds equal a Python
+    tokenize+shingle on edge-case texts and on the corpus, for the
+    distinct-token (n == 1) and n-gram forms: NULL text → empty set,
+    guard NULL (falsy)."""
+    from adam_spark.llm.dedup import has_min_tokens, word_ngrams
+
+    edge = spark.createDataFrame(
+        [(None,), ("",), (" ",), ("a",), ("  a  b ",), ("a b a b c",), ("x  y z w",)],
+        "text string",
+    )
+    for df in (edge, docs.select("text")):
+        for n in (1, 2, 3):
+            rows = df.select(
+                "text",
+                word_ngrams("text", n).alias("sh"),
+                has_min_tokens("text", n).alias("ok"),
+            ).collect()
+            for r in rows:
+                toks = [] if r["text"] is None else [t for t in r["text"].split(" ") if t]
+                want = list(dict.fromkeys(
+                    " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+                ))
+                assert r["sh"] == want, (n, r["text"])
+                assert r["ok"] == (None if r["text"] is None else len(toks) >= n), (n, r["text"])
+
+
 def test_minhash_lsh_equals_bruteforce(docs):
     lsh = minhash_lsh_pairs(docs, "doc_id", threshold=0.8)
     brute = ngram_jaccard_pairs(docs, "doc_id", threshold=0.8)
@@ -1001,10 +1028,10 @@ def test_bloom_filter_membership(spark, docs):
         for r in ngram_contamination(corpus, bench, "doc_id", n=4).collect()
     }
     grams = corpus.select(
-        "doc_id", F.explode(word_ngrams(F.col("text"), 4)).alias("gram")
+        "doc_id", F.explode(word_ngrams("text", 4)).alias("gram")
     )
     bgrams = (
-        bench.select(F.explode(word_ngrams(F.col("text"), 4)).alias("gram")).distinct()
+        bench.select(F.explode(word_ngrams("text", 4)).alias("gram")).distinct()
     )
     bl = bloom_build(bgrams, "gram", num_bits=8192, num_hashes=5)
     probed = bloom_contains(bl, grams, "gram", 8192, 5)
@@ -1716,7 +1743,7 @@ def test_bloom_contains_ngrams_per_row_probe(spark, docs):
     bench = docs.where(F.col("doc_id") % 50 == 0)
     corpus = docs.where(F.col("doc_id") % 50 != 0)
     bgrams = (
-        bench.select(F.explode(word_ngrams(F.col("text"), 4)).alias("gram"))
+        bench.select(F.explode(word_ngrams("text", 4)).alias("gram"))
         .distinct()
     )
     bloom = bloom_build(bgrams, "gram", num_bits=8192, num_hashes=5)
@@ -1729,7 +1756,7 @@ def test_bloom_contains_ngrams_per_row_probe(spark, docs):
         assert node not in plan, node
 
     grams = corpus.select(
-        "doc_id", F.explode(word_ngrams(F.col("text"), 4)).alias("gram")
+        "doc_id", F.explode(word_ngrams("text", 4)).alias("gram")
     )
     composed = (
         bloom_contains(bloom, grams, "gram", 8192, 5)

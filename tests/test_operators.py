@@ -49,6 +49,100 @@ def test_flagstat_counts(fixtures):
         )
 
 
+def _flagstat_reference(rows):
+    """All 22 counters in plain Python, with SQL's three-valued logic: a
+    conjunction counts only when every term is TRUE (NULL never counts),
+    and the contig comparison is null-safe (NULL vs NULL is "same")."""
+
+    def t(*xs):
+        return all(x is True for x in xs)
+
+    out = {}
+    for qc in (False, True):
+        sub = [r for r in rows if (r["failedVendorQualityChecks"] is True) == qc]
+        c = Counter()
+        for r in sub:
+            dup = t(r["duplicateRead"])
+            prim = dup and t(r["primaryAlignment"])
+            sec = dup and r["primaryAlignment"] is False
+            cross = r["referenceName"] != r["mateReferenceName"]
+            mapped, mate = t(r["readMapped"]), t(r["mateMapped"])
+            diff = mapped and mate and cross
+            q5 = r["mappingQuality"] is not None and r["mappingQuality"] >= 5
+            for name, hit in (
+                ("total", True),
+                ("duplicates", dup),
+                ("duplicatesPrimary", prim),
+                ("duplicatesPrimaryBothMapped", prim and mapped and mate),
+                ("duplicatesPrimaryOnlyReadMapped", prim and mapped and not mate),
+                ("duplicatesPrimaryCrossChromosome", prim and cross),
+                ("duplicatesSecondary", sec),
+                ("duplicatesSecondaryBothMapped", sec and mapped and mate),
+                ("duplicatesSecondaryOnlyReadMapped", sec and mapped and not mate),
+                ("duplicatesSecondaryCrossChromosome", sec and cross),
+                ("mapped", mapped),
+                ("paired", t(r["readPaired"])),
+                ("read1", t(r["readPaired"]) and r["readInFragment"] == 0),
+                ("read2", t(r["readPaired"]) and r["readInFragment"] == 1),
+                ("properlyPaired", t(r["properPair"])),
+                ("withSelfAndMateMapped", mapped and mate),
+                ("singleton", mapped and not mate and t(r["readPaired"])),
+                ("withMateMappedToDiffChromosome", diff),
+                ("withMateMappedToDiffChromosomeMapQ5", diff and q5),
+                ("primaryMapped", t(r["primaryAlignment"]) and mapped),
+                ("secondaryAlignments", t(r["secondaryAlignment"])),
+                ("supplementaryAlignments", t(r["supplementaryAlignment"])),
+            ):
+                c[name] += bool(hit)
+        out[qc] = c
+    return out
+
+
+def test_flagstat_null_semantics(spark):
+    """NULL flags and contigs: every counter matches the three-valued
+    reference (a NULL flag never counts as set, a NULL QC flag lands in
+    the pass bucket, NULL vs NULL contigs are not a cross-chromosome
+    pair)."""
+    import itertools
+    import random
+
+    flags = (
+        "readMapped", "readPaired", "properPair", "mateMapped",
+        "failedVendorQualityChecks", "duplicateRead", "primaryAlignment",
+        "secondaryAlignment", "supplementaryAlignment",
+    )
+    schema = (
+        ", ".join(f"{f} boolean" for f in flags)
+        + ", readInFragment int, mappingQuality int,"
+        " referenceName string, mateReferenceName string"
+    )
+    rng = random.Random(7)
+    tri = (True, False, None)
+    rows = []
+    # every NULL/TRUE/FALSE combination of the flags the counters nest,
+    # then random rows for everything else
+    for dup, prim, mate, qc in itertools.product(tri, repeat=4):
+        for _ in range(3):
+            r = {f: rng.choice(tri) for f in flags}
+            r.update(duplicateRead=dup, primaryAlignment=prim, mateMapped=mate,
+                     failedVendorQualityChecks=qc)
+            r["readInFragment"] = rng.choice((0, 1, None))
+            r["mappingQuality"] = rng.choice((0, 4, 5, 60, None))
+            r["referenceName"] = rng.choice(("c1", "c2", None))
+            r["mateReferenceName"] = rng.choice(("c1", "c2", None))
+            rows.append(r)
+    cols = [*flags, "readInFragment", "mappingQuality", "referenceName", "mateReferenceName"]
+    df = spark.createDataFrame([tuple(r[c] for c in cols) for r in rows], schema)
+    got = {r["qcFailed"]: r.asDict() for r in flagstat(df).collect()}
+    want = _flagstat_reference(rows)
+    assert set(got) == {False, True}
+    for qc in (False, True):
+        assert len(got[qc]) == 23  # qcFailed + 22 counters
+        for name, n in got[qc].items():
+            if name != "qcFailed":
+                assert n == want[qc][name], (qc, name, n, want[qc][name])
+
+
 def test_count_kmers_vs_oracle(fixtures, spark):
     aln = fixtures.alignments().df.limit(50)
     k = 4

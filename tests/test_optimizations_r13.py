@@ -36,6 +36,102 @@ class TestLoadTableSpread:
         # plain path keeps its plan: no exchange added
         assert "Exchange" not in plain._jdf.queryExecution().executedPlan().toString()
 
+    def test_rewritten_file_is_reinferred(self, spark, tmp_path):
+        """A table rewritten at the same path is loaded with its new
+        schema, rows and row-group layout: the memoized schema and
+        footer counts are keyed on the file's mtime and size, not on
+        its path alone."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from adam_spark.sources.tables import load_table
+
+        path = str(tmp_path / "t.parquet")
+        n = 60_000
+        pq.write_table(
+            pa.table({"a": list(range(n)), "b": [str(i % 7) for i in range(n)]}), path
+        )
+        old = load_table(spark, str(tmp_path), "t", spread=True)
+        assert old.columns == ["a", "b"]
+        assert old.count() == n
+        # one row group of 60k rows: starved, so spread adds an exchange
+        assert "Exchange" in old._jdf.queryExecution().executedPlan().toString()
+
+        pq.write_table(
+            pa.table({"a": list(range(n)), "c": [i * 0.5 for i in range(n)],
+                      "d": [i % 3 for i in range(n)]}),
+            path,
+            row_group_size=n // 4,
+        )
+        new = load_table(spark, str(tmp_path), "t", spread=True)
+        assert new.columns == ["a", "c", "d"]
+        assert new.schema["c"].dataType.simpleString() == "double"
+        assert new.where("a = 10").collect()[0].asDict() == {"a": 10, "c": 5.0, "d": 1}
+        assert new.count() == n
+        # four row groups feed the scan: no exchange
+        assert "Exchange" not in new._jdf.queryExecution().executedPlan().toString()
+
+    def test_footer_read_only_by_spread_loads(self, spark, tmp_path, monkeypatch):
+        """Only the ``spread`` gate reads the footer's row-group and row
+        counts: a plain load never opens the footer, the first spread
+        load does once, and later spread loads reuse the memoized
+        counts. A spread key whose name holds a backtick is quoted."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from adam_spark.sources import tables
+
+        path = str(tmp_path / "t.parquet")
+        pq.write_table(pa.table({"id`x": list(range(100)), "v": [1] * 100}), path)
+        reads = []
+        real = tables._footer_counts
+        monkeypatch.setattr(
+            tables, "_footer_counts", lambda p: reads.append(p) or real(p)
+        )
+        plain = tables.load_table(spark, str(tmp_path), "t")
+        assert plain.count() == 100 and reads == []
+        for _ in range(2):
+            spread = tables.load_table(
+                spark, str(tmp_path), "t", spread=True, spread_min_rows=1,
+                spread_key=("id`x",),
+            )
+            assert spread.count() == 100
+        assert reads == [path]
+        plan = spread._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" in plan
+
+    def test_memoized_schema_reads_nanos_in_vanilla_session(self, spark, spark_jobs, tmp_path):
+        """With ``nanosAsLong`` unset (a session built without adam_spark's
+        defaults), the first load of a TIMESTAMP(NANOS) table infers its
+        schema and the second reads with the memoized schema supplied:
+        no job, the same rows, a ``timestamp`` column, and the conf left
+        unset."""
+        import shutil
+
+        from adam_spark.sources.tables import load_table
+
+        conf = "spark.sql.legacy.parquet.nanosAsLong"
+        prior = spark.conf.get(conf, None)
+        spark.conf.unset(conf)
+        try:
+            for name, ts in (("events", "ts"), ("orders", "o_orderdate")):
+                shutil.copy(f"{SF01}/{name}.parquet", tmp_path)
+                jobs = spark_jobs.n
+                first = load_table(spark, str(tmp_path), name)
+                inferred = spark_jobs.n - jobs
+                assert inferred >= 1
+                second = load_table(spark, str(tmp_path), name)
+                assert spark_jobs.n - jobs == inferred, "second load was not memoized"
+                assert second.schema[ts].dataType.simpleString() == "timestamp"
+                assert second.schema == first.schema
+                assert sorted(map(tuple, second.collect())) == sorted(
+                    map(tuple, first.collect())
+                )
+                assert spark.conf.get(conf, None) is None
+        finally:
+            if prior is not None:
+                spark.conf.set(conf, prior)
+
     def test_spread_noop_on_small_tables(self, spark):
         """Tables under the row threshold skip the exchange entirely."""
         from adam_spark.sources.tables import load_table
@@ -371,7 +467,7 @@ class TestBloomProbeWorkerHash:
         num_bits, k, seed = 8192, 5, "bloom"
         df = spark.read.parquet(os.path.join(SF001, "documents.parquet"))
         grams = df.select(
-            F.explode(word_ngrams(F.col("text"), 4)).alias("g")
+            F.explode(word_ngrams("text", 4)).alias("g")
         ).limit(2000)
         rows = grams.select(
             "g",
@@ -417,7 +513,7 @@ class TestBloomProbeWorkerHash:
             "text string",
         )
         rows = df.union(extra).select(
-            "text", word_ngrams(F.col("text"), n).alias("grams")
+            "text", word_ngrams("text", n).alias("grams")
         ).collect()
         assert rows
         for r in rows:

@@ -12,8 +12,10 @@ would survive 100 TB — these assertions do. Rules:
 - parquet scans of the big fact tables carry pushed filters or a
   pruned column list (never SELECT * of lineitem into a filter that
   should have reached the scan);
-- building the SAM decode → duplicate marking → coordinate sort plan
-  stays within a gateway-call budget (its expressions are SQL text).
+- building the SAM decode → duplicate marking → coordinate sort plan,
+  and the benchmark's four catalog queries, stays within a gateway-call
+  budget (their expressions are SQL text), and a repeated table load
+  launches no schema-inference job.
 """
 
 from __future__ import annotations
@@ -141,3 +143,43 @@ def test_transform_build_gateway_budget(spark, py4j_calls, tmp_path):
     sort_by_reference_position(mark_duplicates(gf.df, libs))
     used = py4j_calls.n - before
     assert used < TRANSFORM_BUILD_BUDGET, used
+
+
+#: the benchmark's catalog workload (perfbench/run.py CATALOG)
+CATALOG = (
+    "interval_join_inner",
+    "flagstat_events",
+    "dedup_minhash_docs",
+    "embedding_near_dup",
+)
+#: gateway commands allowed for building the four catalog queries over
+#: already-loaded tables; about 5,300 when flagstat, the region join,
+#: minhash and their inputs were Column operator trees
+CATALOG_BUILD_BUDGET = 2000
+
+
+def test_catalog_build_gateway_budget(spark, py4j_calls, spark_jobs, tmp_path):
+    from perfbench.gen import write_tables
+
+    from adam_spark.sources.tables import load_table
+
+    sf = str(tmp_path)
+    write_tables(sf, seed=5, sf=0.001)
+    queries = entrymod.queries()
+    for name in CATALOG:  # first build: infers and memoizes the schemas
+        queries[name](spark, sf)
+    spark.catalog.clearCache()
+    before = py4j_calls.n
+    for name in CATALOG:
+        queries[name](spark, sf)
+    used = py4j_calls.n - before
+    spark.catalog.clearCache()
+    assert used < CATALOG_BUILD_BUDGET, used
+    jobs = spark_jobs.n
+    load_table(spark, sf, "customer")  # not loaded yet: infers its schema
+    inferred = spark_jobs.n - jobs
+    assert inferred >= 1, "the job counter missed the schema-inference job"
+    load_table(spark, sf, "customer")
+    load_table(spark, sf, "lineitem", spread=True)
+    load_table(spark, sf, "events")
+    assert spark_jobs.n - jobs == inferred, "a repeated load_table ran a Spark job"

@@ -365,7 +365,7 @@ def test_streaming_decontaminate(spark, tmp_path):
         [(r["doc_id"], r["text"]) for r in eval_rows], ["doc_id", "text"]
     )
     bloom = bloom_build(
-        bench.select(F.explode(word_ngrams(F.col("text"), 4)).alias("gram")).distinct(),
+        bench.select(F.explode(word_ngrams("text", 4)).alias("gram")).distinct(),
         "gram", num_bits=8192, num_hashes=5,
     )
 
@@ -486,7 +486,7 @@ def test_streaming_minhash_matches_batch_buckets(spark):
         [(1, _mh_doc(60), "2026-01-01T00:00:00")], "doc_id long, text string, ts string"
     )
     batch = lsh_bands(
-        minhash_signatures(df, "doc_id", word_ngrams(F.col("text"), 3), num_hashes=32),
+        minhash_signatures(df, "doc_id", word_ngrams("text", 3), num_hashes=32),
         bands=8,
     ).select("band", "band_hash")
     batch_set = {(r["band"], r["band_hash"]) for r in batch.collect()}

@@ -419,7 +419,7 @@ def _ops(spark: SparkSession, scale: str):
 
         bench = (
             docs.where(F.col("doc_id") % 50 == 0)
-            .select(F.explode(word_ngrams(F.col("text"), 4)).alias("gram"))
+            .select(F.explode(word_ngrams("text", 4)).alias("gram"))
             .distinct()
         )
         bloom = bloom_build(bench, "gram", num_bits=1 << 20, num_hashes=5)

@@ -98,7 +98,7 @@ def _save_any(gf, output: str, single_file: bool,
         base, ext = _os.path.splitext(output)
         shard_dir = base + ".shards" + ext
         ctx.save(gf, shard_dir, single_file=False, **save_kwargs)
-        merge_shards(shard_dir, output, parallel=False)
+        merge_shards(shard_dir, output)
         _shutil.rmtree(shard_dir)
     else:
         ctx.save(gf, output, single_file=single_file, **save_kwargs)

@@ -78,12 +78,6 @@ def contains(a: RegionCols, b: RegionCols) -> Column:
     return _same_contig(a, b) & (a.start <= b.start) & (a.end >= b.end)
 
 
-def contains_point(a: RegionCols, ref: Column, pos: Column) -> Column:
-    return (
-        a.referenceName.eqNullSafe(ref) & (a.start <= pos) & (a.end > pos)
-    )
-
-
 def intersection(a: RegionCols, b: RegionCols) -> tuple[Column, Column]:
     """(start, end) of the overlap — caller guards with overlaps()
     (:469-497)."""

@@ -117,16 +117,12 @@ def exact_duplicates(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
-    bounded_cache: bool = False,
 ) -> DataFrame:
     """Exact-content dedup on a canonical fingerprint.
 
     Fingerprint = md5 of the lower-cased raw text. Output: one row per
     input with (id, fingerprint, canonical_id, is_duplicate) where
     canonical_id is the group's min id — the classic keep-first policy.
-    ``bounded_cache=True`` eagerly materializes the result and releases
-    the internal fingerprint persist
-    (:func:`adam_spark.llm.cache.eager_release`).
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -156,10 +152,6 @@ def exact_duplicates(
         .withColumn("is_duplicate", F.col("id") != F.col("canonical_id"))
         .select("id", "fingerprint", "canonical_id", "is_duplicate")
     )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, keyed)
     return out
 
 
@@ -397,16 +389,12 @@ def minhash_lsh_pairs(
     num_hashes: int = 128,
     bands: int = 64,
     threshold: float = 0.8,
-    bounded_cache: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH, verified with exact Jaccard.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
     With bands=64 × rows=2, P(miss | J≥0.8) ≈ (1−0.8²)^64 ≈ 4e−29 —
     recall is effectively exact at the default threshold.
-    ``bounded_cache=True`` eagerly materializes the pair table and
-    releases the internal band-table persist
-    (:func:`adam_spark.llm.cache.eager_release`).
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -531,10 +519,6 @@ def minhash_lsh_pairs(
             .where(f"jaccard >= {sql_double(threshold)}")
             .selectExpr("id_a", "id_b", "round(jaccard, 6) AS jaccard")
         )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, banded)
     return out
 
 
@@ -637,11 +621,8 @@ def simhash_duplicates(
     id_col: str,
     text_col: str = "text",
     bits: int = 16,
-    bounded_cache: bool = False,
 ) -> DataFrame:
-    """Documents sharing a simhash fingerprint (candidate near-dups).
-    ``bounded_cache=True`` eagerly materializes the result and releases
-    the internal fingerprint persist."""
+    """Documents sharing a simhash fingerprint (candidate near-dups)."""
     from pyspark.storagelevel import StorageLevel
 
     # same skew-safe shape as exact_duplicates: partial-aggregated
@@ -656,10 +637,6 @@ def simhash_duplicates(
         .withColumn("is_duplicate", F.col("id") != F.col("canonical_id"))
         .select("id", "simhash", "canonical_id", "is_duplicate")
     )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, fps)
     return out
 
 
@@ -766,7 +743,6 @@ def remove_repeated_spans(
     delimiter: str = "\n",
     min_docs: int | None = None,
     min_frac: float | None = None,
-    bounded_cache: bool = False,
 ) -> DataFrame:
     """C4-style cross-corpus boilerplate removal.
 
@@ -853,10 +829,6 @@ def remove_repeated_spans(
             F.coalesce("n_removed", F.lit(0)).cast("long").alias("n_removed"),
         )
     )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, hot)
     return out
 
 
@@ -869,7 +841,6 @@ def minhash_lsh_pairs_between(
     num_hashes: int = 128,
     bands: int = 64,
     threshold: float = 0.8,
-    bounded_cache: bool = False,
 ) -> DataFrame:
     """Cross-corpus near-dup pairs: an incoming batch vs a reference
     corpus (incremental dedup — "is this new document already in the
@@ -953,10 +924,6 @@ def minhash_lsh_pairs_between(
             .where(f"jaccard >= {sql_double(threshold)}")
             .selectExpr("id_new", "id_ref", "round(jaccard, 6) AS jaccard")
         )
-        if bounded_cache:
-            from adam_spark.llm.cache import eager_release
-
-            return eager_release(out, banded_n, banded_r)
         return out
     # shuffle/fallback path: the band join reads the SAME persisted
     # banded tables (the signature UDF never runs twice per side)
@@ -978,10 +945,6 @@ def minhash_lsh_pairs_between(
         .where(f"jaccard >= {sql_double(threshold)}")
         .selectExpr("id_new", "id_ref", "round(jaccard, 6) AS jaccard")
     )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, cand, banded_n, banded_r)
     return out
 
 
@@ -992,7 +955,6 @@ def remove_duplicate_substrings(
     k: int = 30,
     stride: int = 1,
     min_docs: int = 2,
-    bounded_cache: bool = False,
 ) -> DataFrame:
     """Exact duplicate-substring removal (the character-level
     complement of :func:`remove_repeated_spans`, after Lee et al. 2022,
@@ -1089,8 +1051,4 @@ def remove_duplicate_substrings(
         clean.alias("text_clean"),
         (F.length("text") - F.length(clean)).cast("long").alias("removed_chars"),
     )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, hot)
     return out

@@ -466,7 +466,6 @@ def semantic_dedup(
     centroids: DataFrame | None = None,
     max_cluster_size: int = 4096,
     split_mode: str = "salt",
-    bounded_cache: bool = False,
     centroid_sample_fraction: float | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023):
@@ -531,9 +530,7 @@ def semantic_dedup(
     vectors matches full-corpus training quality), or pass a
     ``centroids`` frame trained offline. Either way the downstream
     assignment/join plan is unchanged — centroids are only ever a
-    k-row broadcast. ``bounded_cache=True`` eagerly materializes the
-    slim (id, cent_id, flag) result and releases the internal
-    assignment persist (:func:`adam_spark.llm.cache.eager_release`).
+    k-row broadcast.
     """
     import math
 
@@ -718,10 +715,6 @@ def semantic_dedup(
             F.coalesce("__dup", F.lit(False)).alias("is_duplicate"),
         )
     )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, assigned)
     return out
 
 
@@ -991,12 +984,8 @@ def embedding_near_duplicates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    bounded_cache: bool = False,
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold via sign-bit LSH + exact verify.
-    ``bounded_cache=True`` eagerly materializes the pair table and
-    releases the internal band-hash persist
-    (:func:`adam_spark.llm.cache.eager_release`).
 
     Generate→verify, the same shape as :func:`minhash_lsh_pairs`:
     candidates come from an equi-join on (band, band_hash) — a shuffle
@@ -1029,8 +1018,6 @@ def embedding_near_duplicates(
       the slim band join and the id re-joins; nothing broadcasts, so
       the path survives a 100 TB corpus.
 
-    The brute-force path remains as
-    :func:`embedding_near_duplicates_bruteforce` for small-N validation.
     """
     rows_per_band, bands = srp_params(threshold)
     from pyspark.storagelevel import StorageLevel
@@ -1056,10 +1043,6 @@ def embedding_near_duplicates(
             out = _near_dup_gemm_fused(
                 corpus, threshold, id_col, vec_col, dim, rows_per_band, bands
             )
-            if bounded_cache:
-                from adam_spark.llm.cache import eager_release
-
-                return eager_release(out)
             return out
     # persisted in ARRAY form: feeds both self-join sides (Spark does
     # not reuse the exchange across differently-aliased sides, so the
@@ -1087,10 +1070,6 @@ def embedding_near_duplicates(
         .select("id_a", "id_b", "band")
     )
     def _finish(out: DataFrame) -> DataFrame:
-        if bounded_cache:
-            from adam_spark.llm.cache import eager_release
-
-            return eager_release(out, hashed_arr)
         return out
 
     if n_vec * true_dim * 8 <= GEMM_VERIFY_CAP_BYTES:
@@ -1130,31 +1109,6 @@ def embedding_near_duplicates(
             "id_b",
             (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("sim"),
         )
-        .where(F.col("sim") >= F.lit(threshold))
-        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
-    )
-
-
-def embedding_near_duplicates_bruteforce(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact all-pairs near-dup (the small-N validation oracle).
-
-    O(N²) broadcast cross join — correct at any threshold but never the
-    scale path; :func:`embedding_near_duplicates` is.
-    """
-    shuffle_parts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    a = corpus.repartition(shuffle_parts).select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
-    )
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.crossJoin(F.broadcast(b))
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("sim"))
         .where(F.col("sim") >= F.lit(threshold))
         .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
     )

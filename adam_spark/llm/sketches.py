@@ -161,7 +161,6 @@ def cms_heavy_hitters(
     width: int = 1024,
     depth: int = 4,
     seed: str = "cms",
-    bounded_cache: bool = False,
 ) -> DataFrame:
     """Items whose TRUE frequency is ≥ ``min_count``, with their
     Count-Min estimates: (col, est, n) — deterministic and exact.
@@ -183,9 +182,6 @@ def cms_heavy_hitters(
     min_count, and stage 3 applies the definition itself, so the
     output is exactly the true heavy-hitter set — which is what makes
     it oracle-checkable without replicating Spark's partitioning.
-    ``bounded_cache=True`` eagerly materializes the (tiny) result and
-    releases the shortlist persist
-    (:func:`adam_spark.llm.cache.eager_release`).
     """
     base = df.select(F.col(col).alias(col)).where(F.col(col).isNotNull())
     sk = count_min_sketch(df, col, width, depth, seed)
@@ -209,10 +205,6 @@ def cms_heavy_hitters(
         .where(F.col("n") >= F.lit(int(min_count)))
         .select(col, "est", "n")
     )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, short)
     return out
 
 

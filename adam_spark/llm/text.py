@@ -359,7 +359,6 @@ def tfidf_top_terms(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    bounded_cache: bool = False,
 ) -> DataFrame:
     """Top-``k`` terms per document by smoothed TF-IDF.
 
@@ -375,9 +374,7 @@ def tfidf_top_terms(
     (term, df) aggregate joined back (broadcast-eligible: distinct
     terms ≪ corpus tokens), and a per-document top-k window keyed by
     the document id — every shuffle key is high-cardinality, nothing
-    global. ``bounded_cache=True`` eagerly materializes the result and
-    releases the (id, term, tf) persist
-    (:func:`adam_spark.llm.cache.eager_release`).
+    global.
     """
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
@@ -414,10 +411,6 @@ def tfidf_top_terms(
         .where(F.col("rank") <= F.lit(k))
         .select("id", "rank", "term", "tf", "df", "tfidf_micro")
     )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, pairs)
     return out
 
 
@@ -472,7 +465,6 @@ def unigram_lm_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 0.5,
-    bounded_cache: bool = False,
 ) -> DataFrame:
     """CCNet-style language-model quality score per document.
 
@@ -496,10 +488,9 @@ def unigram_lm_scores(
     inline note), so no per-call constant subtree or cross-join
     broadcast remains in the plan.
 
-    The vocabulary persist lives until session cache GC (the repo-wide
-    convention for slim tables); ``bounded_cache=True`` instead
-    materializes the result eagerly and releases it
-    (:func:`adam_spark.llm.cache.eager_release`).
+    The vocabulary persist stays in the session cache, so a repeated
+    call on the same corpus reuses it; ``spark.catalog.clearCache()``
+    releases it.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -555,10 +546,6 @@ def unigram_lm_scores(
             F.round(F.exp("nll"), 6).alias("ppl"),
         )
     )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, vocab)
     return out
 
 
@@ -617,7 +604,6 @@ def bigram_lm_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 0.5,
-    bounded_cache: bool = False,
 ) -> DataFrame:
     """Bigram language-model quality score with unigram backoff.
 
@@ -637,8 +623,6 @@ def bigram_lm_scores(
     model constants are embedded as exact literals from one driver
     aggregate (see unigram_lm_scores), and the final per-document
     aggregate is one slim (id, sum) groupBy.
-    ``bounded_cache=True`` eagerly materializes the result and releases
-    the vocabulary persist (see :func:`adam_spark.llm.cache.eager_release`).
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -720,10 +704,6 @@ def bigram_lm_scores(
             F.round(F.exp(nll), 6).alias("ppl"),
         )
     )
-    if bounded_cache:
-        from adam_spark.llm.cache import eager_release
-
-        return eager_release(out, uni)
     return out
 
 

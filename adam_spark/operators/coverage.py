@@ -8,18 +8,15 @@ aggregatedCoverage(bpPerBin) (:420-446) downsample.
 
 Scale design. The reference (and a naive Spark translation) explodes
 every read into per-base rows — at 100 TB a 100× row multiplier into
-the shuffle. We instead offer two strategies:
-
-- ``method="events"`` (default): each read contributes TWO rows
-  (+count at start, −count at end); depth is a running prefix sum over
-  the event positions. The shuffle carries 2 rows/read instead of
-  ~100, and the output is already run-length-collapsed intervals.
-  The window's partition key is (referenceName, sampleId) — with ~25
-  contigs per genome that is coarse, so the prefix sum is computed
-  per-bin with a per-bin offset (two narrow aggregations) rather than
-  one giant window partition; no single-task bottleneck at scale.
-- ``method="explode"``: the literal per-base semantics
-  (posexplode(sequence)), kept as the cross-check oracle.
+the shuffle. We instead emit events: each read contributes TWO rows
+(+count at start, −count at end); depth is a running prefix sum over
+the event positions. The shuffle carries 2 rows/read instead of ~100,
+and the output is already run-length-collapsed intervals. The
+window's partition key is (referenceName, sampleId) — with ~25 contigs
+per genome that is coarse, so the prefix sum is computed per-bin with
+a per-bin offset (two narrow aggregations) rather than one giant
+window partition; no single-task bottleneck at scale. The literal
+per-base explode lives in the tests as the cross-check oracle.
 """
 
 from __future__ import annotations
@@ -27,14 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_BIN = 1_000_000  # positions per prefix-sum bin for the events method
+_BIN = 1_000_000  # positions per prefix-sum bin
 
 
 def to_coverage(
     alignments: DataFrame,
     collapse: bool = False,
     by_sample: bool = False,
-    method: str = "events",
 ) -> DataFrame:
     """Per-base read depth over mapped reads → Coverage rows
     (referenceName, start, end, count, optSampleId).
@@ -56,23 +52,7 @@ def to_coverage(
         )
         .where(F.col("start").isNotNull() & (F.col("end") > F.col("start")))
     )
-    if method == "explode":
-        perbase = reads.select(
-            "referenceName",
-            F.explode(F.sequence("start", F.col("end") - 1)).alias("start"),
-            "optSampleId",
-        ).groupBy("referenceName", "start", "optSampleId").agg(
-            F.count(F.lit(1)).cast("double").alias("count")
-        ).select(
-            "referenceName",
-            "start",
-            (F.col("start") + 1).alias("end"),
-            "count",
-            "optSampleId",
-        )
-        return collapse_coverage(perbase) if collapse else perbase
-
-    # events method: ±delta at read boundaries, prefix sum over positions
+    # ±delta at read boundaries, prefix sum over positions
     deltas = (
         reads.select(
             "referenceName",

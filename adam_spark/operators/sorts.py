@@ -234,17 +234,3 @@ class GenomicPositionPartitioner:
         import math as _math
 
         return min(int(_math.floor(frac * self.parts)), self.num_partitions)
-
-
-class ModPartitioner:
-    """ds/ModPartitioner.scala: trivial |key| mod parts partitioner,
-    pinned against its suite's vectors (design-superseded by
-    DataFrame repartition(n, col))."""
-
-    def __init__(self, num_partitions: int):
-        self.num_partitions = int(num_partitions)
-
-    def get_partition(self, key) -> int:
-        if not isinstance(key, int) or isinstance(key, bool):
-            raise ValueError("ModPartitioner only partitions integer keys")
-        return abs(key) % self.num_partitions

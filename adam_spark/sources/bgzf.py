@@ -466,11 +466,11 @@ def save_sharded(
 
     Executors write the shards straight to the store through the
     pickled ``fs`` handle; the driver concatenates them in partition
-    order between the header and the EOF block (util/FileMerger.scala:35,
-    ParallelFileMerger.scala:34) and folds the manifests, shifted by each
-    shard's output offset, into the index. The staging directory
+    order between the header and the EOF block (util/FileMerger.scala:35)
+    and folds the manifests, shifted by each shard's output offset, into
+    the index. The staging directory
     ``path + ".__shards"`` is removed whether or not the save succeeds."""
-    from adam_spark.sources.merge import concat_files_parallel
+    from adam_spark.sources.merge import concat_files
 
     fs, path = get_fs(path, fs)
     shard_dir = path + ".__shards"
@@ -485,7 +485,7 @@ def save_sharded(
             .collect()
         )
         shards.sort(key=lambda s: s[0])
-        bases = concat_files_parallel(
+        bases = concat_files(
             path, [s[1] for s in shards], compress_blocks(header)[0], EOF, fs=fs
         )
     finally:

@@ -1763,12 +1763,12 @@ def save_cram(gf: GenomicFrame, path: str, codec: str = "gzip",
         out += _container_header(len(hdr_block), 0, 0, 0, 0, 0, 0, 1, [])
         out += hdr_block
 
-        # parallel positioned-write concat (ParallelFileMerger shape);
+        # sequential concat (FileMerger shape);
         # EOF container: zero records, one raw sentinel block
-        from adam_spark.sources.merge import concat_files_parallel
+        from adam_spark.sources.merge import concat_files
 
         live = [(sp, entries) for sp, clen, entries, _n in shards if clen]
-        offsets = concat_files_parallel(
+        offsets = concat_files(
             path, [sp for sp, _ in live], bytes(out), cram_eof_bytes(total),
             fs=fs,
         )

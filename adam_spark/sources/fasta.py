@@ -153,7 +153,7 @@ def save_fasta(
         # and the driver prefix-shifts them — the same manifest shape
         # as the binary index writers.
         from adam_spark.sources.filesystem import get_fs
-        from adam_spark.sources.merge import concat_files_parallel
+        from adam_spark.sources.merge import concat_files
 
         # resolved ONCE; the handle rides the task closure so shard
         # bytes stream executor->store directly
@@ -210,7 +210,7 @@ def save_fasta(
         ):
             fs.remove(stale)
         out_part = fs.join(path, "part-00000")
-        offs = concat_files_parallel(
+        offs = concat_files(
             out_part, [m[1] for m in manifests], fs=fs
         )
         fai = fs.open_write(out_part + ".fai")

@@ -7,18 +7,19 @@ from / writing to HDFS or an object store. The reference routes every merge thro
 API (util/FileMerger.scala:35,75 — works on any ``hdfs://``/``s3a://``
 URI); this module is the equivalent seam for the PySpark rebuild:
 
-- :class:`LocalFileSystem` — thin ``os`` wrappers, the default; keeps
-  the measured fast paths (sequential 1.4 GB/s page-cached concat,
-  positioned parallel writes when ``ADAM_SPARK_MERGE_PARALLELISM``
-  opts in).
+- :class:`LocalFileSystem` — thin ``os`` wrappers, the default.
 - :class:`ArrowFileSystem` — adapter over any ``pyarrow.fs``
   filesystem (S3/GCS/HDFS/Azure, or the in-memory mock in tests).
   pyarrow filesystems pickle by CONFIG, so a driver-resolved handle
   ships in a task closure and each executor opens its own connection —
   shard bytes stream executor→store directly, never through the
-  driver. Object stores have no positioned write, so
-  ``supports_positioned_writes`` is False and the concat stays a
-  sequential stream regardless of the parallelism env var.
+  driver.
+
+Both backends need only streaming reads and writes: the single-file
+concat (:func:`adam_spark.sources.merge.concat_files`) is one
+sequential stream. Object stores have no positioned write, and on a
+local disk a sequential append measured faster than parallel
+positioned writes, so no backend offers them.
 
 Coverage: the whole EXPORT family (shard writers, concat, index/
 sidecar writes for SAM/BAM/VCF/BCF/CRAM/FASTA/feature formats) plus
@@ -48,20 +49,11 @@ class LocalFileSystem:
     """Default backend: the raw ``os`` calls the exporters always
     used, behind the shared interface."""
 
-    #: local files support seek+write — the parallel positioned-write
-    #: concat path (ParallelFileMerger shape) is only valid here
-    supports_positioned_writes = True
-
     def open_read(self, path):
         return open(path, "rb")
 
     def open_write(self, path):
         return open(path, "wb")
-
-    def open_positioned(self, path):
-        """Read+write handle for positioned (seek) writes into an
-        existing file."""
-        return open(path, "r+b")
 
     def size(self, path) -> int:
         return os.path.getsize(path)
@@ -96,18 +88,12 @@ class LocalFileSystem:
     def join(self, *parts) -> str:
         return os.path.join(*parts)
 
-    def truncate(self, path, size: int) -> None:
-        with open(path, "wb") as f:
-            f.truncate(size)
-
 
 class ArrowFileSystem:
     """Adapter over a ``pyarrow.fs.FileSystem`` (S3, GCS, HDFS, Azure,
     or the in-memory mock). Picklable iff the wrapped filesystem is —
     every pyarrow-native one pickles by config, which is what lets a
     driver-resolved handle ride a task closure to the executors."""
-
-    supports_positioned_writes = False
 
     def __init__(self, fs):
         self._fs = fs
@@ -119,12 +105,6 @@ class ArrowFileSystem:
 
     def open_write(self, path):
         return self._fs.open_output_stream(path)
-
-    def open_positioned(self, path):
-        raise NotImplementedError(
-            "object-store backends have no positioned write; use the "
-            "sequential concat"
-        )
 
     def size(self, path) -> int:
         return self._fs.get_file_info(path).size
@@ -175,9 +155,6 @@ class ArrowFileSystem:
 
     def join(self, *parts) -> str:
         return posixpath.join(*parts)
-
-    def truncate(self, path, size: int) -> None:
-        raise NotImplementedError("no positioned writes on this backend")
 
 
 _LOCAL = LocalFileSystem()

@@ -161,49 +161,6 @@ def test_load_bcf_splittable_preserves_file_order(spark, tmp_path):
     assert starts == sorted(starts) == [pos - 1 for pos in positions]
 
 
-def test_parallel_concat_matches_sequential_bytes(tmp_path):
-    """concat_files_parallel (the ParallelFileMerger shape,
-    util/ParallelFileMerger.scala:34) writes byte-identical output to
-    the sequential copy, returns the same prefix offsets, and handles
-    header/EOF blobs and empty parts."""
-    import random
-
-    from adam_spark.sources.binned_index import voffset  # noqa: F401
-    from adam_spark.sources.merge import concat_files_parallel
-
-    rng = random.Random(12)
-    parts = []
-    for i in range(17):
-        p = tmp_path / f"part-{i:05d}"
-        p.write_bytes(rng.randbytes(rng.choice([0, 1, 7_000, 300_000])))
-        parts.append(str(p))
-    hdr, eof = b"HEADER" * 10, b"EOF!"
-
-    seq_out, par_out = str(tmp_path / "seq.bin"), str(tmp_path / "par.bin")
-    off_seq = concat_files_parallel(seq_out, parts, hdr, eof, parallel=False)
-    off_par = concat_files_parallel(par_out, parts, hdr, eof, parallel=True)
-    assert off_seq == off_par
-    a, b = open(seq_out, "rb").read(), open(par_out, "rb").read()
-    assert a == b
-    assert a.startswith(hdr) and a.endswith(eof)
-    assert len(a) == len(hdr) + sum(os.path.getsize(p) for p in parts) + len(eof)
-    # offsets are the exact prefix sums
-    pos = len(hdr)
-    for p, off in zip(parts, off_par):
-        assert off == pos
-        pos += os.path.getsize(p)
-
-    # env opt-in (the reference's isHdfs gate analog): default is the
-    # sequential stream; ADAM_SPARK_MERGE_PARALLELISM enables threads
-    env_out = str(tmp_path / "env.bin")
-    os.environ["ADAM_SPARK_MERGE_PARALLELISM"] = "4"
-    try:
-        concat_files_parallel(env_out, parts, hdr, eof)
-    finally:
-        del os.environ["ADAM_SPARK_MERGE_PARALLELISM"]
-    assert open(env_out, "rb").read() == a
-
-
 def test_unindexed_bcf_scan_is_splittable(spark, tmp_path):
     """A BGZF BCF with NO .csi sidecar (any foreign file) scans in
     MULTIPLE arithmetic byte-range tasks (the load_bam shape): tasks

@@ -24,25 +24,54 @@ def _perbase_dict(rows):
     return dict(d)
 
 
+def _explode_coverage(alignments, by_sample=False):
+    """The literal per-base semantics (explode(sequence)): the O(read
+    length) oracle for to_coverage's events method."""
+    sample = F.col("readGroupSampleId") if by_sample else F.lit(None).cast("string")
+    reads = (
+        alignments.where(F.col("readMapped") & F.col("referenceName").isNotNull())
+        .select(
+            "referenceName",
+            "start",
+            "end",
+            sample.alias("optSampleId"),
+        )
+        .where(F.col("start").isNotNull() & (F.col("end") > F.col("start")))
+    )
+    return reads.select(
+        "referenceName",
+        F.explode(F.sequence("start", F.col("end") - 1)).alias("start"),
+        "optSampleId",
+    ).groupBy("referenceName", "start", "optSampleId").agg(
+        F.count(F.lit(1)).cast("double").alias("count")
+    ).select(
+        "referenceName",
+        "start",
+        (F.col("start") + 1).alias("end"),
+        "count",
+        "optSampleId",
+    )
+
+
 def test_events_equals_explode(fixtures):
     aln = fixtures.alignments().df
-    ev = to_coverage(aln, collapse=False, method="events")
-    ex = to_coverage(aln, collapse=False, method="explode")
+    ev = to_coverage(aln, collapse=False)
+    ex = _explode_coverage(aln)
     assert _perbase_dict(ev.collect()) == _perbase_dict(ex.collect())
 
 
 def test_events_by_sample(fixtures):
     aln = fixtures.alignments().df
-    ev = to_coverage(aln, collapse=False, by_sample=True, method="events")
-    ex = to_coverage(aln, collapse=False, by_sample=True, method="explode")
+    ev = to_coverage(aln, collapse=False, by_sample=True)
+    ex = _explode_coverage(aln, by_sample=True)
     assert _perbase_dict(ev.collect()) == _perbase_dict(ex.collect())
 
 
 def test_collapsed_flatten_roundtrip(fixtures):
     aln = fixtures.alignments().df
-    collapsed = to_coverage(aln, collapse=True, method="events")
+    collapsed = to_coverage(aln, collapse=True)
     flat = flatten_coverage(collapsed)
-    perbase = to_coverage(aln, collapse=False, method="explode")
+    perbase = _explode_coverage(aln)
     assert _perbase_dict(flat.collect()) == _perbase_dict(perbase.collect())
     # collapsed intervals are maximal: no two adjacent intervals share a count
     rows = sorted(

@@ -64,10 +64,38 @@ def test_get_fs_resolution(remote):
     assert isinstance(lfs2, LocalFileSystem) and p == "/plain/path"
 
 
+def test_concat_files_offsets_and_bytes(tmp_path):
+    """concat_files (util/FileMerger.scala:75) writes header, parts in
+    list order and EOF blob, including 0-byte and tiny parts, and
+    returns each part's offset as the exact prefix sum."""
+    import random
+
+    from adam_spark.sources.merge import concat_files
+
+    rng = random.Random(12)
+    parts, blobs = [], []
+    for i in range(17):
+        p = tmp_path / f"part-{i:05d}"
+        blob = rng.randbytes(rng.choice([0, 1, 7_000, 300_000]))
+        p.write_bytes(blob)
+        parts.append(str(p))
+        blobs.append(blob)
+    hdr, eof = b"HEADER" * 10, b"EOF!"
+
+    out = str(tmp_path / "out.bin")
+    offs = concat_files(out, parts, hdr, eof)
+    a = open(out, "rb").read()
+    assert a == hdr + b"".join(blobs) + eof
+    pos = len(hdr)
+    for p, off in zip(parts, offs):
+        assert off == pos
+        pos += os.path.getsize(p)
+
+
 def test_merge_through_memory_backend():
-    """merge_shards + concat_files_parallel against a pure in-memory
+    """merge_shards + concat_files against a pure in-memory
     filesystem — zero local files touched."""
-    from adam_spark.sources.merge import concat_files_parallel, merge_shards
+    from adam_spark.sources.merge import concat_files, merge_shards
 
     fs = _mem_fs()
     fs.makedirs("d/shards")
@@ -80,21 +108,13 @@ def test_merge_through_memory_backend():
     r = fs.open_read("d/merged")
     assert r.read() == b"H:alphabetag"
     r.close()
-    offs = concat_files_parallel(
+    offs = concat_files(
         "d/c2", [f"d/shards/part-{i:05d}" for i in range(3)], b"", b"EOF",
         fs=fs,
     )
     assert offs == [0, 5, 9]
     r = fs.open_read("d/c2")
     assert r.read() == b"alphabetagEOF"
-    r.close()
-    # parallelism request degrades to sequential (no positioned writes)
-    offs = concat_files_parallel(
-        "d/c3", [f"d/shards/part-{i:05d}" for i in range(3)],
-        parallel=True, fs=fs,
-    )
-    r = fs.open_read("d/c3")
-    assert r.read() == b"alphabetag" and offs == [0, 5, 9]
     r.close()
 
 

@@ -4,6 +4,7 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from adam_spark.llm.dedup import (
@@ -13,7 +14,7 @@ from adam_spark.llm.dedup import (
     simhash_duplicates,
 )
 from adam_spark.llm.multimodal import extract_features, sample_frames, MEDIA
-from adam_spark.llm.similarity import cosine_topk, cosine_topk_numpy, ivf_topk
+from adam_spark.llm.similarity import cosine, cosine_topk, cosine_topk_numpy, ivf_topk
 from adam_spark.llm.text import text_profile
 from adam_spark.sources.tables import load_table
 
@@ -141,11 +142,33 @@ def test_ivf_recall(embs):
     assert sum(recalls) / len(recalls) > 0.5  # probing half the buckets
 
 
-def test_embedding_near_dup_lsh_matches_bruteforce(embs):
-    from adam_spark.llm.similarity import (
-        embedding_near_duplicates,
-        embedding_near_duplicates_bruteforce,
+def embedding_near_duplicates_bruteforce(
+    corpus: DataFrame,
+    threshold: float = 0.95,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact all-pairs near-dup (the small-N validation oracle).
+
+    O(N²) broadcast cross join — correct at any threshold but never the
+    scale path; :func:`embedding_near_duplicates` is.
+    """
+    shuffle_parts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    a = corpus.repartition(shuffle_parts).select(
+        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
     )
+    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    return (
+        a.crossJoin(F.broadcast(b))
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("sim"))
+        .where(F.col("sim") >= F.lit(threshold))
+        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
+    )
+
+
+def test_embedding_near_dup_lsh_matches_bruteforce(embs):
+    from adam_spark.llm.similarity import embedding_near_duplicates
 
     lsh = embedding_near_duplicates(embs, threshold=0.4, dim=64)
     brute = embedding_near_duplicates_bruteforce(embs, threshold=0.4)
@@ -1505,72 +1528,6 @@ def test_ivf_quantized_matches_float_ivf(embs):
         assert a == b
 
 
-def test_bounded_cache_releases_persists(spark, docs, embs, monkeypatch):
-    """bounded_cache=True must leave NO CacheManager entries behind
-    (only lineage-free checkpoint blocks, which the ContextCleaner
-    reclaims on GC) and must not change results — across every
-    persisting operator in the llm package (r7: the dedup family and
-    embedding near-dup joined the r6 LM/tfidf/CMS set)."""
-    from adam_spark.llm.dedup import (
-        exact_duplicates,
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_between,
-        remove_repeated_spans,
-        simhash_duplicates,
-    )
-    from adam_spark.llm.similarity import embedding_near_duplicates
-    from adam_spark.llm.sketches import cms_heavy_hitters
-    from adam_spark.llm.text import (
-        bigram_lm_scores,
-        tfidf_top_terms,
-        unigram_lm_scores,
-    )
-
-    spark.catalog.clearCache()
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    toks = docs.select(
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("token")
-    )
-
-    def between_shuffled(b):
-        # strategies are chosen at build time, so the lowered cap only
-        # needs to hold while the frame is built
-        import adam_spark.llm.dedup as dd
-
-        with monkeypatch.context() as m:
-            m.setattr(dd, "VERIFY_BROADCAST_CAP_BYTES", 0)
-            return minhash_lsh_pairs_between(
-                docs.where(F.col("doc_id") % 2 == 1),
-                docs.where(F.col("doc_id") % 2 == 0),
-                bands=8, threshold=0.9, bounded_cache=b)
-
-    cases = [
-        (lambda b: exact_duplicates(docs, "doc_id", bounded_cache=b)),
-        (lambda b: simhash_duplicates(docs, "doc_id", bounded_cache=b)),
-        (lambda b: minhash_lsh_pairs(docs, "doc_id", bands=8, threshold=0.9, bounded_cache=b)),
-        (lambda b: minhash_lsh_pairs_between(
-            docs.where(F.col("doc_id") % 2 == 1),
-            docs.where(F.col("doc_id") % 2 == 0),
-            bands=8, threshold=0.9, bounded_cache=b)),
-        between_shuffled,
-        (lambda b: remove_repeated_spans(docs, min_docs=3, delimiter=" ", bounded_cache=b)),
-        (lambda b: embedding_near_duplicates(embs, threshold=0.4, bounded_cache=b)),
-        (lambda b: unigram_lm_scores(docs, bounded_cache=b)),
-        (lambda b: bigram_lm_scores(docs, bounded_cache=b)),
-        (lambda b: tfidf_top_terms(docs, bounded_cache=b)),
-        (lambda b: cms_heavy_hitters(toks, "token", 50, width=128, depth=3, bounded_cache=b)),
-    ]
-    for build in cases:
-        spark.catalog.clearCache()
-        want = sorted(tuple(r) for r in build(False).collect())
-        spark.catalog.clearCache()
-        assert cm.isEmpty()
-        got = sorted(tuple(r) for r in build(True).collect())
-        assert got == want
-        # the internal persist was released at return time
-        assert cm.isEmpty()
-
-
 def test_semantic_dedup_matches_bruteforce(spark, embs):
     """semantic_dedup = within-cluster min-id-survives: a numpy replay
     of assignment + pairwise cosine agrees exactly; the pairing join
@@ -1701,9 +1658,8 @@ def test_semantic_dedup_recluster_mode(spark):
         ).collect()
 
 
-def test_semantic_dedup_bounded_cache_and_sqrt_default(spark):
-    """bounded_cache=True releases the internal assignment persist
-    (CacheManager verifiably empty); n_centroids=None sizes k ≈ √N."""
+def test_semantic_dedup_sqrt_default(spark):
+    """n_centroids=None sizes k ≈ √N."""
     from adam_spark.llm.similarity import semantic_dedup
 
     rng = np.random.default_rng(3)
@@ -1711,18 +1667,7 @@ def test_semantic_dedup_bounded_cache_and_sqrt_default(spark):
         (i, [float(x) for x in rng.normal(0, 1, 6)]) for i in range(400)
     ]
     embs = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    spark.catalog.clearCache()
-    cm = spark._jsparkSession.sharedState().cacheManager()
-
-    want = sorted(
-        tuple(r) for r in semantic_dedup(embs, threshold=0.95).collect()
-    )
-    spark.catalog.clearCache()
-    assert cm.isEmpty()
-    got_df = semantic_dedup(embs, threshold=0.95, bounded_cache=True)
-    got = sorted(tuple(r) for r in got_df.collect())
-    assert got == want
-    assert cm.isEmpty()  # assignment persist released at return
+    got = [tuple(r) for r in semantic_dedup(embs, threshold=0.95).collect()]
     # √400 = 20 centroids by default → cent_ids drawn from first 20 ids
     assert {c for _, c, _ in got} <= set(range(20))
     assert len({c for _, c, _ in got}) > 1

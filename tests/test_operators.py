@@ -208,6 +208,53 @@ def test_fragment_roundtrip(fixtures):
         assert rifs == sorted(rifs)
 
 
+def test_alignments_to_reads(spark):
+    """AlignmentDataset.toReads (AlignmentDataset.scala:485): name,
+    sequence, qualities, sample and attributes carry over; the alphabet
+    is DNA and the length is the sequence length."""
+    from adam_spark import schemas
+    from adam_spark.operators.conversions import alignments_to_reads
+
+    aln = schemas.conform(
+        spark.createDataFrame(
+            [("r1", "ACGT", "IIII", "s1", {"XX": "1"}), ("r2", None, None, None, None)],
+            "readName string, sequence string, qualityScores string, "
+            "readGroupSampleId string, attributes map<string,string>",
+        ),
+        schemas.ALIGNMENT,
+    )
+    reads = alignments_to_reads(aln)
+    assert reads.columns == schemas.READ.names
+    assert sorted(reads.collect(), key=lambda r: r["name"]) == [
+        ("r1", None, "DNA", "ACGT", 4, "IIII", None, "s1", {"XX": "1"}),
+        ("r2", None, "DNA", None, None, None, None, None, None),
+    ]
+
+
+def test_variant_contexts_to_genotypes_and_variants(spark):
+    """VariantContextDataset.toGenotypes / toVariants
+    (VariantContextDataset.scala:325/336): one row per nested genotype,
+    and the variant struct unnested per context."""
+    from adam_spark.operators.conversions import (
+        variant_contexts_to_genotypes,
+        variant_contexts_to_variants,
+    )
+
+    vcs = spark.createDataFrame(
+        [
+            ("1", 9, (9, "A", "T"), [("s1", 9), ("s2", 9)]),
+            ("1", 19, (19, "G", "C"), []),
+        ],
+        "referenceName string, start long, "
+        "variant struct<start:long, referenceAllele:string, alternateAllele:string>, "
+        "genotypes array<struct<sampleId:string, start:long>>",
+    )
+    assert sorted(variant_contexts_to_genotypes(vcs).collect()) == [("s1", 9), ("s2", 9)]
+    assert sorted(variant_contexts_to_variants(vcs).collect()) == [
+        (9, "A", "T"), (19, "G", "C"),
+    ]
+
+
 def test_mark_duplicates(fixtures):
     aln = fixtures.alignments().df
     marked = mark_duplicates(aln, {"rg1": "lib1", "rg2": None})
@@ -329,6 +376,22 @@ def test_repartition_by_genome(spark):
     # globally genome-ordered across partitions, unmapped last
     assert flat == [
         ("chr1", 10), ("chr1", 900), ("chr2", 1), ("chr2", 500), (None, None),
+    ]
+
+
+def test_evenly_repartition(spark):
+    """GenomicDataset.evenlyRepartition (GenomicDataset.scala:577-604):
+    the requested partition count, no row lost or duplicated, and the
+    sort preserved across and within partitions."""
+    from adam_spark.operators.sorts import evenly_repartition
+
+    rows = [("chr2", 5), ("chr1", 30), ("chr1", 10), ("chr2", 1), ("chr1", 20), ("chr2", 9)]
+    df = spark.createDataFrame(rows, "referenceName string, start long")
+    parts = evenly_repartition(df, 3).rdd.glom().collect()
+    assert len(parts) == 3
+    flat = [(r["referenceName"], r["start"]) for p in parts for r in p]
+    assert flat == [
+        ("chr1", 10), ("chr1", 20), ("chr1", 30), ("chr2", 1), ("chr2", 5), ("chr2", 9),
     ]
 
 

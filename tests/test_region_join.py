@@ -10,10 +10,46 @@ contigs (must never match), and flank padding.
 import random
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from adam_spark.operators.region_join import naive_region_join, region_join
+from adam_spark.operators.region_join import region_join
+
+
+def naive_region_join(
+    left: DataFrame,
+    right: DataFrame,
+    flank: int = 0,
+    left_region: tuple[str, str, str] = ("referenceName", "start", "end"),
+    right_region: tuple[str, str, str] = ("referenceName", "start", "end"),
+    suffixes: tuple[str, str] = ("", "_r"),
+) -> DataFrame:
+    """Reference implementation: raw theta join (cartesian + predicate).
+
+    O(n·m) — exists ONLY as the property-test oracle for
+    :func:`region_join`; never use at scale.
+    """
+    l_ref, l_start, l_end = left_region
+    r_ref, r_start, r_end = right_region
+    lcols, rcols = left.columns, right.columns
+    ldf = left.select([F.col(c).alias(f"__l_{c}") for c in lcols])
+    rdf = right.select([F.col(c).alias(f"__r_{c}") for c in rcols])
+    cond = (
+        (F.col(f"__l_{l_ref}") == F.col(f"__r_{r_ref}"))
+        & ((F.col(f"__l_{l_start}") - F.lit(flank)) < F.col(f"__r_{r_end}"))
+        & (F.col(f"__r_{r_start}") < (F.col(f"__l_{l_end}") + F.lit(flank)))
+    )
+    out = ldf.join(rdf, cond, "inner")
+    sel = []
+    for c in lcols:
+        name = c + suffixes[0] if (c in rcols and suffixes[0]) else c
+        sel.append(F.col(f"__l_{c}").alias(name))
+    for c in rcols:
+        name = c + suffixes[1] if c in lcols else c
+        sel.append(F.col(f"__r_{c}").alias(name))
+    return out.select(sel)
+
 
 SCHEMA = StructType(
     [

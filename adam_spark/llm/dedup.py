@@ -207,6 +207,13 @@ def _sig_udf(num_hashes: int):
     return sig
 
 
+#: SQL: one base hash per shingle of the ``__sh`` array (md5 → 28-bit
+#: int), the input of the per-seed MinHash fold (:func:`_sig_udf`)
+_BASE_HASHES_SQL = (
+    "transform(__sh, __t -> CAST(conv(substring(md5(__t), 1, 7), 16, 10) AS BIGINT))"
+)
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -269,10 +276,7 @@ def minhash_signatures(
             df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
         )
     keyed = src.select(F.expr(f"{sql_ident(id_col)} AS id"), shingles.alias("__sh"))
-    h0s = F.expr(
-        "transform(__sh, __t -> CAST(conv(substring(md5(__t), 1, 7), 16, 10) AS BIGINT))"
-    )
-    sig = _sig_udf(num_hashes)(h0s).alias("signature")
+    sig = _sig_udf(num_hashes)(F.expr(_BASE_HASHES_SQL)).alias("signature")
     out = keyed if prefiltered else keyed.where("size(__sh) > 0")
     if with_size:
         return out.select("id", F.expr("size(__sh) AS n"), sig)

@@ -1040,10 +1040,9 @@ def embedding_near_duplicates(
     # the probe above
     if bands * (0.5 ** rows_per_band) >= 0.5:
         if n_corpus * true_dim * 8 <= GEMM_VERIFY_CAP_BYTES:
-            out = _near_dup_gemm_fused(
+            return _near_dup_gemm_fused(
                 corpus, threshold, id_col, vec_col, dim, rows_per_band, bands
             )
-            return out
     # persisted in ARRAY form: feeds both self-join sides (Spark does
     # not reuse the exchange across differently-aliased sides, so the
     # projection UDF would otherwise run twice) AND, on the GEMM path,
@@ -1069,20 +1068,14 @@ def embedding_near_duplicates(
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", "band")
     )
-    def _finish(out: DataFrame) -> DataFrame:
-        return out
-
     if n_vec * true_dim * 8 <= GEMM_VERIFY_CAP_BYTES:
         # the verify UDF keeps each pair only at its first shared band
         # (executor-computed hash arrays carried through the persisted
         # table — one slim extra collect, bit-identical to the hashes
         # that generated the candidates), so candidates are scored once
         # and no dedup runs
-        return _finish(
-            _verify_pairs_gemm(
-                corpus, raw, threshold, id_col, vec_col,
-                band_hashes=hashed_arr,
-            )
+        return _verify_pairs_gemm(
+            corpus, raw, threshold, id_col, vec_col, band_hashes=hashed_arr,
         )
     shuffle_parts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     # one exchange serves dedup + verify rebalance (partitioning on id_a
@@ -1101,7 +1094,7 @@ def embedding_near_duplicates(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
         _norm(F.col(vec_col)).alias("nb"),
     )
-    return _finish(
+    return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .select(

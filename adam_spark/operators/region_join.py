@@ -298,16 +298,14 @@ def region_join(
     matched = matched.unionByName(F.broadcast(l_wide).join(rdf, F.expr(overlap), "inner"))
     matched = matched.unionByName(l_narrow.join(F.broadcast(r_wide), F.expr(overlap), "inner"))
 
-    def restore(df: DataFrame, with_right: bool = True, with_left: bool = True) -> DataFrame:
+    def restore(df: DataFrame) -> DataFrame:
         out = []
-        if with_left:
-            for c in lcols:
-                name = c + suffixes[0] if (c in rcols and with_right and suffixes[0]) else c
-                out.append(f"{sql_ident(lmap[c])} AS {sql_ident(name)}")
-        if with_right:
-            for c in rcols:
-                name = c + suffixes[1] if (c in lcols and with_left) else c
-                out.append(f"{sql_ident(rmap[c])} AS {sql_ident(name)}")
+        for c in lcols:
+            name = c + suffixes[0] if (c in rcols and suffixes[0]) else c
+            out.append(f"{sql_ident(lmap[c])} AS {sql_ident(name)}")
+        for c in rcols:
+            name = c + suffixes[1] if c in lcols else c
+            out.append(f"{sql_ident(rmap[c])} AS {sql_ident(name)}")
         return df.selectExpr(*out)
 
     if group is None:

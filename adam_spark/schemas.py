@@ -67,24 +67,27 @@ def sql_type(dtype) -> str:
     return dtype.simpleString()
 
 
-def project(df, schema: StructType, exprs: dict[str, str]):
+def project(df, schema: StructType, exprs: dict[str, str], keep=()):
     """Select ``schema``'s fields from ``df``: each field is its SQL
     text in ``exprs`` (a typed null when absent) cast to the field's
-    type. One SQL projection: one gateway call for the whole list."""
+    type, after the pass-through columns named in ``keep``. One SQL
+    projection: one gateway call for the whole list."""
     return df.selectExpr(
+        *(sql_ident(k) for k in keep),
         *(
             f"CAST({exprs.get(f.name, 'NULL')} AS {sql_type(f.dataType)})"
             f" AS {sql_ident(f.name)}"
             for f in schema.fields
-        )
+        ),
     )
 
 
-def conform(df, schema: StructType):
-    """Project ``df`` onto ``schema``: present columns are cast, missing
-    columns become typed nulls. The nullable-everything model (SURVEY §1.2)
-    makes this safe for every record type."""
-    return project(df, schema, {c: sql_ident(c) for c in df.columns})
+def conform(df, schema: StructType, keep=()):
+    """Project ``df`` onto ``schema`` (after the ``keep`` columns):
+    present columns are cast, missing columns become typed nulls. The
+    nullable-everything model (SURVEY §1.2) makes this safe for every
+    record type."""
+    return project(df, schema, {c: sql_ident(c) for c in df.columns}, keep)
 
 
 _ATTRS = MapType(StringType(), StringType(), True)

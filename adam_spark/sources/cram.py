@@ -270,7 +270,7 @@ def _write_block(out: bytearray, content_type: int, content_id: int, data: bytes
             comp = rans_compress(data, 1 if len(data) >= 256 else 0)
             method = _M_RANS
         else:
-            comp = gzip.compress(data, 6)
+            comp = gzip.compress(data, 6, mtime=0)
             method = _M_GZIP
     else:
         comp, method = data, _M_RAW

@@ -16,7 +16,7 @@ split-order property as fastq.py (validated there).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from adam_spark import schemas
@@ -28,21 +28,27 @@ def load_fasta_sequences(
     spark: SparkSession, path: str, alphabet: str = "DNA"
 ) -> GenomicFrame:
     """FASTA → SEQUENCE records (ADAMContext.loadFastaDna:3904)."""
-    w = Window.partitionBy("file").orderBy("mid")
+    from adam_spark.sources.fastq import _numbered_lines
+
+    return GenomicFrame(
+        fasta_lines_to_sequences(_numbered_lines(spark, path), alphabet),
+        GenomicMetadata(kind="sequence"),
+    )
+
+
+def fasta_lines_to_sequences(lines: DataFrame, alphabet: str = "DNA") -> DataFrame:
+    """Numbered FASTA text lines (``file``, ``lineno``, ``value``) →
+    SEQUENCE rows: each line takes the running count of ``>`` headers
+    in its file as its record id."""
+    w = Window.partitionBy("file").orderBy("lineno")
     lines = (
-        spark.read.text(path)
-        .where(
+        lines.where(
             (F.length(F.trim("value")) > 0)
             # classic FASTA ';' comment lines (ADAMContextSuite "read a
             # fasta file with comments, gaps, and translation stops")
             & ~F.trim(F.col("value")).startswith(";")
         )
-        .select(
-            F.input_file_name().alias("file"),
-            F.monotonically_increasing_id().alias("mid"),
-            F.trim(F.col("value")).alias("line"),
-        )
-        .withColumn("lineno", F.row_number().over(w))
+        .select("file", "lineno", F.trim(F.col("value")).alias("line"))
         .withColumn("is_hdr", F.col("line").startswith(">"))
         # a LEADING headerless block is a legitimate record — legacy
         # FASTA, FastaConverters.parseDescriptionLine's optLine=None arm
@@ -90,9 +96,7 @@ def load_fasta_sequences(
         seq.alias("sequence"),
         F.length(seq).cast("long").alias("length"),
     )
-    return GenomicFrame(
-        schemas.conform(df, schemas.SEQUENCE), GenomicMetadata(kind="sequence")
-    )
+    return schemas.conform(df, schemas.SEQUENCE)
 
 
 def load_fasta_slices(
@@ -122,28 +126,6 @@ def save_fasta(
     single_file: bool = False, fs=None,
 ) -> None:
     """Sequences/slices → FASTA, line-wrapped (SequenceDataset.scala:508)."""
-    # name may be NULL with the full header held in description (NCBI
-    # metadata form, parseDescriptionLine) — emit whichever parts exist
-    header = F.concat(
-        F.lit(">"),
-        F.concat_ws(
-            " ",
-            *[
-                F.when(F.col(c).isNotNull(), F.col(c))
-                for c in ("name", "description")
-            ],
-        ),
-    )
-    wrapped = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.floor((F.length("sequence") - 1) / line_width)),
-            lambda i: F.substring(
-                F.col("sequence"), (i * line_width + 1).cast("int"), line_width
-            ),
-        ),
-        "\n",
-    )
-    df = gf.df.select(F.concat_ws("\n", header, wrapped).alias("value"))
     if single_file:
         # single-file saves also emit a samtools-faidx sidecar
         # (part-00000.fai) so the output is random-accessible by
@@ -159,8 +141,9 @@ def save_fasta(
         # bytes stream executor->store directly
         fs, path = get_fs(path, fs)
 
+        header = _fasta_header()
         fai_df = gf.df.select(
-            F.concat_ws("\n", header, wrapped).alias("value"),
+            fasta_record(line_width).alias("value"),
             F.substring_index(
                 F.coalesce(F.col("name"), F.col("description"), F.lit("")),
                 " ", 1,
@@ -234,4 +217,34 @@ def save_fasta(
         fs.rmtree(shard_dir)
         fs.touch(fs.join(path, "_SUCCESS"))
     else:
-        df.write.text(path)
+        gf.df.select(fasta_record(line_width).alias("value")).write.text(path)
+
+
+def _fasta_header() -> Column:
+    # name may be NULL with the full header held in description (NCBI
+    # metadata form, parseDescriptionLine) — emit whichever parts exist
+    return F.concat(
+        F.lit(">"),
+        F.concat_ws(
+            " ",
+            *[
+                F.when(F.col(c).isNotNull(), F.col(c))
+                for c in ("name", "description")
+            ],
+        ),
+    )
+
+
+def fasta_record(line_width: int = 60) -> Column:
+    """One FASTA record per sequence row: the header line, then the
+    sequence wrapped at ``line_width``."""
+    wrapped = F.array_join(
+        F.transform(
+            F.sequence(F.lit(0), F.floor((F.length("sequence") - 1) / line_width)),
+            lambda i: F.substring(
+                F.col("sequence"), (i * line_width + 1).cast("int"), line_width
+            ),
+        ),
+        "\n",
+    )
+    return F.concat_ws("\n", _fasta_header(), wrapped)

@@ -21,12 +21,13 @@ load; everything stays in whole-stage codegen — no Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from adam_spark import schemas
 from adam_spark.core.genomic_frame import GenomicFrame
 from adam_spark.core.metadata import GenomicMetadata
+from adam_spark.sources.merge import write_lines
 
 #: READ plus the pairing column (the reference models pairing via
 #: Fragment grouping; we keep it inline for save_paired_fastq)
@@ -189,11 +190,16 @@ def load_unpaired_fastq(
     spark: SparkSession, path: str, stringency: str = "strict"
 ) -> GenomicFrame:
     """FASTQ → reads (reference: ADAMContext.loadUnpairedFastq:2594)."""
-    g = _stitch(
-        _resync(_numbered_lines(spark, path), lambda c: c.startswith("@")), 4
-    )
-    df = g.select(*_record(F.col("l0"), F.col("l1"), F.col("l3"), 0, stringency))
+    df = fastq_lines_to_reads(_numbered_lines(spark, path), stringency)
     return GenomicFrame(schemas.conform(df, _READ_PAIRED), GenomicMetadata(kind="read"))
+
+
+def fastq_lines_to_reads(lines: DataFrame, stringency: str = "strict") -> DataFrame:
+    """Numbered FASTQ text lines (``file``, ``lineno``, ``value``) →
+    single-end read columns: each file resyncs to its first record,
+    then every 4 lines stitch into one record."""
+    g = _stitch(_resync(lines, lambda c: c.startswith("@")), 4)
+    return g.select(*_record(F.col("l0"), F.col("l1"), F.col("l3"), 0, stringency))
 
 
 def load_interleaved_fastq(
@@ -297,12 +303,34 @@ def save_fastq(
     """Reads/alignments → FASTQ text (AlignmentDataset.saveAsFastq:1394;
     ``write_suffixes`` mirrors the reference's writeSuffixes flag)."""
     df = gf.df
+    name_col, rif = _fastq_name_rif(df)
+    out = df.select(
+        name_col.alias("__name"),
+        rif.alias("__rif"),
+        fastq_record(df, write_suffixes).alias("value"),
+    )
+    if sort_by_name:
+        out = out.orderBy("__name", "__rif")
+    write_lines(out.select("value"), path, single_file)
+
+
+def _fastq_name_rif(df: DataFrame):
+    """(read name, read-in-fragment) Columns of a reads or alignments
+    frame."""
     name_col = F.col("readName") if "readName" in df.columns else F.col("name")
     rif = (
         F.coalesce(F.col("readInFragment"), F.lit(0))
         if "readInFragment" in df.columns
         else F.lit(0)
     )
+    return name_col, rif
+
+
+def fastq_record(df: DataFrame, write_suffixes: bool = False) -> Column:
+    """One 4-line FASTQ record per row of a reads or alignments frame:
+    negative-strand reads reverse-complemented (see
+    :func:`_fastq_strand_out`)."""
+    name_col, rif = _fastq_name_rif(df)
     suffix = (
         # AlignmentConverter.prepareFastq:255-262: only add /1 or /2 when
         # the name does not already carry a pair suffix
@@ -313,26 +341,13 @@ def save_fastq(
         else F.lit("")
     )
     seq, qual = _fastq_strand_out(df)
-    out = df.select(
-        name_col.alias("__name"),
-        rif.alias("__rif"),
-        F.concat_ws(
-            "\n",
-            F.concat(F.lit("@"), name_col, suffix),
-            seq,
-            F.lit("+"),
-            qual,
-        ).alias("value"),
+    return F.concat_ws(
+        "\n",
+        F.concat(F.lit("@"), name_col, suffix),
+        seq,
+        F.lit("+"),
+        qual,
     )
-    if sort_by_name:
-        out = out.orderBy("__name", "__rif")
-    out = out.select("value")
-    if single_file:
-        from adam_spark.sources.merge import write_text_single_file
-
-        write_text_single_file(out, path)
-    else:
-        out.write.text(path)
 
 
 def save_reads_fastq(gf: GenomicFrame, path: str, single_file: bool = False) -> None:
@@ -377,12 +392,7 @@ def save_reads_fastq(gf: GenomicFrame, path: str, single_file: bool = False) -> 
             F.col("qualityScores"),
         ).alias("value")
     )
-    if single_file:
-        from adam_spark.sources.merge import write_text_single_file
-
-        write_text_single_file(out, path)
-    else:
-        out.write.text(path)
+    write_lines(out, path, single_file)
 
 
 def save_paired_fastq(gf: GenomicFrame, path1: str, path2: str) -> None:

@@ -17,11 +17,13 @@ from pyspark.sql import functions as F
 from adam_spark import schemas
 from adam_spark.core.genomic_frame import GenomicFrame
 from adam_spark.core.metadata import GenomicMetadata
+from adam_spark.sources.merge import write_lines
 
 
-def _conform(df: DataFrame) -> DataFrame:
-    """Project onto the canonical FEATURE schema (missing cols → null)."""
-    return schemas.conform(df, schemas.FEATURE)
+def _conform(df: DataFrame, keep=()) -> DataFrame:
+    """Project onto the canonical FEATURE schema (missing cols → null),
+    after the pass-through columns named in ``keep``."""
+    return schemas.conform(df, schemas.FEATURE, keep)
 
 
 def _strand(col):
@@ -51,7 +53,15 @@ def _strand_out(col):
 # --- BED ------------------------------------------------------------------
 def load_bed(spark: SparkSession, path: str) -> GenomicFrame:
     """BED3..BED12 (reference: FeatureParser BEDParser; 0-based half-open)."""
-    lines = spark.read.text(path).where(
+    return GenomicFrame(
+        bed_lines_to_features(spark.read.text(path)), GenomicMetadata(kind="feature")
+    )
+
+
+def bed_lines_to_features(raw: DataFrame, keep=()) -> DataFrame:
+    """BED text lines (column ``value``) → FEATURE rows, after the
+    pass-through columns named in ``keep``."""
+    lines = raw.where(
         ~F.col("value").startswith("#")
         & ~F.col("value").startswith("track")
         & ~F.col("value").startswith("browser")
@@ -59,6 +69,7 @@ def load_bed(spark: SparkSession, path: str) -> GenomicFrame:
     )
     t = F.split(F.col("value"), "\t")
     df = lines.select(
+        *keep,
         F.try_element_at(t, F.lit(1)).alias("referenceName"),
         F.try_element_at(t, F.lit(2)).try_cast("long").alias("start"),
         F.try_element_at(t, F.lit(3)).try_cast("long").alias("end"),
@@ -91,7 +102,7 @@ def load_bed(spark: SparkSession, path: str) -> GenomicFrame:
         )
         .alias("attributes"),
     )
-    return GenomicFrame(_conform(df), GenomicMetadata(kind="feature"))
+    return _conform(df, keep)
 
 
 def save_bed(
@@ -107,6 +118,22 @@ def save_bed(
     BED12 format'). When the score bounds are given, scores interpolate
     to 0..1000 integers (Features.interpolateScore — the
     saveAsUcscBed path, FeatureDataset.scala:232-246)."""
+    lines = bed_lines(
+        gf.df, minimum_score=minimum_score, maximum_score=maximum_score,
+        missing_value=missing_value,
+    )
+    write_lines(lines, path, single_file)
+
+
+def bed_lines(
+    df: DataFrame,
+    keep=(),
+    minimum_score: float | None = None,
+    maximum_score: float | None = None,
+    missing_value: int | None = None,
+) -> DataFrame:
+    """FEATURE rows → BED lines (column ``value``, after ``keep``); see
+    :func:`save_bed`."""
     a = F.col("attributes")
 
     def _attr(k: str) -> Column:
@@ -152,23 +179,27 @@ def save_bed(
         F.coalesce(_attr("blockSizes"), F.lit(".")),
         F.coalesce(_attr("blockStarts"), F.lit(".")),
     )
-    df = _conform(gf.df).select(
-        F.when(has12, bed12).otherwise(bed6).alias("value")
+    return _conform(df, keep).select(
+        *keep, F.when(has12, bed12).otherwise(bed6).alias("value")
     )
-    if single_file:
-        from adam_spark.sources.merge import write_text_single_file
-
-        write_text_single_file(df, path)
-    else:
-        df.write.text(path)
 
 
 # --- NarrowPeak -----------------------------------------------------------
 def load_narrowpeak(spark: SparkSession, path: str) -> GenomicFrame:
     """ENCODE narrowPeak (BED6+4; reference: NarrowPeakParser)."""
-    lines = spark.read.text(path).where(F.length(F.trim("value")) > 0)
+    return GenomicFrame(
+        narrowpeak_lines_to_features(spark.read.text(path)),
+        GenomicMetadata(kind="feature"),
+    )
+
+
+def narrowpeak_lines_to_features(raw: DataFrame, keep=()) -> DataFrame:
+    """narrowPeak text lines (column ``value``) → FEATURE rows, after
+    the pass-through columns named in ``keep``."""
+    lines = raw.where(F.length(F.trim("value")) > 0)
     t = F.split(F.col("value"), "\t")
     df = lines.select(
+        *keep,
         F.try_element_at(t, F.lit(1)).alias("referenceName"),
         F.try_element_at(t, F.lit(2)).try_cast("long").alias("start"),
         F.try_element_at(t, F.lit(3)).try_cast("long").alias("end"),
@@ -182,12 +213,19 @@ def load_narrowpeak(spark: SparkSession, path: str) -> GenomicFrame:
             ),
         ).alias("attributes"),
     )
-    return GenomicFrame(_conform(df), GenomicMetadata(kind="feature"))
+    return _conform(df, keep)
 
 
 def save_narrowpeak(gf: GenomicFrame, path: str, single_file: bool = False) -> None:
+    write_lines(narrowpeak_lines(gf.df), path, single_file)
+
+
+def narrowpeak_lines(df: DataFrame, keep=()) -> DataFrame:
+    """FEATURE rows → narrowPeak lines (column ``value``, after
+    ``keep``)."""
     a = F.col("attributes")
-    df = _conform(gf.df).select(
+    return _conform(df, keep).select(
+        *keep,
         F.concat_ws(
             "\t",
             F.col("referenceName"),
@@ -200,14 +238,8 @@ def save_narrowpeak(gf: GenomicFrame, path: str, single_file: bool = False) -> N
             F.coalesce(a.getItem("pValue"), F.lit("-1")),
             F.coalesce(a.getItem("qValue"), F.lit("-1")),
             F.coalesce(a.getItem("peak"), F.lit("-1")),
-        ).alias("value")
+        ).alias("value"),
     )
-    if single_file:
-        from adam_spark.sources.merge import write_text_single_file
-
-        write_text_single_file(df, path)
-    else:
-        df.write.text(path)
 
 
 # --- GTF / GFF3 -----------------------------------------------------------
@@ -348,8 +380,8 @@ def _gather_attributes() -> Column:
     )
 
 
-def _gxf_base(spark: SparkSession, path: str):
-    lines = spark.read.text(path).where(
+def _gxf_base(raw: DataFrame):
+    lines = raw.where(
         ~F.col("value").startswith("#")
         & (F.length(F.trim("value")) > 0)
         # GFF3 files may embed a ##FASTA section (headers + sequence
@@ -386,7 +418,15 @@ def _name_of() -> Column:
 def load_gtf(spark: SparkSession, path: str) -> GenomicFrame:
     """GTF2 with `key "value";` attributes (reference: GTFParser);
     1-based closed → 0-based half-open."""
-    lines, t = _gxf_base(spark, path)
+    return GenomicFrame(
+        gtf_lines_to_features(spark.read.text(path)), GenomicMetadata(kind="feature")
+    )
+
+
+def gtf_lines_to_features(raw: DataFrame, keep=()) -> DataFrame:
+    """GTF text lines (column ``value``) → FEATURE rows, after the
+    pass-through columns named in ``keep``."""
+    lines, t = _gxf_base(raw)
     # `key "value"; ...` → entries; tokens that don't match the
     # GTFParser PATTERN `\s*([^\s]+)\s"([^"]+)"` are dropped
     # (FeatureParser.scala:60-74).
@@ -401,6 +441,7 @@ def load_gtf(spark: SparkSession, path: str) -> GenomicFrame:
     )
     assigned = _assign_attributes(kvs)
     df = lines.select(
+        *keep,
         F.try_element_at(t, F.lit(1)).alias("referenceName"),
         _dotnull(F.try_element_at(t, F.lit(2))).alias("source"),
         _dotnull(F.try_element_at(t, F.lit(3))).alias("featureType"),
@@ -411,13 +452,18 @@ def load_gtf(spark: SparkSession, path: str) -> GenomicFrame:
         _dotnull(F.try_element_at(t, F.lit(8))).try_cast("int").alias("frame"),
         *[c.alias(name) for name, c in assigned.items()],
     )
-    return GenomicFrame(_conform(df), GenomicMetadata(kind="feature"))
+    return _conform(df, keep)
 
 
 def save_gtf(gf: GenomicFrame, path: str, single_file: bool = False) -> None:
     """GTF save with full gatherAttributes parity: every typed field plus
     the attributes map re-emitted as `key "value"; ...`
     (FeatureDataset.scala:161-176 toGtf)."""
+    write_lines(gtf_lines(gf.df), path, single_file)
+
+
+def gtf_lines(df: DataFrame, keep=()) -> DataFrame:
+    """FEATURE rows → GTF lines (column ``value``, after ``keep``)."""
     attr = F.array_join(
         F.transform(
             _gather_attributes(),
@@ -425,7 +471,8 @@ def save_gtf(gf: GenomicFrame, path: str, single_file: bool = False) -> None:
         ),
         "; ",
     )
-    df = _conform(gf.df).select(
+    return _conform(df, keep).select(
+        *keep,
         F.concat_ws(
             "\t",
             F.col("referenceName"),
@@ -437,20 +484,21 @@ def save_gtf(gf: GenomicFrame, path: str, single_file: bool = False) -> None:
             _strand_out(F.col("strand")),
             F.coalesce(F.col("frame").cast("string"), F.lit(".")),
             attr,
-        ).alias("value")
+        ).alias("value"),
     )
-    if single_file:
-        from adam_spark.sources.merge import write_text_single_file
-
-        write_text_single_file(df, path)
-    else:
-        df.write.text(path)
 
 
 def load_gff3(spark: SparkSession, path: str) -> GenomicFrame:
     """GFF3 with `key=value;` attributes (reference: GFF3Parser)."""
-    lines, t = _gxf_base(spark, path)
-    attrs_col = F.try_element_at(t, F.lit(9))
+    return GenomicFrame(
+        gff3_lines_to_features(spark.read.text(path)), GenomicMetadata(kind="feature")
+    )
+
+
+def gff3_lines_to_features(raw: DataFrame, keep=()) -> DataFrame:
+    """GFF3 text lines (column ``value``) → FEATURE rows, after the
+    pass-through columns named in ``keep``."""
+    lines, t = _gxf_base(raw)
     # `key=value;...` → entries, split on the FIRST '=' only so values
     # containing '=' survive (GFF3Parser.parseAttributes,
     # FeatureParser.scala:135-147). Multi-valued keys (repeated entries)
@@ -466,6 +514,7 @@ def load_gff3(spark: SparkSession, path: str) -> GenomicFrame:
     )
     assigned = _assign_attributes(kvs)
     df = lines.select(
+        *keep,
         F.try_element_at(t, F.lit(1)).alias("referenceName"),
         _dotnull(F.try_element_at(t, F.lit(2))).alias("source"),
         _dotnull(F.try_element_at(t, F.lit(3))).alias("featureType"),
@@ -476,7 +525,7 @@ def load_gff3(spark: SparkSession, path: str) -> GenomicFrame:
         _dotnull(F.try_element_at(t, F.lit(8))).try_cast("int").alias("phase"),
         *[c.alias(name) for name, c in assigned.items()],
     )
-    return GenomicFrame(_conform(df), GenomicMetadata(kind="feature"))
+    return _conform(df, keep)
 
 
 GFF3_HEADER = "##gff-version 3.2.1"  # GFF3HeaderWriter.scala:28
@@ -487,6 +536,11 @@ def save_gff3(gf: GenomicFrame, path: str, single_file: bool = False) -> None:
     FeatureDataset.scala:259-274 toGff3). Single-file saves start with
     the `##gff-version 3.2.1` pragma (GFF3HeaderWriter, wired at
     FeatureDataset.scala:806-812 — header only when asSingleFile)."""
+    write_lines(gff3_lines(gf.df), path, single_file, header_lines=[GFF3_HEADER])
+
+
+def gff3_lines(df: DataFrame, keep=()) -> DataFrame:
+    """FEATURE rows → GFF3 lines (column ``value``, after ``keep``)."""
     attr = F.array_join(
         F.transform(
             _gather_attributes(),
@@ -494,7 +548,8 @@ def save_gff3(gf: GenomicFrame, path: str, single_file: bool = False) -> None:
         ),
         ";",
     )
-    df = _conform(gf.df).select(
+    return _conform(df, keep).select(
+        *keep,
         F.concat_ws(
             "\t",
             F.col("referenceName"),
@@ -506,14 +561,8 @@ def save_gff3(gf: GenomicFrame, path: str, single_file: bool = False) -> None:
             _strand_out(F.col("strand")),
             F.coalesce(F.col("phase").cast("string"), F.lit(".")),
             attr,
-        ).alias("value")
+        ).alias("value"),
     )
-    if single_file:
-        from adam_spark.sources.merge import write_text_single_file
-
-        write_text_single_file(df, path, header_lines=[GFF3_HEADER])
-    else:
-        df.write.text(path)
 
 
 # --- IntervalList ---------------------------------------------------------
@@ -577,9 +626,7 @@ def save_interval_list(gf: GenomicFrame, path: str, single_file: bool = True) ->
             _name_of(),
         ).alias("value")
     )
-    from adam_spark.sources.merge import write_text_single_file
-
-    write_text_single_file(df, path, header_lines=header_lines)
+    write_lines(df, path, True, header_lines=header_lines)
 
 
 def save_ucsc_bed(

@@ -107,6 +107,18 @@ def write_text_single_file(
         fs.rmtree(shard_dir)
 
 
+def write_lines(
+    lines, path: str, single_file: bool, header_lines: list[str] | None = None
+) -> None:
+    """Write a one-column (``value``) lines frame as text: one merged
+    file with the header first, or one part per partition (no header —
+    the sharded savers' shape)."""
+    if single_file:
+        write_text_single_file(lines, path, header_lines=header_lines)
+    else:
+        lines.write.text(path)
+
+
 def concat_files(
     output_path: str,
     parts: list[str],

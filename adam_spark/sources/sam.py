@@ -198,11 +198,12 @@ def load_sam(
     return GenomicFrame(sam_lines_to_alignments(raw, meta), meta)
 
 
-def sam_lines_to_alignments(raw: DataFrame, meta=None) -> DataFrame:
+def sam_lines_to_alignments(raw: DataFrame, meta=None, keep=()) -> DataFrame:
     """Parse a DataFrame of raw SAM text lines (column ``value``) into
-    ALIGNMENT rows; ``meta`` (the header's metadata) resolves
-    ``readGroupSampleId``. Works on batch AND streaming DataFrames —
-    the parse is stateless per line.
+    ALIGNMENT rows, after the pass-through columns named in ``keep``;
+    ``meta`` (the header's metadata) resolves ``readGroupSampleId``.
+    Works on batch AND streaming DataFrames — the parse is stateless
+    per line.
 
     Both stages are SQL text, so the whole parse costs a few gateway
     calls however many expressions it holds."""
@@ -210,7 +211,8 @@ def sam_lines_to_alignments(raw: DataFrame, meta=None) -> DataFrame:
     exprs = dict(_ALIGNMENT_SQL)
     if meta is not None:
         exprs["readGroupSampleId"] = _sample_id_sql(meta.read_groups)
-    return schemas.project(body.selectExpr(*_SPLIT_SQL), schemas.ALIGNMENT, exprs)
+    split = body.selectExpr(*(schemas.sql_ident(k) for k in keep), *_SPLIT_SQL)
+    return schemas.project(split, schemas.ALIGNMENT, exprs, keep)
 
 
 def _header_metadata(raw: DataFrame, stringency: str = "SILENT") -> GenomicMetadata:
@@ -296,12 +298,13 @@ def header_metadata_from_lines(
     )
 
 
-def sam_body_lines(df: DataFrame) -> DataFrame:
-    """ALIGNMENT rows → one-column (``value``) SAM body lines,
-    including optional tags: MD/RG re-emitted from their typed columns
-    (authoritative — operators update them), every other attribute
-    passed through as TAG:TYPE:VALUE."""
-    df = schemas.conform(df, schemas.ALIGNMENT)
+def sam_body_lines(df: DataFrame, keep=()) -> DataFrame:
+    """ALIGNMENT rows → SAM body lines (column ``value``, after the
+    pass-through columns named in ``keep``), including optional tags:
+    MD/RG re-emitted from their typed columns (authoritative —
+    operators update them), every other attribute passed through as
+    TAG:TYPE:VALUE."""
+    df = schemas.conform(df, schemas.ALIGNMENT, keep)
     flags = sam_flags(df)
     # typed-column-backed tags, rendered from their authoritative
     # columns (operators update those, not the raw map values)
@@ -382,7 +385,7 @@ def sam_body_lines(df: DataFrame) -> DataFrame:
         F.coalesce(F.col("qualityScores"), F.lit("*")),
         F.when(other_tags != "", other_tags),
     ).alias("value")
-    return df.select(line)
+    return df.select(*keep, line)
 
 
 def sam_header_lines(

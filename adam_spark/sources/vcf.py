@@ -819,26 +819,42 @@ def mix_header_lines(header_lines: list[str]) -> list[str]:
     return out + DEFAULT_HEADER_LINES
 
 
+#: VCF body lines: not a header line, not blank
+_BODY_LINE = "NOT startswith(value, '#') AND length(trim(value)) > 0"
+
+
 def load_vcf(spark: SparkSession, path: str) -> GenomicFrame:
     """VCF → variant contexts (one row per site × alt allele)."""
     header_lines, refs, sample_names = _parse_header(spark, path)
     header_lines = mix_header_lines(header_lines)
 
-    body = _vcf_text(spark, path).where(
-        ~F.col("value").startswith("#") & (F.length(F.trim("value")) > 0)
-    )
+    body = _vcf_text(spark, path).where(_BODY_LINE)
     return vcf_lines_to_contexts(body, header_lines, refs, sample_names)
 
 
+def vcf_text_to_contexts(raw: DataFrame, header: list[str], keep=()) -> GenomicFrame:
+    """VCF text lines (column ``value``; header lines skipped) →
+    variant contexts, typed and sample-mapped by ``header`` exactly as
+    :func:`load_vcf` types a file by its own header."""
+    header_lines, refs, sample_names = _header_from_lines(header)
+    return vcf_lines_to_contexts(
+        raw.where(_BODY_LINE), mix_header_lines(header_lines), refs,
+        sample_names, keep,
+    )
+
+
 def vcf_lines_to_contexts(
-    body: DataFrame, header_lines: list[str], refs, sample_names: list[str]
+    body: DataFrame, header_lines: list[str], refs, sample_names: list[str],
+    keep=(),
 ) -> GenomicFrame:
     """Parse a DataFrame of raw VCF body lines (column ``value``) into a
-    variant-context frame (shared by the plain and tabix-indexed
-    loaders)."""
+    variant-context frame, after the pass-through columns named in
+    ``keep`` (shared by the plain and tabix-indexed loaders and
+    ``pipe``)."""
     t = F.split(F.col("value"), "\t")
     filt = F.try_element_at(t, F.lit(7))
     base = body.select(
+        *keep,
         F.try_element_at(t, F.lit(1)).alias("referenceName"),
         (F.try_element_at(t, F.lit(2)).try_cast("long") - 1).alias("start"),
         # symbolic/structural variants carry their span in INFO END
@@ -926,6 +942,7 @@ def vcf_lines_to_contexts(
         genotypes = F.lit(None).cast(schemas.ArrayType(schemas.GENOTYPE, True))
 
     df = with_v.select(
+        *keep,
         "referenceName",
         "start",
         "end",
@@ -941,7 +958,7 @@ def vcf_lines_to_contexts(
     return GenomicFrame(df, meta)
 
 
-def contexts_to_variants_frame(gf: GenomicFrame) -> GenomicFrame:
+def contexts_to_variants_frame(gf: GenomicFrame, keep=()) -> GenomicFrame:
     """Variant contexts → site-level VARIANT frame.
 
     ``VariantContextDataset.toVariants`` (VariantContextDataset.scala:
@@ -949,15 +966,16 @@ def contexts_to_variants_frame(gf: GenomicFrame) -> GenomicFrame:
     VariantDataset and carries no samples — a sites-only save therefore
     writes neither FORMAT declarations nor sample columns (pinned
     byte-exact against the adam-cli goldens sorted-variants.vcf /
-    sorted-variants.lex.vcf)."""
-    df = gf.df.select("variant.*")
+    sorted-variants.lex.vcf). The columns named in ``keep`` pass
+    through ahead of the VARIANT fields."""
+    df = gf.df.select(*keep, "variant.*")
     meta = gf.meta.copy()
     meta.kind = "variant"
     meta.header_lines = [
         h for h in meta.header_lines if not h.startswith("##FORMAT=")
     ]
     meta.samples = []
-    return GenomicFrame(schemas.conform(df, schemas.VARIANT), meta)
+    return GenomicFrame(schemas.conform(df, schemas.VARIANT, keep), meta)
 
 
 def contexts_to_genotypes_frame(gf: GenomicFrame) -> GenomicFrame:
@@ -1101,6 +1119,24 @@ def _render_vcf(
     per column — O(samples²) per row; fine for cohort-sized sample
     lists, wrong shape for biobank-scale VCFs (pivot first if needed).
     """
+    # the body keeps the FRAME'S row order (header flag + monotonic id
+    # as the explicit sort key — plan-level union ordering is NOT
+    # guaranteed through AQE): the reference's saveAsVcf writes whatever
+    # order sort()/sortLexicographically() produced, and a
+    # writer-imposed name sort would break dictionary-index ordering
+    # (sorted.vcf's golden order is 1, 2, 13 — contig INDEX, not name)
+    body = vcf_body_lines(
+        gf,
+        (F.lit(1).alias("__o"), F.monotonically_increasing_id().alias("__k2")),
+        stringency,
+    )
+    return render_vcf_header(gf), body
+
+
+def vcf_body_lines(gf: GenomicFrame, keep=(), stringency: str = "LENIENT") -> DataFrame:
+    """Variant contexts → VCF body lines (column ``value``, after the
+    pass-through columns or Columns in ``keep``); one sample column per
+    ``gf.meta.samples`` entry."""
     df = gf.df
     sample_names = [s.id for s in gf.meta.samples]
     cols = _render_columns_cached(
@@ -1116,20 +1152,7 @@ def _render_vcf(
             .withColumn("__fmtk", cols["fmtk"])
             .withColumn("__rcells", cols["rcells"])
         )
-    # the body keeps the FRAME'S row order (header flag + monotonic id
-    # as the explicit sort key — plan-level union ordering is NOT
-    # guaranteed through AQE): the reference's saveAsVcf writes whatever
-    # order sort()/sortLexicographically() produced, and a
-    # writer-imposed name sort would break dictionary-index ordering
-    # (sorted.vcf's golden order is 1, 2, 13 — contig INDEX, not name)
-    body = df.select(
-        F.lit(1).alias("__o"),
-        F.monotonically_increasing_id().alias("__k2"),
-        cols["line"].alias("value"),
-    )
-
-    header = render_vcf_header(gf, sample_names)
-    return header, body
+    return df.select(*keep, cols["line"].alias("value"))
 
 
 #: built render Columns per (application, sample list, genotypes dtype,

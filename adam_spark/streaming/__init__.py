@@ -389,54 +389,35 @@ def streaming_minhash_candidates(
        backstop re-pairs anything the restarted stream misses — same
        recovery contract as a TTL expiry).
     """
-    import pandas as pd
-
-    from adam_spark.llm.dedup import _sig_udf, word_ngrams
+    from adam_spark.llm.dedup import (
+        _BASE_HASHES_SQL,
+        _band_hashes_sql,
+        _sig_udf,
+        word_ngrams,
+    )
 
     id_type = docs.schema[id_col].dataType
-    id_ddl = id_type.simpleString()
     ttl = int(state_ttl_seconds)
 
-    shingles = word_ngrams(text_col, shingle_n)
-    h0s = F.transform(
-        shingles, lambda t: F.conv(F.substring(F.md5(t), 1, 7), 16, 10).cast("long")
-    )
     sigs = (
         docs.select(
             F.col(id_col).alias("doc_id"),
             F.col(time_col).cast("timestamp").alias("__ts"),
             F.col(time_col).cast("timestamp").cast("long").alias("tse"),
-            h0s.alias("__h0s"),
+            word_ngrams(text_col, shingle_n).alias("__sh"),
         )
         .withWatermark("__ts", watermark_delay)
-        .where(F.size("__h0s") > 0)
+        .where(F.size("__sh") > 0)
         .select(
             "doc_id", "__ts", "tse",
-            _sig_udf(num_hashes)(F.col("__h0s")).alias("signature"),
+            _sig_udf(num_hashes)(F.expr(_BASE_HASHES_SQL)).alias("signature"),
         )
     )
-    # band explode + hash: same band_hash construction as lsh_bands
-    # (md5 over the comma-joined band slice) so stream and batch agree
-    rows_per_band = num_hashes // bands
-    banded = sigs.select(
+    # the batch operator's band hashes (md5 over each band's
+    # comma-joined slice), one row per band, so stream and batch agree
+    banded = sigs.selectExpr(
         "doc_id", "__ts", "tse",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-        F.col("signature"),
-    ).select(
-        "doc_id", "__ts", "tse", "band",
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.slice(
-                        F.col("signature"),
-                        F.col("band") * F.lit(rows_per_band) + 1,
-                        F.lit(rows_per_band),
-                    ),
-                    lambda v: v.cast("string"),
-                ),
-            )
-        ).alias("band_hash"),
+        f"posexplode({_band_hashes_sql(num_hashes, bands)}) AS (band, band_hash)",
     )
 
     return _bucket_anchor_candidates(banded, id_type, ttl)

@@ -156,23 +156,30 @@ def test_pipe_fasta_roundtrip(spark):
     assert got["s2"]["length"] == 4
 
 
-def test_fragment_in_formatters():
-    """tab5/tab6/ifq line formats (Tab5InFormatter.scala:44-80 etc.)."""
-    from adam_spark.operators.pipe import _ifq_in, _tab5_in, _tab6_in
+def test_fragment_in_formatters(spark):
+    """tab5/tab6/ifq line formats (Tab5InFormatter.scala:44-80 etc.),
+    rendered by the SQL fragment formatters."""
+    from adam_spark.operators.pipe import _fragment_lines
 
-    frag = {
-        "name": "f1/1",
-        "alignments": [
-            {"readName": "f1", "readInFragment": 1, "sequence": "TTTT", "qualityScores": "JJJJ"},
-            {"readName": "f1", "readInFragment": 0, "sequence": "ACGT", "qualityScores": "IIII"},
+    frags = spark.createDataFrame(
+        [
+            ("f1/1", [("f1", 1, "TTTT", "JJJJ"), ("f1", 0, "ACGT", "IIII")]),
+            ("u1", [(None, None, "GG", None)]),
         ],
-    }
-    assert _tab5_in(frag) == "f1\tACGT\tIIII\tTTTT\tJJJJ"
-    assert _tab6_in(frag) == "f1/1\tACGT\tIIII\tf1/2\tTTTT\tJJJJ"
-    assert _ifq_in(frag) == "@f1/1\nACGT\n+\nIIII\n@f1/2\nTTTT\n+\nJJJJ"
-    single = {"name": "u1", "alignments": [{"sequence": "GG", "qualityScores": None}]}
-    assert _tab5_in(single) == "u1\tGG\tBB"
-    assert _ifq_in(single) == "@u1\nGG\n+\nBB"
+        "name string, alignments array<struct<readName string, "
+        "readInFragment int, sequence string, qualityScores string>>",
+    )
+
+    def render(fmt):
+        out = _fragment_lines(fmt, frags, ("name",)).collect()
+        return {r["name"]: r["value"] for r in out}
+
+    tab5, tab6, ifq = render("tab5"), render("tab6"), render("ifq")
+    assert tab5["f1/1"] == "f1\tACGT\tIIII\tTTTT\tJJJJ"
+    assert tab6["f1/1"] == "f1/1\tACGT\tIIII\tf1/2\tTTTT\tJJJJ"
+    assert ifq["f1/1"] == "@f1/1\nACGT\n+\nIIII\n@f1/2\nTTTT\n+\nJJJJ"
+    assert tab5["u1"] == "u1\tGG\tBB"
+    assert ifq["u1"] == "@u1\nGG\n+\nBB"
 
 
 def test_pipe_tab5_to_bed(spark):
@@ -232,12 +239,14 @@ def test_pipe_gtf_roundtrip(spark):
 def test_run_subprocess_timeout_kills():
     import time
 
-    from adam_spark.operators.pipe import _run_subprocess
+    from adam_spark.operators.pipe import run_subprocess
 
     t0 = time.time()
     with pytest.raises(RuntimeError, match="timed out"):
-        _run_subprocess(["sleep", "30"], [], None, timeout=1)
+        run_subprocess(["sleep", "30"], b"", None, timeout=1)
     assert time.time() - t0 < 10  # killed promptly, no 30s hang
+    # the drop semantics answer an empty stdout instead
+    assert run_subprocess(["sleep", "30"], b"", None, timeout=1, on_timeout="drop") == b""
 
 
 def test_pipe_keeps_unmapped_reads(spark):
@@ -476,3 +485,164 @@ def test_pipe_gff3_full_attribute_round_trip(spark):
         assert (r["target"], r["gap"], r["derivesFrom"]) == ("EST1 1 100", "M100", "tx9")
         assert r["circular"] is False and r["sampleId"] == "s1"
         assert dict(r["attributes"]) == {"custom": "x=y"}, fmt
+
+
+def _canonical(df) -> list[str]:
+    """A frame's rows as a sorted list of canonical JSON strings (maps
+    and nested structs compared by value)."""
+    import json
+
+    return sorted(
+        json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+        for r in df.collect()
+    )
+
+
+def _bed_frame(spark) -> GenomicFrame:
+    blocks = {
+        "thickStart": "110", "thickEnd": "190", "itemRgb": "255,0,0",
+        "blockCount": "2", "blockSizes": "30,40", "blockStarts": "0,60",
+    }
+    rows = [
+        # BED6 rows (one with a null score and strand)
+        {"referenceName": "chr1", "start": 10, "end": 20, "name": "f1",
+         "score": 5.0, "strand": "FORWARD"},
+        {"referenceName": "chr2", "start": 30, "end": 40, "name": "f2"},
+        # BED12 rows
+        {"referenceName": "chr1", "start": 100, "end": 200, "name": "t1",
+         "score": 900.0, "strand": "REVERSE", "attributes": blocks},
+        {"referenceName": "chrM", "start": 500, "end": 700, "name": "t2",
+         "score": 0.0, "strand": "FORWARD", "attributes": blocks},
+    ]
+    return _feature_frame(spark, rows)
+
+
+def _feature_frame(spark, rows) -> GenomicFrame:
+    from tests.genomic_fixtures import make_metadata
+
+    df = schemas.conform(spark.createDataFrame(rows, schemas.FEATURE), schemas.FEATURE)
+    return GenomicFrame(df, make_metadata("feature"))
+
+
+def _narrowpeak_frame(spark) -> GenomicFrame:
+    rows = [
+        {"referenceName": "chr1", "start": 1000 * i, "end": 1000 * i + 250,
+         "name": f"peak{i}", "score": float(100 + i), "strand": "INDEPENDENT",
+         "attributes": {"signalValue": f"{i}.5", "pValue": "12.3",
+                        "qValue": "4.56", "peak": str(100 + i)}}
+        for i in range(6)
+    ]
+    return _feature_frame(spark, rows)
+
+
+def _variant_frame(spark) -> GenomicFrame:
+    from tests.genomic_fixtures import make_metadata
+
+    rows = [
+        {"referenceName": "chr1", "start": 100, "end": 101, "names": ["rs1"],
+         "referenceAllele": "A", "alternateAllele": "T", "quality": 50.0,
+         "filtersApplied": True, "filtersPassed": True},
+        {"referenceName": "chr1", "start": 5000, "end": 5002,
+         "referenceAllele": "GC", "alternateAllele": "G", "quality": 12.5,
+         "filtersApplied": True, "filtersPassed": False,
+         "filtersFailed": ["LowQual", "q10"]},
+        {"referenceName": "chr2", "start": 700, "end": 701,
+         "referenceAllele": "C", "alternateAllele": "A",
+         "filtersApplied": False},
+    ]
+    df = schemas.conform(spark.createDataFrame(rows, schemas.VARIANT), schemas.VARIANT)
+    meta = make_metadata("variant")
+    meta.samples = []
+    return GenomicFrame(df, meta)
+
+
+def _sequence_frame(spark) -> GenomicFrame:
+    rows = [("s1", "first sequence", "ACGT" * 40), ("s2", None, "TTTT"),
+            ("s3", None, "GATTACA" * 20)]
+    df = spark.createDataFrame(rows, "name string, description string, sequence string")
+    return GenomicFrame(
+        schemas.conform(df, schemas.SEQUENCE), GenomicMetadata(kind="sequence")
+    )
+
+
+def _file_round_trip(spark, gf, fmt, path):
+    from adam_spark.operators.conversions import variants_to_variant_contexts
+    from adam_spark.sources import fasta, fastq, features_io, sam, vcf
+
+    if fmt == "sam":
+        sam.save_sam(gf, path)
+        return sam.load_sam(spark, path).df
+    if fmt == "vcf":
+        contexts = GenomicFrame(variants_to_variant_contexts(gf.df), gf.meta)
+        vcf.save_vcf(contexts, path)
+        return vcf.load_vcf_variants(spark, path).df
+    if fmt == "fastq":
+        fastq.save_fastq(gf, path)
+        return schemas.conform(fastq.load_unpaired_fastq(spark, path).df, schemas.READ)
+    if fmt == "fasta":
+        fasta.save_fasta(gf, path)
+        return fasta.load_fasta_sequences(spark, path).df
+    getattr(features_io, f"save_{fmt}")(gf, path)
+    return getattr(features_io, f"load_{fmt}")(spark, path).df
+
+
+@pytest.mark.parametrize(
+    "fmt", ["sam", "bed", "narrowpeak", "gff3", "gtf", "vcf", "fastq", "fasta"]
+)
+def test_pipe_cat_matches_file_round_trip(spark, fixtures, tmp_path, fmt):
+    """One codec per format: piping through `cat` returns exactly the
+    rows a save_<fmt> → load_<fmt> file round trip returns (SAM tags
+    and mate fields, BED12 blocks, narrowPeak signal columns, VCF
+    failed-filter names, GFF3/GTF attributes, FASTQ strand flips)."""
+    gf = {
+        "sam": fixtures.alignments,
+        "fastq": fixtures.alignments,
+        "gff3": fixtures.features,
+        "gtf": fixtures.features,
+        "bed": lambda: _bed_frame(spark),
+        "narrowpeak": lambda: _narrowpeak_frame(spark),
+        "vcf": lambda: _variant_frame(spark),
+        "fasta": lambda: _sequence_frame(spark),
+    }[fmt]()
+    piped = pipe(gf, "cat", in_format=fmt, partitions=4).df
+    want = _file_round_trip(spark, gf, fmt, str(tmp_path / f"rt.{fmt}"))
+    assert piped.schema.simpleString() == want.schema.simpleString()
+    got, want = _canonical(piped), _canonical(want)
+    assert len(got) == gf.df.count()
+    assert got == want
+
+
+def test_pipe_sam_flank_keeps_every_field(fixtures):
+    """Reads carrying RG, MD, OQ, SAM tags and mate fields, piped with
+    flank=500 over 8 bins: every read comes back once, with every field
+    the SAM file codec carries."""
+    from pyspark.sql import functions as F
+
+    src = fixtures.alignments()
+    gf = GenomicFrame(
+        src.df.withColumn("originalQualityScores", F.reverse("qualityScores")),
+        src.meta,
+    )
+    out = pipe(gf, "cat", in_format="sam", partitions=8, flank=500).df
+    fields = [
+        "readName", "readInFragment", "referenceName", "start", "end",
+        "cigar", "sequence", "qualityScores", "readGroupId",
+        "readGroupSampleId", "mismatchingPositions", "originalQualityScores",
+        "mateReferenceName", "mateAlignmentStart", "insertSize",
+        "readNegativeStrand", "mateNegativeStrand", "duplicateRead",
+        "failedVendorQualityChecks",
+    ]
+    assert out.count() == gf.df.count() == 1000
+    assert out.select("readName", "readInFragment").distinct().count() == 1000
+    assert _canonical(out.select(*fields)) == _canonical(gf.df.select(*fields))
+    tags = {
+        (r["readName"], r["readInFragment"]): dict(r["attributes"] or {})
+        for r in out.collect()
+    }
+    want = {
+        (r["readName"], r["readInFragment"]): dict(r["attributes"] or {})
+        for r in gf.df.collect()
+    }
+    assert {k: v.get("XS") for k, v in tags.items()} == {
+        k: v.get("XS") for k, v in want.items()
+    }

@@ -937,3 +937,30 @@ def test_huffman_canonical_ties_break_by_symbol_value():
     # mixed lengths: shorter codes first regardless of declared order
     mixed = cm._HuffmanCodec([7, 3], [2, 1])
     assert mixed.codes == {(1, 0b0): 3, (2, 0b10): 7}
+
+
+def test_save_cram_is_byte_reproducible(spark, fixtures, tmp_path):
+    """Saving one frame three times writes one file: every gzip'd
+    external block pins its header MTIME to 0 (like the .crai writer)
+    instead of stamping the wall-clock second."""
+    import hashlib
+    import time
+
+    from adam_spark.core.genomic_frame import GenomicFrame
+
+    src = fixtures.alignments()
+    gf = GenomicFrame(
+        src.df.orderBy("referenceName", "start", "readName", "readInFragment"),
+        src.meta,
+    )
+    digests, row_sets = set(), []
+    for i in range(3):
+        path = str(tmp_path / f"run{i}.cram")
+        save_cram(gf, path)
+        digests.add(hashlib.sha256(open(path, "rb").read()).hexdigest())
+        rows = load_cram(spark, path).df.collect()
+        row_sets.append(sorted(repr(sorted(r.asDict().items())) for r in rows))
+        time.sleep(1.1)  # cross a second boundary between saves
+    assert len(digests) == 1
+    assert row_sets[0] == row_sets[1] == row_sets[2]
+    assert len(row_sets[0]) == src.df.count()

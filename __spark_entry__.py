@@ -3206,115 +3206,35 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDER MATTERS: the correctness driver records only the FIRST 50
     # entries. Those 50 are exactly the oracle-checked operator queries —
-    # one per §2 / LLM-pipeline operator family.
+    # one per §2 / LLM-pipeline operator family. Entries past the cap are
+    # parked: each shares its builder with an in-window query, and
+    # tools/check_oracle.py (capless, driver-mimicking ANSI session) and
+    # pytest keep covering it.
     #
-    # ROUND-11 WINDOW ROTATION (per the r10 verdict item 7): promoted
-    # in-window — interval_join_group_right (5+ rounds capless-green;
-    # the group-join direction never driver-recorded) and
-    # coverage_binned (aggregated-coverage builder, 5+ rounds
-    # capless-green). Parked in exchange, each with 3+ rounds of
-    # driver-green history (r8-r10) and an in-window family
-    # representative: interval_join_group_left (the symmetric direction
-    # of the SAME group-join builder stays in-window) and
-    # coverage_collapse (coverage_from_reads + coverage_binned keep the
-    # coverage family in-window).
+    #   family (builder)        in-window                    parked
+    #   interval join           inner, right_outer,          full_outer,
+    #                           left_outer, group_right,     flank_broadcast,
+    #                           bucketed_join_intervals      group_left
+    #   aggregated coverage     coverage_binned,             coverage_from_reads,
+    #                           coverage_downsample          collapse, flatten_bin
+    #   sorts                   sort_reads_by_index_rank     sort_by_read_name_rank,
+    #                                                        sort_reads_rank
+    #   vocab / LM              doc_bigram_lm_score_docs     doc_lm_score_docs
+    #   duplicate marking       mark_duplicates_orders       ..._fragments_orders
+    #   decontamination         decontaminate_docs           bloom_decontaminate_docs
+    #   IVF top-k               ann_ivf_topk_quantized       ann_ivf_topk,
+    #                                                        ..._quantized_kmeans
+    #   text signals            text_profile_docs            language_id_docs,
+    #                                                        doc_winnowing
+    #   sampling                sample_mixture_docs          sample_stratified_docs
+    #   slices                  slices_merge_docs            slice_docs
+    #   fragments               fragments_group              reassemble_pairs_orders
+    #   variants                variant_contexts_sites       variants_dedup_sites
     #
-    # ROUND-10 WINDOW ROTATION (per the r9 verdict item 7): promoted
-    # in-window — interval_join_left_outer (the OUTER-join family had no
-    # driver-recorded representative; capless-green every round since
-    # r7) and quality_binning_reads (binQualityScores kernel, capless
-    # green + r9 bqsr1.sam golden 92,899/7,101). Parked in exchange,
-    # each with FOUR rounds of driver-green history (r6-r9) and an
-    # in-window family representative: doc_lm_score_docs
-    # (doc_bigram_lm_score_docs keeps the vocab/LM machinery in-window)
-    # and sort_by_read_name_rank (sort_reads_by_index_rank keeps the
-    # sorts builder in-window).
-    #
-    # ROUND-9 WINDOW ROTATION (per the r8 verdict item 4): the two r8
-    # operators with exact oracles but no driver-recorded row —
-    # dedup_substrings_docs (exact duplicate-substring removal) and
-    # slices_contig_reads_docs (FragmentConverter contiguous-run
-    # stitching) — move in-window. Parked in exchange, each with THREE
-    # rounds of green driver history (r6+r7+r8) and an in-window family
-    # representative: mark_duplicates_fragments_orders (same markdup
-    # builder as the staying mark_duplicates_orders; fragment-specific
-    # insertSize path pinned by tests/test_mark_duplicates_suite.py) and
-    # bloom_decontaminate_docs (same decontamination probe family as the
-    # staying decontaminate_docs; Bloom filter math pinned by
-    # tests/test_llm_ops.py).
-    #
-    # ROUND-8 WINDOW ROTATION (per the r7 verdict item 3):
-    # ann_ivf_topk_quantized — now over the same deterministic first-16
-    # centroids as ann_ivf_topk, making the float-IVF SQL oracle exact
-    # for it (the int8 shortlist is re-ranked by full-precision rescore;
-    # verified bit-equal at sf0.001/sf0.01) — moves in-window. Parked in
-    # exchange: ann_ivf_topk, which has driver-green rows in r6+r7 and
-    # shares the IVF assignment/probe machinery with the quantized
-    # in-window variant (equality on identical centroids pinned by
-    # test_ivf_quantized_matches_float_ivf); it stays in the bench
-    # headline group, and the k-means production shape keeps benching as
-    # ann_ivf_topk_quantized_kmeans.
-    #
-    # ROUND-7b WINDOW ROTATION: gopher_quality_docs (new r7b operator,
-    # full oracle) moves in-window; parked in exchange:
-    # language_id_docs — six rounds of driver-green history, and its
-    # exact signal remains in-window as text_profile_docs' lang_guess
-    # column (same language_id() expression).
-    #
-    # ROUND-7 WINDOW ROTATION (per the r6 verdict item 2):
-    # semantic_dedup_embeddings — the one oracle-checked operator never
-    # driver-recorded (it landed after the r6 window was fixed) — moves
-    # in-window. Parked in exchange: interval_join_right_outer, which
-    # got its driver-recorded green row in r6 and shares the single
-    # parameterized join builder with FOUR queries still in-window
-    # (inner, flank_broadcast, group_left, bucketed), so its code path
-    # keeps both driver-history and in-window family coverage.
-    #
-    # ROUND-6 WINDOW ROTATION (per the r5 verdict's top item): the 12
-    # operator queries added in r5 — never driver-recorded before — now
-    # occupy in-window slots so the driver's CORRECTNESS record covers
-    # them. Parked in exchange: 12 same-builder mirrors with 4-5 rounds
-    # of green driver history whose code paths stay covered by an
-    # in-window family representative, by tools/check_oracle.py (which
-    # runs capless under a driver-mimicking ANSI session), and by
-    # pytest:
-    #   interval_join_left_outer / full_outer / group_right (one
-    #     parameterized builder; inner + flank_broadcast + group_left +
-    #     the incoming right_outer and bucketed variants stay in-window),
-    #   coverage_binned / downsample / flatten_bin (aggregated-coverage
-    #     builder; collapse + from_reads stay),
-    #   sort_reads_rank (sorts family; by_index + incoming by_read_name
-    #     stay), slice_docs (conversions; slices_merge stays),
-    #   variants_dedup_sites (variant family; variant_contexts stays),
-    #   doc_winnowing (text family; text_profile + language_id stay),
-    #   quality_binning_reads (quality.py; left_normalize stays),
-    #   reassemble_pairs_orders (conversions; fragments_group stays).
-    # Also parked since earlier rounds: the two no-oracle queries (pipe
-    # subprocess, multimodal), the four TPC-H-style SQL demos + the
-    # events_hourly plain-SQL window demo (weakest signal: Spark and
-    # oracle sides are near-identical ANSI SQL, surface pinned in-window
-    # by the join/agg family), union_features (unionByName pinned by
-    # pytest), and dedup_ngram_docs (brute-force twin of minhash,
-    # equality pinned by test_minhash_lsh_equals_bruteforce — not
-    # registered at all).
-    # ROUND-12 WINDOW ROTATION (per the r11 verdict item 7): promote
-    # two long-parked capless-green queries for driver-recorded rows —
-    # interval_join_right_outer (parked since r7 with an r6 green row;
-    # same parameterized builder as the in-window joins) and
-    # coverage_downsample (parked since r6; aggregated-coverage
-    # builder). Parked in exchange, each with SEVEN rounds of
-    # driver-green history (r5-r11): interval_join_flank_broadcast
-    # (the flank+broadcast arms stay pytest- and capless-pinned, the
-    # builder stays in-window via inner/group_right/left_outer/
-    # right_outer, and it stays in the bench headline group) and
-    # coverage_from_reads (family stays in-window via coverage_binned,
-    # promoted r11).
-    # ROUND-13 WINDOW ROTATION (per the r12 verdict item 3): promote
-    # quality_classifier_docs (new r12 operator, full exact oracle,
-    # capless-green in r12's judge run, never driver-recorded). Parked
-    # in exchange: sample_stratified_docs (driver-green r6-r12; the
-    # sampling family stays in-window via sample_mixture_docs, and the
-    # stratified arm stays pytest-pinned).
+    # Also parked: the no-oracle queries (pipe_features_cat,
+    # multimodal_features), union_features (unionByName, pinned by
+    # pytest), and the TPC-H-style SQL demos plus events_hourly, whose
+    # Spark and oracle sides are near-identical ANSI SQL.
     return {
         "events_sessions": events_sessions,
         "interval_join_inner": _ij("inner"),
@@ -3370,28 +3290,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # top of this dict) ---
         "pipe_features_cat": pipe_features_cat,
         "multimodal_features": multimodal_features,
-        # r10 rotation: doc_lm_score_docs and sort_by_read_name_rank park
-        # here after FOUR rounds of driver-green history each (r6-r9);
-        # their in-window family representatives are
-        # doc_bigram_lm_score_docs (same vocab/LM machinery) and
-        # sort_reads_by_index_rank (same sorts builder)
         "doc_lm_score_docs": doc_lm_score_docs,
         "sort_by_read_name_rank": sort_by_read_name_rank,
         "interval_join_full_outer": _ij("full_outer"),
-        # r12 rotation: flank_broadcast and coverage_from_reads park
-        # here after seven rounds of driver-green history each (r5-r11)
-        # in exchange for interval_join_right_outer and
-        # coverage_downsample taking driver-recorded slots; both stay
-        # in the bench headline group
         "interval_join_flank_broadcast": _ij(
             "inner", flank=5, broadcast="left", bin_size=64
         ),
         "coverage_from_reads": coverage_from_reads,
-        # r11 rotation: interval_join_group_left and coverage_collapse
-        # park here after 3+ rounds of driver-green history (r8-r10);
-        # their in-window family representatives are
-        # interval_join_group_right (same group-join builder, symmetric
-        # direction) and coverage_from_reads + coverage_binned
         "interval_join_group_left": interval_join_group_left,
         "coverage_collapse": coverage_collapse,
         "coverage_flatten_bin": coverage_flatten_bin,
@@ -3400,14 +3305,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "variants_dedup_sites": variants_dedup_sites,
         "doc_winnowing": doc_winnowing,
         "reassemble_pairs_orders": reassemble_pairs_orders,
-        # r8 rotation: float IVF parks here after r6+r7 driver-green rows;
-        # its machinery stays in-window via ann_ivf_topk_quantized (same
-        # deterministic centroids, equality pinned in pytest) and it stays
-        # in the bench headline group
         "ann_ivf_topk": ann_ivf_topk,
-        # r7 (renamed r8): quantized-IVF-over-kmeans for the bench extended
-        # group (no oracle — k-means is iterative; pinned == float IVF in
-        # pytest)
         "ann_ivf_topk_quantized_kmeans": ann_ivf_topk_quantized_kmeans,
         "q1_pricing_summary": q1_pricing_summary,
         "events_hourly": events_hourly,
@@ -3415,23 +3313,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q3_shipping_priority": q3_shipping_priority,
         "q5_local_supplier": q5_local_supplier,
         "top_parts_by_revenue": top_parts_by_revenue,
-        # r7b rotation: language_id_docs parks here after 6 rounds of
-        # driver-green history — its signal stays in-window as
-        # text_profile_docs' lang_guess column — in exchange for
-        # gopher_quality_docs (new operator, full oracle) taking its
-        # in-window slot
         "language_id_docs": language_id_docs,
-        # r9 rotation: parked after three rounds of driver-green rows
-        # (r6-r8) in exchange for dedup_substrings_docs and
-        # slices_contig_reads_docs (see the ROUND-9 note above); family
-        # representatives mark_duplicates_orders and decontaminate_docs
-        # stay in-window
         "mark_duplicates_fragments_orders": mark_duplicates_fragments_orders,
         "bloom_decontaminate_docs": bloom_decontaminate_docs,
-        # r13 rotation: sample_stratified_docs parks here after seven
-        # rounds of driver-green history (r6-r12) in exchange for
-        # quality_classifier_docs (promoted per the r12 verdict item 3);
-        # the sampling family stays in-window via sample_mixture_docs
         "sample_stratified_docs": sample_stratified_docs,
     }
 

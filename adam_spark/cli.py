@@ -396,11 +396,7 @@ def _cmd_transform_alignments(args) -> int:
             print(f"unknown -storage_level {args.storage_level}", file=sys.stderr)
             return 2
         df = df.persist(level)
-    if args.coalesce:
-        # -force_shuffle_coalesce: a plain coalesce() can collapse
-        # upstream parallelism into the narrow ancestor; the shuffle
-        # variant repartitions instead (TransformAlignments.scala:134)
-        df = df.repartition(args.coalesce) if args.force_shuffle_coalesce else df.coalesce(args.coalesce)
+    df = _maybe_coalesce(df, args.coalesce, args.force_shuffle_coalesce)
     out = gf.__class__(df, gf.meta)
     # a fresh @PG program record goes into SAM/BAM headers unless
     # -disable_pg (TransformAlignments.scala:188)
@@ -409,7 +405,7 @@ def _cmd_transform_alignments(args) -> int:
         if args.disable_pg
         else "@PG\tID:adam_spark\tPN:adam_spark\tCL:transform_alignments"
     )
-    single_file = (args.single or not args.sharded) and not args.defer_merging
+    single_file = _resolve_single(args)
     is_fastq_out = args.output.lower().endswith((".fq", ".fastq"))
     save_kwargs = {}
     # isSorted flows to the SAM header exactly when a sort ran

@@ -805,87 +805,23 @@ def srp_band_hashes(
     corpus (and therefore readStream-composable; ``extra_cols`` carries
     e.g. an event-time column through for the streaming consumer).
     """
-    return _srp_band_hash_arrays(
-        df, id_col, vec_col, dim, rows_per_band, bands, seed, extra_cols
-    ).select("id", *extra_cols, F.posexplode("__bhs").alias("band", "band_hash"))
-
-
-#: max corpus-matrix bytes (N·dim·8) broadcast for GEMM pair verification;
-#: past this the verify falls back to the shuffle re-join, which never
-#: materializes the corpus on any single machine
-GEMM_VERIFY_CAP_BYTES = 256 * 1024 * 1024
-
-
-def _verify_pairs_gemm(
-    corpus: DataFrame,
-    pairs: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    band_hashes: DataFrame,
-) -> DataFrame:
-    """Score (id_a, id_b, band) candidate pairs against a broadcast corpus
-    matrix.
-
-    One driver collect builds the dense float64 matrix + id→row index;
-    executors score each Arrow batch with a vectorized gather and a
-    row-wise dot (numerically the same dot/(‖a‖·‖b‖) as the join-based
-    fold, modulo summation order — sim is rounded to 6 dp either way).
-
-    ``band_hashes`` (an (id, __bhs array<long>) frame) holds the
-    EXECUTOR-computed SRP band-hash arrays that generated the
-    candidates; the UDF keeps each pair only at its FIRST shared band,
-    so a pair matching in k bands is scored once and no dedup runs.
-    The hashes are carried through rather than recomputed from the
-    collected matrix: BLAS summation order can differ between the
-    driver's full-matrix matmul and the executors' batch matmuls, and a
-    sign flip on a near-zero projection would make the pair's own band
-    unequal — silently dropping a true candidate (the MinHash
-    first-shared-band verify uses the same carry-the-arrays treatment,
-    dedup.py).
-
-    Lifecycle: the broadcast matrix lives until the session's context GC
-    drops it (the returned DataFrame's closure holds it; Spark cannot
-    destroy a broadcast a lazy plan still references). Sessions looping
-    over many corpora should materialize the result and let the variable
-    go out of scope rather than accumulating returned DataFrames.
-    """
-    pdf = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toPandas()
-    if not len(pdf):  # empty corpus: no candidates to score
-        return pairs.select(
-            "id_a", "id_b", F.lit(None).cast("double").alias("sim")
-        ).where(F.lit(False))
-    mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-    norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-300)
-    id2ix = {i: ix for ix, i in enumerate(pdf["id"])}
-    # slim collect: N×bands longs, tiny next to the matrix itself
-    bpdf = band_hashes.select("id", "__bhs").toPandas()
-    bh_map = dict(zip(bpdf["id"], bpdf["__bhs"]))
-    bh_mat = np.asarray(
-        [np.asarray(bh_map[i], dtype=np.int64) for i in pdf["id"]]
-    )  # N×bands
-    bc = corpus.sparkSession.sparkContext.broadcast((id2ix, mat, norms, bh_mat))
-
-    @F.pandas_udf("double")
-    def pair_cos_first(ia: pd.Series, ib: pd.Series, band: pd.Series) -> pd.Series:
-        idx, m, nrm, bh = bc.value
-        ka = ia.map(idx).to_numpy(dtype=np.int64)
-        kb = ib.map(idx).to_numpy(dtype=np.int64)
-        # keep only rows where this band is the pair's first shared band
-        eq = bh[ka] == bh[kb]  # batch×bands; row's own band always True
-        first = eq.argmax(axis=1)
-        keep = first == band.to_numpy(dtype=np.int64)
-        sim = np.full(len(ka), -2.0)  # sentinel below any cosine
-        if keep.any():
-            num = np.einsum("ij,ij->i", m[ka[keep]], m[kb[keep]])
-            sim[keep] = num / (nrm[ka[keep]] * nrm[kb[keep]])
-        return pd.Series(sim)
-
+    # posexplode_outer + an explicit null filter (same rows as
+    # posexplode): for a plain posexplode Catalyst infers a
+    # size(__bhs) > 0 filter and pushes it under a second copy of the
+    # projection UDF, which then runs twice per row
     return (
-        pairs.withColumn("sim", pair_cos_first("id_a", "id_b", "band"))
-        .where(F.col("sim") >= F.lit(threshold))
-        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
+        _srp_band_hash_arrays(
+            df, id_col, vec_col, dim, rows_per_band, bands, seed, extra_cols
+        )
+        .select("id", *extra_cols, F.posexplode_outer("__bhs").alias("band", "band_hash"))
+        .where(F.col("band_hash").isNotNull())
     )
+
+
+#: max corpus-matrix bytes (N·dim·8) the fused kernel broadcasts; past
+#: this the band equi-join verifies by re-joining the vectors, which
+#: never materializes the corpus on any single machine
+FUSED_CAP_BYTES = 256 * 1024 * 1024
 
 
 def _near_dup_gemm_fused(
@@ -898,23 +834,18 @@ def _near_dup_gemm_fused(
     bands: int,
     seed: int = 7,
 ) -> DataFrame:
-    """Dense-banding near-dup in one fused pass: broadcast matrix +
-    blocked numpy band-compare/GEMM, zero shuffles, zero joins.
+    """Near-dup in one fused pass: broadcast matrix + blocked numpy
+    band-compare/GEMM, zero shuffles, zero joins.
 
-    When banding cannot prune (expected shared bands per RANDOM pair =
-    bands·2^-rows_per_band ≥ ~0.5, i.e. thresholds low enough that the
-    LSH parameters degenerate toward all-pairs), the band equi-join
-    materializes a near-N²/band-collision candidate stream, shuffles
-    it, and streams it row-by-row through the scoring UDF — measured
-    3.7M Arrow-crossing rows for N=2000 at threshold 0.4. This kernel
-    computes the IDENTICAL pair set ((share ≥1 band) ∧ (cos ≥
-    threshold), each pair once) directly: hashes and sims both come
-    from blocked matrix products against the broadcast corpus, and the
-    only Spark stage is one ``mapInPandas`` over contiguous row-index
-    ranges (``spark.range(n, numPartitions=P)`` — no shuffle at all).
-    Candidate detection is O(N²·bands/64) vectorized byte-compares —
-    the same asymptotics the degenerate band join already had, minus
-    the exchanges and the Python row boundary.
+    Computes the IDENTICAL pair set to the band equi-join ((share ≥1
+    band) ∧ (cos ≥ threshold), each pair once) directly: hashes and
+    sims both come from blocked matrix products against the broadcast
+    corpus, and the only Spark stage is one ``mapInPandas`` over
+    contiguous row-index ranges (``spark.range(n, numPartitions=P)`` —
+    no shuffle at all). Candidate detection is O(N²·bands) vectorized
+    compares, where the join pays one Spark row per colliding
+    (pair, band) — see :func:`embedding_near_duplicates` for when each
+    wins.
 
     Semantics match the band-join path bit-for-bit: one hash
     computation serves every pair (no executor/driver BLAS-order
@@ -995,94 +926,65 @@ def embedding_near_duplicates(
     tunes from the threshold; the DuckDB oracle replicates the
     identical banding, so recall behavior is part of the spec).
 
-    Three strategies, auto-selected on banding density and corpus size:
+    Two strategies, both exact over the same candidate definition:
 
-    - DENSE banding (expected shared bands per random pair,
-      bands·2^-rows_per_band, ≥ 0.5 — i.e. the low-threshold regime
-      where LSH degenerates toward all-pairs) AND the matrix fits
-      :data:`GEMM_VERIFY_CAP_BYTES`: the fused kernel
+    - ``rows_per_band ≤ 8`` and the corpus matrix fits
+      :data:`FUSED_CAP_BYTES` (N·dim·8): the fused kernel
       (:func:`_near_dup_gemm_fused`) — broadcast matrix, blocked numpy
-      band-compare + GEMM, identical pair set, zero shuffles. The band
-      equi-join in this regime built a near-all-pairs candidate stream
-      (measured 3.7M Arrow rows for N=2000 at threshold 0.4) only to
-      re-derive what one blocked compare computes in place.
-    - corpus matrix ≤ :data:`GEMM_VERIFY_CAP_BYTES` (N·dim·8): the
-      vectors broadcast once as a dense numpy matrix and every RAW
-      band-join candidate is scored by an Arrow-batched gather + row
-      dot (one GEMM-shaped pass per batch). The candidate-dedup
-      shuffle moves AFTER the threshold filter, where the survivor set
-      is tiny — at weak-pruning thresholds (sign-bit LSH below ~0.6)
-      this sidesteps deduplicating a near-all-pairs candidate stream.
-    - larger corpora: candidates are deduplicated first (one exchange)
-      and verified by re-joining the vectors — the only shuffles are
-      the slim band join and the id re-joins; nothing broadcasts, so
-      the path survives a 100 TB corpus.
+      band-compare + GEMM, zero shuffles.
+    - otherwise: the band equi-join. Candidates are deduplicated (one
+      exchange) and verified by re-joining the vectors — the only
+      shuffles are the slim band join and the id re-joins; nothing
+      broadcasts, so the path survives a 100 TB corpus.
 
+    Why ``rows_per_band ≤ 8``: the fused kernel does one vectorized
+    compare per (pair, band); the join does one Spark row per COLLIDING
+    (pair, band), and a random pair collides in a band with probability
+    2^-rows_per_band. One join row costs about 2^11 fused compares
+    (N=20,000 at threshold 0.6: 5·10^7 candidate rows in ~135 s against
+    1.3·10^10 compares in ~12 s), so the kernel wins while
+    2^-rows_per_band > 2^-11 — of the widths :func:`srp_params` picks
+    (4, 8, 16), exactly r ≤ 8 (sweep in MEASURED.md).
     """
     rows_per_band, bands = srp_params(threshold)
     from pyspark.storagelevel import StorageLevel
 
-    # ONE probe job serves every strategy decision below: corpus row
-    # count + observed vector width (first non-null size — equally
-    # valid for the cap heuristic as the old first-row probe, and both
-    # strategies are exact either way). Previously the dense branch ran
-    # a first() job then a count() job, and the join path re-ran the
-    # width probe — three sequential driver jobs for two scalars.
-    probe = corpus.select(
-        F.count(F.lit(1)).alias("n"),
-        F.first(F.size(F.col(vec_col)), ignorenulls=True).alias("d"),
-    ).first()
-    n_corpus = int(probe["n"] or 0)
-    true_dim = int(probe["d"]) if probe and probe["d"] is not None else dim
-
-    # dense-banding fast path (strategy 1 in the docstring): decided
-    # BEFORE the band-hash pipeline exists, from the LSH parameters and
-    # the probe above
-    if bands * (0.5 ** rows_per_band) >= 0.5:
-        if n_corpus * true_dim * 8 <= GEMM_VERIFY_CAP_BYTES:
+    if rows_per_band <= 8:
+        # one probe job for the cap: corpus row count + observed vector
+        # width (the `dim` argument only parameterizes the SRP
+        # projection; trusting it would under-estimate the matrix
+        # whenever a caller passes a dim smaller than the data's)
+        probe = corpus.select(
+            F.count(F.lit(1)).alias("n"),
+            F.first(F.size(F.col(vec_col)), ignorenulls=True).alias("d"),
+        ).first()
+        n_corpus = int(probe["n"] or 0)
+        true_dim = int(probe["d"]) if probe["d"] is not None else dim
+        if n_corpus * true_dim * 8 <= FUSED_CAP_BYTES:
             return _near_dup_gemm_fused(
                 corpus, threshold, id_col, vec_col, dim, rows_per_band, bands
             )
     # persisted in ARRAY form: feeds both self-join sides (Spark does
     # not reuse the exchange across differently-aliased sides, so the
-    # projection UDF would otherwise run twice) AND, on the GEMM path,
-    # the first-shared-band verify — carrying the executor-computed
-    # hashes through avoids a driver recompute whose BLAS summation
-    # order could flip a near-zero projection bit
+    # projection UDF would otherwise run twice); eager, because both
+    # self-join sides would race a lazy cache
     hashed_arr = _srp_band_hash_arrays(
         corpus, id_col, vec_col, dim, rows_per_band, bands
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # eager (both self-join sides would race a lazy cache); the cap
-    # estimate reuses the probe's count (hashed_arr is a row-for-row
-    # select of corpus) and TRUE vector width — the `dim` argument only
-    # parameterizes the SRP projection; trusting it here would
-    # under-estimate the corpus matrix whenever a caller passes a dim
-    # smaller than the data's
     hashed_arr.count()
-    n_vec = n_corpus
     hashed = hashed_arr.select("id", F.posexplode("__bhs").alias("band", "band_hash"))
     a = hashed.select(F.col("id").alias("id_a"), "band", "band_hash")
     b = hashed.select(F.col("id").alias("id_b"), "band", "band_hash")
-    raw = (
-        a.join(b, ["band", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "band")
-    )
-    if n_vec * true_dim * 8 <= GEMM_VERIFY_CAP_BYTES:
-        # the verify UDF keeps each pair only at its first shared band
-        # (executor-computed hash arrays carried through the persisted
-        # table — one slim extra collect, bit-identical to the hashes
-        # that generated the candidates), so candidates are scored once
-        # and no dedup runs
-        return _verify_pairs_gemm(
-            corpus, raw, threshold, id_col, vec_col, band_hashes=hashed_arr,
-        )
     shuffle_parts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     # one exchange serves dedup + verify rebalance (partitioning on id_a
     # satisfies the (id_a, id_b) clustering of dropDuplicates)
-    cand = raw.select("id_a", "id_b").repartition(
-        shuffle_parts, "id_a"
-    ).dropDuplicates(["id_a", "id_b"])
+    cand = (
+        a.join(b, ["band", "band_hash"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .repartition(shuffle_parts, "id_a")
+        .dropDuplicates(["id_a", "id_b"])
+    )
     # norms precomputed once per VECTOR (N rows) instead of per PAIR —
     # the verify fold then evaluates one dot product per candidate, not
     # three; numerically identical to computing norms inline

@@ -79,14 +79,14 @@ _FLAG_BITS = [
 ]
 
 #: the 12-bit SAM flag word as one SQL expression
-_SAM_FLAGS_SQL = " + ".join(
+SAM_FLAGS_SQL = " + ".join(
     ["0"] + [f"CASE WHEN {cond} THEN {bit} ELSE 0 END" for bit, cond in _FLAG_BITS]
 )
 
 
 def sam_flags(df: DataFrame) -> Column:
     """Reconstruct the 12-bit SAM flag word from the boolean columns."""
-    return F.expr(_SAM_FLAGS_SQL)
+    return F.expr(SAM_FLAGS_SQL)
 
 
 def view_filter(

@@ -25,7 +25,7 @@ from adam_spark.core.metadata import (
     Reference,
     SequenceDictionary,
 )
-from adam_spark.operators.filters import sam_flags
+from adam_spark.operators.filters import SAM_FLAGS_SQL
 
 
 #: SAM body line → its tab-separated fields (``value`` is the line)
@@ -298,94 +298,67 @@ def header_metadata_from_lines(
     )
 
 
+#: typed-column-backed tags, rendered from their authoritative columns
+#: (operators update those, not the raw map values). AlignmentConverter-
+#: Suite 'testing the fields in a converted ADAM Read': originalStart 12
+#: emits OP:i:13; OC/OQ verbatim
+_TYPED_TAG_SQL = {
+    "MD": "concat('MD:Z:', mismatchingPositions)",
+    "RG": "concat('RG:Z:', readGroupId)",
+    "OP": "concat('OP:i:', CAST(originalStart + 1 AS STRING))",
+    "OC": "concat('OC:Z:', originalCigar)",
+    "OQ": "concat('OQ:Z:', originalQualityScores)",
+}
+
+#: optional tags, tab-joined: the map's entries in stored order (the
+#: loader keeps file order) with the typed columns substituted IN PLACE
+#: — a load→save cycle is byte-stable against third-party files (pinned
+#: vs ordered.sam / sorted.sam in tests/test_reference_goldens.py) — then
+#: each typed tag the map never carried (e.g. freshly computed MD)
+_TAGS_SQL = (
+    "array_join(filter(concat("
+    "coalesce(transform(map_entries(attributes), e -> CASE e.key "
+    + " ".join(f"WHEN '{t}' THEN {sql}" for t, sql in _TYPED_TAG_SQL.items())
+    + " ELSE concat(e.key, ':', e.value) END), CAST(array() AS array<string>)), "
+    "array("
+    + ", ".join(
+        f"CASE WHEN NOT coalesce(map_contains_key(attributes, '{t}'), false)"
+        f" THEN {sql} END"
+        for t, sql in _TYPED_TAG_SQL.items()
+    )
+    + ")), x -> x IS NOT NULL), '\\t')"
+)
+
+#: one SAM body line from ALIGNMENT columns
+_LINE_SQL = (
+    "concat_ws('\\t', "
+    "coalesce(readName, '*'), "
+    f"CAST({SAM_FLAGS_SQL} AS STRING), "
+    "coalesce(referenceName, '*'), "
+    "coalesce(CAST(start + 1 AS STRING), '0'), "
+    "coalesce(CAST(mappingQuality AS STRING), '0'), "
+    "coalesce(cigar, '*'), "
+    # IS NOT NULL guard: null <=> null would emit RNEXT '=' with RNAME
+    # '*' for unmapped unpaired reads
+    "coalesce(CASE WHEN mateReferenceName IS NOT NULL"
+    " AND mateReferenceName <=> referenceName THEN '='"
+    " ELSE mateReferenceName END, '*'), "
+    "coalesce(CAST(mateAlignmentStart + 1 AS STRING), '0'), "
+    "coalesce(CAST(insertSize AS STRING), '0'), "
+    "coalesce(sequence, '*'), "
+    "coalesce(qualityScores, '*'), "
+    f"nullif({_TAGS_SQL}, '')) AS value"
+)
+
+
 def sam_body_lines(df: DataFrame, keep=()) -> DataFrame:
     """ALIGNMENT rows → SAM body lines (column ``value``, after the
     pass-through columns named in ``keep``), including optional tags:
-    MD/RG re-emitted from their typed columns (authoritative —
+    MD/RG/OP/OC/OQ re-emitted from their typed columns (authoritative —
     operators update them), every other attribute passed through as
-    TAG:TYPE:VALUE."""
+    TAG:TYPE:VALUE. SQL text, so the build costs a few gateway calls."""
     df = schemas.conform(df, schemas.ALIGNMENT, keep)
-    flags = sam_flags(df)
-    # typed-column-backed tags, rendered from their authoritative
-    # columns (operators update those, not the raw map values)
-    typed = {
-        "MD": F.when(
-            F.col("mismatchingPositions").isNotNull(),
-            F.concat(F.lit("MD:Z:"), F.col("mismatchingPositions")),
-        ),
-        "RG": F.when(
-            F.col("readGroupId").isNotNull(),
-            F.concat(F.lit("RG:Z:"), F.col("readGroupId")),
-        ),
-        # AlignmentConverterSuite 'testing the fields in a converted ADAM
-        # Read': originalStart 12 emits OP:i:13; OC/OQ verbatim
-        "OP": F.when(
-            F.col("originalStart").isNotNull(),
-            F.concat(F.lit("OP:i:"), (F.col("originalStart") + 1).cast("string")),
-        ),
-        "OC": F.when(
-            F.col("originalCigar").isNotNull(),
-            F.concat(F.lit("OC:Z:"), F.col("originalCigar")),
-        ),
-        "OQ": F.when(
-            F.col("originalQualityScores").isNotNull(),
-            F.concat(F.lit("OQ:Z:"), F.col("originalQualityScores")),
-        ),
-    }
-    attrs = F.coalesce(F.col("attributes"), F.lit(None).cast("map<string,string>"))
-    # tags emit in the map's stored order (the loader keeps file order),
-    # with the typed columns substituted IN PLACE — a load→save cycle is
-    # byte-stable against third-party files (pinned vs ordered.sam /
-    # sorted.sam in tests/test_reference_goldens.py); a typed tag the
-    # map never carried (e.g. freshly computed MD) appends at the end
-    in_place = F.transform(
-        F.map_entries(attrs),
-        lambda e: F.when(e["key"] == "MD", typed["MD"])
-        .when(e["key"] == "RG", typed["RG"])
-        .when(e["key"] == "OP", typed["OP"])
-        .when(e["key"] == "OC", typed["OC"])
-        .when(e["key"] == "OQ", typed["OQ"])
-        .otherwise(F.concat(e["key"], F.lit(":"), e["value"])),
-    )
-    appended = [
-        F.when(~F.coalesce(F.map_contains_key(attrs, tag), F.lit(False)), expr)
-        for tag, expr in typed.items()
-    ]
-    other_tags = F.array_join(
-        F.filter(
-            F.concat(
-                F.coalesce(in_place, F.array().cast("array<string>")),
-                F.array(*appended),
-            ),
-            lambda x: x.isNotNull(),
-        ),
-        "\t",
-    )
-    line = F.concat_ws(
-        "\t",
-        F.coalesce(F.col("readName"), F.lit("*")),
-        flags.cast("string"),
-        F.coalesce(F.col("referenceName"), F.lit("*")),
-        F.coalesce((F.col("start") + 1).cast("string"), F.lit("0")),
-        F.coalesce(F.col("mappingQuality").cast("string"), F.lit("0")),
-        F.coalesce(F.col("cigar"), F.lit("*")),
-        F.coalesce(
-            F.when(
-                # isNotNull guard: null==null under eqNullSafe would emit
-                # RNEXT '=' with RNAME '*' for unmapped unpaired reads
-                F.col("mateReferenceName").isNotNull()
-                & F.col("mateReferenceName").eqNullSafe(F.col("referenceName")),
-                F.lit("="),
-            ).otherwise(F.col("mateReferenceName")),
-            F.lit("*"),
-        ),
-        F.coalesce((F.col("mateAlignmentStart") + 1).cast("string"), F.lit("0")),
-        F.coalesce(F.col("insertSize").cast("string"), F.lit("0")),
-        F.coalesce(F.col("sequence"), F.lit("*")),
-        F.coalesce(F.col("qualityScores"), F.lit("*")),
-        F.when(other_tags != "", other_tags),
-    ).alias("value")
-    return df.select(*keep, line)
+    return df.selectExpr(*(schemas.sql_ident(k) for k in keep), _LINE_SQL)
 
 
 def sam_header_lines(
@@ -454,8 +427,7 @@ def save_sam(
     ``sort_order`` overrides the ``is_sorted`` shorthand — the
     reference's saveAsSam sortOrder param (e.g. "queryname" after
     sortByReadName; byte-pinned against readname_sorted.sam)."""
-    df = schemas.conform(gf.df, schemas.ALIGNMENT)
-    body = sam_body_lines(df)
+    body = sam_body_lines(gf.df)
     header = sam_header_lines(
         gf.meta, pg_line=pg_line,
         sort_order=sort_order or ("coordinate" if is_sorted else "unsorted"),
@@ -467,7 +439,7 @@ def save_sam(
         # prepended (the reference's -single shape)
         write_text_single_file(body, path, header_lines=header)
         return
-    hdr_df = local_lines_df(df.sparkSession, [(h,) for h in header], "value string")
+    hdr_df = local_lines_df(gf.df.sparkSession, [(h,) for h in header], "value string")
     out = (
         hdr_df.select(F.lit(0).alias("__o"), "value")
         .unionByName(body.select(F.lit(1).alias("__o"), "value"))

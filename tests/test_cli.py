@@ -230,6 +230,17 @@ def test_transform_alignments_predicates_and_layout(spark, sam_path, tmp_path):
     assert len(rows) == 5 and all(r["readMapped"] for r in rows)
 
 
+@pytest.mark.parametrize("extra", [[], ["-force_shuffle_coalesce"]])
+def test_transform_alignments_coalesce_unset(spark, sam_path, tmp_path, extra):
+    """-coalesce -1 is the reference's "unset" default
+    (TransformAlignments.scala:134): the output keeps every read."""
+    from adam_spark.sources.sam import load_sam
+
+    out = str(tmp_path / "out.sam")
+    assert main(["transform_alignments", sam_path, out, "-coalesce", "-1", *extra]) == 0
+    assert load_sam(spark, out).df.count() == 6
+
+
 def test_transform_alignments_concat_and_partitioned_save(spark, sam_path, tmp_path):
     """-concat unions a second input; -partition_by_start_pos writes the
     Hive-partitioned positionBin layout readable by the pruned loader."""

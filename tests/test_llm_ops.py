@@ -184,21 +184,99 @@ def test_embedding_near_dup_lsh_matches_bruteforce(embs):
     assert "CartesianProduct" not in plan
 
 
-def test_embedding_near_dup_join_verify_matches_gemm(embs, monkeypatch):
-    """Both verify strategies (broadcast GEMM vs shuffle re-join) emit the
-    identical pair set — the fallback must not change semantics."""
+def test_embedding_near_dup_join_verify_matches_fused(embs, monkeypatch):
+    """Both strategies (fused kernel vs band join + re-join verify) emit
+    the identical pair set — the over-cap path must not change
+    semantics."""
     from adam_spark.llm import similarity as S
 
-    gemm = sorted(
+    fused = sorted(
         (r["id_a"], r["id_b"], r["sim"])
         for r in S.embedding_near_duplicates(embs, threshold=0.4, dim=64).collect()
     )
-    monkeypatch.setattr(S, "GEMM_VERIFY_CAP_BYTES", 0)
+    monkeypatch.setattr(S, "FUSED_CAP_BYTES", 0)
     joined = sorted(
         (r["id_a"], r["id_b"], r["sim"])
         for r in S.embedding_near_duplicates(embs, threshold=0.4, dim=64).collect()
     )
-    assert gemm == joined
+    assert fused == joined
+
+
+def test_near_dup_fused_path_has_no_join(spark):
+    """At dense banding (threshold 0.4 → 30 bands × 4 bits) the fused
+    kernel must plan as a single mapInPandas over a range — no band
+    equi-join, no exchange, no Python-UDF candidate stream (the join
+    built a near-all-pairs stream only to re-derive what one blocked
+    compare computes in place)."""
+    from adam_spark.llm.similarity import embedding_near_duplicates
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(40)]
+    embs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = embedding_near_duplicates(embs, threshold=0.4, dim=8)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    for node in ("Join", "Exchange", "BatchEvalPython", "ArrowEvalPython"):
+        assert node not in plan, f"fused path must not contain {node}"
+    # sparse banding (high threshold) keeps the generate→verify join
+    out2 = embedding_near_duplicates(embs, threshold=0.95, dim=8)
+    assert "Join" in out2._jdf.queryExecution().executedPlan().toString()
+
+
+def test_near_dup_strategies_on_planted_pairs(spark, monkeypatch):
+    """r = 8 (threshold 0.7) takes the fused kernel, r = 16 (0.9) the
+    band join; on a corpus with planted pairs at cosine ≥ 0.9 both
+    default paths, the forced join path and the all-pairs oracle return
+    the same rows."""
+    from adam_spark.llm import similarity as S
+
+    assert S.srp_params(0.7)[0] == 8 and S.srp_params(0.9)[0] == 16
+    rng = np.random.default_rng(11)
+    rows = []
+    for i in range(150):
+        v = rng.normal(size=32)
+        rows.append((2 * i, [float(x) for x in v]))
+        if i < 12:  # planted partner: cosine ≈ 0.99
+            w = v + rng.normal(scale=0.1, size=32)
+            rows.append((2 * i + 1, [float(x) for x in w]))
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def pairs(df):
+        return {(r["id_a"], r["id_b"]): r["sim"] for r in df.collect()}
+
+    def same(got, want):
+        # numpy and the Catalyst fold sum in different orders, so the
+        # 6-dp sims may differ in the last digit
+        assert sorted(got) == sorted(want)
+        assert all(abs(got[k] - want[k]) <= 2e-6 for k in want)
+
+    fused = S.embedding_near_duplicates(corpus, threshold=0.7, dim=32)
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Join" not in plan, plan
+    defaults = {0.7: pairs(fused), 0.9: pairs(S.embedding_near_duplicates(corpus, 0.9, dim=32))}
+    monkeypatch.setattr(S, "FUSED_CAP_BYTES", 0)
+    planted = {(2 * i, 2 * i + 1) for i in range(12)}
+    for t, got in defaults.items():
+        brute = pairs(embedding_near_duplicates_bruteforce(corpus, threshold=t))
+        assert planted <= set(brute)
+        same(got, brute)
+        same(pairs(S.embedding_near_duplicates(corpus, t, dim=32)), brute)
+
+
+def test_srp_band_hashes_runs_projection_once(spark):
+    """The projection UDF appears once in the executed plan: a plain
+    posexplode lets Catalyst push an inferred size() filter under a
+    second copy of it."""
+    from adam_spark.llm.similarity import srp_band_hashes, srp_params
+
+    rng = np.random.default_rng(2)
+    rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(20)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    r, b = srp_params(0.9)
+    hashed = srp_band_hashes(df, "vec_id", "embedding", 16, r, b)
+    assert hashed.count() == 20 * b
+    plan = hashed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_srp_prunes_at_high_threshold(spark):
@@ -623,7 +701,7 @@ def test_embedding_near_dup_empty_corpus(spark):
     from adam_spark.llm.similarity import embedding_near_duplicates
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    # 0.4: dense banding (fused kernel); 0.95: band join + GEMM verify
+    # 0.4: fused kernel; 0.95: band join + re-join verify
     for t in (0.4, 0.95):
         out = embedding_near_duplicates(empty, threshold=t, dim=64)
         assert out.columns == ["id_a", "id_b", "sim"]

@@ -139,28 +139,6 @@ class TestLoadTableSpread:
         df = load_table(spark, SF001, "supplier", spread=True)
         assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
 
-    def test_near_dup_fused_path_has_no_join(self, spark):
-        """At dense banding (threshold 0.4 → 30 bands × 4 bits) the
-        fused kernel must plan as a single mapInPandas over a range —
-        no band equi-join, no exchange, no Python-UDF candidate stream
-        (guide §2.4/§4: the join built a near-all-pairs stream only to
-        re-derive what one blocked compare computes in place)."""
-        import numpy as np
-
-        from adam_spark.llm.similarity import embedding_near_duplicates
-
-        rng = np.random.default_rng(5)
-        rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(40)]
-        embs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        out = embedding_near_duplicates(embs, threshold=0.4, dim=8)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan
-        for node in ("Join", "Exchange", "BatchEvalPython", "ArrowEvalPython"):
-            assert node not in plan, f"fused path must not contain {node}"
-        # sparse banding (high threshold) keeps the generate→verify join
-        out2 = embedding_near_duplicates(embs, threshold=0.95, dim=8)
-        assert "Join" in out2._jdf.queryExecution().executedPlan().toString()
-
     def test_interval_left_key_matches_pin_path(self, spark):
         """The entry declares left_key='id' (orders keys, unique per SF)
         for the outer/group interval joins. Pin (a) the key-path result

@@ -13,9 +13,9 @@ would survive 100 TB — these assertions do. Rules:
   pruned column list (never SELECT * of lineitem into a filter that
   should have reached the scan);
 - building the SAM decode → duplicate marking → coordinate sort plan,
-  and the benchmark's four catalog queries, stays within a gateway-call
-  budget (their expressions are SQL text), and a repeated table load
-  launches no schema-inference job.
+  the SAM body-line render, and the benchmark's four catalog queries
+  stays within a gateway-call budget (their expressions are SQL text),
+  and a repeated table load launches no schema-inference job.
 """
 
 from __future__ import annotations
@@ -126,23 +126,45 @@ def test_ivf_assignment_has_no_corpus_window(plans):
 TRANSFORM_BUILD_BUDGET = 1000
 
 
+#: a two-read SAM for the build budgets below
+TWO_READ_SAM = (
+    "@SQ\tSN:chr1\tLN:1000\n@RG\tID:rg1\tSM:s1\tLB:lib1\n"
+    "r1\t99\tchr1\t100\t60\t10M\t=\t200\t110\tACGTACGTAC\tIIIIIIIIII\tRG:Z:rg1\n"
+    "r1\t147\tchr1\t200\t60\t10M\t=\t100\t-110\tACGTACGTAC\tIIIIIIIIII\tRG:Z:rg1\n"
+)
+
+
 def test_transform_build_gateway_budget(spark, py4j_calls, tmp_path):
     from adam_spark.operators.mark_duplicates import mark_duplicates
     from adam_spark.operators.sorts import sort_by_reference_position
     from adam_spark.sources.sam import load_sam
 
     sam = tmp_path / "in.sam"
-    sam.write_text(
-        "@SQ\tSN:chr1\tLN:1000\n@RG\tID:rg1\tSM:s1\tLB:lib1\n"
-        "r1\t99\tchr1\t100\t60\t10M\t=\t200\t110\tACGTACGTAC\tIIIIIIIIII\tRG:Z:rg1\n"
-        "r1\t147\tchr1\t200\t60\t10M\t=\t100\t-110\tACGTACGTAC\tIIIIIIIIII\tRG:Z:rg1\n"
-    )
+    sam.write_text(TWO_READ_SAM)
     before = py4j_calls.n
     gf = load_sam(spark, str(sam))
     libs = {g.id: g.library or g.id for g in gf.meta.read_groups}
     sort_by_reference_position(mark_duplicates(gf.df, libs))
     used = py4j_calls.n - before
     assert used < TRANSFORM_BUILD_BUDGET, used
+
+
+#: gateway commands allowed for building the SAM body-line projection
+#: that save_sam, save_bam, save_cram and pipe render with; SQL text
+#: measured 45 calls, the Column operator tree it replaced 1,304
+SAM_LINES_BUILD_BUDGET = 300
+
+
+def test_sam_lines_build_gateway_budget(spark, py4j_calls, tmp_path):
+    from adam_spark.sources.sam import load_sam, sam_body_lines
+
+    sam = tmp_path / "in.sam"
+    sam.write_text(TWO_READ_SAM)
+    df = load_sam(spark, str(sam)).df
+    before = py4j_calls.n
+    sam_body_lines(df)
+    used = py4j_calls.n - before
+    assert used < SAM_LINES_BUILD_BUDGET, used
 
 
 #: the benchmark's catalog workload (perfbench/run.py CATALOG)

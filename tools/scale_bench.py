@@ -567,13 +567,23 @@ def _ops(spark: SparkSession, scale: str):
         # θ=0.4 is the contract query's setting — the DOCUMENTED
         # weak-prune regime (r=4 sign bits: random collisions scale
         # n²/2^r, similarity.srp_params docstring); θ=0.9 is the
-        # production near-dup regime (r=16 prunes hard) — measured
-        # side by side so the slope table shows the regime difference
+        # production near-dup regime (r=16 prunes hard). θ=0.6 (r=8)
+        # and θ=0.8/0.95 (r=16) complete the strategy sweep in
+        # MEASURED.md: r ≤ 8 takes the fused kernel, r=16 the band join
         "embedding_near_dup_t04": lambda: embedding_near_duplicates(
             rd("embeddings"), threshold=0.4
         ).count(),
+        "embedding_near_dup_t06": lambda: embedding_near_duplicates(
+            rd("embeddings"), threshold=0.6
+        ).count(),
+        "embedding_near_dup_t08": lambda: embedding_near_duplicates(
+            rd("embeddings"), threshold=0.8
+        ).count(),
         "embedding_near_dup_t09": lambda: embedding_near_duplicates(
             rd("embeddings"), threshold=0.9
+        ).count(),
+        "embedding_near_dup_t095": lambda: embedding_near_duplicates(
+            rd("embeddings"), threshold=0.95
         ).count(),
         "mark_duplicates": lambda: mark_duplicates(rd("alignments")).count(),
         # SemDeDup scaling: sqrt-N default centroids (the r7 sizing

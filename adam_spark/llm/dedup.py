@@ -385,6 +385,86 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
 VERIFY_BROADCAST_CAP_BYTES = 256 * 1024 * 1024
 
 
+def _minhash_verify(
+    raw: DataFrame,
+    side_a: tuple[str, str, DataFrame, DataFrame],
+    side_b: tuple[str, str, DataFrame, DataFrame],
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of MinHash band-join candidates, shared by
+    :func:`minhash_lsh_pairs` and :func:`minhash_lsh_pairs_between`.
+
+    ``raw`` holds (id_a, id_b, band) for every band two documents share.
+    Each side is (id column, column suffix, banded table, shingle
+    table): the banded table is the persisted (id, n, bh) one, the
+    shingle table (id, sh). Returns (id_a, id_b, jaccard ≥ threshold),
+    one row per pair.
+
+    Two plans, both exact, picked once from the banded tables' token
+    counts (one aggregate per distinct table, which also fills its
+    persist). Under :data:`VERIFY_BROADCAST_CAP_BYTES` both sides
+    broadcast and the verify is a pure map over the raw candidate
+    stream: each side's broadcast carries the per-doc band-hash array,
+    and a pair is kept only at its FIRST shared band, so every pair is
+    verified once with no dedup exchange (the stateless first-bin trick
+    of the region join). Past the cap the candidates are deduplicated
+    and the shingle tables shuffle-joined — the plan that survives a
+    100 TB corpus, where broadcasting the tokenized corpus would not.
+    """
+    (ida, sa, banded_a, base_a), (idb, sb, banded_b, base_b) = side_a, side_b
+    est = 0
+    for banded in (banded_a,) if banded_b is banded_a else (banded_a, banded_b):
+        st = banded.selectExpr("count(1) AS docs", "sum(n) AS toks").first()
+        est += int(st["toks"] or 0) * 16 + int(st["docs"] or 0) * 48
+    n_a, n_b = f"n_{sa}", f"n_{sb}"
+    if est <= VERIFY_BROADCAST_CAP_BYTES:
+        # TWO-PHASE attach (move keys and metadata, not payloads):
+        # attaching both documents' FULL token arrays to every raw
+        # candidate row before any filter ran was the stage's dominant
+        # cost (~2-4 KB of array copy × 3.35M raw rows at
+        # sf0.1, 42.7 core-s measured). Phase 1 joins only the slim
+        # (n, bh) columns (~100 B/doc) and applies the length and
+        # first-shared-band filters; phase 2 attaches the token arrays
+        # to the surviving unique pairs only. (An Arrow UDF doing
+        # Python-set intersection against a broadcast {id: frozenset}
+        # dict was measured and reverted: 3.75 s vs 2.53 s at sf0.1.)
+        slim_a = banded_a.selectExpr(f"id AS {ida}", f"n AS {n_a}", f"bh AS bh_{sa}")
+        slim_b = banded_b.selectExpr(f"id AS {idb}", f"n AS {n_b}", f"bh AS bh_{sb}")
+        filtered = (
+            raw.join(F.broadcast(slim_a), ida)
+            .join(F.broadcast(slim_b), idb)
+            .where(f"({_jaccard_length_ok(n_a, n_b, threshold)})"
+                   f" AND (band = ({_first_shared_band(f'bh_{sa}', f'bh_{sb}', bands)}))")
+            .selectExpr(ida, idb, n_a, n_b)
+        )
+        sh_a = base_a.selectExpr(f"id AS {ida}", f"sh AS sh_{sa}")
+        sh_b = base_b.selectExpr(f"id AS {idb}", f"sh AS sh_{sb}")
+        pairs = filtered.join(F.broadcast(sh_a), ida).join(F.broadcast(sh_b), idb)
+    else:
+        # every candidate row costs a join shuffle, so dedup first; one
+        # exchange serves both dedup and the verify-stage rebalance
+        # (hash-partitioning on id_a satisfies the (id_a, id_b)
+        # clustering the dropDuplicates aggregate needs). The band-hash
+        # arrays are NOT carried: at large `bands` they would inflate
+        # the shuffled rows, and the dedup already collapses multiplicity.
+        cand = raw.repartition(
+            raw.sparkSession.sparkContext.defaultParallelism, F.expr(ida)
+        ).dropDuplicates([ida, idb])
+        sh_a = base_a.selectExpr(f"id AS {ida}", f"sh AS sh_{sa}", f"size(sh) AS {n_a}")
+        sh_b = base_b.selectExpr(f"id AS {idb}", f"sh AS sh_{sb}", f"size(sh) AS {n_b}")
+        pairs = (
+            cand.join(sh_a, ida)
+            .join(sh_b, idb)
+            .where(_jaccard_length_ok(n_a, n_b, threshold))
+        )
+    return (
+        pairs.withColumn("jaccard", F.expr(_jaccard_sql(f"sh_{sa}", f"sh_{sb}", n_a, n_b)))
+        .where(f"jaccard >= {sql_double(threshold)}")
+        .selectExpr(ida, idb, "round(jaccard, 6) AS jaccard")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -425,18 +505,14 @@ def minhash_lsh_pairs(
         with_size=True, repartition=False, prefiltered=True,
     )
     # per-doc band-hash ARRAY first (identical hash construction to
-    # lsh_bands), then posexplode for the equi-join: the banded table
-    # feeds BOTH sides of the self-join, and Spark does NOT reuse the
-    # exchange across the differently-aliased sides (the signature UDF
-    # would run twice) — persist the slim (id, bh) table: one row per
-    # doc, bands hashes each
+    # lsh_bands), then posexplode for the equi-join. The slim (id, n, bh)
+    # table is persisted because it has consumers of different shapes:
+    # both sides of the band self-join (which alone would share one
+    # exchange), the verify broadcasts carrying band hashes, and the
+    # verify's size probe, whose aggregate also fills the persist.
     banded = sigs.selectExpr(
         "id", "n", f"{_band_hashes_sql(num_hashes, bands)} AS bh"
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # one aggregate doubles as the eager materializer (both self-join
-    # sides would race a lazy cache) AND the broadcast-size probe —
-    # previously a count() job plus a separate stats job
-    _bst = banded.selectExpr("count(1) AS docs", "sum(n) AS toks").first()
     bandsdf = banded.selectExpr("id", "posexplode(bh) AS (band, band_hash)")
     a = bandsdf.selectExpr("id AS id_a", "band", "band_hash")
     b = bandsdf.selectExpr("id AS id_b", "band", "band_hash")
@@ -445,85 +521,9 @@ def minhash_lsh_pairs(
         .where("id_a < id_b")
         .selectExpr("id_a", "id_b", "band")
     )
-    # verification: |A∩B| once, |A∪B| by arithmetic (no union allocation).
-    # The shingle side is one row per document; broadcasting it pins a
-    # broadcast join so the big candidate stream never shuffles. The
-    # strategy comes from a measured size estimate: small corpora
-    # broadcast, anything past VERIFY_BROADCAST_CAP_BYTES shuffles — a
-    # rule that still works at the 100 TB design point. The estimate
-    # reads the persisted banded stats rather than re-tokenizing the
-    # corpus; empty-shingle docs (absent from banded) add no row
-    # overhead — a strategy heuristic only, both strategies are exact.
-    est = int(_bst["toks"] or 0) * 16 + int(_bst["docs"] or 0) * 48
-    if est <= VERIFY_BROADCAST_CAP_BYTES:
-        # verify is a pure map (both shingle sides broadcast). A pair
-        # that matched in k bands would be verified k times and need a
-        # final dedup shuffle — instead each side's broadcast also
-        # carries the per-doc band-hash array (tiny next to the shingle
-        # arrays already shipped) and the map keeps a pair only at its
-        # FIRST shared band: exactly one verify per pair, zero dedup
-        # exchange. Same stateless first-bin trick as the region join.
-        # Persisted: the table feeds BOTH broadcast builds, which run
-        # concurrently and do NOT share the exchange (aliased copies) —
-        # unpersisted, the tokenize+join lineage executed twice. The
-        # persist is bounded by construction: this branch only runs
-        # when the estimate fits VERIFY_BROADCAST_CAP_BYTES.
-        # TWO-PHASE attach (guide §2.3 "move keys and metadata, not
-        # payloads", applied to broadcast-join materialization): the
-        # old single join attached both documents' FULL token arrays to
-        # every raw candidate row before any filter ran — ~2-4 KB of
-        # array copy × 3.35M raw rows at sf0.1, the stage's dominant
-        # cost (42.7 core-s measured). Phase 1 joins only the slim
-        # (n, bh) columns (~100 B/doc) and applies the length +
-        # first-shared-band filters; phase 2 attaches the token arrays
-        # to the surviving unique pairs only, then runs the exact
-        # intersect.
-        slim = banded  # id, n, bh — already persisted and eager
-        slim_a = slim.selectExpr("id AS id_a", "n AS n_a", "bh AS bh_a")
-        slim_b = slim.selectExpr("id AS id_b", "n AS n_b", "bh AS bh_b")
-        filtered = (
-            raw.join(F.broadcast(slim_a), "id_a")
-            .join(F.broadcast(slim_b), "id_b")
-            .where(f"({_jaccard_length_ok('n_a', 'n_b', threshold)})"
-                   f" AND (band = ({_first_shared_band('bh_a', 'bh_b', bands)}))")
-            .selectExpr("id_a", "id_b", "n_a", "n_b")
-        )
-        # (an Arrow UDF doing Python-set intersection against a
-        # broadcast {id: frozenset} dict was measured here and REVERTED:
-        # the per-call driver collect + dict pickle/broadcast cost more
-        # than the executor-side win — 3.75 s vs 2.53 s at sf0.1)
-        sh_a = base.selectExpr("id AS id_a", "sh AS sh_a")
-        sh_b = base.selectExpr("id AS id_b", "sh AS sh_b")
-        out = (
-            filtered.join(F.broadcast(sh_a), "id_a")
-            .join(F.broadcast(sh_b), "id_b")
-            .withColumn("jaccard", F.expr(_jaccard_sql("sh_a", "sh_b", "n_a", "n_b")))
-            .where(f"jaccard >= {sql_double(threshold)}")
-            .selectExpr("id_a", "id_b", "round(jaccard, 6) AS jaccard")
-        )
-    else:
-        # shuffle verify: every candidate row costs a join shuffle, so
-        # dedup first; one exchange serves both dedup and the verify-stage
-        # rebalance (hash-partitioning on id_a satisfies the (id_a, id_b)
-        # clustering the dropDuplicates aggregate needs). The band-hash
-        # arrays are NOT carried here — at large `bands` they would
-        # inflate the shuffled verify rows, and the dedup exchange
-        # already collapses multiplicity.
-        cand = raw.repartition(
-            df.sparkSession.sparkContext.defaultParallelism, F.expr("id_a")
-        ).dropDuplicates(["id_a", "id_b"])
-        sized = base.withColumn("n", F.expr("size(sh)"))
-        sh_a = sized.selectExpr("id AS id_a", "sh AS sh_a", "n AS n_a")
-        sh_b = sized.selectExpr("id AS id_b", "sh AS sh_b", "n AS n_b")
-        out = (
-            cand.join(sh_a, "id_a")
-            .join(sh_b, "id_b")
-            .where(_jaccard_length_ok("n_a", "n_b", threshold))
-            .withColumn("jaccard", F.expr(_jaccard_sql("sh_a", "sh_b", "n_a", "n_b")))
-            .where(f"jaccard >= {sql_double(threshold)}")
-            .selectExpr("id_a", "id_b", "round(jaccard, 6) AS jaccard")
-        )
-    return out
+    return _minhash_verify(
+        raw, ("id_a", "a", banded, base), ("id_b", "b", banded, base), bands, threshold
+    )
 
 
 def ngram_jaccard_pairs(
@@ -735,11 +735,6 @@ def duplicate_clusters(
     return out.withColumn("is_duplicate", F.col("id") != F.col("cluster_id"))
 
 
-#: max estimated hot-span table bytes pinned as a broadcast for the
-#: removal join; past this the exploded span stream shuffles instead
-HOT_SPAN_BROADCAST_CAP_BYTES = 64 * 1024 * 1024
-
-
 def remove_repeated_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -767,10 +762,11 @@ def remove_repeated_spans(
     ``md5(trim(span))`` — a fixed 32-byte shuffle key regardless of
     span length, with map-side partial aggregation (the distinct-doc
     count is a two-stage groupBy, never a count-distinct expand) — and
-    the hot set (boilerplate spans) is small by nature, so the removal
-    join back onto the exploded stream broadcasts it (measured-size
-    decision with a shuffle fallback, same policy as the LSH verify
-    join). Reassembly is one groupBy(id). Two unavoidable shuffles
+    the hot set (boilerplate spans) is small by nature: it is persisted
+    and materialized before the removal join back onto the exploded
+    stream, so Catalyst sizes that join from the cached table's measured
+    bytes (a broadcast under the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, a shuffle above). Reassembly is one groupBy(id). Two unavoidable shuffles
     total at any corpus size. Collision caveat: two different spans
     sharing an md5 would be counted together — at 2^64 spans-scale
     probability, the same trade every content-hash dedup here makes.
@@ -803,13 +799,8 @@ def remove_repeated_spans(
         .select("lkey")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_hot = hot.count()  # eager persist + size for the broadcast decision
-    maybe_bc = (
-        F.broadcast if n_hot * 64 <= HOT_SPAN_BROADCAST_CAP_BYTES else (lambda x: x)
-    )
-    flagged = spans.join(
-        maybe_bc(hot.withColumn("__hot", F.lit(True))), "lkey", "left"
-    )
+    hot.count()  # eager persist: the join is sized from its measured bytes
+    flagged = spans.join(hot.withColumn("__hot", F.lit(True)), "lkey", "left")
     per_doc = flagged.groupBy("id").agg(
         F.sum(F.when(F.col("__hot"), 1).otherwise(0)).cast("long").alias("n_removed"),
         F.array_join(
@@ -858,16 +849,11 @@ def minhash_lsh_pairs_between(
 
     Scale shape: each side's signatures/bands are a narrow map over its
     own corpus; the band equi-join is the only corpus-sized shuffle.
-    For the verify stage the plan is picked from measured sizes, the
-    same policy as the self-join variant: when BOTH token tables fit
-    the broadcast cap they broadcast and the candidate stream verifies
-    as a pure map (no extra materialization at all — the common case
-    for any corpus small enough to enumerate pairs over); otherwise
-    the candidate list is deduped, persisted, counted, and — when slim
-    enough — broadcast against the STREAMED reference token table, so
-    the corpus-sized side is never shuffled or broadcast (the expected
-    asymmetry: new batch ≪ reference corpus); past both caps the
-    verify joins shuffle.
+    The verify stage is the self-join's (``_minhash_verify``): both
+    token tables broadcast when their estimate fits
+    :data:`VERIFY_BROADCAST_CAP_BYTES` (a pure map, no extra
+    materialization), otherwise the deduplicated candidates
+    shuffle-join them.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -875,81 +861,31 @@ def minhash_lsh_pairs_between(
     # guard, and SQL-text expressions throughout: see minhash_lsh_pairs
     base_n = _shingled(df_new, id_col, text_col, shingle_ngram)
     base_r = _shingled(df_ref, id_col, text_col, shingle_ngram)
-    sh_n = base_n.selectExpr("id AS id_new", "sh AS sh_n", "size(sh) AS n_n")
-    sh_r = base_r.selectExpr("id AS id_ref", "sh AS sh_r", "size(sh) AS n_r")
-    jac = F.expr(_jaccard_sql("sh_n", "sh_r", "n_n", "n_r"))
-    # Both strategies start from the slim per-side banded tables
-    # (id, n, band-hash array — one row per doc, built by one signature
-    # pass each, persisted): the broadcast-cap estimates read them
-    # (no extra tokenize pass), the band equi-join explodes them, and
-    # the broadcast-verify filters join them back.
+    # the slim per-side banded tables (id, n, band-hash array — one row
+    # per doc, built by one signature pass each, persisted) feed the
+    # band equi-join, the verify's size probe and its broadcast filters
     bh_arr = _band_hashes_sql(num_hashes, bands)
 
     def _banded(base):
-        # the _est aggregate below doubles as the eager materializer
-        # (broadcast-branch consumers would race a lazy cache)
         return minhash_signatures(
             base, "id", F.expr("sh"), num_hashes,
             with_size=True, repartition=False, prefiltered=True,
         ).selectExpr("id", "n", f"{bh_arr} AS bh").persist(StorageLevel.MEMORY_AND_DISK)
-
-    def _est(banded) -> int:
-        st = banded.selectExpr("count(1) AS docs", "sum(n) AS toks").first()
-        return int(st["toks"] or 0) * 16 + int(st["docs"] or 0) * 48
 
     def _bands(banded, id_as):
         return banded.selectExpr(f"id AS {id_as}", "posexplode(bh) AS (band, band_hash)")
 
     banded_n = _banded(base_n)
     banded_r = _banded(base_r)
-    est_n = _est(banded_n)
-    raw = _bands(banded_n, "id_new").join(_bands(banded_r, "id_ref"), ["band", "band_hash"])
-    if est_n + _est(banded_r) <= VERIFY_BROADCAST_CAP_BYTES:
-        # both token tables broadcast: verify is a pure map over the raw
-        # candidate stream, a pair kept only at its FIRST shared band —
-        # one exact-Jaccard per pair, no dedup exchange (same trick as
-        # the self-join variant).
-        # two-phase attach (see minhash_lsh_pairs: filter on slim
-        # (n, bh) metadata first; token arrays attach to survivors only)
-        slim_n = banded_n.selectExpr("id AS id_new", "n AS n_n", "bh AS bh_n")
-        slim_r = banded_r.selectExpr("id AS id_ref", "n AS n_r", "bh AS bh_r")
-        filtered = (
-            raw.selectExpr("id_new", "id_ref", "band")
-            .join(F.broadcast(slim_n), "id_new")
-            .join(F.broadcast(slim_r), "id_ref")
-            .where(f"({_jaccard_length_ok('n_n', 'n_r', threshold)})"
-                   f" AND (band = ({_first_shared_band('bh_n', 'bh_r', bands)}))")
-            .selectExpr("id_new", "id_ref", "n_n", "n_r")
-        )
-        out = (
-            filtered.join(F.broadcast(sh_n.drop("n_n")), "id_new")
-            .join(F.broadcast(sh_r.drop("n_r")), "id_ref")
-            .withColumn("jaccard", jac)
-            .where(f"jaccard >= {sql_double(threshold)}")
-            .selectExpr("id_new", "id_ref", "round(jaccard, 6) AS jaccard")
-        )
-        return out
-    # shuffle/fallback path: the band join reads the SAME persisted
-    # banded tables (the signature UDF never runs twice per side)
-    cand = raw.selectExpr("id_new", "id_ref").dropDuplicates(["id_new", "id_ref"]).persist(
-        StorageLevel.MEMORY_AND_DISK
+    raw = (
+        _bands(banded_n, "id_new")
+        .join(_bands(banded_r, "id_ref"), ["band", "band_hash"])
+        .selectExpr("id_new", "id_ref", "band")
     )
-    n_cand = cand.count()
-    bc_cand = n_cand * 32 <= VERIFY_BROADCAST_CAP_BYTES
-    maybe_bc = F.broadcast if bc_cand else (lambda x: x)
-    # the new-side token table gets its own measured size decision —
-    # an incremental batch is usually tiny, but nothing forces it to be
-    bc_new = bc_cand and est_n <= VERIFY_BROADCAST_CAP_BYTES
-    maybe_bc_new = F.broadcast if bc_new else (lambda x: x)
-    out = (
-        sh_r.join(maybe_bc(cand), "id_ref")
-        .join(maybe_bc_new(sh_n), "id_new")
-        .where(_jaccard_length_ok("n_n", "n_r", threshold))
-        .withColumn("jaccard", jac)
-        .where(f"jaccard >= {sql_double(threshold)}")
-        .selectExpr("id_new", "id_ref", "round(jaccard, 6) AS jaccard")
+    return _minhash_verify(
+        raw, ("id_new", "n", banded_n, base_n), ("id_ref", "r", banded_r, base_r),
+        bands, threshold,
     )
-    return out
 
 
 def remove_duplicate_substrings(
@@ -974,8 +910,8 @@ def remove_duplicate_substrings(
     100 TB shape: the anchor explode is the dominant cost — O(chars /
     stride) rows, shuffled twice ((hash, doc) distinct then a map-side
     combined count; raise ``stride`` to trade recall for cost). The hot
-    set is joined back via broadcast under HOT_SPAN_BROADCAST_CAP_BYTES
-    with a shuffle-join fallback; the span merge reuses the per-doc
+    set is persisted and materialized, then joined back with the strategy
+    Catalyst picks from its measured size; the span merge reuses the per-doc
     partitioning from the join, and the text rebuild is one narrow
     ``aggregate`` over the collected span list — no driver collects, no
     UDFs, no suffix array (the full Lee et al. construction is
@@ -996,9 +932,9 @@ def remove_duplicate_substrings(
 
     from pyspark.storagelevel import StorageLevel
 
-    # persisted before the sizing count: the anchors→distinct→groupBy
-    # pipeline (two full shuffles) otherwise runs twice — once for
-    # count() and again in the join (the remove_repeated_spans treatment)
+    # persisted and materialized before the join: Catalyst sizes the
+    # join from the cached table's measured bytes (the
+    # remove_repeated_spans treatment)
     hot = (
         anchors.select("h", "id")
         .distinct()
@@ -1008,11 +944,8 @@ def remove_duplicate_substrings(
         .select("h")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_hot = hot.count()
-    maybe_bc = (
-        F.broadcast if n_hot * 16 <= HOT_SPAN_BROADCAST_CAP_BYTES else (lambda x: x)
-    )
-    marks = anchors.join(maybe_bc(hot), "h").select("id", "p")
+    hot.count()
+    marks = anchors.join(hot, "h").select("id", "p")
 
     w = Window.partitionBy("id").orderBy("p")
     prev_max_end = F.max(F.col("p") + k).over(

@@ -739,7 +739,14 @@ def srp_params(threshold: float) -> tuple[int, int]:
 
     P(sign bit matches) for a pair at angle θ is 1 − θ/π; rows_per_band
     trades candidate pruning against recall, bands buys recall back
-    (P(miss) = (1 − p^r)^b ≤ 1%, same banding calculus as minhash LSH).
+    (P(miss) = (1 − p^r)^b, same banding calculus as minhash LSH). The
+    formula asks for the bands that hold P(miss) ≤ 1% for a pair at
+    the threshold, but the band count is clamped to [8, 64], and where
+    the clamp binds the bound does not hold: t = 0.6 gets 64 bands
+    where it asks for 76, so P(miss) = 1.79%; t = 0.8 gets 64 where it
+    asks for 181, so P(miss) = 19.09%. At t = 0.4, 0.7, 0.9 and 0.95
+    the clamp does not bind (30, 48, 55 and 26 bands).
+
     Below threshold ≈ 0.6 sign-bit LSH prunes weakly — the banding
     still avoids an all-pairs cross join, but candidate volume
     approaches all-pairs; true near-dup thresholds (≥ 0.8) prune hard.
@@ -922,9 +929,11 @@ def embedding_near_duplicates(
     candidates come from an equi-join on (band, band_hash) — a shuffle
     hash join, never a cross join — and are verified with the exact
     cosine before emission. Recall loss from banding is the only
-    approximation (P(miss) ≤ 1% with the banding :func:`srp_params`
-    tunes from the threshold; the DuckDB oracle replicates the
-    identical banding, so recall behavior is part of the spec).
+    approximation: the banding :func:`srp_params` tunes from the
+    threshold gives P(miss) ≤ 1% for a pair at the threshold except
+    where its 64-band clamp binds (1.79% at t = 0.6, 19.09% at
+    t = 0.8). The DuckDB oracle replicates the identical banding, so
+    recall behavior is part of the spec.
 
     Two strategies, both exact over the same candidate definition:
 
@@ -964,10 +973,10 @@ def embedding_near_duplicates(
             return _near_dup_gemm_fused(
                 corpus, threshold, id_col, vec_col, dim, rows_per_band, bands
             )
-    # persisted in ARRAY form: feeds both self-join sides (Spark does
-    # not reuse the exchange across differently-aliased sides, so the
-    # projection UDF would otherwise run twice); eager, because both
-    # self-join sides would race a lazy cache
+    # persisted in ARRAY form and filled eagerly: AQE broadcasts one
+    # side of the band self-join, so the two sides differ in shape,
+    # share no exchange, and unpersisted the projection UDF would run
+    # once per side (measured)
     hashed_arr = _srp_band_hash_arrays(
         corpus, id_col, vec_col, dim, rows_per_band, bands
     ).persist(StorageLevel.MEMORY_AND_DISK)

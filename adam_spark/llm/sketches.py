@@ -101,12 +101,6 @@ def cms_estimate(
     )
 
 
-#: max estimated candidate-table bytes pinned as a broadcast in the
-#: heavy-hitter exact-verify join; past this the join falls back to a
-#: shuffle (same convention as llm/dedup.py's verify caps).
-CANDIDATE_BROADCAST_CAP_BYTES = 256 * 1024 * 1024
-
-
 def cms_candidates(
     df: DataFrame,
     col: str,
@@ -173,8 +167,8 @@ def cms_heavy_hitters(
     2. sketch shortlist — broadcast the depth·width sketch, keep
        candidates with est ≥ min_count (est never undercounts, so no
        true heavy hitter is lost here either).
-    3. exact verify — join the corpus stream to the shortlist
-       (broadcast under a measured cap, shuffle fallback) and
+    3. exact verify — join the corpus stream to the persisted
+       shortlist (Catalyst sizes the join from its measured bytes) and
        map-side-combine counts whose key space is the shortlist, then
        keep n ≥ min_count.
 
@@ -192,14 +186,9 @@ def cms_heavy_hitters(
         .select(F.col("t").alias(col), "est")
         .persist()
     )
-    n_short = short.count()  # eager persist + size for the broadcast decision
-    maybe_bc = (
-        F.broadcast
-        if n_short * 64 <= CANDIDATE_BROADCAST_CAP_BYTES
-        else (lambda x: x)
-    )
+    short.count()  # eager persist: the join is sized from its measured bytes
     out = (
-        base.join(maybe_bc(short), col, "inner")
+        base.join(short, col, "inner")
         .groupBy(col, "est")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .where(F.col("n") >= F.lit(int(min_count)))

@@ -455,11 +455,6 @@ def scrub_pii(
     return out.withColumn("text_scrubbed", scrubbed)
 
 
-#: max estimated vocabulary bytes broadcast for LM scoring; larger
-#: vocabularies shuffle-join instead
-VOCAB_BROADCAST_CAP_BYTES = 128 * 1024 * 1024
-
-
 def unigram_lm_scores(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -479,11 +474,12 @@ def unigram_lm_scores(
 
     Scale shape: vocabulary counting is one map-side-combined groupBy;
     the (token → count) table joins back onto the exploded token stream
-    — broadcast below a measured size cap (natural-language vocabularies
-    are tiny next to their corpora), shuffle fallback above it — and the
-    per-document mean is a second combined groupBy. The driver
-    collects only three scalars (vocabulary size, size estimate, total
-    token count) in a single aggregate job over the persisted vocab;
+    with the strategy Catalyst picks from the persisted vocabulary's
+    measured size (natural-language vocabularies are tiny next to their
+    corpora, so it broadcasts) — and the per-document mean is a second
+    combined groupBy. The driver collects only two scalars (vocabulary
+    size, total token count) in a single aggregate job over the
+    persisted vocab;
     the model constants are embedded as literals (exact — see the
     inline note), so no per-call constant subtree or cross-join
     broadcast remains in the plan.
@@ -503,29 +499,19 @@ def unigram_lm_scores(
         .agg(F.count(F.lit(1)).alias("c"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # ONE aggregate doubles as the eager materializer and yields all
-    # three scalars the old shape took separate jobs for: |V| (was
-    # vocab.count()), the broadcast-size estimate (was a second
-    # .first()), and n_total (was a `consts` aggregate subtree re-read
-    # from the persist and shipped via a broadcast cross join). The
-    # model constants are exact integers at any corpus size that fits
+    # ONE aggregate doubles as the eager materializer (which lets
+    # Catalyst size the vocab join from the cached bytes) and yields
+    # both scalars: |V| and n_total (once a `consts` aggregate subtree
+    # re-read from the persist and shipped via a broadcast cross
+    # join). The model constants are exact integers at any corpus size that fits
     # a long, so embedding them as literals is bit-identical to the
     # in-query cast (float(n) is exact below 2^53); the crossJoin and
     # its broadcast build disappear from the plan.
-    _st = vocab.select(
-        F.count(F.lit(1)).alias("v"),
-        (F.sum(F.length("tok")) + F.count(F.lit(1)) * 40).alias("b"),
-        F.sum("c").alias("n"),
-    ).first()
+    _st = vocab.select(F.count(F.lit(1)).alias("v"), F.sum("c").alias("n")).first()
     v = int(_st["v"] or 0)
-    maybe_bc = (
-        F.broadcast
-        if int(_st["b"] or 0) <= VOCAB_BROADCAST_CAP_BYTES
-        else (lambda x: x)
-    )
     n_total, v_size = F.lit(float(_st["n"] or 0)), F.lit(float(v))
     scored = (
-        toks.join(maybe_bc(vocab), "tok")
+        toks.join(vocab, "tok")
         .groupBy("id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
@@ -619,7 +605,7 @@ def bigram_lm_scores(
     Scale shape: bigram extraction is IN-ROW (``arrays_zip`` of two
     slices — no lag window, so no per-document shuffle); unigram and
     bigram counting are map-side-combined groupBys; both count tables
-    join back broadcast under a measured cap (shuffle fallback), the
+    join back with the strategy Catalyst picks from their sizes, the
     model constants are embedded as exact literals from one driver
     aggregate (see unigram_lm_scores), and the final per-document
     aggregate is one slim (id, sum) groupBy.
@@ -636,21 +622,12 @@ def bigram_lm_scores(
         .agg(F.count(F.lit(1)).alias("c"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # one aggregate = eager materializer + |V| + broadcast estimate +
-    # n_total, replacing three sequential driver jobs and the `consts`
-    # cross-join subtree (see unigram_lm_scores — exact-integer
-    # literals, bit-identical arithmetic)
-    _st = uni.select(
-        F.count(F.lit(1)).alias("v"),
-        (F.sum(F.length("tok")) + F.count(F.lit(1)) * 40).alias("b"),
-        F.sum("c").alias("n"),
-    ).first()
+    # one aggregate = eager materializer + |V| + n_total, replacing
+    # sequential driver jobs and the `consts` cross-join subtree (see
+    # unigram_lm_scores — exact-integer literals, bit-identical
+    # arithmetic)
+    _st = uni.select(F.count(F.lit(1)).alias("v"), F.sum("c").alias("n")).first()
     v = int(_st["v"] or 0)
-    maybe_bc = (
-        F.broadcast
-        if int(_st["b"] or 0) <= VOCAB_BROADCAST_CAP_BYTES
-        else (lambda x: x)
-    )
     n_total, v_size = F.lit(float(_st["n"] or 0)), F.lit(float(v))
     p_uni = lambda c: (c + F.lit(a)) / (n_total + F.lit(a) * v_size)
     first = (
@@ -660,7 +637,7 @@ def bigram_lm_scores(
             F.element_at("t", 1).alias("tok"),
             F.size("t").cast("long").alias("n_tokens"),
         )
-        .join(maybe_bc(uni), "tok")
+        .join(uni, "tok")
         .select("id", "n_tokens", (-F.log(p_uni(F.col("c")))).alias("s_first"))
     )
     pairs = (
@@ -677,9 +654,9 @@ def bigram_lm_scores(
     )
     big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
     scored = (
-        pairs.join(maybe_bc(big), ["w1", "w2"])
-        .join(maybe_bc(uni.select(F.col("tok").alias("w1"), F.col("c").alias("c1"))), "w1")
-        .join(maybe_bc(uni.select(F.col("tok").alias("w2"), F.col("c").alias("c2"))), "w2")
+        pairs.join(big, ["w1", "w2"])
+        .join(uni.select(F.col("tok").alias("w1"), F.col("c").alias("c1")), "w1")
+        .join(uni.select(F.col("tok").alias("w2"), F.col("c").alias("c2")), "w2")
         .select(
             "id",
             (
@@ -887,9 +864,9 @@ def hashed_classifier_score(
     count; ``feat_hits``/``score_sum`` run over all feature orders.
 
     Scale shape: one narrow map computes buckets (no UDF), the weight
-    lookup is an equi-join against a table of at most ``16^k`` rows —
-    broadcast under the measured cap (a 4096-row feature table always
-    is), shuffle fallback above it — and the per-document sum is one
+    lookup is an equi-join against a table of at most ``16^k`` rows,
+    with the strategy Catalyst picks from its size (a 4096-row feature
+    table broadcasts) — and the per-document sum is one
     map-side-combined groupBy. The corpus is never shuffled beyond that
     aggregation; nothing collects on the driver.
 
@@ -955,13 +932,8 @@ def hashed_classifier_score(
         .groupBy("bucket")
         .agg(F.sum("weight").cast("long").alias("weight"))
     )
-    maybe_bc = (
-        F.broadcast
-        if 16 ** hash_prefix_len * 64 <= VOCAB_BROADCAST_CAP_BYTES
-        else (lambda x: x)
-    )
     scored = (
-        toks.join(maybe_bc(w), "bucket", "left")
+        toks.join(w, "bucket", "left")
         .groupBy("id")
         .agg(
             F.max("__n_tokens").alias("n_tokens"),

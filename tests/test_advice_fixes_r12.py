@@ -333,40 +333,6 @@ def test_save_fasta_single_file_emits_faidx(spark, tmp_path):
     assert back == seqs
 
 
-def test_hashed_classifier_score(spark, monkeypatch):
-    """fastText-style hashed linear classifier: md5-prefix bucketing,
-    OOV buckets contribute nothing, token-less docs keep zero rows, and
-    the broadcast and shuffle join paths agree exactly."""
-    import hashlib
-
-    import adam_spark.llm.text as T
-    from adam_spark.llm.text import hashed_classifier_score
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta alpha"), (2, "gamma"), (3, ""), (4, "ALPHA")],
-        "doc_id long, text string",
-    )
-
-    def bucket(tok):
-        return hashlib.md5(tok.encode()).hexdigest()[:3]
-
-    # weights cover alpha's bucket only -> beta/gamma are OOV
-    weights = spark.createDataFrame(
-        [(bucket("alpha"), 7)], "bucket string, weight long"
-    )
-    # the default cap broadcasts the weight table; a zero cap shuffles it
-    for cap in (T.VOCAB_BROADCAST_CAP_BYTES, 0):
-        monkeypatch.setattr(T, "VOCAB_BROADCAST_CAP_BYTES", cap)
-        rows = {
-            r["id"]: (r["n_tokens"], r["feat_hits"], r["score_sum"])
-            for r in hashed_classifier_score(docs, weights).collect()
-        }
-        assert rows[1] == (3, 2, 14)   # alpha twice, beta OOV
-        assert rows[2] == (1, 0, 0)    # fully OOV
-        assert rows[3] == (0, 0, 0)    # token-less doc keeps its row
-        assert rows[4] == (1, 1, 7)    # lower-cased before hashing
-
-
 def test_hashed_classifier_feats_df_missing_column_raises(spark):
     """A feats_df lacking the id or text column raises a ValueError
     naming that column, instead of failing deep inside the plan."""

@@ -1,6 +1,8 @@
 """LLM-pipeline operators on the real testdata documents/embeddings."""
 
+import contextlib
 import math
+import re
 
 import numpy as np
 import pytest
@@ -29,6 +31,29 @@ def docs(spark):
 @pytest.fixture(scope="module")
 def embs(spark):
     return load_table(spark, SF, "embeddings").cache()
+
+
+@contextlib.contextmanager
+def no_auto_broadcast(spark):
+    """Catalyst plans every join without a hint as a shuffle join inside
+    the block: the session's auto-broadcast threshold is -1 there and
+    restored after."""
+    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+
+
+def sort_merge_join_keys(df: DataFrame) -> list[str]:
+    """The left join keys of each SortMergeJoin in ``df``'s initial
+    physical plan, attribute ids stripped (``lkey#12`` → ``lkey``)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        re.sub(r"#\d+L?", "", keys)
+        for keys in re.findall(r"SortMergeJoin \[([^\]]*)\]", plan)
+    ]
 
 
 def test_word_ngrams_and_has_min_tokens_match_python(spark, docs):
@@ -261,6 +286,19 @@ def test_near_dup_strategies_on_planted_pairs(spark, monkeypatch):
         assert planted <= set(brute)
         same(got, brute)
         same(pairs(S.embedding_near_duplicates(corpus, t, dim=32)), brute)
+
+
+def test_srp_params_pinned():
+    """The (rows_per_band, bands) srp_params picks per threshold. The
+    64-band clamp binds at 0.6 (the 1%-miss formula asks for 76) and
+    at 0.8 (181); embedding_near_dup rows depend on these values."""
+    from adam_spark.llm.similarity import srp_params
+
+    got = {t: srp_params(t) for t in (0.4, 0.6, 0.7, 0.8, 0.9, 0.95)}
+    assert got == {
+        0.4: (4, 30), 0.6: (8, 64), 0.7: (8, 48),
+        0.8: (16, 64), 0.9: (16, 55), 0.95: (16, 26),
+    }
 
 
 def test_srp_band_hashes_runs_projection_once(spark):
@@ -756,19 +794,19 @@ def test_remove_repeated_spans_lines(spark):
     assert len(out) == 6
 
 
-def test_remove_repeated_spans_min_frac_and_shuffle_path(spark, monkeypatch):
+def test_remove_repeated_spans_min_frac_and_shuffle_path(spark):
     """min_frac thresholding equals the explicit min_docs equivalent,
-    and the shuffle-join fallback (hot set over its cap) is identical."""
-    import adam_spark.llm.dedup as dd
+    and the hot-set join planned as a sort-merge join is identical."""
     from adam_spark.llm.dedup import remove_repeated_spans
 
     docs = load_table(spark, SF, "documents")
     a = remove_repeated_spans(docs, delimiter=" ", min_frac=0.5)
     n = docs.where(F.col("text").isNotNull()).count()
-    monkeypatch.setattr(dd, "HOT_SPAN_BROADCAST_CAP_BYTES", 0)
-    b = remove_repeated_spans(docs, delimiter=" ", min_docs=math.ceil(0.5 * n))
     ra = sorted(tuple(r) for r in a.collect())
-    rb = sorted(tuple(r) for r in b.collect())
+    with no_auto_broadcast(spark):
+        b = remove_repeated_spans(docs, delimiter=" ", min_docs=math.ceil(0.5 * n))
+        assert "lkey" in sort_merge_join_keys(b)
+        rb = sorted(tuple(r) for r in b.collect())
     assert ra == rb
     assert sum(r[2] for r in ra) > 0, "corpus should contain hot tokens"
     with pytest.raises(ValueError):
@@ -817,7 +855,7 @@ def test_cosine_topk_quantized_matches_exact(embs):
     assert quant == exact
 
 
-def test_unigram_lm_scores(spark, docs, monkeypatch):
+def test_unigram_lm_scores(spark, docs):
     """Smoothed-NLL scoring: hand-check on a tiny corpus, row
     preservation for empty docs, shuffle-vocab path identical."""
     from adam_spark.llm.text import unigram_lm_scores
@@ -838,10 +876,10 @@ def test_unigram_lm_scores(spark, docs, monkeypatch):
     # rarer-token doc scores higher nll
     assert out[2]["nll"] > out[1]["nll"]
     a = sorted(tuple(r) for r in unigram_lm_scores(docs).collect())
-    import adam_spark.llm.text as T
-
-    monkeypatch.setattr(T, "VOCAB_BROADCAST_CAP_BYTES", 0)  # shuffle-join vocab
-    b = sorted(tuple(r) for r in unigram_lm_scores(docs).collect())
+    with no_auto_broadcast(spark):  # shuffle-join vocab
+        shuffled = unigram_lm_scores(docs)
+        assert "tok" in sort_merge_join_keys(shuffled)
+        b = sorted(tuple(r) for r in shuffled.collect())
     assert a == b and len(a) == docs.count()
 
 
@@ -878,9 +916,6 @@ def test_minhash_between_equals_bruteforce_cross_pairs(docs, monkeypatch):
 
     # every table over the cap -> both verify joins shuffle
     assert between_under_cap(0) == got
-    # middle path: token tables exceed the cap but the candidate list
-    # fits -> candidate-broadcast against the streamed reference
-    assert between_under_cap(100_000) == got
 
 
 def test_chunk_documents(spark, docs):
@@ -1196,7 +1231,7 @@ def test_bloom_contains_single_broadcast_no_joins(spark):
     assert got[None] is False
 
 
-def test_bigram_lm_scores(spark, docs, monkeypatch):
+def test_bigram_lm_scores(spark, docs):
     """Hand-checked bigram backoff math on a tiny corpus; repetitive
     documents score lower nll than shuffled ones (the property the
     unigram model cannot express); broadcast==shuffle paths agree."""
@@ -1220,11 +1255,51 @@ def test_bigram_lm_scores(spark, docs, monkeypatch):
     sc = {r["id"]: r["nll"] for r in bigram_lm_scores(df2).collect()}
     assert sc[0] < sc[99]
     a = sorted(tuple(r) for r in bigram_lm_scores(docs).collect())
-    import adam_spark.llm.text as T
-
-    monkeypatch.setattr(T, "VOCAB_BROADCAST_CAP_BYTES", 0)  # shuffle-join vocab
-    b = sorted(tuple(r) for r in bigram_lm_scores(docs).collect())
+    with no_auto_broadcast(spark):  # shuffle-join both count tables
+        shuffled = bigram_lm_scores(docs)
+        keys = sort_merge_join_keys(shuffled)
+        assert {"tok", "w1, w2"} <= set(keys), keys
+        b = sorted(tuple(r) for r in shuffled.collect())
     assert a == b and len(a) == docs.count()
+
+
+def test_hashed_classifier_score(spark):
+    """fastText-style hashed linear classifier: md5-prefix bucketing,
+    OOV buckets contribute nothing, token-less docs keep zero rows, and
+    the broadcast and sort-merge join plans agree exactly."""
+    import hashlib
+
+    from adam_spark.llm.text import hashed_classifier_score
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta alpha"), (2, "gamma"), (3, ""), (4, "ALPHA")],
+        "doc_id long, text string",
+    )
+
+    def bucket(tok):
+        return hashlib.md5(tok.encode()).hexdigest()[:3]
+
+    # weights cover alpha's bucket only -> beta/gamma are OOV
+    weights = spark.createDataFrame(
+        [(bucket("alpha"), 7)], "bucket string, weight long"
+    )
+
+    def check(scored):
+        rows = {
+            r["id"]: (r["n_tokens"], r["feat_hits"], r["score_sum"])
+            for r in scored.collect()
+        }
+        assert rows[1] == (3, 2, 14)   # alpha twice, beta OOV
+        assert rows[2] == (1, 0, 0)    # fully OOV
+        assert rows[3] == (0, 0, 0)    # token-less doc keeps its row
+        assert rows[4] == (1, 1, 7)    # lower-cased before hashing
+
+    # the session threshold broadcasts the weight table; -1 shuffles it
+    check(hashed_classifier_score(docs, weights))
+    with no_auto_broadcast(spark):
+        shuffled = hashed_classifier_score(docs, weights)
+        assert "bucket" in sort_merge_join_keys(shuffled)
+        check(shuffled)
 
 
 def test_png_roundtrip_all_color_types():
@@ -1956,11 +2031,10 @@ def test_remove_duplicate_substrings_planted(spark):
     assert out[4][1] == 0 and out[4][0] == rows[3][1]
 
 
-def test_remove_duplicate_substrings_stride_and_merge(spark, monkeypatch):
+def test_remove_duplicate_substrings_stride_and_merge(spark):
     """Stride-aligned anchors still merge adjacent islands: two hot
     regions separated by a unique gap produce two spans, and the
-    shuffle-join fallback (hot set over its cap) is bit-identical."""
-    import adam_spark.llm.dedup as dd
+    hot-set join planned as a sort-merge join is bit-identical."""
     from adam_spark.llm.dedup import remove_duplicate_substrings
 
     rep1 = "X" * 25
@@ -1971,8 +2045,10 @@ def test_remove_duplicate_substrings_stride_and_merge(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     a = remove_duplicate_substrings(df, k=10, stride=3).orderBy("doc_id").collect()
-    monkeypatch.setattr(dd, "HOT_SPAN_BROADCAST_CAP_BYTES", 0)
-    b = remove_duplicate_substrings(df, k=10, stride=3).orderBy("doc_id").collect()
+    with no_auto_broadcast(spark):
+        shuffled = remove_duplicate_substrings(df, k=10, stride=3)
+        assert "h" in sort_merge_join_keys(shuffled)
+        b = shuffled.orderBy("doc_id").collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
     for r, (_, text) in zip(a, rows):
         # both runs removed modulo stride-alignment slack at the run

@@ -633,6 +633,22 @@ def _ops(spark: SparkSession, scale: str):
     }
 
 
+def warm_up(spark: SparkSession) -> None:
+    """One untimed job on every core that calls a pandas UDF, so the
+    JVM's SQL path and every Python worker are up before the first timed
+    op: without it the first op of a process reads slower than the same
+    op run later (embedding_near_dup_t08 at s1: 2.14-2.20 s first,
+    1.40-1.58 s third, 4 vCPU)."""
+    import pandas as pd
+
+    @F.pandas_udf("long")
+    def echo(v: pd.Series) -> pd.Series:
+        return v
+
+    cores = spark.sparkContext.defaultParallelism
+    spark.range(0, 10_000, 1, cores).select(F.sum(echo("id"))).collect()
+
+
 def main() -> None:
     res_path = os.path.join(OUT, "scale_results.json")
     results: dict = {}
@@ -642,6 +658,7 @@ def main() -> None:
 
     spark = get_spark("scale-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    warm_up(spark)
 
     only = set(sys.argv[1:])  # optional: run a named subset
     for scale in ("s1", "s10"):

@@ -44,7 +44,8 @@ def _d(c: str):
 def _intervals_l(spark: SparkSession, sf: str) -> DataFrame:
     # spread=True: the testdata parquet is ONE row group per table, so
     # without it the explode→join probe pipeline runs on a single core
-    # (sources/tables.py note; measured 4.15→1.34 s on the flank join)
+    # (sources/tables.py SPREAD_LAYOUT; measured 4.15→1.34 s on the
+    # flank join)
     return (
         load_table(spark, sf, "orders", spread=True)
         .where("o_orderkey % 5 = 0")
@@ -895,10 +896,9 @@ def remove_boilerplate_docs(spark: SparkSession, sf: str) -> DataFrame:
     SF); line granularity is pinned by pytest."""
     from adam_spark.llm.dedup import remove_repeated_spans
 
-    # spread on the span branch: tried via a branch-scoped frame (the
-    # classifier feats_df idiom) and REVERTED with numbers (r14
-    # interleaved ×3: count 0.48-0.62 spread vs 0.50-0.61 plain, noop
-    # mixed) — the span explode is codegen'd posexplode+md5, ~0.2 s
+    # spread on the span branch: tried via a branch-scoped spread frame
+    # and REVERTED with numbers (r14 interleaved ×3: count 0.48-0.62
+    # spread vs 0.50-0.61 plain, noop mixed) — the span explode is codegen'd posexplode+md5, ~0.2 s
     # single-task at sf0.1, which the added exchange just eats. Unlike
     # the classifier's interpreted feature lambdas, there is nothing
     # interpreted here to parallelize.
@@ -1122,20 +1122,11 @@ FROM q GROUP BY source ORDER BY source
 
 def text_profile_docs(spark: SparkSession, sf: str) -> DataFrame:
     # spread: the ~15-metric battery is interpreted per-row work
-    # (~1 ms/doc after the r13 tokenize-once hoist) and the corpus'
-    # single row group ran it all on one task — the classifier/bloom
-    # precedent. spread_key=doc_id so the count path's exchange ships
-    # 8 B/row: a whole-row hash key forces the pruned scan to read and
-    # ship text (count 0.59-0.74 → 0.84-1.14 s measured), the id key
-    # keeps it in the plain band. Measured at sf0.1 (isolate REPS=3,
-    # interleaved ×3): noop 4.85-5.42 → 1.27-1.32 s; count 0.59-0.74 →
-    # 0.75-0.77. See OPTIMIZATION_r13.md fifth session.
-    return text_profile(
-        load_table(
-            spark, sf, "documents",
-            spread=True, spread_min_rows=1000, spread_key=("doc_id",),
-        )
-    ).orderBy("id")
+    # (~1 ms/doc) and the corpus' single row group ran it all on one
+    # task. Measured at sf0.1 (interleaved ×3): noop 4.85-5.42 →
+    # 1.27-1.32 s; count 0.59-0.74 → 0.75-0.77 (the doc_id hash ships
+    # 8 B/row).
+    return text_profile(load_table(spark, sf, "documents", spread=True)).orderBy("id")
 
 
 def quality_classifier_docs(spark: SparkSession, sf: str) -> DataFrame:
@@ -1154,25 +1145,16 @@ def quality_classifier_docs(spark: SparkSession, sf: str) -> DataFrame:
     the corpus never shuffles beyond the per-doc sum."""
     from adam_spark.llm.text import hashed_classifier_score
 
-    # spread, branch-scoped (r14, r13 verdict item 2): the token explode
-    # amplifies per-row work ~380× before the md5/bucket map and the
-    # broadcast feature join, so the pre-aggregation pipeline serialized
-    # on the corpus' single row group — but the r13 whole-frame spread
-    # also taxed the COUNT path +0.12-0.15 s (count() prunes the entire
-    # scored subtree via the unique-right left join, leaving only the
-    # added exchange stage). The spread frame now feeds ONLY the
-    # feature branch (feats_df); the row-owning frame stays plain, so
-    # the pruned count path never plans the exchange (the bloom
-    # probe-branch spread idiom). Measured at sf0.1 (interleaved ×3):
-    # count 0.198 whole-frame-spread / 0.087 plain → branch-scoped
-    # matches plain; noop keeps the spread win (1.3-1.9 vs 2.8-3.4
-    # plain). Footer-gated as everywhere, so split-rich cluster inputs
-    # never repartition.
-    docs = load_table(spark, sf, "documents")
-    docs_spread = load_table(
-        spark, sf, "documents",
-        spread=True, spread_min_rows=1000, spread_key=("doc_id",),
-    )
+    # spread: the token explode amplifies per-row work ~380× before
+    # the md5/bucket map and the broadcast feature join, so the
+    # pre-aggregation pipeline serialized on the corpus' single row
+    # group (sf0.1 noop 2.8-3.4 → 1.3-1.9 s). A bare count() prunes the
+    # scored subtree through the unique-right left join and keeps only
+    # the exchange: under a whole-row hash key that exchange read and
+    # shipped the text (count 0.087 → 0.198 s); the doc_id key reads one
+    # column (sf0.1 count median 0.246 → 0.253 s against a plain-frame
+    # count path, noop 1.05 → 1.07 s).
+    docs = load_table(spark, sf, "documents", spread=True)
     b = F.format_string("%03x", F.col("id"))
     raw = (
         F.ascii(F.substring(b, 1, 1)) * 7
@@ -1185,9 +1167,7 @@ def quality_classifier_docs(spark: SparkSession, sf: str) -> DataFrame:
         .where((F.col("raw") % 3) != 0)
         .select("bucket", (F.col("raw") - 50).cast("long").alias("weight"))
     )
-    return hashed_classifier_score(
-        docs, weights, feats_df=docs_spread
-    ).orderBy("id")
+    return hashed_classifier_score(docs, weights).orderBy("id")
 
 
 def gopher_quality_docs(spark: SparkSession, sf: str) -> DataFrame:
@@ -1209,10 +1189,7 @@ def gopher_quality_docs(spark: SparkSession, sf: str) -> DataFrame:
     # interleaved ×3): noop 6.60-7.97 → 1.36-1.83 s; count 0.77-0.82 →
     # 0.70-0.85 (neutral).
     return gopher_quality(
-        load_table(
-            spark, sf, "documents",
-            spread=True, spread_min_rows=1000, spread_key=("doc_id",),
-        ),
+        load_table(spark, sf, "documents", spread=True),
         min_words=50, min_mean_word_len=4.5, min_stop_words=1,
     ).orderBy("id")
 
@@ -1368,11 +1345,11 @@ FROM ext2 ORDER BY id
 
 def similarity_topk(spark: SparkSession, sf: str) -> DataFrame:
     # spread: the Q-way crossJoin amplifies per-row work Q×, so the
-    # single-row-group scan starves far below the default 50k floor
+    # single-row-group scan starves far below lineitem's 50k floor
     # (measured 0.75→0.45 s at sf0.1; footer-gated, cluster inputs
     # unchanged). The query side reloads WITHOUT spread — it is 10 rows
     # and broadcast anyway.
-    emb = load_table(spark, sf, "embeddings", spread=True, spread_min_rows=1000)
+    emb = load_table(spark, sf, "embeddings", spread=True)
     q = load_table(spark, sf, "embeddings").where(F.col("vec_id") < 10)
     return (
         cosine_topk(emb, q, k=5)
@@ -1513,7 +1490,7 @@ def bloom_decontaminate_docs(spark: SparkSession, sf: str) -> DataFrame:
     # 2.1-2.8 s; count neutral within noise (best-of-4 0.66 plain vs
     # 0.59-0.67 spread — the pruned-column exchange ships ~4900 slim
     # rows). See OPTIMIZATION_r13.md.
-    corp = load_table(spark, sf, "documents", spread=True, spread_min_rows=1000).where(
+    corp = load_table(spark, sf, "documents", spread=True).where(
         F.col("doc_id") % 50 != 0
     )
     bloom = bloom_build(bench, "gram", num_bits=8192, num_hashes=5)

@@ -283,33 +283,6 @@ def minhash_signatures(
     return out.select("id", sig)
 
 
-def lsh_bands(signatures: DataFrame, bands: int) -> DataFrame:
-    """(id, band, band_hash): hash each signature band for bucketing."""
-    sig_len_expr = F.size("signature")
-    rows_per_band = (sig_len_expr / F.lit(bands)).cast("int")
-    return signatures.select(
-        "id",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-        F.col("signature"),
-    ).select(
-        "id",
-        "band",
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.slice(
-                        F.col("signature"),
-                        F.col("band") * rows_per_band + 1,
-                        rows_per_band,
-                    ),
-                    lambda v: v.cast("string"),
-                ),
-            )
-        ).alias("band_hash"),
-    )
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard of two distinct-element arrays."""
     return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
@@ -317,8 +290,7 @@ def jaccard(a: Column, b: Column) -> Column:
 
 def _band_hashes_sql(num_hashes: int, bands: int) -> str:
     """SQL: the per-doc array of ``bands`` band hashes of ``signature``
-    (md5 of each band's comma-joined values, the :func:`lsh_bands`
-    construction)."""
+    (md5 of each band's comma-joined values)."""
     rpb = num_hashes // bands
     return (
         f"transform(sequence(0, {bands - 1}), __j -> md5(concat_ws(',', transform("
@@ -504,12 +476,12 @@ def minhash_lsh_pairs(
         base, "id", F.expr("sh"), num_hashes,
         with_size=True, repartition=False, prefiltered=True,
     )
-    # per-doc band-hash ARRAY first (identical hash construction to
-    # lsh_bands), then posexplode for the equi-join. The slim (id, n, bh)
-    # table is persisted because it has consumers of different shapes:
-    # both sides of the band self-join (which alone would share one
-    # exchange), the verify broadcasts carrying band hashes, and the
-    # verify's size probe, whose aggregate also fills the persist.
+    # per-doc band-hash ARRAY first, then posexplode for the equi-join.
+    # The slim (id, n, bh) table is persisted because it has consumers
+    # of different shapes: both sides of the band self-join (which
+    # alone would share one exchange), the verify broadcasts carrying
+    # band hashes, and the verify's size probe, whose aggregate also
+    # fills the persist.
     banded = sigs.selectExpr(
         "id", "n", f"{_band_hashes_sql(num_hashes, bands)} AS bh"
     ).persist(StorageLevel.MEMORY_AND_DISK)

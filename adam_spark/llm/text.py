@@ -840,7 +840,6 @@ def hashed_classifier_score(
     text_col: str = "text",
     hash_prefix_len: int = 3,
     word_ngrams: int = 1,
-    feats_df: DataFrame | None = None,
 ) -> DataFrame:
     """fastText-style hashed LINEAR classifier score per document — the
     CCNet/quality-filter shape: tokens map into a fixed feature table
@@ -870,24 +869,12 @@ def hashed_classifier_score(
     map-side-combined groupBy. The corpus is never shuffled beyond that
     aggregation; nothing collects on the driver.
 
-    ``feats_df`` (optional) is an alternate reading of the SAME rows —
-    typically a repartitioned/spread copy of a single-row-group source —
-    used only for the feature-extraction branch (the ~tokens-per-doc-×
-    explode + md5 + join pipeline). The output's row set always comes
-    from ``df``: with the right side unique on id, Catalyst prunes the
-    whole scored subtree (feats_df included) under a bare ``count()``,
-    so a caller can parallelize the expensive branch without taxing the
-    pruned path with the spread exchange (the bloom probe-branch spread
-    idiom). Results are identical by construction — the branches agree
-    row-for-row whenever feats_df reads the same table. A ``feats_df``
-    missing ``id_col`` or ``text_col`` raises ``ValueError``.
+    A ``df`` missing ``id_col`` or ``text_col`` raises ``ValueError``.
     """
-    if feats_df is None:
-        feats_df = df
-    have = {c.lower() for c in feats_df.columns}
+    have = {c.lower() for c in df.columns}
     for c in (id_col, text_col):
         if c.lower() not in have:
-            raise ValueError(f"feats_df has no column {c!r}")
+            raise ValueError(f"df has no column {c!r}")
     words = F.filter(
         F.split(F.lower(F.col(text_col)), " "), lambda t: t != F.lit("")
     )
@@ -913,7 +900,7 @@ def hashed_classifier_score(
     feats = F.coalesce(words, F.array().cast("array<string>"))
     for n in range(2, word_ngrams + 1):
         feats = F.concat(feats, _grams(n))
-    toks = feats_df.select(
+    toks = df.select(
         F.col(id_col).alias("id"),
         F.size(words).cast("long").alias("__n_tokens"),
         F.explode(feats).alias("tok"),

@@ -33,6 +33,7 @@ without its own stat changing, so it is inferred on every load.
 
 from __future__ import annotations
 
+import logging
 import os
 import stat
 from dataclasses import dataclass
@@ -55,6 +56,8 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+_log = logging.getLogger(__name__)
 
 #: columns stored as TIMESTAMP(NANOS) in the testdata parquet
 _NANOS_COLS = {
@@ -81,12 +84,12 @@ _SCHEMA_CONFS = (
 #: unsplittable file → repartition immediately after the read").
 #: ``load_table(..., spread=True)`` therefore hash-repartitions tables
 #: whose footer shows fewer row groups than the session's parallelism
-#: AND at least _SPLIT_MIN_ROWS rows. Catalyst pushes filters and
+#: AND at least the table's floor of rows. Catalyst pushes filters and
 #: column pruning THROUGH a Repartition node, so the added exchange
 #: carries only post-filter, post-prune bytes. On a real cluster the
 #: inputs are split-rich (many row groups / many files), the footer
-#: probe says no, and plans are unchanged — the knob is
-#: data-layout-adaptive, not local-tuned.
+#: probe says no, and plans are unchanged — the layout is
+#: data-adaptive, not local-tuned.
 #:
 #: ``spread`` is OPT-IN per call site because the exchange only pays
 #: for itself when the downstream amplifies rows (explode + join:
@@ -94,7 +97,28 @@ _SCHEMA_CONFS = (
 #: scan→filter→aggregate pipelines the single-threaded decode is
 #: cheaper than shuffling the table (q1 0.43→0.64, top_parts
 #: 0.51→1.43 measured) — those call sites keep the default.
-_SPLIT_MIN_ROWS = 50_000
+#:
+#: The layout itself belongs to the table: ``table → (hash key, row
+#: floor)``. The key is the table's id column, so a consumer that
+#: prunes columns (a bare ``count()``, an interval join using 3 of
+#: lineitem's 11 columns) reads and ships only what it uses; a
+#: whole-row key made the scan read every column (sf0.1 medians, 4
+#: vCPU: interval_join_inner 2.84 → 2.08 s with the key;
+#: text_profile_docs count 0.84-1.14 → 0.75-0.77 s).
+#: The floor reflects how much work each row costs downstream: an
+#: orders or lineitem row feeds about one join probe, so the exchange
+#: pays only from 50k rows (a 1,000 floor spread orders at sf0.001 and
+#: slowed interval_join_group_left 1.12 → 1.31 s and interval_join_inner
+#: 0.73 → 0.93 s, medians of 10 interleaved pairs), while a document
+#: explodes into hundreds of tokens or n-grams and an embedding row
+#: meets every query of a crossJoin, so 1,000 of those already starve
+#: a single task.
+SPREAD_LAYOUT: dict[str, tuple[str, int]] = {
+    "orders": ("o_orderkey", 50_000),
+    "lineitem": ("l_orderkey", 50_000),
+    "documents": ("doc_id", 1_000),
+    "embeddings": ("vec_id", 1_000),
+}
 
 
 @dataclass
@@ -164,12 +188,7 @@ def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, _Memo]:
 
 
 def load_table(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    spread: bool = False,
-    spread_min_rows: int = _SPLIT_MIN_ROWS,
-    spread_key: tuple[str, ...] | None = None,
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
     """Table ``name`` of the testdata directory ``sf_dir``.
 
@@ -178,11 +197,17 @@ def load_table(
     session's parquet schema-conversion confs (module docstring). Later
     loads of the unchanged file read with the memoized schema supplied:
     no job. The footer's row-group and row counts are read only by the
-    first ``spread`` load and are memoized with the schema. TIMESTAMP(NANOS) columns arrive as longs and become
-    microsecond timestamps; TIMESTAMP(MICROS) wall-clock columns become
-    the UTC instant. ``spread`` repartitions a large single-row-group
-    file (see ``_SPLIT_MIN_ROWS``).
+    first ``spread`` load and are memoized with the schema.
+    TIMESTAMP(NANOS) columns arrive as longs and become microsecond
+    timestamps; TIMESTAMP(MICROS) wall-clock columns become the UTC
+    instant. ``spread`` hash-repartitions a large single-row-group file
+    on the table's declared key (see ``SPREAD_LAYOUT``); it raises
+    ``ValueError`` for a table with no declared layout.
     """
+    if spread and name not in SPREAD_LAYOUT:
+        raise ValueError(
+            f"table {name!r} has no spread layout; declared: {sorted(SPREAD_LAYOUT)}"
+        )
     path = os.path.join(sf_dir, f"{name}.parquet")
     df, memo = _read_parquet(spark, path)
     schema = memo.schema
@@ -204,32 +229,21 @@ def load_table(
             df = df.withColumn(
                 c, F.from_utc_timestamp(F.col(c).cast("timestamp"), tz)
             )
-    # ``spread_min_rows`` lets a caller whose downstream AMPLIFIES work
-    # per row (crossJoin against a probe set, per-row GEMM batches)
-    # lower the default 50k-row floor: the floor models when the
-    # exchange pays for ~1× downstream work, but a Q-way crossJoin
-    # multiplies the per-row cost by Q, so far smaller tables still
-    # starve on a single row group. Still footer-gated — split-rich
-    # cluster inputs are never repartitioned.
     if spread:
+        key, floor = SPREAD_LAYOUT[name]
         if memo.counts is None:
             memo.counts = _footer_counts(path)
         groups, rows = memo.counts
         par = spark.sparkContext.defaultParallelism
-        if 0 < groups < max(2, par // 4) and rows >= spread_min_rows:
-            # hash repartition on a synthetic unique-ish key: unlike
-            # round-robin it needs no sort-before-repartition pass and
-            # stays retry-deterministic (guide §2.5). ``spread_key``
-            # narrows the hash to named columns (callers pass a unique
-            # id): column pruning then trims the exchange's input to
-            # just those columns when nothing above it needs more —
-            # under the bench's count() a whole-row key forces the scan
-            # to read and ship every column (text_profile count
-            # 0.59-0.74 plain → 0.84-1.14 s whole-row key → 0.75-0.77
-            # id key, measured interleaved at sf0.1), while an id key
-            # ships 8 B/row. Materialization paths are unchanged: they
-            # reference every column anyway.
-            key = spread_key if spread_key else schema.names
-            hashed = ", ".join(sql_ident(c) for c in key)
-            df = df.repartition(par, F.expr(f"xxhash64({hashed})"))
+        split = 0 < groups < max(2, par // 4) and rows >= floor
+        _log.debug(
+            "spread %s: %s (row groups %d, rows %d, floor %d, parallelism %d)",
+            name, split, groups, rows, floor, par,
+            extra={"table": name, "row_groups": groups, "rows": rows,
+                   "parallelism": par, "floor": floor, "spread": split},
+        )
+        if split:
+            # hash, not round-robin: no sort-before-repartition pass,
+            # and retry-deterministic (guide §2.5)
+            df = df.repartition(par, F.expr(f"xxhash64({sql_ident(key)})"))
     return df

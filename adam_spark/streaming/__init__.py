@@ -343,8 +343,8 @@ def streaming_minhash_candidates(
 ) -> DataFrame:
     """MinHash-LSH near-duplicate candidates over a document STREAM.
 
-    The batch pipeline (llm/dedup.py: minhash_signatures → lsh_bands →
-    bucket equi-join) splits cleanly at the shuffle: signatures and
+    The batch pipeline (llm/dedup.py: minhash_signatures → band hashes
+    → bucket equi-join) splits cleanly at the shuffle: signatures and
     band hashes are pure narrow maps, so they run on ``readStream``
     unchanged and reuse the SAME hash family as the batch operator
     (identical signatures for identical text — a doc landed by the

@@ -333,18 +333,6 @@ def test_save_fasta_single_file_emits_faidx(spark, tmp_path):
     assert back == seqs
 
 
-def test_hashed_classifier_feats_df_missing_column_raises(spark):
-    """A feats_df lacking the id or text column raises a ValueError
-    naming that column, instead of failing deep inside the plan."""
-    from adam_spark.llm.text import hashed_classifier_score
-
-    docs = spark.createDataFrame([(1, "alpha")], "doc_id long, text string")
-    weights = spark.createDataFrame([("abc", 1)], "bucket string, weight long")
-    for missing in ("doc_id", "text"):
-        with pytest.raises(ValueError, match=f"'{missing}'"):
-            hashed_classifier_score(docs, weights, feats_df=docs.drop(missing))
-
-
 def test_bcf_split_guesser_exact_sites_only():
     """Same zero-false-accept sweep for a SITES-ONLY body (n_sample=0
     adds the l_indiv==0 / n_fmt==0 constraints the guesser checks)."""

@@ -2,6 +2,7 @@
 
 import contextlib
 import math
+import os
 import re
 
 import numpy as np
@@ -1300,6 +1301,71 @@ def test_hashed_classifier_score(spark):
         shuffled = hashed_classifier_score(docs, weights)
         assert "bucket" in sort_merge_join_keys(shuffled)
         check(shuffled)
+
+
+def test_hashed_classifier_missing_column_raises(spark):
+    """A frame lacking the id or text column raises a ValueError
+    naming that column, instead of failing deep inside the plan."""
+    from adam_spark.llm.text import hashed_classifier_score
+
+    docs = spark.createDataFrame([(1, "alpha")], "doc_id long, text string")
+    weights = spark.createDataFrame([("abc", 1)], "bucket string, weight long")
+    for missing in ("doc_id", "text"):
+        with pytest.raises(ValueError, match=f"'{missing}'"):
+            hashed_classifier_score(docs.drop(missing), weights)
+
+
+SF1 = "/root/testdata/sf0.1"
+
+
+@pytest.mark.skipif(not os.path.isdir(SF1), reason="sf0.1 testdata absent")
+class TestClassifierSpread:
+    """The contract query scores a spread reading of the corpus: the
+    token explode runs in parallel, and a bare count() prunes the scored
+    subtree so its exchange ships only the declared ``doc_id`` key.
+    sf0.1: the documents floor (1,000 rows) must be met to spread."""
+
+    def _weights(self, spark):
+        b = F.format_string("%03x", F.col("id"))
+        raw = (
+            F.ascii(F.substring(b, 1, 1)) * 7
+            + F.ascii(F.substring(b, 2, 1)) * 3
+            + F.ascii(F.substring(b, 3, 1)) * 5
+        ) % 101
+        return (
+            spark.range(4096)
+            .select(b.alias("bucket"), raw.alias("raw"))
+            .where((F.col("raw") % 3) != 0)
+            .select("bucket", (F.col("raw") - 50).cast("long").alias("weight"))
+        )
+
+    def test_spread_docs_bit_identical(self, spark):
+        """Scoring a spread corpus must equal the plain path row-for-row
+        — only the partitioning differs."""
+        from adam_spark.llm.text import hashed_classifier_score
+
+        plain_docs = load_table(spark, SF1, "documents")
+        spread_docs = load_table(spark, SF1, "documents", spread=True)
+        assert "Exchange" in spread_docs._jdf.queryExecution().executedPlan().toString()
+        w = self._weights(spark)
+        plain = hashed_classifier_score(plain_docs, w).orderBy("id").collect()
+        spread = hashed_classifier_score(spread_docs, w).orderBy("id").collect()
+        assert [tuple(r) for r in plain] == [tuple(r) for r in spread]
+
+    def test_count_path_scans_only_doc_id(self, spark):
+        """The entry's count path (Catalyst prunes the scored subtree
+        through the unique-right left join) reads only ``doc_id`` from
+        the documents scan; the full plan keeps the spread exchange."""
+        import __spark_entry__ as entrymod
+
+        df = entrymod.queries()["quality_classifier_docs"](spark, SF1)
+        cnt = df.groupBy().count()._jdf.queryExecution().executedPlan().toString()
+        full = df._jdf.queryExecution().optimizedPlan().toString()
+        scans = re.findall(r"FileScan parquet \[([^\]]*)\]", cnt)
+        assert scans and all(
+            [c.split("#")[0] for c in cols.split(", ")] == ["doc_id"] for cols in scans
+        ), scans
+        assert "RepartitionByExpression" in full
 
 
 def test_png_roundtrip_all_color_types():

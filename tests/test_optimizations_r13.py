@@ -15,162 +15,6 @@ SF01 = "/root/testdata/sf0.01"
 
 
 @pytest.mark.skipif(not os.path.isdir(SF001), reason="driver testdata absent")
-class TestLoadTableSpread:
-    def test_spread_splits_single_rowgroup_scan(self, spark):
-        """spread=True on a single-row-group file must (a) leave every
-        row bit-identical and (b) actually distribute rows over more
-        than one non-empty partition — the whole point of the knob
-        (sources/tables.py: parquet splits only at row-group
-        boundaries, so the default scan decodes on ONE core)."""
-        from adam_spark.sources.tables import load_table
-
-        plain = load_table(spark, SF01, "lineitem")
-        spread = load_table(spark, SF01, "lineitem", spread=True)
-        assert sorted(map(tuple, plain.collect())) == sorted(
-            map(tuple, spread.collect())
-        )
-        nonempty = (
-            spread.groupBy(F.spark_partition_id().alias("p")).count().count()
-        )
-        assert nonempty > 1, "spread must break the single-row-group bottleneck"
-        # plain path keeps its plan: no exchange added
-        assert "Exchange" not in plain._jdf.queryExecution().executedPlan().toString()
-
-    def test_rewritten_file_is_reinferred(self, spark, tmp_path):
-        """A table rewritten at the same path is loaded with its new
-        schema, rows and row-group layout: the memoized schema and
-        footer counts are keyed on the file's mtime and size, not on
-        its path alone."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from adam_spark.sources.tables import load_table
-
-        path = str(tmp_path / "t.parquet")
-        n = 60_000
-        pq.write_table(
-            pa.table({"a": list(range(n)), "b": [str(i % 7) for i in range(n)]}), path
-        )
-        old = load_table(spark, str(tmp_path), "t", spread=True)
-        assert old.columns == ["a", "b"]
-        assert old.count() == n
-        # one row group of 60k rows: starved, so spread adds an exchange
-        assert "Exchange" in old._jdf.queryExecution().executedPlan().toString()
-
-        pq.write_table(
-            pa.table({"a": list(range(n)), "c": [i * 0.5 for i in range(n)],
-                      "d": [i % 3 for i in range(n)]}),
-            path,
-            row_group_size=n // 4,
-        )
-        new = load_table(spark, str(tmp_path), "t", spread=True)
-        assert new.columns == ["a", "c", "d"]
-        assert new.schema["c"].dataType.simpleString() == "double"
-        assert new.where("a = 10").collect()[0].asDict() == {"a": 10, "c": 5.0, "d": 1}
-        assert new.count() == n
-        # four row groups feed the scan: no exchange
-        assert "Exchange" not in new._jdf.queryExecution().executedPlan().toString()
-
-    def test_footer_read_only_by_spread_loads(self, spark, tmp_path, monkeypatch):
-        """Only the ``spread`` gate reads the footer's row-group and row
-        counts: a plain load never opens the footer, the first spread
-        load does once, and later spread loads reuse the memoized
-        counts. A spread key whose name holds a backtick is quoted."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from adam_spark.sources import tables
-
-        path = str(tmp_path / "t.parquet")
-        pq.write_table(pa.table({"id`x": list(range(100)), "v": [1] * 100}), path)
-        reads = []
-        real = tables._footer_counts
-        monkeypatch.setattr(
-            tables, "_footer_counts", lambda p: reads.append(p) or real(p)
-        )
-        plain = tables.load_table(spark, str(tmp_path), "t")
-        assert plain.count() == 100 and reads == []
-        for _ in range(2):
-            spread = tables.load_table(
-                spark, str(tmp_path), "t", spread=True, spread_min_rows=1,
-                spread_key=("id`x",),
-            )
-            assert spread.count() == 100
-        assert reads == [path]
-        plan = spread._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan
-
-    def test_memoized_schema_reads_nanos_in_vanilla_session(self, spark, spark_jobs, tmp_path):
-        """With ``nanosAsLong`` unset (a session built without adam_spark's
-        defaults), the first load of a TIMESTAMP(NANOS) table infers its
-        schema and the second reads with the memoized schema supplied:
-        no job, the same rows, a ``timestamp`` column, and the conf left
-        unset."""
-        import shutil
-
-        from adam_spark.sources.tables import load_table
-
-        conf = "spark.sql.legacy.parquet.nanosAsLong"
-        prior = spark.conf.get(conf, None)
-        spark.conf.unset(conf)
-        try:
-            for name, ts in (("events", "ts"), ("orders", "o_orderdate")):
-                shutil.copy(f"{SF01}/{name}.parquet", tmp_path)
-                jobs = spark_jobs.n
-                first = load_table(spark, str(tmp_path), name)
-                inferred = spark_jobs.n - jobs
-                assert inferred >= 1
-                second = load_table(spark, str(tmp_path), name)
-                assert spark_jobs.n - jobs == inferred, "second load was not memoized"
-                assert second.schema[ts].dataType.simpleString() == "timestamp"
-                assert second.schema == first.schema
-                assert sorted(map(tuple, second.collect())) == sorted(
-                    map(tuple, first.collect())
-                )
-                assert spark.conf.get(conf, None) is None
-        finally:
-            if prior is not None:
-                spark.conf.set(conf, prior)
-
-    def test_spread_noop_on_small_tables(self, spark):
-        """Tables under the row threshold skip the exchange entirely."""
-        from adam_spark.sources.tables import load_table
-
-        df = load_table(spark, SF001, "supplier", spread=True)
-        assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
-
-    def test_interval_left_key_matches_pin_path(self, spark):
-        """The entry declares left_key='id' (orders keys, unique per SF)
-        for the outer/group interval joins. Pin (a) the key-path result
-        equals the localCheckpoint pin path, and (b) the R-side ids are
-        genuinely NOT unique — declaring right_key would silently merge
-        rows (caught by the oracle this round; this test keeps the trap
-        documented in-repo)."""
-        import __spark_entry__ as e
-        from adam_spark.operators.region_join import region_join
-
-        L, R = e._intervals_l(spark, SF001), e._intervals_r(spark, SF001)
-        keyed = region_join(L, R, how="left_outer", bin_size=64, left_key="id")
-        pinned = region_join(L, R, how="left_outer", bin_size=64)
-        assert sorted(map(tuple, keyed.collect())) == sorted(
-            map(tuple, pinned.collect())
-        )
-        dup = R.groupBy("id").count().where(F.col("count") > 1).count()
-        assert dup > 0, "R ids became unique — right_key may now be declarable"
-
-    def test_spread_filter_still_pushes_to_scan(self, spark):
-        """Predicate pushdown must survive the Repartition node: the
-        scan, not the exchange, filters (guide §6 — PushedFilters)."""
-        from adam_spark.sources.tables import load_table
-
-        df = load_table(spark, SF01, "lineitem", spread=True).where(
-            F.col("l_orderkey") == 1
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters: [" in plan and "l_orderkey" in plan.split("PushedFilters")[1][:200]
-
-
-@pytest.mark.skipif(not os.path.isdir(SF001), reason="driver testdata absent")
 class TestCosineNormHoist:
     def test_cosine_topk_hoist_bit_identical(self, spark):
         """cosine_topk hoists each side's norm to a per-row projection
@@ -198,55 +42,6 @@ class TestCosineNormHoist:
             .collect()
         }
         assert got and all(ref[k] == v for k, v in got.items())
-
-    def test_spread_key_narrows_pruned_scan(self, spark):
-        """spread_key hashes only the named columns, so a consumer that
-        prunes everything (the bench's count()) reads ONLY those
-        columns at the scan — a whole-row key forces every column
-        through the exchange (measured: text_profile count 0.59-0.74 →
-        0.84-1.14 s under the whole-row key, back in band with the id
-        key). Rows must stay identical and still multi-partition."""
-        import re
-
-        from adam_spark.sources.tables import load_table
-
-        whole = load_table(spark, SF01, "lineitem", spread=True)
-        keyed = load_table(
-            spark, SF01, "lineitem", spread=True, spread_key=("l_orderkey",)
-        )
-        assert sorted(map(tuple, whole.collect())) == sorted(
-            map(tuple, keyed.collect())
-        )
-        nonempty = (
-            keyed.groupBy(F.spark_partition_id().alias("p")).count().count()
-        )
-        assert nonempty > 1
-        keyed_plan = (
-            keyed.groupBy().count()._jdf.queryExecution().executedPlan().toString()
-        )
-        m = re.search(r"FileScan parquet \[([^\]]*)\]", keyed_plan)
-        assert m and m.group(1).split("#")[0] == "l_orderkey", (
-            "pruned count over a keyed spread must scan only the key column"
-        )
-        whole_plan = (
-            whole.groupBy().count()._jdf.queryExecution().executedPlan().toString()
-        )
-        m = re.search(r"FileScan parquet \[([^\]]*)", whole_plan)
-        assert m and m.group(1).count(",") > 1, (
-            "whole-row key reads every column — the contrast the test pins"
-        )
-
-    def test_spread_min_rows_override(self, spark):
-        """spread_min_rows lets a row-amplifying caller lower the 50k
-        floor; the footer gate (row-group count) still applies."""
-        from adam_spark.sources.tables import load_table
-
-        small = load_table(spark, SF001, "embeddings", spread=True)
-        assert "Exchange" not in small._jdf.queryExecution().executedPlan().toString()
-        lowered = load_table(
-            spark, SF001, "embeddings", spread=True, spread_min_rows=10
-        )
-        assert "Exchange" in lowered._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.mark.skipif(not os.path.isdir(SF001), reason="driver testdata absent")

@@ -15,68 +15,6 @@ SF01 = "/root/testdata/sf0.01"
 
 
 @pytest.mark.skipif(not os.path.isdir(SF01), reason="driver testdata absent")
-class TestClassifierBranchScopedSpread:
-    """r14: the classifier's spread moved from the whole frame to the
-    feature branch only (feats_df), so the pruned count path no longer
-    plans the spread exchange while the materialization path keeps its
-    parallel explode pipeline (r13 verdict item 2: the whole-frame
-    spread taxed count() +0.12-0.15 s for a subtree count() prunes)."""
-
-    def _weights(self, spark):
-        b = F.format_string("%03x", F.col("id"))
-        raw = (
-            F.ascii(F.substring(b, 1, 1)) * 7
-            + F.ascii(F.substring(b, 2, 1)) * 3
-            + F.ascii(F.substring(b, 3, 1)) * 5
-        ) % 101
-        return (
-            spark.range(4096)
-            .select(b.alias("bucket"), raw.alias("raw"))
-            .where((F.col("raw") % 3) != 0)
-            .select("bucket", (F.col("raw") - 50).cast("long").alias("weight"))
-        )
-
-    def test_feats_df_bit_identical(self, spark):
-        """Scoring through a spread feats_df must equal the plain path
-        row-for-row — the branch reads the same table, only its
-        partitioning differs."""
-        from adam_spark.llm.text import hashed_classifier_score
-        from adam_spark.sources.tables import load_table
-
-        docs = load_table(spark, SF01, "documents")
-        docs_spread = load_table(
-            spark, SF01, "documents",
-            spread=True, spread_min_rows=100, spread_key=("doc_id",),
-        )
-        w = self._weights(spark)
-        plain = hashed_classifier_score(docs, w).orderBy("id").collect()
-        branch = (
-            hashed_classifier_score(docs, w, feats_df=docs_spread)
-            .orderBy("id")
-            .collect()
-        )
-        assert [tuple(r) for r in plain] == [tuple(r) for r in branch]
-
-    def test_count_path_plans_no_spread_exchange(self, spark):
-        """The entry's count path (Catalyst prunes the scored subtree
-        through the unique-right left join) must contain NO
-        repartition; the full plan must keep the feature branch's
-        spread exchange. sf0.1: the footer gate needs ≥ spread_min_rows
-        (1000) docs to fire at all."""
-        import __spark_entry__ as entrymod
-
-        sf = "/root/testdata/sf0.1"
-        if not os.path.isdir(sf):
-            pytest.skip("sf0.1 testdata absent")
-        df = entrymod.queries()["quality_classifier_docs"](spark, sf)
-        cnt = df.groupBy().count()._jdf.queryExecution().optimizedPlan().toString()
-        full = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "RepartitionByExpression" not in cnt
-        assert "xxhash64" not in cnt
-        assert "RepartitionByExpression" in full
-
-
-@pytest.mark.skipif(not os.path.isdir(SF01), reason="driver testdata absent")
 class TestKmeansInvariants:
     """r14: a localCheckpoint of the (id, vec) projection was measured
     and REVERTED (slower at sf0.1 — the eager materialization job costs

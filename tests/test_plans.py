@@ -20,6 +20,7 @@ would survive 100 TB — these assertions do. Rules:
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -205,3 +206,36 @@ def test_catalog_build_gateway_budget(spark, py4j_calls, spark_jobs, tmp_path):
     load_table(spark, sf, "lineitem", spread=True)
     load_table(spark, sf, "events")
     assert spark_jobs.n - jobs == inferred, "a repeated load_table ran a Spark job"
+
+
+# The spread pins below build sf0.01/sf0.1 plans; they run after the
+# gateway budgets above so the JVM objects they leave for Python's GC
+# are not detached inside a budget's count.
+def test_spread_interval_join_reads_three_lineitem_columns(spark):
+    """A spread load hashes the table's declared key, so the interval
+    join's lineitem scan reads only the three columns it uses (sf0.01:
+    60,000 rows, above lineitem's spread floor). A whole-row hash key
+    reads all 11."""
+    sf = "/root/testdata/sf0.01"
+    if not os.path.isdir(sf):
+        pytest.skip("sf0.01 testdata absent")
+    df = entrymod.queries()["interval_join_inner"](spark, sf)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "xxhash64(l_orderkey" in plan, "lineitem did not spread"
+    # a long ReadSchema may print truncated; truncation only undercounts
+    schemas = re.findall(r"ReadSchema: struct<(l_[^\n>]*)", plan)
+    assert schemas, "no lineitem scan in plan"
+    for cols in schemas:
+        assert len([c for c in cols.split(",") if ":" in c]) <= 3, cols
+
+
+def test_text_profile_spreads_on_doc_id(spark):
+    """text_profile_docs hashes the corpus on ``doc_id`` (sf0.1: 5,000
+    documents, above the documents spread floor)."""
+    sf = "/root/testdata/sf0.1"
+    if not os.path.isdir(sf):
+        pytest.skip("sf0.1 testdata absent")
+    df = entrymod.queries()["text_profile_docs"](spark, sf)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    hashes = re.findall(r"hashpartitioning\(xxhash64\(([^)]*)\)", plan)
+    assert hashes and all(h.split("#")[0] == "doc_id" for h in hashes), hashes

@@ -4,6 +4,7 @@ into the partitioned layout + incremental coverage."""
 import os
 import time
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from adam_spark import streaming as st
@@ -475,12 +476,41 @@ def test_streaming_minhash_candidates_stateful(spark, tmp_path):
     assert by_id[4]["n_band_hits"] == 8
 
 
+# Column-built reference for the batch operator's band hashes
+# (llm/dedup.py ``_band_hashes_sql``).
+def lsh_bands(signatures: DataFrame, bands: int) -> DataFrame:
+    """(id, band, band_hash): hash each signature band for bucketing."""
+    sig_len_expr = F.size("signature")
+    rows_per_band = (sig_len_expr / F.lit(bands)).cast("int")
+    return signatures.select(
+        "id",
+        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+        F.col("signature"),
+    ).select(
+        "id",
+        "band",
+        F.md5(
+            F.concat_ws(
+                ",",
+                F.transform(
+                    F.slice(
+                        F.col("signature"),
+                        F.col("band") * rows_per_band + 1,
+                        rows_per_band,
+                    ),
+                    lambda v: v.cast("string"),
+                ),
+            )
+        ).alias("band_hash"),
+    )
+
+
 def test_streaming_minhash_matches_batch_buckets(spark):
     """Stream and batch use the SAME hash family: the band hashes the
     streaming operator computes for a document equal lsh_bands' output
     over the same text (the property that lets the batch job act as an
     exact backstop over the landed corpus)."""
-    from adam_spark.llm.dedup import lsh_bands, minhash_signatures, word_ngrams
+    from adam_spark.llm.dedup import minhash_signatures, word_ngrams
 
     df = spark.createDataFrame(
         [(1, _mh_doc(60), "2026-01-01T00:00:00")], "doc_id long, text string, ts string"
